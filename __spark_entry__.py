@@ -169,7 +169,7 @@ def _a_geo_bounds_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
 # self-join all derive from the same standard-analyzer token stream —
 # INCLUDING the 255-char max_token_length split (review r5: the oracle
 # and the query side split, so the shingle column must too).
-from opensearch_spark.analysis.analyzer import spark_sql_tokens_expr as _stoks
+from opensearch_spark.analysis.analyzer import MAX_TOKEN_LENGTH, spark_sql_tokens_expr as _stoks
 
 _SATY_TOKS = _stoks("text")
 
@@ -185,7 +185,7 @@ def _saty_shingle_expr(n: int, toks: str = "_toks") -> str:
                       for j in range(n))
     return (f"CASE WHEN size({toks}) >= {n} THEN array_join(filter("
             f"transform(sequence(1, size({toks}) - {n - 1}), "
-            f"i -> concat_ws('_', {grams})), g -> length(g) <= 255), ' ') "
+            f"i -> concat_ws('_', {grams})), g -> length(g) <= {MAX_TOKEN_LENGTH}), ' ') "
             f"ELSE '' END")
 
 
@@ -3194,6 +3194,11 @@ _FT_QUERIES: dict[str, tuple[dict, str]] = {
             must=[{"kind": "match", "query": "hash"},
                   {"kind": "match", "query": "join"}],
         ),
+    ),
+    # "a b"~N parses to a sloppy phrase, executed slop-exact
+    "ft_query_string_slop": (
+        {"query_string": {"query": '"hash table"~2', "default_field": "text"}},
+        O.sloppy_phrase_sql("hash table", 2),
     ),
     "ft_simple_query_string": (
         {"simple_query_string": {"query": "+big +vector", "fields": ["text"]}},

@@ -7,7 +7,8 @@ local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 
 Headline numbers:
 - index_build_sec / index_docs_per_sec: full inverted-index build over the
-  documents table (analyze -> shuffle -> pack -> write)
+  documents table (segment-local tokenize + pack -> write, then
+  termstats/globals)
 - per-query p50 latency over REPEAT runs of the reference query families
   (match OR/AND, bool, phrase) top-10
 """

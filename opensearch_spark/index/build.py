@@ -539,17 +539,6 @@ def build_index(
         os.makedirs(out_dir)
         lineage = dict(fresh)
 
-    import time as _time
-    _timing = os.environ.get("OSX_BUILD_TIMING") == "1"
-    _t0 = _time.perf_counter()
-
-    def _mark(label: str) -> None:
-        nonlocal _t0
-        if _timing:
-            now = _time.perf_counter()
-            print(f"[build_index] {label}: {now - _t0:.2f}s", flush=True)
-            _t0 = now
-
     nshuf = shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     def _write_globals(globals_row: dict) -> None:
@@ -624,7 +613,6 @@ def build_index(
                 .write.mode("overwrite")
                 .parquet(paths.postings)
             )
-            _mark("local index (tokenize+pack+docstats)")
 
             # globals = driver-side merge of the per-segment 1-row
             # partials the indexing tasks wrote (n_segments tiny files —
@@ -661,7 +649,6 @@ def build_index(
                 phase1_done=True, waves_done=[0], globals=globals_row
             )
             _write_json_atomic(paths.lineage, lineage)
-            _mark("globals")
     else:
         # ---- STAGED build (waves > 1): resumable via lineage manifest ----
         # The tokenized corpus is materialized once; each wave packs a
@@ -681,7 +668,6 @@ def build_index(
                                 n_segments, analyzer)
             stage_df.write.mode("overwrite").parquet(paths.termvecs)
             stage = spark.read.parquet(paths.termvecs)
-            _mark("phase1 analyze+stage")
             # docstats: column-pruned scan (never touches toks); global
             # corpus stats piggyback on the SAME job via observe()
             from pyspark.sql import Observation
@@ -706,7 +692,6 @@ def build_index(
             lineage["phase1_done"] = True
             lineage["globals"] = globals_row
             _write_json_atomic(paths.lineage, lineage)
-            _mark("phase1 docstats+globals")
 
         # ---- phase 2: pack posting blocks per segment wave ---------------
         all_waves = list(range(waves))
@@ -730,7 +715,6 @@ def build_index(
             )
             lineage["waves_done"] = sorted(set(lineage["waves_done"]) | {w})
             _write_json_atomic(paths.lineage, lineage)
-            _mark(f"phase2 pack wave {w}")
             if _fail_after_wave is not None and w >= _fail_after_wave:
                 raise RuntimeError(f"injected failure after wave {w} (test seam)")
 
@@ -739,7 +723,6 @@ def build_index(
         write_termstats(spark, paths)
         lineage["termstats_done"] = True
         _write_json_atomic(paths.lineage, lineage)
-        _mark("phase3 termstats")
 
     if not keep_stage and os.path.exists(paths.termvecs):
         shutil.rmtree(paths.termvecs)

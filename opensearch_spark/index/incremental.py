@@ -7,10 +7,10 @@ into larger ones. Spark-first mapping:
 
 - ``add_batch`` analyzes only the new docs and APPENDS posting blocks (a
   new "generation" of blocks whose doc ranges overlap older ones —
-  scorers merge-sort at decode, wand.py), appends docstats/termstats
-  rows, and atomically updates the globals manifest (doc counts, avgdl).
-  Stored block bounds are (max_tf, min_dl_q), avgdl-independent, so
-  older blocks stay valid.
+  scorers merge-sort at decode, codec.merge_generations), appends
+  docstats/termstats rows, and atomically updates the globals manifest
+  (doc counts, avgdl). Stored block bounds are (max_tf, min_dl_q),
+  avgdl-independent, so older blocks stay valid.
 - ``compact_index`` rewrites each (seg, term) posting list as one sorted
   single-generation block run — decode -> merge -> repack, no
   re-tokenization (the merge reads index bytes only, like Lucene segment
@@ -156,13 +156,10 @@ def _unpack_partition():
     """mapInArrow fn: posting-block rows -> per-occurrence rows (decode
     side of the merge; inverse of _pack_partition).
 
-    Whole-batch vectorized: every block's byte stream is CONTIGUOUS in
-    the Arrow values buffer, so each of the three varint streams (doc
-    deltas, tfs, position gaps) is decoded in ONE call over the
-    concatenated buffer; per-block / per-doc resets are applied with
-    grouped-cumsum arithmetic (cumsum minus repeated group bases). Term
-    strings are gathered with Arrow ``take`` — no per-block Python loop
-    and no Python string objects."""
+    Every block's byte stream is CONTIGUOUS in the Arrow values buffer,
+    so the whole batch goes through ``codec.decode_blocks`` as three
+    joined streams. Term strings are gathered with Arrow ``take`` — no
+    per-block Python loop and no Python string objects."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -182,37 +179,18 @@ def _unpack_partition():
             seg = t.column("seg").to_numpy(zero_copy_only=False).astype(np.int64)
             term = t.column("term").combine_chunks() if isinstance(
                 t.column("term"), pa.ChunkedArray) else t.column("term")
-
-            total_docs = int(n_docs.sum())
-            bs = np.concatenate(([0], np.cumsum(n_docs)))[:-1]
-
-            # doc ids: zigzag(first-of-block) + deltas, reset per block
-            deltas = codec.varint_decode(_values(t.column("doc_bytes")), total_docs)
-            d = deltas.astype(np.int64, copy=True)
-            d[bs] = codec.zigzag_decode(deltas[bs])
-            c = np.cumsum(d)
-            base = c[bs] - d[bs]
-            docs_abs = c - np.repeat(base, n_docs)
-
-            tfs = codec.varint_decode(_values(t.column("tf_bytes")), total_docs).astype(np.int64)
-            norms = np.frombuffer(_values(t.column("norm_bytes")), dtype=np.uint8)
-
-            total_occ = int(tfs.sum())
-            gaps = codec.varint_decode(_values(t.column("pos_bytes")), total_occ).astype(np.int64)
-            ds = np.concatenate(([0], np.cumsum(tfs)))[:-1]
-            cp = np.cumsum(gaps)
-            pbase = cp[ds] - gaps[ds]
-            pos_abs = cp - np.repeat(pbase, tfs)
-
-            occ_per_block = np.add.reduceat(tfs, bs) if bs.size else np.empty(0, np.int64)
+            docs, tfs, norms, pos = codec.decode_blocks(
+                n_docs, *(_values(t.column(c)) for c in
+                          ("doc_bytes", "tf_bytes", "norm_bytes", "pos_bytes")))
+            occ_per_block = np.add.reduceat(tfs, np.cumsum(n_docs) - n_docs)
             term_idx = np.repeat(np.arange(len(t), dtype=np.int64), occ_per_block)
 
             yield pa.record_batch(
                 [
-                    pa.array(np.repeat(docs_abs, tfs), pa.int64()),
+                    pa.array(np.repeat(docs, tfs), pa.int64()),
                     pa.array(np.repeat(np.repeat(seg, n_docs), tfs).astype(np.int32), pa.int32()),
                     pa.array(np.repeat(norms.astype(np.int32), tfs), pa.int32()),
-                    pa.array(pos_abs.astype(np.int32), pa.int32()),
+                    pa.array(pos.astype(np.int32), pa.int32()),
                     pc.take(term, pa.array(term_idx)),
                 ],
                 names=["docId", "seg", "norm_byte", "pos", "term"],

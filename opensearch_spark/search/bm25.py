@@ -27,7 +27,6 @@ from typing import Dict, List, Sequence, Tuple
 import numpy as np
 import pandas as pd
 
-from opensearch_spark.analysis.smallfloat import decode_norms_np
 from opensearch_spark.index import codec
 
 K1 = 1.2
@@ -44,43 +43,14 @@ def tf_norm(tf: np.ndarray, dl_q: np.ndarray, avgdl: float) -> np.ndarray:
 
 def decode_term_group(
     g: pd.DataFrame, want_positions: bool = False
-) -> Dict[str, Tuple[np.ndarray, np.ndarray, np.ndarray, list]]:
-    """Decode one segment's posting blocks.
+) -> Dict[str, Tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray | None]]:
+    """Decode one segment's posting-block rows (any number of blocks and
+    generations per term) -> term -> (docs int64 sorted, tfs int64,
+    dl_q float64, positions int64 or None), via ``codec.decode_blocks``."""
+    from opensearch_spark.search.wand import BlockTable
 
-    ``g`` has columns (term, block_no, n_docs, doc_bytes, tf_bytes,
-    norm_bytes, pos_bytes) — possibly many blocks per term. Returns
-    term -> (docs int64 sorted, tfs int64, dl_q float64, pos_offsets)
-    where pos_offsets is [positions ndarray] aligned if requested.
-    """
-    out: Dict[str, Tuple[np.ndarray, np.ndarray, np.ndarray, list]] = {}
-    g = g.sort_values(["term", "block_no"], kind="stable")
-    for term, tg in g.groupby("term", sort=False):
-        docs_parts: List[np.ndarray] = []
-        tf_parts: List[np.ndarray] = []
-        norm_parts: List[np.ndarray] = []
-        pos_parts: List[np.ndarray] = []
-        for row in tg.itertuples(index=False):
-            n = int(row.n_docs)
-            docs_parts.append(codec.delta_decode_sorted(bytes(row.doc_bytes), n))
-            tfs = codec.varint_decode(bytes(row.tf_bytes), n).astype(np.int64)
-            tf_parts.append(tfs)
-            norm_parts.append(np.frombuffer(bytes(row.norm_bytes), dtype=np.uint8))
-            if want_positions:
-                pos_parts.append(codec.decode_positions(bytes(row.pos_bytes), tfs))
-        docs = np.concatenate(docs_parts)
-        tfs = np.concatenate(tf_parts)
-        dl_q = decode_norms_np(np.concatenate(norm_parts)).astype(np.float64)
-        positions = np.concatenate(pos_parts) if (want_positions and pos_parts) else None
-        if docs.size > 1 and (docs[1:] < docs[:-1]).any():
-            # multi-generation blocks overlap in doc range: merge-sort
-            order = np.argsort(docs, kind="stable")
-            if positions is not None:
-                starts = np.concatenate(([0], np.cumsum(tfs)[:-1]))
-                idx = np.repeat(starts[order], tfs[order]) + _ragged_arange(tfs[order])
-                positions = positions[idx]
-            docs, tfs, dl_q = docs[order], tfs[order], dl_q[order]
-        out[str(term)] = (docs, tfs, dl_q, positions)
-    return out
+    table = BlockTable(g, set(g["term"].astype(str)) if want_positions else ())
+    return table.decode(np.arange(len(g)))
 
 
 def score_terms_in_segment(
@@ -163,7 +133,7 @@ def phrase_freq_in_segment(
         lens = tfs[sel]
         offs = starts[sel]
         doc_ord = np.repeat(np.arange(cand.size, dtype=np.int64), lens)
-        idx = np.repeat(offs, lens) + _ragged_arange(lens)
+        idx = np.repeat(offs, lens) + codec.ragged_arange(lens)
         keys = (doc_ord << np.int64(32)) | pos[idx].astype(np.int64)
         keysets.append(np.sort(keys))
         if dl_for_cand is None:
@@ -243,7 +213,7 @@ def sloppy_phrase_freq_in_segment(
         sel = np.searchsorted(docs, cand)
         starts = np.concatenate(([0], np.cumsum(tfs)[:-1]))
         lens = tfs[sel]
-        idx = np.repeat(starts[sel], lens) + _ragged_arange(lens)
+        idx = np.repeat(starts[sel], lens) + codec.ragged_arange(lens)
         doc_parts.append(np.repeat(np.arange(cand.size, dtype=np.int64), lens))
         pos_parts.append(pos[idx].astype(np.int64) - off)
         lbl_parts.append(np.full(int(lens.sum()), off, dtype=np.int64))
@@ -533,16 +503,6 @@ def _lucene_sloppy_walk_rpt(
     if match_length <= slop:
         total += L // (1 + match_length)
     return total / L
-
-
-def _ragged_arange(lens: np.ndarray) -> np.ndarray:
-    """[3,1,2] -> [0,1,2, 0, 0,1] (vectorized)."""
-    lens = np.asarray(lens, dtype=np.int64)
-    total = int(lens.sum())
-    if total == 0:
-        return np.empty(0, dtype=np.int64)
-    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    return np.arange(total, dtype=np.int64) - np.repeat(starts, lens)
 
 
 def topk_by_score(docs: np.ndarray, scores: np.ndarray, k: int) -> Tuple[np.ndarray, np.ndarray]:

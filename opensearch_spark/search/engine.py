@@ -17,15 +17,21 @@ Query lifecycle (the Spark re-expression of SURVEY.md §3.1):
 5. fetch phase: broadcast-join winners back to the corpus row
 
 Scoring-context notes:
-- full-text clauses (match / match_phrase) score BM25 (bm25.py)
+- match (or/and/msm), match_phrase (exact or sloppy) and bools of those
+  run as ONE per-segment program scorer (``_program`` ->
+  msearch.make_msearch_scorer -> wand.score_program: block-max pruning,
+  one decode, one combine, per-segment top-k; every match when no k is
+  given, as for compile()/count()) — no per-clause union, no docId
+  shuffle
 - term-level clauses (term/terms/range/exists/ids) contribute a constant
   ``boost`` score (reference semantics for filter/constant_score contexts;
   the reference's BM25-on-keyword-field scoring for term-in-must is NOT
   reproduced — use filter context, which is also the reference's
   recommended usage)
-- bool combines clauses with one union + one aggregation (single shuffle):
-  each clause emits (docId, score, kind, cid); the aggregate enforces
-  must-count / must_not-absence / minimum_should_match and sums scores.
+- any other bool (nested bools, other leaf kinds) combines its clauses
+  with one union + one aggregation: each clause emits (docId, score,
+  kind, cid); the aggregate enforces must-count / must_not-absence /
+  minimum_should_match and sums scores.
 """
 
 from __future__ import annotations
@@ -39,31 +45,12 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from opensearch_spark.analysis.analyzer import tokenize
 from opensearch_spark.index.build import IndexPaths, load_index
-from opensearch_spark.search import ast as A, bm25, dsl as dsl_mod, wand
+from opensearch_spark.search import ast as A, bm25, dsl as dsl_mod
 
 SCORE_SCHEMA = "docId long, score double"
 
 
 # ---- picklable scorer factories (no Spark objects captured) ----------------
-
-def _make_match_scorer(idfs: Dict[str, float], avgdl: float, operator: str,
-                       msm: int, boost: float, topk: Optional[int]):
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if topk is not None:
-            # block-max pruned path (WAND/MaxScore analog, wand.py)
-            docs, scores, _stats = wand.score_match_topk(
-                pdf, idfs, avgdl, topk, operator, msm, boost
-            )
-        else:
-            decoded = bm25.decode_term_group(pdf)
-            docs, scores = bm25.score_terms_in_segment(
-                decoded, idfs, avgdl, operator, msm, n_required=len(idfs)
-            )
-            if boost != 1.0:
-                scores = scores * boost
-        return pd.DataFrame({"docId": docs.astype(np.int64), "score": scores})
-    return fn
-
 
 def _make_custom_sim_scorer(dfs: Dict[str, int], doc_count: int, avgdl: float,
                             operator: str, msm: int, boost: float, simfn):
@@ -103,42 +90,6 @@ def _make_custom_sim_scorer(dfs: Dict[str, int], doc_count: int, avgdl: float,
             keep = slice(None)
         return pd.DataFrame({"docId": uniq[keep].astype(np.int64),
                              "score": scores[keep]})
-
-    return fn
-
-
-def _make_phrase_scorer(terms: List[str], idfs: Dict[str, float], avgdl: float,
-                        boost: float, topk: Optional[int]):
-    idf_sum = sum(idfs[t] for t in terms)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if topk is not None:
-            docs, scores, _stats = wand.score_phrase_topk(
-                pdf, terms, idfs, avgdl, topk, boost
-            )
-        else:
-            decoded = bm25.decode_term_group(pdf, want_positions=True)
-            docs, pf, dl_q = bm25.phrase_freq_in_segment(decoded, terms)
-            scores = (
-                boost * idf_sum * (bm25.K1 + 1.0)
-                * bm25.tf_norm(pf.astype(np.float64), dl_q, avgdl)
-            )
-        return pd.DataFrame({"docId": docs.astype(np.int64), "score": scores})
-    return fn
-
-
-def _make_sloppy_phrase_scorer(terms: List[str], idfs: Dict[str, float],
-                               avgdl: float, slop: int, boost: float):
-    idf_sum = sum(idfs[t] for t in terms)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        decoded = bm25.decode_term_group(pdf, want_positions=True)
-        docs, pf, dl_q = bm25.sloppy_phrase_freq_in_segment(decoded, terms, slop)
-        scores = (
-            boost * idf_sum * (bm25.K1 + 1.0)
-            * bm25.tf_norm(pf, dl_q, avgdl)
-        )
-        return pd.DataFrame({"docId": docs.astype(np.int64), "score": scores})
 
     return fn
 
@@ -719,9 +670,7 @@ class SearchEngine:
         prune = (sort is None and search_after is None and from_ == 0
                  and collapse is None and slice_ is None
                  and terminate_after is None)
-        df = self._search_topk_program(node, k) if prune else None
-        if df is None:
-            df = self.compile(node, topk=k if prune else None)
+        df = self.compile(node, topk=k if prune else None)
         if slice_ is not None:
             # sliced scroll (reference: search/slice/SliceBuilder.java:82)
             # — deterministic hash partition of the matching docs so N
@@ -1727,25 +1676,15 @@ class SearchEngine:
             dsl_mod.parse(q) if isinstance(q, dict) else dsl_mod.normalize(q)
             for q in queries
         ]
-        cand: set = set()
-        for n in nodes:
-            cand |= M.candidate_terms(n, self._tok)
-        idfs_all = self._idfs(sorted(cand)) if cand else {}
-        known = {t for t, v in idfs_all.items() if v == v}
-
-        programs: List[M.Program] = []
-        fallback: List[tuple] = []
-        for qid, n in enumerate(nodes):
-            p = None if self.similarity is not None else M.build_program(qid, n, known, self._tok)
-            if p is None:
-                fallback.append((qid, n))
-            else:
-                programs.append(p)
+        progs, idfs = self._programs(nodes)
+        if self.similarity is not None:
+            progs = [None] * len(nodes)  # the program scorer is BM25-only
+        programs = [p for p in progs if p is not None]
+        fallback = [(qid, n) for qid, (n, p) in enumerate(zip(nodes, progs)) if p is None]
 
         parts: List[DataFrame] = []
         terms = M.required_terms(programs)
         if terms:
-            idfs = {t: idfs_all[t] for t in known}
             # over-fetch per segment by the tombstone count (deletes are
             # filtered after the per-segment heads are taken)
             scorer = M.make_msearch_scorer(
@@ -1779,45 +1718,6 @@ class SearchEngine:
             .orderBy("qid", F.desc("score"), F.asc("docId"))
         )
 
-    def _search_topk_program(self, node: A.AnyNode, k: int) -> Optional[DataFrame]:
-        """Single-query hot path for BOOL trees: compile the whole
-        boolean program into ONE per-segment ``applyInPandas`` (the
-        msearch machinery, msearch.py:64) emitting per-segment top-k —
-        no per-clause union and no docId-keyed shuffle (the reference
-        evaluates the whole BooleanQuery per segment too). Returns None
-        when the node family is unsupported (caller falls back to the
-        exhaustive per-clause compiler) — bare match/phrase leaves keep
-        their WAND block-max path, which prunes harder."""
-        from opensearch_spark.search import msearch as M
-
-        if not isinstance(node, A.Bool):
-            return None
-        if self.similarity is not None:
-            return None  # program scorer is BM25-only
-        if self._n_deletes > self.MAX_PRUNE_DELETES:
-            return None
-        cand = M.candidate_terms(node, self._tok)
-        idfs_all = self._idfs(sorted(cand)) if cand else {}
-        known = {t for t, v in idfs_all.items() if v == v}
-        prog = M.build_program(0, node, known, self._tok)
-        if prog is None:
-            return None
-        if prog.match_none:
-            return self._empty()
-        terms = M.required_terms([prog])
-        if not terms:
-            return self._empty()
-        scorer = M.make_single_program_scorer(
-            prog, {t: idfs_all[t] for t in known}, self.avgdl,
-            k + self._n_deletes,
-        )
-        out = (
-            self._postings_for(terms)
-            .groupBy("seg")
-            .applyInPandas(scorer, SCORE_SCHEMA)
-        )
-        return self._live(out)
-
     def fetch(self, hits: DataFrame) -> DataFrame:
         """Join top-k hits back to corpus rows (the fetch phase)."""
         if self.corpus is None:
@@ -1827,12 +1727,12 @@ class SearchEngine:
         )
 
     def count(self, query: dict | A.AnyNode) -> int:
-        """Hit count. Match queries take a no-scoring shortcut (reference:
-        shortcutTotalHitCount, TopDocsCollectorContext.java:154): a
-        single-term count is answered from the termstats table alone; a
-        multi-term match counts per-segment doc-set unions/intersections
-        without any BM25 math or norm use. Falls back to the full
-        compiler for other node families or when tombstones exist."""
+        """Hit count. A match query with one known term (or a required
+        term missing from the index) is answered from the termstats
+        table alone (reference: shortcutTotalHitCount,
+        TopDocsCollectorContext.java:154). Everything else counts the
+        compiled frame; match/phrase/bool run the exhaustive program
+        scorer. The shortcut is off when tombstones exist."""
         node = dsl_mod.parse(query) if isinstance(query, dict) else dsl_mod.normalize(query)
         if self.deletes is None and isinstance(node, A.Match):
             terms = self._tok(node.query)
@@ -1840,39 +1740,10 @@ class SearchEngine:
                 dfs = self._dfs(terms)
                 uniq = sorted(set(terms))
                 known = [t for t in uniq if dfs.get(t, 0) > 0]
-                if node.operator == "and" and len(known) < len(uniq):
-                    return 0
-                if not known:
+                if not known or (node.operator == "and" and len(known) < len(uniq)):
                     return 0
                 if len(known) == 1 and node.minimum_should_match <= 1:
                     return int(dfs[known[0]])
-                op, msm = node.operator, node.minimum_should_match
-
-                def count_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-                    decoded = bm25.decode_term_group(pdf)
-                    arrays = [decoded[t][0] for t in known if t in decoded]
-                    if not arrays:
-                        return pd.DataFrame({"n": [0]})
-                    if op == "and":
-                        if len(arrays) < len(known):
-                            return pd.DataFrame({"n": [0]})
-                        base = arrays[0]
-                        for a in arrays[1:]:
-                            base = base[np.isin(base, a, assume_unique=True)]
-                        return pd.DataFrame({"n": [int(base.size)]})
-                    allc = np.concatenate(arrays)
-                    u, counts = np.unique(allc, return_counts=True)
-                    if msm > 1:
-                        u = u[counts >= msm]
-                    return pd.DataFrame({"n": [int(u.size)]})
-
-                per_seg = (
-                    self._postings_for(known)
-                    .groupBy("seg")
-                    .applyInPandas(count_fn, "n long")
-                )
-                row = per_seg.agg(F.sum("n").alias("n")).collect()[0]
-                return int(row["n"] or 0)
         return self.compile(node).count()
 
     # ---- compilation ----------------------------------------------------
@@ -1899,7 +1770,7 @@ class SearchEngine:
         if isinstance(node, A.MatchPhrase):
             return self._phrase(node, topk)
         if isinstance(node, A.Bool):
-            return self._bool(node)
+            return self._bool(node, topk)
         if isinstance(node, A.MatchAll):
             return self.docstats.select("docId", F.lit(float(node.boost)).alias("score"))
         if isinstance(node, A.MatchNone):
@@ -2659,6 +2530,47 @@ class SearchEngine:
     def _postings_for(self, terms: Sequence[str]) -> DataFrame:
         return self.postings.where(F.col("term").isin(list(set(terms))))
 
+    def _programs(self, nodes: Sequence[A.AnyNode]) -> tuple:
+        """(``msearch.Program`` or None per node, idf of every known
+        query term). A node gets a program when it is a match,
+        match_phrase, or bool of those on this engine's field."""
+        from opensearch_spark.search import msearch as M
+
+        cand: set = set()
+        for n in nodes:
+            cand |= M.candidate_terms(n, self._tok)
+        idfs = {t: v for t, v in self._idfs(sorted(cand)).items() if v == v}
+
+        def on_field(n: A.AnyNode) -> bool:
+            leaves = (n.must + n.filter + n.should + n.must_not
+                      if isinstance(n, A.Bool) else [n])
+            return all(getattr(c, "field_name", None) == self.text_field for c in leaves)
+
+        progs = [M.build_program(qid, n, set(idfs), self._tok) if on_field(n) else None
+                 for qid, n in enumerate(nodes)]
+        return progs, idfs
+
+    def _program(self, node: A.AnyNode, topk: Optional[int]) -> Optional[DataFrame]:
+        """The node as ONE per-segment program scorer
+        (wand.score_program: block-max pruning, one decode, one combine,
+        per-segment top-k or every match when ``topk`` is None) — no
+        per-clause union and no docId shuffle. None when the node has
+        no program (``_programs``)."""
+        from opensearch_spark.search import msearch as M
+
+        (prog,), idfs = self._programs([node])
+        if prog is None:
+            return None
+        if prog.match_none or not prog.clauses:
+            return self._empty()
+        scorer = M.make_msearch_scorer([prog], idfs, self.avgdl, topk)
+        return (
+            self._postings_for(M.required_terms([prog]))
+            .groupBy("seg")
+            .applyInPandas(scorer, M.MSEARCH_SCHEMA)
+            .select("docId", "score")
+        )
+
     def _match(self, node: A.Match, topk: Optional[int]) -> DataFrame:
         self._check_field(node.field_name)
         terms = self._tok(node.query)
@@ -2666,25 +2578,15 @@ class SearchEngine:
             if node.zero_terms_query == "all":
                 return self.compile(A.MatchAll(boost=node.boost))
             return self._empty()
+        if self.similarity is None:
+            return self._program(node, topk)
         idfs = {t: v for t, v in self._idfs(terms).items() if v == v}  # drop NaN (missing)
-        if not idfs:
-            return self._empty()
-        if node.operator == "and" and len(idfs) < len(set(terms)):
+        if not idfs or (node.operator == "and" and len(idfs) < len(set(terms))):
             return self._empty()  # a required term is absent from the index
-        if self.similarity is not None:
-            dfs = self._dfs(list(idfs))
-            scorer = _make_custom_sim_scorer(
-                dfs, self.doc_count, self.avgdl, node.operator,
-                node.minimum_should_match, float(node.boost), self.similarity,
-            )
-            return (
-                self._postings_for(list(idfs))
-                .groupBy("seg")
-                .applyInPandas(scorer, SCORE_SCHEMA)
-            )
-        scorer = _make_match_scorer(
-            idfs, self.avgdl, node.operator, node.minimum_should_match,
-            float(node.boost), topk,
+        dfs = self._dfs(list(idfs))
+        scorer = _make_custom_sim_scorer(
+            dfs, self.doc_count, self.avgdl, node.operator,
+            node.minimum_should_match, float(node.boost), self.similarity,
         )
         return (
             self._postings_for(list(idfs))
@@ -2739,6 +2641,9 @@ class SearchEngine:
         return scores.join(verify, "docId")
 
     def _phrase(self, node: A.MatchPhrase, topk: Optional[int]) -> DataFrame:
+        """match_phrase, exact or sloppy (slop > 0: Lucene
+        SloppyPhraseMatcher semantics, bm25.sloppy_phrase_freq_in_segment),
+        scored BM25 as a pseudo-term; a one-term phrase is a match."""
         self._check_field(node.field_name)
         if getattr(self, "_index_options", "positions") == "docs":
             if node.slop != 0:
@@ -2746,51 +2651,11 @@ class SearchEngine:
                     "sloppy phrases are not supported on a docs-only "
                     "(match_only_text) index")
             return self._phrase_via_source(node)
-        if node.slop != 0:
-            return self._sloppy_phrase(node)
-        terms = self._tok(node.query)
-        if not terms:
-            return self._empty()
-        idf_map = self._idfs(terms)
-        if any(v != v for v in idf_map.values()):
-            return self._empty()  # phrase term absent from index
-        if len(terms) == 1:
+        if self.similarity is not None and len(self._tok(node.query)) == 1:
             return self._match(
                 A.Match(field_name=node.field_name, query=node.query, boost=node.boost), topk
             )
-        scorer = _make_phrase_scorer(terms, idf_map, self.avgdl, float(node.boost), topk)
-        return (
-            self._postings_for(terms)
-            .groupBy("seg")
-            .applyInPandas(scorer, SCORE_SCHEMA)
-        )
-
-    def _sloppy_phrase(self, node: A.MatchPhrase) -> DataFrame:
-        """slop > 0 phrases (reference: MatchPhraseQueryBuilder slop /
-        Lucene sloppy phrase). Match semantics are Lucene's (adjusted-
-        position width <= slop, transposition costs 2 for 2-term
-        phrases; in-order chains for k > 2); sloppy_freq weighting is a
-        documented deterministic variant (bm25.sloppy_phrase_freq_in_
-        segment)."""
-        terms = self._tok(node.query)
-        if not terms:
-            return self._empty()
-        idf_map = self._idfs(terms)
-        if any(v != v for v in idf_map.values()):
-            return self._empty()
-        if len(terms) == 1:
-            return self._match(
-                A.Match(field_name=node.field_name, query=node.query,
-                        boost=node.boost), None
-            )
-        scorer = _make_sloppy_phrase_scorer(
-            terms, idf_map, self.avgdl, int(node.slop), float(node.boost)
-        )
-        return (
-            self._postings_for(terms)
-            .groupBy("seg")
-            .applyInPandas(scorer, SCORE_SCHEMA)
-        )
+        return self._program(node, topk)
 
     # injectable "now" anchor for date-math bounds (tests / PIT
     # determinism); None = wall clock at evaluation
@@ -2942,7 +2807,17 @@ class SearchEngine:
 
     # ---- compound ---------------------------------------------------------
 
-    def _bool(self, node: A.Bool) -> DataFrame:
+    def _bool(self, node: A.Bool, topk: Optional[int] = None) -> DataFrame:
+        """Bools of match/phrase leaves run as one program
+        (``_program``). Any other bool — nested bools, term-level or
+        other leaves, pure-negative — unions its compiled clauses and
+        aggregates per docId: each clause emits (docId, score, kind,
+        cid); the aggregate enforces must-count / must_not-absence /
+        minimum_should_match and sums scores."""
+        if self.similarity is None:
+            prog = self._program(node, topk)
+            if prog is not None:
+                return prog
         KIND_MUST, KIND_FILTER, KIND_SHOULD, KIND_NOT = 0, 1, 2, 3
         parts: List[DataFrame] = []
 

@@ -1,30 +1,28 @@
-"""_msearch: batched multi-query execution in ONE Spark job.
+"""Boolean programs over posting blocks, and _msearch in ONE Spark job.
+
+``build_program`` turns a match (or/and/msm), match_phrase (any slop),
+or bool-of-those AST into a flat ``Program``; ``_run_program`` is its
+combine in numpy. ``wand.score_program`` runs a program over one
+segment (block-max pruning, one decode, this combine, top-k), and every
+such query runs through it: ``search``, ``compile`` and ``count``
+score one program per segment, an msearch batch scores all of its
+programs against one shared ``wand.BlockTable`` (one decode cache) per
+segment.
 
 Reference: the `_msearch` endpoint executes a list of search requests in
 a single round trip (``action/search/TransportMultiSearchAction.java``,
-``rest/action/search/RestMultiSearchAction.java``); per-shard, each
-request still runs its own query phase. The Spark re-expression goes
-further: ALL queries in the batch share one postings scan and one
-per-segment decode —
+``rest/action/search/RestMultiSearchAction.java``). Spark shape:
 
     postings.filter(term IN union-of-all-query-terms)
       .groupBy(seg)
-      .applyInPandas(multi_query_scorer)      # ONE python stage
+      .applyInPandas(make_msearch_scorer(programs))  # ONE python stage
       -> (qid, docId, score) per-segment top-k per query
-      .Window(partitionBy qid).row_number <= k   # global reduce
+      .Window(partitionBy qid).row_number <= k        # global reduce
 
-so a batch of Q queries costs one shuffle + one Python stage instead of
-Q jobs. Per-segment posting blocks are decoded ONCE and reused by every
-query that references the term (the dominant cost for hot terms).
-
-This is the engine's high-throughput serving path: cluster query
-throughput is measured by pushing batches through msearch, which keeps
-every executor busy regardless of per-query selectivity.
-
-Supported query family (the hot path): match / match_phrase /
-bool(must|should|filter|must_not of match/phrase) — with operator,
-minimum_should_match, and boosts. Anything else falls back to the
-regular per-query compiler and is unioned into the same result shape.
+so a batch of Q queries costs one Python stage instead of Q jobs, and a
+block that several queries need is decoded once. Other query families
+fall back to the per-query compiler and are unioned into the same
+result shape.
 """
 
 from __future__ import annotations
@@ -49,6 +47,7 @@ class _Clause:
     operator: str = "or"
     msm: int = 0
     weight: float = 1.0  # clause-level boost
+    slop: int = 0       # phrase only: > 0 = sloppy phrase
 
 
 @dataclass
@@ -97,8 +96,6 @@ def build_program(qid: int, node: A.AnyNode, known_terms: set,
             ))
             return True
         if isinstance(n, A.MatchPhrase):
-            if n.slop != 0:
-                return False
             terms = tok(n.query)
             if not terms:
                 return True
@@ -112,7 +109,8 @@ def build_program(qid: int, node: A.AnyNode, known_terms: set,
                 ))
                 return True
             prog.clauses.append(_Clause(
-                occur=occur, kind="phrase", terms=terms, weight=float(n.boost)
+                occur=occur, kind="phrase", terms=terms, weight=float(n.boost),
+                slop=int(n.slop),
             ))
             return True
         return False
@@ -137,17 +135,12 @@ def build_program(qid: int, node: A.AnyNode, known_terms: set,
         for c in node.must_not:
             if not leaf(c, "must_not"):
                 return None
-        if not node.must and not node.filter and node.must_not and not node.should:
-            return None  # pure-negative bool: needs match_all base — fall back
+        if not node.must and not node.filter and not node.should:
+            return None  # pure-negative or empty bool: match_all base — fall back
         prog.n_must = sum(1 for c in prog.clauses if c.occur in ("must", "filter"))
-        # account for required clauses that vanished due to missing terms
-        n_req_ast = len(node.must) + len(node.filter)
-        if n_req_ast and not prog.match_none:
-            n_req_built = prog.n_must
-            if n_req_built < n_req_ast:
-                # a required clause matched nothing (e.g. empty-token match)
-                pass
-        prog.bool_msm = node.effective_msm()
+        # should clauses dropped for matching nothing still count toward
+        # minimum_should_match (they just never match)
+        prog.bool_msm = node.effective_msm() if node.should else 0
         return prog
     return None
 
@@ -174,78 +167,35 @@ def required_terms(programs: Sequence[Program]) -> List[str]:
     return sorted(out)
 
 
+def position_terms(programs: Sequence[Program]) -> set:
+    """Terms whose positions the programs read (phrase clauses)."""
+    return {t for p in programs for c in p.clauses if c.kind == "phrase" for t in c.terms}
+
+
 def make_msearch_scorer(programs: List[Program], idfs: Dict[str, float],
-                        avgdl: float, k: int):
+                        avgdl: float, k: Optional[int]):
     """applyInPandas fn scoring every program against one segment's
-    decoded postings; emits per-(query, segment) top-k."""
-    want_pos = any(c.kind == "phrase" for p in programs for c in p.clauses)
+    posting blocks (one shared ``wand.BlockTable``); emits per-(query,
+    segment) top-k, or every match when ``k`` is None."""
+    pos_terms = position_terms(programs)
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        decoded = bm25.decode_term_group(pdf, want_positions=want_pos)
+        from opensearch_spark.search import wand
+
+        table = wand.BlockTable(pdf, pos_terms)
         out_qid: List[np.ndarray] = []
         out_doc: List[np.ndarray] = []
         out_score: List[np.ndarray] = []
         for prog in programs:
-            if prog.match_none:
-                continue
-            docs, scores = _run_program(prog, decoded, idfs, avgdl)
-            if docs.size == 0:
-                continue
-            docs, scores = bm25.topk_by_score(docs, scores, k)
-            if prog.boost != 1.0:
-                scores = scores * prog.boost
+            docs, scores, _stats = wand.score_program(table, prog, idfs, avgdl, k)
             out_qid.append(np.full(docs.size, prog.qid, dtype=np.int32))
-            out_doc.append(docs)
-            out_score.append(scores)
-        if not out_doc:
-            return pd.DataFrame({"qid": [], "docId": [], "score": []}).astype(
-                {"qid": np.int32, "docId": np.int64, "score": np.float64}
-            )
+            out_doc.append(docs.astype(np.int64))
+            out_score.append(scores.astype(np.float64))
         return pd.DataFrame({
-            "qid": np.concatenate(out_qid),
-            "docId": np.concatenate(out_doc),
-            "score": np.concatenate(out_score),
+            "qid": np.concatenate([np.empty(0, np.int32)] + out_qid),
+            "docId": np.concatenate([np.empty(0, np.int64)] + out_doc),
+            "score": np.concatenate([np.empty(0, np.float64)] + out_score),
         })
-
-    return fn
-
-
-def make_single_program_scorer(prog: Program, idfs: Dict[str, float],
-                               avgdl: float, k: int):
-    """Single-query program scorer with conjunction-led block pruning
-    (wand.score_program_topk): when the program has required clauses,
-    should/must_not clauses decode only candidate-overlapping posting
-    blocks. Falls back to the shared-decode exhaustive program when the
-    program is pure-should (the msearch batch regime)."""
-    from opensearch_spark.search import wand as W
-
-    clause_dicts = [
-        {"occur": c.occur, "kind": c.kind, "terms": c.terms,
-         "operator": c.operator, "msm": c.msm, "weight": c.weight}
-        for c in prog.clauses
-    ]
-    has_required = any(c.occur in ("must", "filter") for c in prog.clauses)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if prog.match_none:
-            return pd.DataFrame({"docId": pd.Series([], dtype=np.int64),
-                                 "score": pd.Series([], dtype=np.float64)})
-        if has_required:
-            out = W.score_program_topk(
-                pdf, clause_dicts, prog.bool_msm, idfs, avgdl, k,
-                boost=prog.boost,
-            )
-            if out is not None:
-                docs, scores, _stats = out
-                return pd.DataFrame({"docId": docs.astype(np.int64),
-                                     "score": scores})
-        want_pos = any(c.kind == "phrase" for c in prog.clauses)
-        decoded = bm25.decode_term_group(pdf, want_positions=want_pos)
-        docs, scores = _run_program(prog, decoded, idfs, avgdl)
-        docs, scores = bm25.topk_by_score(docs, scores, k)
-        if prog.boost != 1.0:
-            scores = scores * prog.boost
-        return pd.DataFrame({"docId": docs.astype(np.int64), "score": scores})
 
     return fn
 
@@ -258,7 +208,10 @@ def _clause_hits(c: _Clause, decoded, idfs, avgdl) -> Tuple[np.ndarray, np.ndarr
             avgdl, c.operator, c.msm, n_required=len(set(c.terms)),
         )
     else:
-        docs, pf, dl_q = bm25.phrase_freq_in_segment(decoded, c.terms)
+        if c.slop:
+            docs, pf, dl_q = bm25.sloppy_phrase_freq_in_segment(decoded, c.terms, c.slop)
+        else:
+            docs, pf, dl_q = bm25.phrase_freq_in_segment(decoded, c.terms)
         idf_sum = sum(idfs[t] for t in c.terms)
         scores = idf_sum * (bm25.K1 + 1.0) * bm25.tf_norm(
             pf.astype(np.float64), dl_q, avgdl
@@ -304,7 +257,7 @@ def _run_program(prog: Program, decoded, idfs, avgdl
                 pos = np.searchsorted(d, base[hit])
                 score[hit] += s[pos]
                 s_cnt[hit] += 1
-        if prog.bool_msm > 0 and sho:
+        if prog.bool_msm > 0:
             keep = s_cnt >= prog.bool_msm
             base, score = base[keep], score[keep]
     else:

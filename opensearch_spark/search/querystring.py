@@ -11,7 +11,7 @@ RangeQ / Exists / MatchAll), so no new physical operators are needed.
 
 Supported classic syntax (the widely-used subset):
   term          analyzed match on the default field
-  "a b"         phrase ("a b"~N parses; engine executes slop=0)
+  "a b"         phrase ("a b"~N is a sloppy phrase, slop-exact)
   field:term    explicit field (field:(a b) groups)
   +term -term   required / prohibited
   AND OR NOT && || !

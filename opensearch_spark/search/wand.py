@@ -1,175 +1,250 @@
-"""Block-max impact pruning for top-k scoring (the WAND/MaxScore analog).
+"""One per-segment program scorer with block-max pruning.
 
 Reference behavior (SURVEY.md §4.2): Lucene's TopScoreDocCollector raises
 ``minCompetitiveScore`` once the per-shard heap holds k docs, letting the
 scorer skip posting blocks whose max impact cannot beat it (block-max
-WAND). The same information lives in our postings: every 128-doc block
-row carries ``(max_tf, min_dl_q)``, so
+WAND); conjunctions lead with their sparsest clause and advance the
+others with skip pointers (``ConjunctionDISI``). The same information
+lives in our postings: every 128-doc block row carries
+``(first_doc, last_doc, max_tf, min_dl_q)``, so
 ``ub(block) = idf * (k1+1) * max_tf / (max_tf + k1*(1-b+b*min_dl_q/avgdl))``
 bounds any score contribution from that block (impact is increasing in tf
 and decreasing in dl; storing the pieces instead of the value keeps the
 bound valid when avgdl drifts under incremental updates).
 
-This module implements the vectorized-numpy equivalent, per segment:
+A ``BlockTable`` holds one segment's block rows as numpy arrays (one
+sort) plus a decode cache, shared by every program scored against the
+segment. ``score_program`` runs a match (or/and/msm), phrase, sloppy
+phrase, or bool-of-those program (``msearch.Program``) in four steps:
 
-OR / top-k (MaxScore-style, block-refined):
- 1. θ0: decode only the highest-upper-bound term; its k-th best single-
-    term contribution is a valid floor for the final k-th score.
- 2. Essential terms: sort terms by term_ub desc; the maximal suffix with
-    Σ ub < θ0 is non-essential — docs appearing ONLY there are pruned.
- 3. Candidate generation: decode essential-term blocks whose
-    ub(block) + Σ other terms' term_ub >= θ0; skipped blocks cannot
-    contain a top-k doc that appears nowhere else.
- 4. Exact scoring: decode any remaining block that OVERLAPS the candidate
-    doc range set (first_doc/last_doc vs sorted candidates); accumulate
-    contributions for candidates only; top-k with (score desc, docId asc).
+ 1. pruning picks which block rows to decode —
+    - a lone OR clause runs MaxScore: the strongest term's k-th best
+      contribution θ is a floor for the k-th score; terms whose bound
+      suffix is below θ are non-essential, and an essential term's block
+      is skipped when its bound plus every other term's bound is below θ;
+    - any other program with a required clause intersects the required
+      clauses' doc sets, sparsest first, decoding only blocks that
+      overlap the running candidates;
+    - ``k=None`` (or no required clause) selects every row.
+    Either way, every doc that can reach the top-k keeps all its blocks
+    (in every clause, must_not included);
+ 2. one decode of the selected rows (``codec.decode_blocks``);
+ 3. one combine with ``msearch._run_program``;
+ 4. top-k by (score desc, docId asc).
 
-AND / top-k (skip-pointer analog):
- 1. Decode the sparsest term fully -> candidate set.
- 2. For each other term (ascending density), decode only candidate-
-    overlapping blocks and intersect; blocks outside the candidate range
-    are never decoded.
-
-Both paths return EXACTLY the same top-k as exhaustive scoring (the
-engine's e2e tests assert rank-identity against the brute-force oracle);
-pruning only changes which bytes get decoded.
+Pruning only changes which bytes get decoded: the top-k equals full
+decode plus ``_run_program`` (tests/test_wand.py).
 """
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional, Tuple
+from typing import Dict, Iterable, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
 
 from opensearch_spark.analysis.smallfloat import decode_norms_np
 from opensearch_spark.index import codec
+from opensearch_spark.search import bm25, msearch as M
 
-K1 = 1.2
-B = 0.75
+K1 = bm25.K1
+B = bm25.B
 
 _EMPTY = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
 
 
-class TermBlocks:
-    """Lazy per-term view over a segment's posting-block rows.
+class BlockTable:
+    """One segment's posting-block rows, sorted once by (term, first_doc,
+    block_no), with a decode cache: each row is decoded at most once,
+    whichever program asks first. Terms in ``pos_terms`` also decode
+    positions."""
 
-    Handles multi-generation indexes (incremental batches append blocks
-    whose doc ranges overlap older generations): decode() merge-sorts the
-    concatenation when needed, preserving the sorted-docs invariant the
-    scorers rely on."""
+    def __init__(self, pdf: pd.DataFrame, pos_terms: Iterable[str] = ()):
+        names, code = np.unique(pdf["term"].to_numpy(dtype=object).astype(str),
+                                return_inverse=True)
+        first = pdf["first_doc"].to_numpy(dtype=np.int64)
+        order = np.lexsort((pdf["block_no"].to_numpy(dtype=np.int64), first, code))
+        self.code = code[order]
+        self.first = first[order]
+        self.last = pdf["last_doc"].to_numpy(dtype=np.int64)[order]
+        self.n_docs = pdf["n_docs"].to_numpy(dtype=np.int64)[order]
+        self.max_tf = pdf["max_tf"].to_numpy(dtype=np.float64)[order]
+        self.min_dl = pdf["min_dl_q"].to_numpy(dtype=np.float64)[order]
+        self._bytes = {c: pdf[c].to_numpy(dtype=object)[order]
+                       for c in ("doc_bytes", "tf_bytes", "norm_bytes", "pos_bytes")}
+        self.names = [str(t) for t in names]
+        self._term = {t: i for i, t in enumerate(self.names)}
+        self._bounds = np.searchsorted(self.code, np.arange(len(self.names) + 1))
+        pos_terms = set(pos_terms)
+        self._with_pos = np.array([t in pos_terms for t in self.names], dtype=bool)[self.code]
+        n = len(self.code)
+        self._off = np.full(n, -1, dtype=np.int64)       # row -> offset of its docs
+        self._pos_off = np.full(n, -1, dtype=np.int64)   # row -> offset of its positions
+        self._occ = np.zeros(n, dtype=np.int64)          # row -> positions count
+        self._docs = np.empty(0, np.int64)
+        self._tfs = np.empty(0, np.int64)
+        self._dlq = np.empty(0, np.float64)
+        self._pos = np.empty(0, np.int64)
 
-    __slots__ = ("first", "last", "ub_blocks", "n_docs", "_rows", "_decoded",
-                 "want_positions")
-
-    def __init__(self, rows: pd.DataFrame, idf_x_k1p1: float, avgdl: float,
-                 want_positions: bool = False):
-        rows = rows.sort_values(["first_doc", "block_no"], kind="stable")
-        self.first = rows["first_doc"].to_numpy(dtype=np.int64)
-        self.last = rows["last_doc"].to_numpy(dtype=np.int64)
-        max_tf = rows["max_tf"].to_numpy(dtype=np.float64)
-        min_dl = rows["min_dl_q"].to_numpy(dtype=np.float64)
-        # avgdl-independent stored bound, resolved against CURRENT avgdl
-        self.ub_blocks = idf_x_k1p1 * max_tf / (
-            max_tf + K1 * (1.0 - B + B * min_dl / avgdl)
-        )
-        self.n_docs = rows["n_docs"].to_numpy(dtype=np.int64)
-        self._rows = rows
-        self._decoded: Dict[int, tuple] = {}
-        self.want_positions = want_positions
-
-    @property
-    def n_blocks(self) -> int:
-        return len(self.first)
-
-    def term_ub(self) -> float:
-        return float(self.ub_blocks.max()) if len(self.ub_blocks) else 0.0
-
-    def decode(self, which: np.ndarray) -> Tuple[np.ndarray, np.ndarray, np.ndarray, Optional[list]]:
-        """Decode the selected block indices -> (docs, tfs, dl_q, pos_list).
-        Results are cached per block."""
-        docs_p, tf_p, dl_p, pos_p = [], [], [], []
-        for bi in np.atleast_1d(which):
-            bi = int(bi)
-            if bi not in self._decoded:
-                row = self._rows.iloc[bi]
-                n = int(row["n_docs"])
-                docs = codec.delta_decode_sorted(bytes(row["doc_bytes"]), n)
-                tfs = codec.varint_decode(bytes(row["tf_bytes"]), n).astype(np.int64)
-                dl_q = decode_norms_np(
-                    np.frombuffer(bytes(row["norm_bytes"]), dtype=np.uint8)
-                ).astype(np.float64)
-                pos = (
-                    codec.decode_positions(bytes(row["pos_bytes"]), tfs)
-                    if self.want_positions
-                    else None
-                )
-                self._decoded[bi] = (docs, tfs, dl_q, pos)
-            d = self._decoded[bi]
-            docs_p.append(d[0]); tf_p.append(d[1]); dl_p.append(d[2])
-            if self.want_positions:
-                pos_p.append(d[3])
-        if not docs_p:
-            return (np.empty(0, np.int64), np.empty(0, np.int64),
-                    np.empty(0, np.float64), [] if self.want_positions else None)
-        docs = np.concatenate(docs_p)
-        tfs = np.concatenate(tf_p)
-        dls = np.concatenate(dl_p)
-        pos = pos_p if self.want_positions else None
-        if docs.size > 1 and (docs[1:] < docs[:-1]).any():
-            # overlapping generations: merge-sort, keeping positions ragged-aligned
-            order = np.argsort(docs, kind="stable")
-            if self.want_positions:
-                pos_cat = np.concatenate(pos) if pos else np.empty(0, np.int64)
-                starts = np.concatenate(([0], np.cumsum(tfs)[:-1]))
-                idx = np.repeat(starts[order], tfs[order]) + _ragged_arange(tfs[order])
-                pos = [pos_cat[idx]]
-            docs, tfs, dls = docs[order], tfs[order], dls[order]
-        return (docs, tfs, dls, pos)
-
-    def decoded_block_count(self) -> int:
-        return len(self._decoded)
-
-    def blocks_overlapping(self, cand_sorted: np.ndarray) -> np.ndarray:
-        """Indices of blocks whose [first,last] doc range contains at least
-        one candidate (the skip-pointer test)."""
-        if cand_sorted.size == 0:
+    def rows(self, term: str) -> np.ndarray:
+        i = self._term.get(term)
+        if i is None:
             return np.empty(0, dtype=np.int64)
-        lo = np.searchsorted(cand_sorted, self.first, side="left")
-        hi = np.searchsorted(cand_sorted, self.last, side="right")
-        return np.flatnonzero(hi > lo)
+        return np.arange(self._bounds[i], self._bounds[i + 1], dtype=np.int64)
+
+    def df(self, term: str) -> int:
+        return int(self.n_docs[self.rows(term)].sum())
+
+    def block_ub(self, term: str, idf: float, avgdl: float) -> np.ndarray:
+        """Per-row score bound, associated like ``bm25`` contributions so
+        the bound at (max_tf, min_dl_q) equals that posting's score."""
+        r = self.rows(term)
+        tf = self.max_tf[r]
+        return idf * (K1 + 1.0) * bm25.tf_norm(tf, self.min_dl[r], avgdl)
+
+    def overlapping(self, term: str, cand: np.ndarray) -> np.ndarray:
+        """Rows of ``term`` whose [first, last] doc range holds at least
+        one of the sorted candidates (the skip-pointer test)."""
+        r = self.rows(term)
+        lo = np.searchsorted(cand, self.first[r], side="left")
+        hi = np.searchsorted(cand, self.last[r], side="right")
+        return r[hi > lo]
+
+    def n_decoded(self, rows: np.ndarray) -> int:
+        return int((self._off[rows] >= 0).sum())
+
+    def _ensure(self, rows: np.ndarray) -> None:
+        new = rows[self._off[rows] < 0]
+        for with_pos in (False, True):
+            sel = new[self._with_pos[new] == with_pos]
+            if sel.size == 0:
+                continue
+            b = self._bytes
+            docs, tfs, norms, pos = codec.decode_blocks(
+                self.n_docs[sel], b["doc_bytes"][sel], b["tf_bytes"][sel],
+                b["norm_bytes"][sel], b["pos_bytes"][sel] if with_pos else None)
+            n = self.n_docs[sel]
+            starts = np.cumsum(n) - n
+            self._off[sel] = self._docs.size + starts
+            self._docs = np.concatenate((self._docs, docs))
+            self._tfs = np.concatenate((self._tfs, tfs))
+            self._dlq = np.concatenate((self._dlq, decode_norms_np(norms).astype(np.float64)))
+            if with_pos:
+                occ = np.add.reduceat(tfs, starts)
+                self._occ[sel] = occ
+                self._pos_off[sel] = self._pos.size + np.cumsum(occ) - occ
+                self._pos = np.concatenate((self._pos, pos))
+
+    def decode(self, rows: np.ndarray) -> Dict[str, tuple]:
+        """Selected rows -> term -> (docs sorted, tfs, dl_q, positions
+        or None), the ``decoded`` dict the bm25/msearch scorers read."""
+        rows = np.unique(np.asarray(rows, dtype=np.int64))
+        self._ensure(rows)
+        n = self.n_docs[rows]
+        idx = np.repeat(self._off[rows], n) + codec.ragged_arange(n)
+        docs, tfs, dlq = self._docs[idx], self._tfs[idx], self._dlq[idx]
+        prow = rows[self._with_pos[rows]]
+        occ = self._occ[prow]
+        pos = self._pos[np.repeat(self._pos_off[prow], occ) + codec.ragged_arange(occ)]
+        out: Dict[str, tuple] = {}
+        code = self.code[rows]
+        ends = np.concatenate(([0], np.cumsum(n)))
+        p = 0
+        for ti in np.unique(code):
+            lo, hi = np.searchsorted(code, [ti, ti + 1])
+            a, e = int(ends[lo]), int(ends[hi])
+            tp = None
+            if self._with_pos[rows[lo]]:
+                m = int(tfs[a:e].sum())
+                tp, p = pos[p:p + m], p + m
+            out[self.names[ti]] = codec.merge_generations(docs[a:e], tfs[a:e], dlq[a:e], tp)
+        return out
 
 
-def _contrib(tfs: np.ndarray, dl_q: np.ndarray, avgdl: float, idf_x_k1p1: float) -> np.ndarray:
-    # parenthesized exactly like bm25.tf_norm so float results are
-    # bit-identical between the pruned and exhaustive scorers
-    return idf_x_k1p1 * (tfs / (tfs + K1 * (1.0 - B + B * dl_q / avgdl)))
+def _docs_of(table: BlockTable, term: str, rows: np.ndarray) -> np.ndarray:
+    got = table.decode(rows).get(term)
+    return got[0] if got is not None else np.empty(0, np.int64)
 
 
-def _ragged_arange(lens: np.ndarray) -> np.ndarray:
-    lens = np.asarray(lens, dtype=np.int64)
-    total = int(lens.sum())
-    if total == 0:
-        return np.empty(0, dtype=np.int64)
-    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    return np.arange(total, dtype=np.int64) - np.repeat(starts, lens)
+def _maxscore_rows(table: BlockTable, terms: List[str], idfs: Dict[str, float],
+                   avgdl: float, k: int) -> np.ndarray:
+    """MaxScore row selection for a lone OR clause."""
+    ub = {t: table.block_ub(t, idfs[t], avgdl) for t in terms}
+    names = sorted(terms, key=lambda t: -float(ub[t].max()))
+    term_ub = np.array([float(ub[t].max()) for t in names])
+    d0, f0, l0, _ = table.decode(table.rows(names[0]))[names[0]]
+    c0 = idfs[names[0]] * (K1 + 1.0) * bm25.tf_norm(f0.astype(np.float64), l0, avgdl)
+    theta = float(np.partition(c0, -k)[-k]) if c0.size >= k else 0.0
+    suffix = np.cumsum(term_ub[::-1])[::-1]
+    parts = [d0]
+    for j in range(1, len(names)):
+        if suffix[j] < theta:
+            break  # only non-essential terms remain
+        t = names[j]
+        keep = table.rows(t)[ub[t] + (term_ub.sum() - term_ub[j]) >= theta]
+        parts.append(_docs_of(table, t, keep))
+    cand = np.unique(np.concatenate(parts))
+    return np.concatenate([table.overlapping(t, cand) for t in names])
 
 
-def build_term_blocks(
-    pdf: pd.DataFrame, idfs: Dict[str, float], avgdl: float, want_positions: bool = False
-) -> Dict[str, TermBlocks]:
-    out = {}
-    for term, rows in pdf.groupby("term", sort=False):
-        t = str(term)
-        if t in idfs:
-            out[t] = TermBlocks(rows, idfs[t] * (K1 + 1.0), avgdl, want_positions)
-    return out
+def _lead_rows(table: BlockTable, prog: M.Program, terms: List[str]) -> np.ndarray:
+    """Skip-intersection row selection: candidates are the docs every
+    required clause can hold (sparsest clause first); every clause then
+    decodes only blocks overlapping them."""
+    def est(c: M._Clause) -> int:
+        sizes = [table.df(t) for t in c.terms]
+        return min(sizes) if (c.kind == "phrase" or c.operator == "and") else sum(sizes)
+
+    cand: Optional[np.ndarray] = None
+    req = [c for c in prog.clauses if c.occur in ("must", "filter")]
+    for c in sorted(req, key=est):
+        def rows(t: str) -> np.ndarray:
+            return table.rows(t) if cand is None else table.overlapping(t, cand)
+
+        if c.kind == "match" and c.operator == "or":
+            docs = np.unique(np.concatenate(
+                [np.empty(0, np.int64)] + [_docs_of(table, t, rows(t)) for t in set(c.terms)]))
+            cand = docs if cand is None else cand[np.isin(cand, docs, assume_unique=True)]
+        else:
+            for t in sorted(set(c.terms), key=table.df):
+                docs = _docs_of(table, t, rows(t))
+                cand = docs if cand is None else cand[np.isin(cand, docs, assume_unique=True)]
+        if cand.size == 0:
+            return np.empty(0, dtype=np.int64)
+    return np.concatenate([table.overlapping(t, cand) for t in terms])
 
 
-def _topk_arrays(docs: np.ndarray, scores: np.ndarray, k: int) -> Tuple[np.ndarray, np.ndarray]:
-    from opensearch_spark.search.bm25 import topk_by_score
+def _select_rows(table: BlockTable, prog: M.Program, terms: List[str], rows: np.ndarray,
+                 idfs: Dict[str, float], avgdl: float, k: Optional[int]) -> np.ndarray:
+    """Block rows to decode for ``prog`` (``rows`` = all of its terms'
+    rows): every doc that can reach the top-k keeps all of its blocks."""
+    if k is None:
+        return rows
+    lone = prog.clauses[0] if len(prog.clauses) == 1 else None
+    if (lone is not None and lone.kind == "match" and lone.operator == "or"
+            and lone.msm <= 1 and lone.weight > 0 and prog.boost > 0
+            and (lone.occur == "must" or (lone.occur == "should" and prog.bool_msm <= 1))):
+        return _maxscore_rows(table, [t for t in terms if table.rows(t).size], idfs, avgdl, k)
+    if any(c.occur in ("must", "filter") for c in prog.clauses):
+        return _lead_rows(table, prog, terms)
+    return rows
 
-    return topk_by_score(docs, scores, k)
+
+def score_program(table: BlockTable, prog: M.Program, idfs: Dict[str, float],
+                  avgdl: float, k: Optional[int]) -> Tuple[np.ndarray, np.ndarray, dict]:
+    """(docIds, scores, {"decoded", "total"} blocks) of ``prog`` over one
+    segment: per-segment top-k, or every match when ``k`` is None."""
+    terms = sorted({t for c in prog.clauses for t in c.terms})
+    rows = np.concatenate([np.empty(0, np.int64)] + [table.rows(t) for t in terms])
+    docs, scores = _EMPTY
+    if rows.size and not prog.match_none:
+        decoded = table.decode(_select_rows(table, prog, terms, rows, idfs, avgdl, k))
+        docs, scores = M._run_program(prog, decoded, idfs, avgdl)
+        if k is not None:
+            docs, scores = bm25.topk_by_score(docs, scores, k)
+        if prog.boost != 1.0:
+            scores = scores * prog.boost
+    return docs, scores, {"decoded": table.n_decoded(rows), "total": int(rows.size)}
 
 
 def score_match_topk(
@@ -181,103 +256,11 @@ def score_match_topk(
     msm: int = 0,
     boost: float = 1.0,
 ) -> Tuple[np.ndarray, np.ndarray, dict]:
-    """Pruned top-k match scoring over one segment's block rows.
-
-    Returns (docIds, scores, stats) where stats records decoded vs total
-    blocks (pruning effectiveness, surfaced in tests/bench)."""
-    tb = build_term_blocks(pdf, idfs, avgdl)
-    total_blocks = sum(t.n_blocks for t in tb.values())
-    if not tb:
-        return (*_EMPTY, {"decoded": 0, "total": 0})
-
-    idf_factor = {t: idfs[t] * (K1 + 1.0) for t in tb}
-
-    if operator == "and":
-        docs, scores = _score_and(tb, idf_factor, avgdl, msm_required=len(set(idfs)))
-    elif msm > 1:
-        docs, scores = _score_exhaustive(tb, idf_factor, avgdl, msm=msm)
-    else:
-        docs, scores = _score_or_pruned(tb, idf_factor, avgdl, k)
-    if boost != 1.0:
-        scores = scores * boost
-    docs, scores = _topk_arrays(docs, scores, k)
-    stats = {
-        "decoded": sum(t.decoded_block_count() for t in tb.values()),
-        "total": total_blocks,
-    }
-    return docs, scores, stats
-
-
-def _accumulate(
-    pieces: List[Tuple[np.ndarray, np.ndarray]],
-) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """[(docs, contribs)] -> (uniq_docs, summed_scores, nmatch)."""
-    all_docs = np.concatenate([p[0] for p in pieces])
-    all_c = np.concatenate([p[1] for p in pieces])
-    uniq, inv = np.unique(all_docs, return_inverse=True)
-    scores = np.zeros(uniq.size, dtype=np.float64)
-    np.add.at(scores, inv, all_c)
-    nmatch = np.zeros(uniq.size, dtype=np.int64)
-    np.add.at(nmatch, inv, 1)
-    return uniq, scores, nmatch
-
-
-def _score_exhaustive(
-    tb: Dict[str, TermBlocks], idf_factor: Dict[str, float], avgdl: float,
-    msm: int = 0, require_all: bool = False,
-) -> Tuple[np.ndarray, np.ndarray]:
-    pieces = []
-    for t, blocks in tb.items():
-        docs, tfs, dl_q, _ = blocks.decode(np.arange(blocks.n_blocks))
-        pieces.append((docs, _contrib(tfs.astype(np.float64), dl_q, avgdl, idf_factor[t])))
-    if not pieces:
-        return _EMPTY
-    uniq, scores, nmatch = _accumulate(pieces)
-    if require_all:
-        keep = nmatch == len(tb)
-    elif msm > 1:
-        keep = nmatch >= msm
-    else:
-        return uniq, scores
-    return uniq[keep], scores[keep]
-
-
-def _score_and(
-    tb: Dict[str, TermBlocks], idf_factor: Dict[str, float], avgdl: float,
-    msm_required: int,
-) -> Tuple[np.ndarray, np.ndarray]:
-    """Conjunctive scoring with skip-style block pruning: intersect from the
-    sparsest term outward; other terms decode only candidate-overlapping
-    blocks."""
-    if len(tb) < msm_required:
-        return _EMPTY
-    order = sorted(tb, key=lambda t: int(tb[t].n_docs.sum()))
-    t0 = tb[order[0]]
-    cand, _, _, _ = t0.decode(np.arange(t0.n_blocks))
-    for t in order[1:]:
-        if cand.size == 0:
-            return _EMPTY
-        blocks = tb[t]
-        sel = blocks.blocks_overlapping(cand)
-        docs, _, _, _ = blocks.decode(sel)
-        cand = cand[np.isin(cand, docs, assume_unique=True)]
-    if cand.size == 0:
-        return _EMPTY
-    # exact scores for survivors: all terms, candidate-overlapping blocks
-    # only; sorted term order = deterministic float accumulation
-    scores = np.zeros(cand.size, dtype=np.float64)
-    for t in sorted(tb):
-        blocks = tb[t]
-        sel = blocks.blocks_overlapping(cand)
-        docs, tfs, dl_q, _ = blocks.decode(sel)
-        idx = np.searchsorted(docs, cand)
-        idx = np.clip(idx, 0, max(docs.size - 1, 0))
-        hit = docs.size > 0
-        if hit:
-            m = docs[idx] == cand
-            c = _contrib(tfs.astype(np.float64), dl_q, avgdl, idf_factor[t])
-            scores[m] += c[idx[m]]
-    return cand, scores
+    """Pruned top-k match over one segment's block rows (a one-clause
+    program)."""
+    clause = {"occur": "must", "kind": "match", "terms": list(idfs),
+              "operator": operator, "msm": msm, "weight": boost}
+    return score_program_topk(pdf, [clause], 0, idfs, avgdl, k)
 
 
 def score_phrase_topk(
@@ -288,46 +271,10 @@ def score_phrase_topk(
     k: int,
     boost: float = 1.0,
 ) -> Tuple[np.ndarray, np.ndarray, dict]:
-    """Exact-phrase top-k with block pruning: AND-intersect candidates with
-    skip-style decode, THEN decode positions only for candidate-overlapping
-    blocks (the two-phase iterator analog, SURVEY §4.2)."""
-    from opensearch_spark.search import bm25
-
-    uniq_terms = list(dict.fromkeys(phrase_terms))
-    tb = build_term_blocks(pdf, {t: idfs[t] for t in uniq_terms if t in idfs},
-                           avgdl, want_positions=True)
-    total_blocks = sum(t.n_blocks for t in tb.values())
-    stats = {"decoded": 0, "total": total_blocks}
-    if len(tb) < len(uniq_terms):
-        return (*_EMPTY, stats)
-
-    # candidate chain, sparsest first (decodes cache for the verify step)
-    order = sorted(tb, key=lambda t: int(tb[t].n_docs.sum()))
-    t0 = tb[order[0]]
-    cand, _, _, _ = t0.decode(np.arange(t0.n_blocks))
-    for t in order[1:]:
-        if cand.size == 0:
-            stats["decoded"] = sum(x.decoded_block_count() for x in tb.values())
-            return (*_EMPTY, stats)
-        blocks = tb[t]
-        docs, _, _, _ = blocks.decode(blocks.blocks_overlapping(cand))
-        cand = cand[np.isin(cand, docs, assume_unique=True)]
-
-    # position verify on survivors only
-    decoded = {}
-    for t, blocks in tb.items():
-        docs, tfs, dl_q, pos = blocks.decode(blocks.blocks_overlapping(cand))
-        pos_cat = np.concatenate(pos) if pos else np.empty(0, dtype=np.int64)
-        decoded[t] = (docs, tfs, dl_q, pos_cat)
-    docs, pf, dl_q = bm25.phrase_freq_in_segment(decoded, phrase_terms)
-    idf_sum = sum(idfs[t] for t in phrase_terms)
-    scores = (
-        boost * idf_sum * (K1 + 1.0)
-        * (pf / (pf + K1 * (1.0 - B + B * dl_q / avgdl)))
-    )
-    docs, scores = _topk_arrays(docs, scores.astype(np.float64), k)
-    stats["decoded"] = sum(x.decoded_block_count() for x in tb.values())
-    return docs, scores, stats
+    """Pruned top-k exact phrase over one segment's block rows (a
+    one-clause program)."""
+    clause = {"occur": "must", "kind": "phrase", "terms": list(phrase_terms), "weight": boost}
+    return score_program_topk(pdf, [clause], 0, idfs, avgdl, k)
 
 
 def score_program_topk(
@@ -338,200 +285,11 @@ def score_program_topk(
     avgdl: float,
     k: int,
     boost: float = 1.0,
-) -> Optional[Tuple[np.ndarray, np.ndarray, dict]]:
-    """Conjunction-led top-k for a whole boolean program over one
-    segment (the reference's lead-with-the-required-clause scorer,
-    ``ConjunctionDISI`` + two-phase iteration): required clauses
-    intersect with skip-style block decode (later clauses and every
-    should / must_not clause decode ONLY candidate-overlapping blocks),
-    then exact scores accumulate on the surviving candidates in the
-    same association order as the exhaustive program scorer.
-
+) -> Tuple[np.ndarray, np.ndarray, dict]:
+    """Pruned top-k of a bool program over one segment's block rows.
     ``clauses``: [{occur, kind(match|phrase), terms, operator, msm,
-    weight}]. Returns None when there is no required clause (caller
-    falls back to the exhaustive path) — pure-should MaxScore is left
-    to the single-match WAND path."""
-    from opensearch_spark.search import bm25
-
-    req = [c for c in clauses if c["occur"] in ("must", "filter")]
-    if not req:
-        return None
-    want_pos = any(c["kind"] == "phrase" for c in clauses)
-    all_terms = {t for c in clauses for t in c["terms"]}
-    tb = build_term_blocks(
-        pdf, {t: idfs[t] for t in all_terms if t in idfs}, avgdl,
-        want_positions=want_pos,
-    )
-    total_blocks = sum(t.n_blocks for t in tb.values())
-    stats = {"decoded": 0, "total": total_blocks}
-
-    def done(docs, scores):
-        stats["decoded"] = sum(t.decoded_block_count() for t in tb.values())
-        return docs, scores, stats
-
-    def clause_decoded(c: dict, cand: Optional[np.ndarray]):
-        """term -> (docs, tfs, dl_q, pos_cat) restricted to candidate-
-        overlapping blocks (all blocks when cand is None)."""
-        out = {}
-        for t in c["terms"]:
-            if t not in tb:
-                continue
-            blocks = tb[t]
-            sel = (np.arange(blocks.n_blocks) if cand is None
-                   else blocks.blocks_overlapping(cand))
-            docs, tfs, dl_q, pos = blocks.decode(sel)
-            pos_cat = (np.concatenate(pos) if (want_pos and pos)
-                       else (np.empty(0, np.int64) if want_pos else None))
-            out[t] = (docs, tfs, dl_q, pos_cat)
-        return out
-
-    def clause_eval(c: dict, cand: Optional[np.ndarray]):
-        """(docs_sorted, scores) of the clause, restricted to ``cand``
-        when given. Score association order matches the exhaustive
-        scorer (sorted terms / phrase pseudo-term)."""
-        decoded = clause_decoded(c, cand)
-        if c["kind"] == "phrase":
-            docs, pf, dl_q = bm25.phrase_freq_in_segment(decoded, c["terms"])
-            idf_sum = sum(idfs[t] for t in c["terms"])
-            scores = idf_sum * (K1 + 1.0) * (
-                pf.astype(np.float64)
-                / (pf + K1 * (1.0 - B + B * dl_q / avgdl))
-            )
-        else:
-            docs, scores = bm25.score_terms_in_segment(
-                decoded, {t: idfs[t] for t in c["terms"]}, avgdl,
-                c["operator"], c["msm"], n_required=len(set(c["terms"])),
-            )
-        if cand is not None and docs.size:
-            keep = np.isin(docs, cand, assume_unique=True)
-            docs, scores = docs[keep], scores[keep]
-        if c["occur"] == "filter":
-            scores = np.zeros_like(scores)
-        elif c["weight"] != 1.0:
-            scores = scores * c["weight"]
-        return docs, scores
-
-    def est_size(c: dict) -> int:
-        sizes = [int(tb[t].n_docs.sum()) for t in c["terms"] if t in tb]
-        if not sizes:
-            return 0
-        if c["kind"] == "phrase" or c["operator"] == "and":
-            return min(sizes)
-        return sum(sizes)
-
-    # required-clause intersection, smallest first (skip decode)
-    order = sorted(range(len(req)), key=lambda i: est_size(req[i]))
-    cand: Optional[np.ndarray] = None
-    req_eval: Dict[int, Tuple[np.ndarray, np.ndarray]] = {}
-    for i in order:
-        docs, scores = clause_eval(req[i], cand)
-        if docs.size == 0:
-            return done(*_EMPTY)
-        req_eval[i] = (docs, scores)
-        cand = docs if cand is None else cand[np.isin(cand, docs, assume_unique=True)]
-        if cand.size == 0:
-            return done(*_EMPTY)
-
-    # exact accumulation on survivors, clause order = program order
-    # (same float association order as the exhaustive scorer)
-    score = np.zeros(cand.size, dtype=np.float64)
-    for i in range(len(req)):
-        docs, s = req_eval[i]
-        pos = np.searchsorted(docs, cand)
-        pos = np.clip(pos, 0, docs.size - 1)
-        m = docs[pos] == cand
-        if not m.all():
-            # clause evaluated against an earlier (larger) candidate set;
-            # every current candidate must still be present
-            cand, score = cand[m], score[m]
-            pos = pos[m]
-            m = np.ones(cand.size, dtype=bool)
-        score += s[pos]
-        if cand.size == 0:
-            return done(*_EMPTY)
-
-    sho = [c for c in clauses if c["occur"] == "should"]
-    s_cnt = np.zeros(cand.size, dtype=np.int64)
-    for c in sho:
-        docs, s = clause_eval(c, cand)
-        if docs.size == 0:
-            continue
-        hit = np.isin(cand, docs, assume_unique=True)
-        pos = np.searchsorted(docs, cand[hit])
-        score[hit] += s[pos]
-        s_cnt[hit] += 1
-    if bool_msm > 0 and sho:
-        keep = s_cnt >= bool_msm
-        cand, score = cand[keep], score[keep]
-
-    for c in clauses:
-        if c["occur"] != "must_not":
-            continue
-        docs, _s = clause_eval(c, cand)
-        if docs.size and cand.size:
-            keep = ~np.isin(cand, docs, assume_unique=True)
-            cand, score = cand[keep], score[keep]
-
-    if boost != 1.0:
-        score = score * boost
-    docs, score = _topk_arrays(cand, score, k)
-    return done(docs, score)
-
-
-def _score_or_pruned(
-    tb: Dict[str, TermBlocks], idf_factor: Dict[str, float], avgdl: float, k: int
-) -> Tuple[np.ndarray, np.ndarray]:
-    names = sorted(tb, key=lambda t: tb[t].term_ub(), reverse=True)
-    ubs = np.array([tb[t].term_ub() for t in names], dtype=np.float64)
-
-    # single term: plain top-k, no pruning possible beyond decode-all
-    # phase 1: θ0 from the strongest term's own contributions
-    t0 = tb[names[0]]
-    d0, f0, l0, _ = t0.decode(np.arange(t0.n_blocks))
-    c0 = _contrib(f0.astype(np.float64), l0, avgdl, idf_factor[names[0]])
-    if d0.size > k:
-        theta0 = float(np.partition(c0, -k)[-k])
-    elif d0.size > 0:
-        theta0 = 0.0
-    else:
-        theta0 = 0.0
-
-    # phase 2: essential prefix (suffix sum of ubs < θ0 is non-essential)
-    suffix = np.cumsum(ubs[::-1])[::-1]
-    essential = [names[0]]
-    for j in range(1, len(names)):
-        if suffix[j] >= theta0:
-            essential.append(names[j])
-        # else: term j and beyond are non-essential (suffix sums shrink)
-    essential = set(essential)
-
-    # phase 3: candidate generation from essential terms with block-level bound
-    cand_parts = [d0]
-    total_other = {t: float(ubs.sum() - tb[t].term_ub()) for t in names}
-    for t in names[1:]:
-        if t not in essential:
-            continue
-        blocks = tb[t]
-        keep = np.flatnonzero(blocks.ub_blocks + total_other[t] >= theta0)
-        docs, _, _, _ = blocks.decode(keep)
-        cand_parts.append(docs)
-    cand = np.unique(np.concatenate(cand_parts))
-
-    # phase 4: exact scoring of candidates across ALL terms (sorted term
-    # order = deterministic float accumulation, matching the exhaustive path)
-    scores = np.zeros(cand.size, dtype=np.float64)
-    nmatch = np.zeros(cand.size, dtype=np.int64)
-    for t in sorted(names):
-        blocks = tb[t]
-        sel = blocks.blocks_overlapping(cand)
-        docs, tfs, dl_q, _ = blocks.decode(sel)
-        if docs.size == 0:
-            continue
-        idx = np.searchsorted(docs, cand)
-        idx = np.clip(idx, 0, docs.size - 1)
-        m = docs[idx] == cand
-        c = _contrib(tfs.astype(np.float64), dl_q, avgdl, idf_factor[t])
-        scores[m] += c[idx[m]]
-        nmatch[m] += 1
-    hit = nmatch > 0
-    return cand[hit], scores[hit]
+    weight[, slop]}]."""
+    prog = M.Program(qid=0, clauses=[M._Clause(**c) for c in clauses],
+                     bool_msm=bool_msm, boost=boost)
+    prog.n_must = sum(1 for c in prog.clauses if c.occur in ("must", "filter"))
+    return score_program(BlockTable(pdf, M.position_terms([prog])), prog, idfs, avgdl, k)

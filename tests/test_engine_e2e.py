@@ -124,6 +124,10 @@ def test_bool_must_should_msm(setup):
     )
     got = run(engine, dsl)
     assert brute.rank_identical(got, expected, ATOL)
+    # a should clause that matches nothing still counts toward msm
+    dsl["bool"]["should"] = [{"match": {"content": "zzz_not_a_term"}}]
+    assert run(engine, dsl) == []
+    assert engine.count(dsl) == 0
 
 
 def test_bool_must_not(setup):
@@ -262,12 +266,11 @@ def test_dis_max(setup):
 
 
 def test_bool_program_path_rank_identity(setup):
-    """search() routes bool trees through the per-segment program scorer
-    (no docId shuffle); results must be rank-identical to the exhaustive
-    per-clause compiler."""
-    from pyspark.sql import functions as F
-
-    engine, _ = setup
+    """search() runs a bool of match/phrase leaves as ONE per-segment
+    program scorer (no per-clause union, no docId aggregation); its
+    pruned top-k is rank-identical to the unpruned program (compile())
+    and to the brute-force oracle."""
+    engine, bix = setup
     dsl = {
         "bool": {
             "must": [{"match": {"content": "def"}}],
@@ -281,8 +284,9 @@ def test_bool_program_path_rank_identity(setup):
     from opensearch_spark.search import dsl as dsl_mod
 
     node = dsl_mod.parse(dsl)
-    prog_df = engine._search_topk_program(node, 10)
-    assert prog_df is not None, "bool should compile to a program"
+    plan = engine.search(dsl, k=10)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert "HashAggregate" not in plan, plan
     got = run(engine, dsl, k=10)
     exhaustive = [
         (int(r["docId"]), round(float(r["score"]), 9))
@@ -292,6 +296,11 @@ def test_bool_program_path_rank_identity(setup):
         .collect()
     ]
     assert [(d, round(s, 9)) for d, s in got] == exhaustive
+    expected = brute.topk(brute.bool_query(
+        bix, must=[brute.match(bix, "def")],
+        should=[brute.match(bix, "return"), brute.phrase(bix, "import numpy")],
+        must_not=[brute.match(bix, "lambda")]), 10)
+    assert brute.rank_identical(got, expected, ATOL)
 
 
 def test_count_fast_path_matches_exhaustive(setup):

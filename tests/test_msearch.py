@@ -35,6 +35,12 @@ BATCH = [
             "filter": [{"match": {"content": "import"}}],
         }
     },
+    {
+        "bool": {
+            "must": [{"match": {"content": "def"}}],
+            "should": [{"match_phrase": {"content": {"query": "self return", "slop": 3}}}],
+        }
+    },
     {"match": {"content": "zzz_not_a_term"}},
     {"match": {"content": "def zzz_not_a_term"}},
     # fallback family (not match/phrase/bool-of-those):

@@ -104,9 +104,10 @@ def test_local_index_build_is_zero_shuffle(spark, sf_dir):
 
 
 def test_bool_search_has_no_docid_shuffle(engine):
-    """search(k) over a bool tree runs ONE per-segment program scorer —
-    no per-clause union + groupBy(docId) aggregation shuffle (the
-    exhaustive _bool path is reserved for all-matching-docs compile())."""
+    """search(k) and compile() over a bool of match/phrase leaves run
+    ONE per-segment program scorer — no per-clause union +
+    groupBy(docId) aggregation shuffle (that path is reserved for bools
+    with other leaf kinds)."""
     df = engine.search({
         "bool": {
             "must": [{"match": {"content": "def"}}],
@@ -118,10 +119,27 @@ def test_bool_search_has_no_docid_shuffle(engine):
     assert "FlatMapGroupsInPandas" in p
     assert "TakeOrdered" in p
 
+    # compile() (every matching doc, no top-k) of a bool over match,
+    # phrase and sloppy-phrase leaves is the same single program scorer
+    from opensearch_spark.search import dsl
+
+    node = dsl.parse({
+        "bool": {
+            "must": [{"match": {"content": "def"}}],
+            "should": [
+                {"match_phrase": {"content": "return self"}},
+                {"match_phrase": {"content": {"query": "import os", "slop": 2}}},
+            ],
+        }
+    })
+    p = executed_str(engine.compile(node))
+    assert "HashAggregate" not in p, p
+    assert p.count("FlatMapGroupsInPandas") == 1, p
+
 
 def test_count_match_uses_no_scorer(engine):
     """count() answers single-term matches from termstats (no postings
-    decode at all) and multi-term matches without BM25/norms."""
+    decode at all)."""
     n1 = engine.count({"match": {"content": "def"}})
     assert n1 == engine.compile(
         __import__("opensearch_spark.search.dsl", fromlist=["parse"]).parse(

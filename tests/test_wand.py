@@ -1,6 +1,7 @@
 """Block-max pruning correctness: the pruned top-k scorer must return
-exactly the same (docId, score) top-k as exhaustive scoring, while
-decoding fewer blocks on prunable inputs."""
+exactly the same (docId, score) top-k as exhaustive scoring (full
+decode plus ``msearch._run_program``), while decoding fewer blocks on
+prunable inputs — i.e. pruning only selects which block rows decode."""
 
 import numpy as np
 import pandas as pd
@@ -155,7 +156,8 @@ def test_phrase_pruned_path():
 # ---- conjunction-led program pruning (score_program_topk) ----------------
 
 def _rand_postings(rng, n_terms=6, n_docs=400):
-    """Random per-term postings with positions (for phrase clauses)."""
+    """Random per-term postings (make_group_pdf gives each doc positions
+    0..tf-1, so phrases and sloppy phrases match)."""
     out = {}
     for i in range(n_terms):
         df = rng.integers(20, n_docs)
@@ -173,8 +175,7 @@ def _exhaustive_program(pdf, clauses, bool_msm, idfs, k, boost=1.0):
     for c in clauses:
         prog.clauses.append(M._Clause(**c))
     prog.n_must = sum(1 for c in prog.clauses if c.occur in ("must", "filter"))
-    want_pos = any(c["kind"] == "phrase" for c in clauses)
-    decoded = bm25.decode_term_group(pdf, want_positions=want_pos)
+    decoded = bm25.decode_term_group(pdf, want_positions=True)
     docs, scores = M._run_program(prog, decoded, idfs, AVGDL)
     docs, scores = bm25.topk_by_score(docs, scores, k)
     if boost != 1.0:
@@ -225,18 +226,77 @@ def test_program_pruned_rank_identity(seed):
             {"occur": "should", "kind": "match", "terms": ["t2"],
              "operator": "or", "msm": 0, "weight": 1.0},
         ], bool_msm=0),
+        # match must + sloppy-phrase should + must_not
+        dict(clauses=[
+            {"occur": "must", "kind": "match", "terms": ["t1"],
+             "operator": "or", "msm": 0, "weight": 1.0},
+            {"occur": "should", "kind": "phrase", "terms": ["t2", "t3"],
+             "operator": "or", "msm": 0, "weight": 1.5, "slop": 2},
+            {"occur": "must_not", "kind": "match", "terms": ["t5"],
+             "operator": "or", "msm": 0, "weight": 1.0},
+        ], bool_msm=0),
+        # sloppy phrase as the lead clause
+        dict(clauses=[
+            {"occur": "must", "kind": "phrase", "terms": ["t0", "t4", "t2"],
+             "operator": "or", "msm": 0, "weight": 1.0, "slop": 3},
+            {"occur": "should", "kind": "match", "terms": ["t1", "t3"],
+             "operator": "or", "msm": 0, "weight": 1.0},
+        ], bool_msm=0),
+        # pure should (no required clause): every row decodes
+        dict(clauses=[
+            {"occur": "should", "kind": "match", "terms": ["t0"],
+             "operator": "or", "msm": 0, "weight": 1.0},
+            {"occur": "should", "kind": "phrase", "terms": ["t1", "t2"],
+             "operator": "or", "msm": 0, "weight": 1.0},
+        ], bool_msm=1),
+        # lone OR clause (MaxScore) with a clause boost
+        dict(clauses=[
+            {"occur": "must", "kind": "match", "terms": ["t0", "t3", "t5"],
+             "operator": "or", "msm": 0, "weight": 2.0},
+        ], bool_msm=0),
     ]
     for case in cases:
-        got = wand.score_program_topk(
+        gd, gs, stats = wand.score_program_topk(
             pdf, case["clauses"], case["bool_msm"], idfs, AVGDL, k=10
         )
-        assert got is not None
-        gd, gs, stats = got
         wd, ws = _exhaustive_program(pdf, case["clauses"], case["bool_msm"],
                                      idfs, k=10)
         assert gd.tolist() == wd.tolist(), case
         np.testing.assert_allclose(gs, ws, rtol=0, atol=1e-12)
         assert stats["decoded"] <= stats["total"]
+
+
+def test_program_multi_generation_rank_identity():
+    """Two generations (an incremental batch appended blocks whose doc
+    ranges overlap the first build's): the block table merge-sorts each
+    term's docs, and pruned top-k still equals the exhaustive program."""
+    rng = np.random.default_rng(5)
+    postings = _rand_postings(rng)
+    gens = []
+    for g in range(2):
+        part = {}
+        for t, (docs, tfs, dls) in postings.items():
+            keep = (docs % 2) == g
+            part[t] = (docs[keep], tfs[keep], dls[keep])
+        gens.append(make_group_pdf(part))
+    pdf = pd.concat(gens, ignore_index=True)
+    idfs = {t: bm25.idf(len(p[0]), 500) for t, p in postings.items()}
+    decoded = bm25.decode_term_group(pdf, want_positions=True)
+    for t, (docs, tfs, dls) in postings.items():
+        assert decoded[t][0].tolist() == docs.tolist()
+        assert decoded[t][1].tolist() == tfs.tolist()
+    for clauses, msm in [
+        ([{"occur": "must", "kind": "match", "terms": ["t0", "t1", "t2"],
+           "operator": "or", "msm": 0, "weight": 1.0}], 0),
+        ([{"occur": "must", "kind": "match", "terms": ["t0", "t1"],
+           "operator": "and", "msm": 0, "weight": 1.0},
+          {"occur": "should", "kind": "phrase", "terms": ["t2", "t3"],
+           "operator": "or", "msm": 0, "weight": 1.0}], 0),
+    ]:
+        gd, gs, _stats = wand.score_program_topk(pdf, clauses, msm, idfs, AVGDL, k=10)
+        wd, ws = _exhaustive_program(pdf, clauses, msm, idfs, k=10)
+        assert gd.tolist() == wd.tolist()
+        np.testing.assert_allclose(gs, ws, rtol=0, atol=1e-12)
 
 
 def test_program_pruning_decodes_fewer_blocks():

@@ -16,6 +16,13 @@ Query lifecycle (the Spark re-expression of SURVEY.md §3.1):
    — Spark's TakeOrderedAndProject, the TopDocs.merge analog
 5. fetch phase: broadcast-join winners back to the corpus row
 
+Driver-local tier: a plain top-k search or an msearch batch of programs
+whose estimated work (``_driver_work``) is under MAX_DRIVER_WORK skips
+steps 3-4 on Spark — the driver reads the terms' rows from the postings
+files the engine opened (pyarrow, row-group min/max skipping), runs the
+same msearch.make_msearch_scorer per segment and merges the top-k into
+an in-memory DataFrame (``_driver_topk``).
+
 Scoring-context notes:
 - match (or/and/msm), match_phrase (exact or sloppy) and bools of those
   run as ONE per-segment program scorer (``_program`` ->
@@ -351,6 +358,93 @@ def _make_tf_scorer(weight: float):
     return fn
 
 
+# ---- driver-local tier: the postings files an engine opened -----------------
+
+class StaleIndexError(RuntimeError):
+    """An index file this engine opened was removed or rewritten
+    (``compact_index``, ``upsert_batch``, ``close_pit``) — reopen the
+    engine."""
+
+
+class _PinnedPostings:
+    """The postings files an engine's DataFrame was opened on, with
+    their footers read once: per file its (size, mtime) identity, per
+    row group its ``term`` min/max and compressed bytes. ``read`` fetches
+    the rows of a set of terms per segment with pyarrow, skipping row
+    groups by min/max, and refuses files that changed since open."""
+
+    def __init__(self, files: Sequence[str]):
+        import pyarrow.parquet as pq
+
+        self.files = list(files)
+        self.ident, self.meta, groups = [], [], []
+        for fi, f in enumerate(self.files):
+            try:
+                st = os.stat(f)
+                md = pq.read_metadata(f)
+            except OSError as e:
+                raise StaleIndexError(
+                    f"index changed since open: {f} is gone; "
+                    "open a new SearchEngine") from e
+            self.ident.append((st.st_size, st.st_mtime_ns))
+            self.meta.append(md)
+            col = md.schema.names.index("term")
+            for ri in range(md.num_row_groups):
+                rg = md.row_group(ri)
+                s = rg.column(col).statistics
+                ok = s is not None and s.has_min_max
+                groups.append((s.min if ok else "", s.max if ok else None, fi, ri,
+                               sum(rg.column(c).total_compressed_size
+                                   for c in range(rg.num_columns))))
+        # per row group: term min ("" if unknown), term max (None if
+        # unknown), file, row group, compressed bytes
+        self.lo, hi, self.file_of, self.rg_of, self.size = (
+            np.array([g[i] for g in groups], dtype=object if i < 2 else np.int64)
+            for i in range(5))
+        self.known = np.array([h is not None for h in hi], dtype=bool)
+        self.hi = np.where(self.known, hi, "")
+        self.nbytes = int(self.size.sum())
+
+    def covering(self, terms: Sequence[str]) -> tuple:
+        """(mask of the row groups whose term range holds one of
+        ``terms`` (sorted), their compressed bytes)."""
+        t = np.array(list(terms), dtype=object)
+        if not t.size or not self.lo.size:
+            return np.zeros(self.lo.size, dtype=bool), 0
+        i = np.searchsorted(t, self.lo)
+        first = t[np.minimum(i, t.size - 1)]
+        hit = ~self.known | ((i < t.size) & (first <= self.hi).astype(bool))
+        return hit, int(self.size[hit].sum())
+
+    def read(self, terms: Sequence[str]) -> List[pd.DataFrame]:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        hit = self.covering(terms)[0]
+        by_file: Dict[int, List[int]] = {}
+        for fi, ri in zip(self.file_of[hit], self.rg_of[hit]):
+            by_file.setdefault(int(fi), []).append(int(ri))
+        wanted = pa.array(terms, pa.string())
+        parts = []
+        for fi, rgs in sorted(by_file.items()):
+            f = self.files[fi]
+            try:
+                st = os.stat(f)
+                if (st.st_size, st.st_mtime_ns) != self.ident[fi]:
+                    raise FileNotFoundError(f)
+                t = pq.ParquetFile(f, metadata=self.meta[fi]).read_row_groups(rgs)
+            except OSError as e:
+                raise StaleIndexError(
+                    f"index changed since open: {f} is gone or rewritten; "
+                    "open a new SearchEngine") from e
+            parts.append(t.filter(pc.is_in(t["term"], value_set=wanted)))
+        if not parts:
+            return []
+        rows = pa.concat_tables(parts).to_pandas()
+        return [g for _, g in rows.groupby("seg", sort=True)]
+
+
 class SearchEngine:
     def __init__(
         self,
@@ -389,6 +483,10 @@ class SearchEngine:
             self.globals = dict(pit["globals"])
         self.avgdl = float(self.globals["avgdl"])
         self.doc_count = int(self.globals["field_doc_count"])
+        # the driver-local tier's view of the postings files, pinned on
+        # first use: None = not yet; False = not local files
+        self._pinned: "_PinnedPostings | None | bool" = None
+        self._postings_scan = self.postings  # the uncached file scan
         # match_only_text analog (reference:
         # MatchOnlyTextFieldMapper.java:46): a docs-only index stores
         # no freqs/positions and ignores norms, so term scoring
@@ -440,6 +538,7 @@ class SearchEngine:
         # None = not loaded yet; False = vocabulary too large, fall back
         # to per-term pushdown scans.
         self._term_df_map: Dict[str, int] | None | bool = None
+        self._n_postings = 0  # sum of the map's df: the index's postings
         self._field_stats_cache: dict | None = None
         import threading as _threading
 
@@ -478,27 +577,45 @@ class SearchEngine:
         self._load_deletes()
 
     def _load_deletes(self) -> None:
+        """Tombstones: ``self.deletes`` (distinct docIds, for the Spark
+        plans), ``_n_deletes``, and up to MAX_PRUNE_DELETES of them as
+        ``_deleted_ids`` for the driver-local tier (None past that, which
+        keeps the tier off)."""
         import glob as _glob
 
         if self._pit is not None:
-            files = self._pit.get("deletes_files") or []
-            if files:
-                self.deletes = self.spark.read.parquet(*files).select(
-                    "docId"
-                ).distinct()
-                self._n_deletes = self.deletes.count()
-            else:
-                self.deletes = None
-                self._n_deletes = 0
-            return
-        if _glob.glob(os.path.join(self._deletes_dir, "*.parquet")):
-            self.deletes: DataFrame | None = self.spark.read.parquet(
-                self._deletes_dir
-            ).select("docId").distinct()
-            self._n_deletes = self.deletes.count()
+            src = list(self._pit.get("deletes_files") or [])
         else:
-            self.deletes = None
-            self._n_deletes = 0
+            src = [self._deletes_dir] if _glob.glob(
+                os.path.join(self._deletes_dir, "*.parquet")) else []
+        self.deletes: DataFrame | None = (
+            self.spark.read.parquet(*src).select("docId").distinct() if src else None)
+        rows = ([] if self.deletes is None
+                else self.deletes.limit(self.MAX_PRUNE_DELETES + 1).collect())
+        if len(rows) <= self.MAX_PRUNE_DELETES:
+            self._deleted_ids = np.sort(np.array([r[0] for r in rows], dtype=np.int64))
+            self._n_deletes = len(rows)
+        else:
+            self._deleted_ids = None
+            self._n_deletes = self.deletes.count()
+
+    def _pin_postings(self) -> "_PinnedPostings | bool":
+        """The files ``self.postings`` was opened on (the PIT's pinned
+        list for a PIT reader) with their footers, loaded once; False
+        when one of them is not a local file."""
+        from urllib.parse import urlparse
+        from urllib.request import url2pathname
+
+        with self._plan_cache_lock:
+            if self._pinned is None:
+                if self._pit is not None:
+                    files = self._pit["postings_files"]
+                else:
+                    uris = [urlparse(u) for u in self._postings_scan.inputFiles()]
+                    local = all(u.scheme in ("", "file") for u in uris)
+                    files = [url2pathname(u.path) for u in uris] if local else None
+                self._pinned = _PinnedPostings(files) if files is not None else False
+            return self._pinned
 
     def open_pit(self) -> dict:
         """Open a point-in-time token (reference: create PIT API,
@@ -612,6 +729,71 @@ class SearchEngine:
             d = F.broadcast(d)
         return df.join(d, "docId", "left_anti")
 
+    # ---- driver-local tier --------------------------------------------
+
+    # A top-k search or msearch batch whose estimated work (_driver_work,
+    # in bytes) is below this is answered in the driver process, without
+    # a Spark job; the crossover curve that sets it is in BASELINE.md.
+    MAX_DRIVER_WORK = 15_000_000
+
+    def _driver_work(self, programs: Sequence, terms: Sequence[str]) -> float:
+        """Bytes a driver-local answer handles, known before reading: the
+        compressed bytes of the row groups holding ``terms`` (footers),
+        plus the postings the programs score (term-map df, summed over
+        programs) at the index's compressed bytes per posting."""
+        m = self._term_df_map
+        postings = sum(m.get(t, 0) for p in programs for c in p.clauses
+                       for t in set(c.terms))
+        per_posting = self._pinned.nbytes / max(self._n_postings, 1)
+        return self._pinned.covering(terms)[1] + postings * per_posting
+
+    def _driver_topk(self, nodes: Sequence[A.AnyNode], k: int
+                     ) -> "pd.DataFrame | None":
+        """Per-qid top-k (qid, docId, score) of ``nodes``, in final order,
+        computed in the driver: the query terms' rows read from the
+        pinned postings files, each segment scored by the same
+        ``msearch.make_msearch_scorer`` the Spark plans run (over-fetching
+        by the tombstone count), tombstones dropped, then merged by
+        (score desc, docId asc). None when the Spark plan must run: a
+        node without a program, a scripted similarity, postings not on
+        local files, too many tombstones, or work over MAX_DRIVER_WORK."""
+        from opensearch_spark.search import msearch as M
+
+        if (self.similarity is not None or k < 1 or self._deleted_ids is None
+                or self._load_term_df_map() is False
+                or self._pin_postings() is False):
+            return None
+        progs, idfs = self._programs(nodes)
+        if any(p is None for p in progs):
+            return None
+        programs = [p for p in progs if p.clauses and not p.match_none]
+        terms = M.required_terms(programs)
+        if self._driver_work(programs, terms) >= self.MAX_DRIVER_WORK:
+            return None
+        scorer = M.make_msearch_scorer(programs, idfs, self.avgdl,
+                                       k + self._n_deletes)
+        parts = [scorer(seg) for seg in self._pinned.read(terms)]
+        out = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(
+            {"qid": np.empty(0, np.int32), "docId": np.empty(0, np.int64),
+             "score": np.empty(0, np.float64)})
+        if self._deleted_ids.size:
+            out = out[~np.isin(out["docId"].to_numpy(), self._deleted_ids)]
+        qid, doc, score = (out[c].to_numpy() for c in ("qid", "docId", "score"))
+        order = np.lexsort((doc, -score, qid))
+        qid = qid[order]
+        rank = np.arange(qid.size) - np.searchsorted(qid, qid)
+        keep = order[rank < k]
+        return out.iloc[keep].reset_index(drop=True)
+
+    def _local_frame(self, pdf: pd.DataFrame, cols: Sequence[str]) -> DataFrame:
+        """Rows already in final order as an Arrow-built LocalRelation:
+        collecting it runs no Spark job."""
+        import pyarrow as pa
+
+        types = {"qid": pa.int32(), "docId": pa.int64(), "score": pa.float64()}
+        return self.spark.createDataFrame(pa.table(
+            {c: pa.array(pdf[c].to_numpy(), types[c]) for c in cols}))
+
     # ---- public API ---------------------------------------------------
 
     MAX_RESULT_WINDOW = 10000  # reference: index.max_result_window
@@ -637,11 +819,35 @@ class SearchEngine:
         the best hit per value of a corpus column (reference:
         CollapseBuilder.java:64 = top-1-per-group). ``terminate_after``
         caps the number of docs considered (reference:
-        EarlyTerminatingCollector — approximate counts, bounded work)."""
+        EarlyTerminatingCollector — approximate counts, bounded work).
+
+        A plain top-k (no from_, sort, search_after, collapse,
+        terminate_after or slice_) small enough for the driver-local tier
+        comes back as an in-memory frame (``_driver_topk``)."""
+        df, local = self._search(query, k, from_, sort, search_after,
+                                 collapse, terminate_after, slice_)
+        return df if local is None else self._local_frame(local, ("docId", "score"))
+
+    def _search(self, query, k, from_=0, sort=None, search_after=None,
+                collapse=None, terminate_after=None, slice_=None) -> tuple:
+        """(``search``'s frame, None), or (None, the driver-local tier's
+        rows as pandas in final order) when that tier answered."""
         if from_ + k > self.MAX_RESULT_WINDOW:
             raise ValueError(
                 f"from+size {from_ + k} exceeds max_result_window {self.MAX_RESULT_WINDOW}"
             )
+        # terminate_after selects per-segment docId-order heads from the
+        # FULL matched set; the pruned top-k program over-fetches only
+        # score-ordered heads, so it must not feed it
+        prune = (sort is None and search_after is None and from_ == 0
+                 and collapse is None and slice_ is None
+                 and terminate_after is None)
+        node = None
+        if prune:
+            node = dsl_mod.parse(query) if isinstance(query, dict) else dsl_mod.normalize(query)
+            local = self._driver_topk([node], k)
+            if local is not None:
+                return None, local
         # hot-query plan cache (the request-cache analog,
         # indices/IndicesRequestCache.java — keyed on the whole request):
         # a repeated identical search returns the SAME compiled
@@ -662,14 +868,9 @@ class SearchEngine:
             with self._plan_cache_lock:
                 cached = self._search_plans.get(sig)
             if cached is not None:
-                return cached
-        node = dsl_mod.parse(query) if isinstance(query, dict) else dsl_mod.normalize(query)
-        # terminate_after selects per-segment docId-order heads from the
-        # FULL matched set; the pruned top-k program over-fetches only
-        # score-ordered heads, so it must not feed it
-        prune = (sort is None and search_after is None and from_ == 0
-                 and collapse is None and slice_ is None
-                 and terminate_after is None)
+                return cached, None
+        if node is None:
+            node = dsl_mod.parse(query) if isinstance(query, dict) else dsl_mod.normalize(query)
         df = self.compile(node, topk=k if prune else None)
         if slice_ is not None:
             # sliced scroll (reference: search/slice/SliceBuilder.java:82)
@@ -780,7 +981,7 @@ class SearchEngine:
                     self._search_plans.pop(
                         next(iter(self._search_plans), None), None)
                 self._search_plans[sig] = out
-        return out
+        return out, None
 
     def request(self, body: dict) -> dict:
         """Full `_search` request body — the reference's REST surface
@@ -821,9 +1022,10 @@ class SearchEngine:
                 query_weight=float(rq.get("query_weight", 1.0)),
                 rescore_query_weight=float(rq.get("rescore_query_weight", 1.0)),
             )
+            local = None
         else:
-            hits = self.search(
-                q, k=size, from_=from_, sort=sort,
+            hits, local = self._search(
+                q, size, from_=from_, sort=sort,
                 search_after=body.get("search_after"), collapse=collapse,
                 terminate_after=body.get("terminate_after"),
             )
@@ -913,9 +1115,15 @@ class SearchEngine:
             # keys); the fetch join would duplicate them — keep only the
             # hit identity (+ computed columns like inner_hits) and let
             # the corpus join restore the rest
-            corp_cols = set(self.corpus.columns) - {"docId"}
-            hits_clean = hits.drop(*[c for c in hits.columns if c in corp_cols])
-            fetched = self.fetch(hits_clean)
+            if local is None:
+                corp_cols = set(self.corpus.columns) - {"docId"}
+                fetched = self.fetch(
+                    hits.drop(*[c for c in hits.columns if c in corp_cols]))
+            else:
+                fetched = self._fetch_local(local)
+            # hits hold at most `size` rows: the limit turns fetch()'s
+            # range-partitioned sort into one TakeOrderedAndProject
+            fetched = fetched.limit(size)
             # columns the caller asked for explicitly (docvalue/derived):
             # always kept, NEVER subject to _source includes/excludes
             # (the reference returns them in a separate 'fields' section
@@ -1005,6 +1213,8 @@ class SearchEngine:
                         if c in keep_always and c not in ("docId", "score")]
                 fetched = fetched.select(*(["docId", "score"] + cols + tail))
             hits = fetched
+        if hits is None:
+            hits = self._local_frame(local, ("docId", "score"))
         out = {"hits": hits, "aggregations": aggs_df}
         if body.get("profile"):
             # reference: search/profile/ (RestSearchAction `profile=true`)
@@ -1012,9 +1222,12 @@ class SearchEngine:
             # analog of the Lucene query tree is the PHYSICAL PLAN, so
             # profile returns the executed plan per phase plus wall-time
             # once an action runs; plan strings are available immediately.
+            # "path" says which tier answered the hits: "driver" (in
+            # process, _driver_topk) or "spark".
             prof: dict = {"query": {
                 "plan": hits._jdf.queryExecution().executedPlan().toString(),
                 "parsed": repr(dsl_mod.parse(q) if isinstance(q, dict) else q),
+                "path": "spark" if local is None else "driver",
             }}
             if aggs_df is not None:
                 prof["aggregations"] = {
@@ -1592,11 +1805,22 @@ class SearchEngine:
         Returns DataFrame(qid, docId, score), per-qid top-k ordered by
         (score desc, docId asc).
 
+        A batch of program queries small enough for the driver-local
+        tier is answered in process instead, as an in-memory frame
+        (``_driver_topk``).
+
         Repeated batches hit a small compiled-plan cache: re-collecting
         the SAME DataFrame object skips Catalyst analysis/optimization,
         which is the fixed per-batch driver cost in the serving regime."""
         import json as _json
 
+        nodes = [
+            dsl_mod.parse(q) if isinstance(q, dict) else dsl_mod.normalize(q)
+            for q in queries
+        ]
+        local = self._driver_topk(nodes, k)
+        if local is not None:
+            return self._local_frame(local, ("qid", "docId", "score"))
         sig = None
         if all(isinstance(q, dict) for q in queries):
             try:
@@ -1609,7 +1833,7 @@ class SearchEngine:
                 cached = self._msearch_plans.get(sig)
             if cached is not None:
                 return cached
-        out = self._msearch_build(queries, k)
+        out = self._msearch_build(nodes, k)
         if sig is not None:
             with self._plan_cache_lock:
                 if len(self._msearch_plans) >= self.MSEARCH_PLAN_CACHE:
@@ -1667,15 +1891,11 @@ class SearchEngine:
             F.col("docId").isin([int(i) for i in ids]))
         return self._live(df).select("docId", *cols)
 
-    def _msearch_build(self, queries: Sequence[dict], k: int) -> DataFrame:
+    def _msearch_build(self, nodes: Sequence[A.AnyNode], k: int) -> DataFrame:
         from pyspark.sql import Window
 
         from opensearch_spark.search import msearch as M
 
-        nodes = [
-            dsl_mod.parse(q) if isinstance(q, dict) else dsl_mod.normalize(q)
-            for q in queries
-        ]
         progs, idfs = self._programs(nodes)
         if self.similarity is not None:
             progs = [None] * len(nodes)  # the program scorer is BM25-only
@@ -1724,6 +1944,26 @@ class SearchEngine:
             raise ValueError("no corpus attached")
         return self.corpus.join(F.broadcast(hits), "docId").orderBy(
             F.desc("score"), F.asc("docId")
+        )
+
+    def _fetch_local(self, hits: pd.DataFrame) -> DataFrame:
+        """``fetch`` of driver-local hits: their (docId -> score) map
+        enters the plan as one SQL literal looked up per corpus row, so
+        the fetch is one scan job with no broadcast of the hits. Same
+        columns and order as ``fetch``."""
+        if self.corpus is None:
+            raise ValueError("no corpus attached")
+        # -2^63 has no BIGINT literal: its positive part overflows
+        ids = ",".join(f"{d}L" if d != -2**63 else "(-9223372036854775807L - 1L)"
+                       for d in hits["docId"].tolist())
+        scores = ",".join(f"{s!r}D" for s in hits["score"].tolist())
+        score = (F.expr(f"map_from_arrays(array({ids}), array({scores}))")[F.col("docId")]
+                 if len(hits) else F.lit(None).cast("double"))
+        cols = [c for c in self.corpus.columns if c != "docId"]
+        return (
+            self.corpus.select("docId", *cols, score.alias("score"))
+            .where(F.col("score").isNotNull())
+            .orderBy(F.desc("score"), F.asc("docId"))
         )
 
     def count(self, query: dict | A.AnyNode) -> int:
@@ -2476,6 +2716,7 @@ class SearchEngine:
                 self._term_df_map = False
             else:
                 self._term_df_map = {r["term"]: int(r["df"]) for r in rows}
+                self._n_postings = sum(self._term_df_map.values())
         return self._term_df_map
 
     def _idfs(self, terms: Iterable[str]) -> Dict[str, float]:

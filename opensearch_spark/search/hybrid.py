@@ -88,7 +88,9 @@ def combine_scores(
     combination: str = "arithmetic_mean",
 ) -> DataFrame:
     """Normalize each sub-query's ``(docId, score)`` frame and combine
-    into one ``(docId, score)`` frame per the module conventions."""
+    into one ``(docId, score)`` frame per the module conventions. The
+    result is computed before returning (an eager local checkpoint), so
+    no cached data outlives the call."""
     if normalization not in NORMALIZATIONS:
         raise ValueError(f"unknown normalization {normalization!r}")
     if combination not in COMBINATIONS:
@@ -117,11 +119,18 @@ def combine_scores(
 
     # The retrieved set is traversed twice (stats reduce + normalize
     # join); without a persist every sub-query's full retrieval plan
-    # executes twice. Size is bounded by the retrieved sets, and Spark
-    # evicts LRU cache blocks under pressure, so this degrades
-    # gracefully rather than leaking.
+    # executes twice. The persist lives only for this call: the combined
+    # frame is materialized (eager local checkpoint), then released.
     tagged = tagged.persist()
+    try:
+        return _combine(tagged, weights, total_w, normalization,
+                        combination).localCheckpoint(eager=True)
+    finally:
+        tagged.unpersist()
 
+
+def _combine(tagged: DataFrame, weights: Sequence[float], total_w: float,
+             normalization: str, combination: str) -> DataFrame:
     stats = tagged.groupBy("qid").agg(
         F.min("score").alias("mn"),
         F.max("score").alias("mx"),

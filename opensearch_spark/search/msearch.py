@@ -1,4 +1,5 @@
-"""Boolean programs over posting blocks, and _msearch in ONE Spark job.
+"""Boolean programs over posting blocks, and _msearch in at most ONE
+Spark job.
 
 ``build_program`` turns a match (or/and/msm), match_phrase (any slop),
 or bool-of-those AST into a flat ``Program``; ``_run_program`` is its
@@ -23,6 +24,11 @@ so a batch of Q queries costs one Python stage instead of Q jobs, and a
 block that several queries need is decoded once. Other query families
 fall back to the per-query compiler and are unioned into the same
 result shape.
+
+A small batch of programs runs no Spark job at all: the engine's
+driver-local tier (``SearchEngine._driver_topk``) reads the same block
+rows with pyarrow and calls the same ``make_msearch_scorer`` per segment
+in the driver process.
 """
 
 from __future__ import annotations

@@ -6,6 +6,7 @@ atol for the reference query families: match OR/AND, bool combinations,
 and exact phrases (FIXTURES.md §2-3).
 """
 
+import json
 import os
 
 import pytest
@@ -265,7 +266,7 @@ def test_dis_max(setup):
     assert brute.rank_identical(got, expected, ATOL)
 
 
-def test_bool_program_path_rank_identity(setup):
+def test_bool_program_path_rank_identity(setup, spark_path):
     """search() runs a bool of match/phrase leaves as ONE per-segment
     program scorer (no per-clause union, no docId aggregation); its
     pruned top-k is rank-identical to the unpruned program (compile())
@@ -316,3 +317,129 @@ def test_count_fast_path_matches_exhaustive(setup):
 
         node = dsl_mod.parse(dsl)
         assert engine.count(dsl) == engine.compile(node).count()
+
+
+# ---- driver-local tier: equal to the Spark plan, case by case ----------
+
+TIER_QUERIES = [
+    {"match": {"content": "def return import"}},
+    {"match": {"content": {"query": "def return", "operator": "and"}}},
+    {"match_phrase": {"content": "return self"}},
+    {"bool": {"must": [{"match": {"content": "def"}}],
+              "should": [{"match": {"content": "import"}}],
+              "must_not": [{"match": {"content": "class"}}]}},
+]
+
+
+def both_paths(engine, tier, q, k=K):
+    """(driver-local top-k, Spark top-k) of one query; asserts the tier
+    really answered when forced on."""
+    out = []
+    for on in (True, False):
+        tier(on)
+        assert (engine._search(q, k)[1] is not None) == on, q
+        out.append(run(engine, q, k))
+    return out
+
+
+def _fresh_index(spark, root):
+    corpus = spark.createDataFrame(generate_corpus(300, seed=5))
+    build_index(spark, corpus, root, n_segments=4, shuffle_partitions=8)
+    return corpus
+
+
+def test_tier_tombstones_overfetch(spark, tmp_path, tier):
+    """Deleting the current top hits (they fill each segment's top-k)
+    must not leave the driver-local tier short: it over-fetches by the
+    tombstone count like the Spark plan."""
+    root = str(tmp_path / "ix")
+    corpus = _fresh_index(spark, root)
+    eng = SearchEngine(spark, root, corpus=corpus)
+    q = {"match": {"content": "def return"}}
+    full, off = both_paths(eng, tier, q, k=100)
+    assert full == off and len(full) == 100
+    # the 40 best hits hold every segment's top 10 or nearly so
+    victims = {d for d, _ in full[:40]}
+    eng.delete(sorted(victims))
+    for dsl in [q] + TIER_QUERIES:
+        on, off = both_paths(eng, tier, dsl)
+        assert on == off, dsl
+        assert not victims & {d for d, _ in on}
+    on, _ = both_paths(eng, tier, q)
+    assert on == [h for h in full if h[0] not in victims][:K]
+
+
+def test_tier_multi_generation_index(spark, tmp_path, tier):
+    """After add_batch and before compaction: two generations per term."""
+    from opensearch_spark.index.incremental import add_batch
+
+    pdf = generate_corpus(400, seed=8)
+    root = str(tmp_path / "ix")
+    build_index(spark, spark.createDataFrame(pdf.iloc[:250]), root,
+                n_segments=4, shuffle_partitions=8)
+    add_batch(spark, spark.createDataFrame(pdf.iloc[250:]), root)
+    eng = SearchEngine(spark, root, corpus=spark.createDataFrame(pdf))
+    for dsl in TIER_QUERIES:
+        on, off = both_paths(eng, tier, dsl)
+        assert on == off and on, dsl
+
+
+def test_tier_pit_reader_after_compaction(spark, tmp_path, tier):
+    """A PIT reader's tier reads the PIT's pinned files, which survive
+    compact_index; the live index's new files are not read."""
+    from opensearch_spark.index.incremental import compact_index
+
+    root = str(tmp_path / "ix")
+    corpus = _fresh_index(spark, root)
+    live = SearchEngine(spark, root, corpus=corpus)
+    live.delete([int(r["docId"]) for r in live.search(TIER_QUERIES[0], k=3).collect()])
+    before = {json.dumps(q): both_paths(live, tier, q)[0] for q in TIER_QUERIES}
+    pit = live.open_pit()
+    compact_index(spark, root, target_segments=2)
+    pinned = SearchEngine(spark, root, corpus=corpus, pit=pit)
+    for dsl in TIER_QUERIES:
+        on, off = both_paths(pinned, tier, dsl)
+        assert on == off == before[json.dumps(dsl)], dsl
+    live.close_pit(pit)
+
+
+def test_tier_multi_field_engine_other_field(spark, tmp_path, tier):
+    """A query on a MultiFieldEngine's non-primary field is not the
+    engine's own field: it keeps the Spark plan, with equal results."""
+    from opensearch_spark.search.engine import MultiFieldEngine
+
+    pdf = generate_corpus(300, seed=3)
+    corpus = spark.createDataFrame(pdf)
+    dirs = {"content": str(tmp_path / "content"), "path": str(tmp_path / "path")}
+    for field, d in dirs.items():
+        build_index(spark, corpus, d, text_col=field, n_segments=4,
+                    shuffle_partitions=8)
+    eng = MultiFieldEngine(spark, dirs, corpus=corpus)
+    q = {"match": {"path": "src pkg1"}}
+    got = {}
+    for on in (True, False):
+        tier(on)
+        df, local = eng._search(q, K)
+        assert local is None
+        got[on] = [(int(r["docId"]), float(r["score"])) for r in df.collect()]
+    assert got[True] == got[False] and got[True]
+    on, off = both_paths(eng, tier, TIER_QUERIES[0])
+    assert on == off
+
+
+def test_tier_stale_reader_raises(spark, tmp_path, tier):
+    """An engine opened before compact_index must not serve a silent
+    answer from files that are gone: the tier says the index changed."""
+    from opensearch_spark.index.incremental import compact_index
+    from opensearch_spark.search.engine import StaleIndexError
+
+    root = str(tmp_path / "ix")
+    corpus = _fresh_index(spark, root)
+    eng = SearchEngine(spark, root, corpus=corpus)
+    tier(True)
+    assert eng.search(TIER_QUERIES[0], k=K).collect()
+    compact_index(spark, root)
+    with pytest.raises(StaleIndexError, match="index changed since open"):
+        eng.search(TIER_QUERIES[0], k=K)
+    fresh = SearchEngine(spark, root, corpus=corpus)
+    assert fresh.search(TIER_QUERIES[0], k=K).collect()

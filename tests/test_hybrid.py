@@ -142,3 +142,23 @@ def test_zero_weight_positive_scores_combine_to_zero(spark):
         # doc2 is positive ONLY in zero-weight a (b min_max -> 0)
         assert out[2] == pytest.approx(0.0)
         assert out[9] == pytest.approx(1.0)
+
+
+def test_combine_scores_leaves_no_cached_frame(spark, monkeypatch):
+    """Every frame combine_scores persists is released once its result
+    is built: after a collect, Spark's cache manager holds none of them."""
+    a = _scored(spark, [(1, 10.0), (2, 20.0)])
+    b = _scored(spark, [(2, 1.0), (3, 3.0)])
+    persisted = []
+    orig = type(a).persist
+
+    def spy(self, *args, **kw):
+        persisted.append(self)
+        return orig(self, *args, **kw)
+
+    monkeypatch.setattr(type(a), "persist", spy)
+    assert len(combine_scores([a, b]).collect()) == 3
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    assert persisted
+    for df in persisted:
+        assert cm.lookupCachedData(df._jdf).isEmpty()

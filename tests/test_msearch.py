@@ -77,7 +77,7 @@ def test_msearch_matches_per_query_search(eng):
     assert n_nonempty >= 9  # the batch isn't trivially empty
 
 
-def test_msearch_single_job_plan(eng):
+def test_msearch_single_job_plan(eng, spark_path):
     """The hot-path queries must compile into ONE applyInPandas stage:
     no per-query postings scans."""
     hot = [q for q in BATCH[:8]]
@@ -91,7 +91,7 @@ def test_msearch_empty_batch(eng):
     assert eng.msearch([], k=K).count() == 0
 
 
-def test_msearch_plan_cache_and_many(eng):
+def test_msearch_plan_cache_and_many(eng, spark_path):
     """Identical batches return the SAME compiled DataFrame (Catalyst
     analysis paid once); msearch_many pipelines batches and matches the
     sequential results exactly."""
@@ -111,7 +111,7 @@ def test_msearch_plan_cache_and_many(eng):
         assert got == want
 
 
-def test_search_hot_query_plan_cache(eng):
+def test_search_hot_query_plan_cache(eng, spark_path):
     """Repeated identical search() returns the same compiled DataFrame
     (request-cache analog); a delete invalidates it and results drop the
     tombstoned doc."""
@@ -135,3 +135,82 @@ def test_search_hot_query_plan_cache(eng):
         eng._load_deletes()
         eng._search_plans.clear()
         eng._msearch_plans.clear()
+
+
+def _rows(df):
+    return [(int(r["qid"]), int(r["docId"]), float(r["score"])) for r in df.collect()]
+
+
+PROGRAMS = BATCH[:11]  # every match/phrase/bool-of-those query
+
+
+def test_msearch_tier_matches_spark(eng, tier):
+    """A batch of program queries answered by the driver-local tier is
+    per-qid equal to the Spark plan; one fallback query sends the whole
+    batch to Spark, still equal."""
+    tier(True)
+    on = eng.msearch(PROGRAMS, k=K)
+    assert "LocalTableScan" in on._jdf.queryExecution().executedPlan().toString()
+    on = _rows(on)
+    tier(False)
+    off = _rows(eng.msearch(PROGRAMS, k=K))
+    assert on == off and len({q for q, _, _ in on}) >= 9
+    tier(True)
+    mixed = eng.msearch(BATCH, k=K)
+    assert "FlatMapGroupsInPandas" in mixed._jdf.queryExecution().executedPlan().toString()
+    mixed = _rows(mixed)
+    tier(False)
+    assert mixed == _rows(eng.msearch(BATCH, k=K))
+    assert [r for r in mixed if r[0] < len(PROGRAMS)] == on
+
+
+def test_msearch_tier_tombstones_and_many(eng, tier):
+    """Tombstones over-fetch per segment on the tier as on Spark, and
+    msearch_many's threads get the same rows."""
+    tier(True)
+    victims = sorted({d for _, d, _ in _rows(eng.msearch(PROGRAMS, k=3))})
+    eng.delete(victims)
+    try:
+        on = _rows(eng.msearch(PROGRAMS, k=K))
+        assert not set(victims) & {d for _, d, _ in on}
+        many = eng.msearch_many([PROGRAMS, PROGRAMS[:4]], k=K, max_concurrent=2)
+        assert [(int(r["qid"]), int(r["docId"]), float(r["score"]))
+                for r in many[0]] == on
+        tier(False)
+        assert _rows(eng.msearch(PROGRAMS, k=K)) == on
+    finally:
+        import glob, os as _os
+
+        for f in glob.glob(_os.path.join(eng._deletes_dir, "*.parquet")):
+            _os.remove(f)
+        eng._load_deletes()
+        eng._search_plans.clear()
+        eng._msearch_plans.clear()
+
+
+def test_msearch_many_tier_threads(spark, eng, tier):
+    """More msearch_many threads than cores on one fresh engine: the
+    tier's first-use state (pinned postings, term map) is built once and
+    every thread gets the sequential answer."""
+    import sys
+    import threading
+
+    tier(True)
+    want = _rows(eng.msearch(PROGRAMS, k=K))
+    fresh = SearchEngine(spark, eng.paths.root, corpus=eng.corpus)
+    batches = [PROGRAMS] * 12
+    out = {}
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        t = threading.Thread(target=lambda: out.update(
+            rows=fresh.msearch_many(batches, k=K, max_concurrent=12)))
+        t.start()
+        t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not t.is_alive()
+    assert len(out["rows"]) == len(batches)
+    for rows in out["rows"]:
+        assert [(int(r["qid"]), int(r["docId"]), float(r["score"]))
+                for r in rows] == want

@@ -70,6 +70,15 @@ def test_query_matches_oracle(spark, ddb, name):
         assert len(exp) > 0, f"{name}: oracle returned no rows — weak test"
 
 
+@pytest.mark.parametrize("on", [True, False], ids=["driver", "spark"])
+@pytest.mark.parametrize("name", [n for n in ALL if n.startswith("ft_")])
+def test_ft_row_with_tier_forced(spark, ddb, tier, name, on):
+    """Every full-text row gives the oracle's answer with the driver-local
+    tier forced on for every eligible search/msearch, and forced off."""
+    tier(on)
+    test_query_matches_oracle(spark, ddb, name)
+
+
 def test_entry_smoke(spark):
     df = E.entry(spark)
     rows = df.collect()

@@ -36,10 +36,71 @@ def test_term_filter_pushed_to_postings_scan(engine):
     assert "term" in p.split("PushedFilters")[1][:200], p[:2000]
 
 
-def test_fetch_join_is_broadcast(engine):
+def test_fetch_join_is_broadcast(engine, spark_path):
     hits = engine.search({"match": {"content": "def"}}, k=5)
     p = executed_str(engine.fetch(hits))
     assert "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p
+
+
+@pytest.fixture(scope="module")
+def parquet_engine(spark, tmp_path_factory):
+    """An engine whose corpus is a parquet scan (a fetch is a real job)."""
+    root = tmp_path_factory.mktemp("plans_pq")
+    spark.createDataFrame(generate_corpus(300, seed=42)).write.parquet(
+        str(root / "corpus"))
+    corpus = spark.read.parquet(str(root / "corpus"))
+    build_index(spark, corpus, str(root / "ix"), n_segments=4)
+    eng = SearchEngine(spark, str(root / "ix"), corpus=corpus)
+    eng._load_term_df_map()
+    return eng
+
+
+def test_request_fetch_is_bounded(parquet_engine, tier):
+    """A request's fetch sorts its at most `size` hits in one bounded
+    TakeOrderedAndProject: no range-partition Exchange (and its sampling
+    job). On the Spark path the hits stay a broadcast join; driver-local
+    hits enter the corpus scan as literals, with no Exchange at all."""
+    body = {"query": {"match": {"content": "def"}}, "size": 5, "_source": ["path"]}
+    tier(False)
+    p = executed_str(parquet_engine.request(body)["hits"])
+    assert "BroadcastHashJoin" in p, p
+    assert "rangepartitioning" not in p, p
+    assert "TakeOrdered" in p, p
+    tier(True)
+    p = executed_str(parquet_engine.request(body)["hits"])
+    assert "Exchange" not in p, p
+    assert "TakeOrdered" in p, p
+
+
+def test_driver_tier_job_counts(parquet_engine, jobs, tier):
+    """A driver-local search runs no Spark job; a driver-local request
+    with _source runs exactly one (the fetch's corpus scan)."""
+    tier(True)
+    q = {"match": {"content": "def return"}}
+    n, rows = jobs(lambda: parquet_engine.search(q, k=5).collect())
+    assert n == 0 and len(rows) == 5
+    body = {"query": q, "size": 5, "_source": ["path"]}
+    n, rows = jobs(lambda: parquet_engine.request(body)["hits"].collect())
+    assert n == 1 and len(rows) == 5
+    tier(False)
+    n, _ = jobs(lambda: parquet_engine.search(q, k=5).collect())
+    assert n >= 1
+
+
+def test_profile_reports_path(parquet_engine, tier):
+    q = {"match": {"content": "def"}}
+    tier(True)
+    prof = parquet_engine.request({"query": q, "size": 3, "profile": True})["profile"]
+    assert prof["query"]["path"] == "driver"
+    assert "LocalTableScan" in prof["query"]["plan"]
+    rescored = parquet_engine.request({
+        "query": q, "size": 3, "profile": True,
+        "rescore": {"window_size": 5, "query": {
+            "rescore_query": {"match": {"content": "return"}}}}})["profile"]
+    assert rescored["query"]["path"] == "spark"
+    tier(False)
+    prof = parquet_engine.request({"query": q, "size": 3, "profile": True})["profile"]
+    assert prof["query"]["path"] == "spark"
 
 
 def test_relational_pushdown_and_codegen(spark, sf_dir):
@@ -103,7 +164,7 @@ def test_local_index_build_is_zero_shuffle(spark, sf_dir):
     assert packed.limit(1).count() >= 0
 
 
-def test_bool_search_has_no_docid_shuffle(engine):
+def test_bool_search_has_no_docid_shuffle(engine, spark_path):
     """search(k) and compile() over a bool of match/phrase leaves run
     ONE per-segment program scorer — no per-clause union +
     groupBy(docId) aggregation shuffle (that path is reserved for bools
@@ -198,7 +259,7 @@ def test_ivf_assign_zero_shuffle(spark, sf_dir):
     assert "Window" not in p, p
 
 
-def test_deep_pagination_is_bounded(engine):
+def test_deep_pagination_is_bounded(engine, spark_path):
     """from_ > 0 compiles to TakeOrderedAndProject(offset) — no global
     row_number window funnelling the matched set through one task."""
     df = engine.search({"match": {"content": "def"}}, k=5, from_=7)
@@ -249,7 +310,7 @@ def test_line_dedup_has_partial_aggregation(spark):
     assert "partial_count(distinct" in p, p
 
 
-def test_cached_serving_query_is_shuffle_free(spark, tmp_path):
+def test_cached_serving_query_is_shuffle_free(spark, tmp_path, spark_path):
     """Round-4 serving-plan contract: with cache=True the postings are
     persisted pre-partitioned on seg, so a query executes as ONE
     shuffle-free stage — no Exchange in the executed plan (the only

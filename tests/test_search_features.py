@@ -596,7 +596,7 @@ def test_termvectors_and_mtermvectors(eng):
     assert mtv[1]["found"] is False
 
 
-def test_request_profile(eng):
+def test_request_profile(eng, spark_path):
     """profile:true returns the executed physical plan per phase — the
     Spark analog of the reference's search/profile breakdown."""
     res = eng.request({

@@ -182,8 +182,9 @@ def ragged_arange(lens: np.ndarray) -> np.ndarray:
     return np.arange(total, dtype=np.int64) - np.repeat(starts, lens)
 
 
-def _concat(streams) -> bytes:
-    if isinstance(streams, (bytes, bytearray, memoryview)):
+def _concat(streams):
+    if isinstance(streams, (bytes, bytearray, memoryview)) or (
+            isinstance(streams, np.ndarray) and streams.dtype == np.uint8):
         return streams
     return b"".join(streams)
 
@@ -208,7 +209,7 @@ def decode_blocks(n_docs, doc_bytes, tf_bytes, norm_bytes, pos_bytes=None):
 
     ``n_docs`` holds each row's doc count. Each ``*_bytes`` argument is
     the rows' byte strings (a sequence) or those strings already joined
-    in row order. Returns flat arrays in row order ``(docs int64, tfs
+    in row order (bytes, or a uint8 array). Returns flat arrays in row order ``(docs int64, tfs
     int64, norm bytes uint8, positions int64 | None)``: each row's docs
     ascending (zigzag first-of-block plus modular deltas), each doc's
     positions absolute. Per-block and per-doc resets are grouped-cumsum

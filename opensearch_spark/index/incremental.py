@@ -28,17 +28,16 @@ from __future__ import annotations
 
 import os
 import shutil
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from opensearch_spark.index import codec
 from opensearch_spark.index.build import (
     IndexPaths, POSTINGS_SCHEMA, _analyze, _occurrences, _pack_partition,
-    _read_json, _write_json_atomic, write_termstats,
+    _read_json, _write_json_atomic,
 )
 
 OCC_SCHEMA = "docId long, seg int, norm_byte int, pos int, term string"

@@ -60,10 +60,13 @@ def score_terms_in_segment(
     operator: str = "or",
     msm: int = 0,
     n_required: int | None = None,
+    contrib=None,
 ) -> Tuple[np.ndarray, np.ndarray]:
     """Sum per-term BM25 over a segment. Returns (docIds, scores) of
     matching docs (operator='and' keeps only docs with ALL terms;
     msm > 1 keeps docs matching at least msm distinct terms).
+    ``contrib(term, tf float64, dl_q)`` replaces BM25's per-posting
+    score (a scripted similarity).
 
     ``n_required``: the GLOBAL distinct-term count of the query for
     operator='and'. A term present in the index but absent from THIS
@@ -77,15 +80,14 @@ def score_terms_in_segment(
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
     if operator == "and" and n_required is not None and len(terms) < n_required:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+    if contrib is None:
+        def contrib(t, tf, dl_q):
+            return idf_by_term[t] * (K1 + 1.0) * tf_norm(tf, dl_q, avgdl)
     all_docs = np.concatenate([decoded[t][0] for t in terms])
-    contribs = np.concatenate(
-        [
-            idf_by_term[t]
-            * (K1 + 1.0)
-            * tf_norm(decoded[t][1].astype(np.float64), decoded[t][2], avgdl)
-            for t in terms
-        ]
-    )
+    contribs = np.concatenate([
+        np.asarray(contrib(t, decoded[t][1].astype(np.float64), decoded[t][2]),
+                   dtype=np.float64)
+        for t in terms])
     uniq, inv = np.unique(all_docs, return_inverse=True)
     scores = np.zeros(uniq.size, dtype=np.float64)
     np.add.at(scores, inv, contribs)

@@ -617,7 +617,7 @@ _PARSERS = {
         operator=str(b.get("operator", "or")).lower(),
         minimum_should_match=int(b.get("minimum_should_match", 0)),
         boost=float(b.get("boost", 1.0)),
-    ))(*_parse_fields_boosts(b["fields"])),
+    ))(*_parse_fields_boosts(b.get("fields") or [])),
     "combined_fields": lambda b: (lambda names, boosts: A.CombinedFields(
         fields=names,
         field_boosts=boosts,

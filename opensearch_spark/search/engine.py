@@ -18,10 +18,12 @@ Query lifecycle (the Spark re-expression of SURVEY.md §3.1):
 
 Driver-local tier: a plain top-k search or an msearch batch of programs
 whose estimated work (``_driver_work``) is under MAX_DRIVER_WORK skips
-steps 3-4 on Spark — the driver reads the terms' rows from the postings
-files the engine opened (pyarrow, row-group min/max skipping), runs the
-same msearch.make_msearch_scorer per segment and merges the top-k into
-an in-memory DataFrame (``_driver_topk``).
+steps 3-4 on Spark — the first such request reads the postings files
+the engine opened into resident per-segment block tables (pyarrow, once
+per engine); every such request then scores them in the driver with
+msearch.score_table (the body of the Spark path's scorer) and merges the
+top-k into an in-memory DataFrame (``_driver_topk``). ``close()``
+releases the tables and the engine's persisted frames.
 
 Scoring-context notes:
 - match (or/and/msm), match_phrase (exact or sloppy) and bools of those
@@ -43,6 +45,7 @@ Scoring-context notes:
 
 from __future__ import annotations
 
+import functools
 import os
 from typing import Dict, Iterable, List, Optional, Sequence
 
@@ -68,35 +71,14 @@ def _make_custom_sim_scorer(dfs: Dict[str, int], doc_count: int, avgdl: float,
     query contract."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        decoded = bm25.decode_term_group(pdf)
-        terms = sorted(t for t in dfs if t in decoded)
-        if not terms:
-            return pd.DataFrame({"docId": pd.Series([], dtype=np.int64),
-                                 "score": pd.Series([], dtype=np.float64)})
-        all_docs = np.concatenate([decoded[t][0] for t in terms])
-        contribs = np.concatenate([
-            boost * np.asarray(
-                simfn(decoded[t][1].astype(np.float64), dfs[t],
-                      decoded[t][2], avgdl, doc_count),
-                dtype=np.float64,
-            )
-            for t in terms
-        ])
-        uniq, inv = np.unique(all_docs, return_inverse=True)
-        scores = np.zeros(uniq.size, dtype=np.float64)
-        np.add.at(scores, inv, contribs)
-        nmatch = np.zeros(uniq.size, dtype=np.int64)
-        np.add.at(nmatch, inv, 1)
-        if operator == "and":
-            # required count = GLOBAL distinct query terms (dfs), not the
-            # segment-present subset — see bm25.score_terms_in_segment
-            keep = nmatch == len(dfs)
-        elif msm > 1:
-            keep = nmatch >= msm
-        else:
-            keep = slice(None)
-        return pd.DataFrame({"docId": uniq[keep].astype(np.int64),
-                             "score": scores[keep]})
+        # "and" requires the GLOBAL distinct query terms (dfs), not the
+        # segment-present subset — see bm25.score_terms_in_segment
+        docs, scores = bm25.score_terms_in_segment(
+            bm25.decode_term_group(pdf), dfs, avgdl, operator, msm,
+            n_required=len(dfs),
+            contrib=lambda t, tf, dl_q: boost * np.asarray(
+                simfn(tf, dfs[t], dl_q, avgdl, doc_count), dtype=np.float64))
+        return pd.DataFrame({"docId": docs.astype(np.int64), "score": scores})
 
     return fn
 
@@ -141,37 +123,21 @@ def _interval_expr(rule) -> tuple:
     combine (spans.near_unordered). Containment filters wrap the source
     expression (reference: IntervalFilter)."""
     kind = rule[0]
-
-    def wrap(expr, filt):
-        if filt is None:
-            return expr
-        fk, fr = filt
-        fexpr = _interval_expr(fr)
-        op = _IVF_OPS[fk]
-        if op in ("containing", "notcontaining"):
-            return (op, expr, fexpr)
-        # within/notwithin/not take (source, filter) in little-first order
-        return (op, expr, fexpr)
-
-    if kind == "match":
-        _k, terms, max_gaps, ordered = rule[:4]
-        filt = rule[4] if len(rule) > 4 else None
-        subs = [("term", t) for t in terms]
-        expr = subs[0] if len(subs) == 1 else (
-            "near", subs, max_gaps if max_gaps >= 0 else _BIG_GAPS, ordered
-        )
-        return wrap(expr, filt)
-    if kind == "all_of":
-        _k, rules, max_gaps, ordered = rule[:4]
-        filt = rule[4] if len(rule) > 4 else None
-        subs = [_interval_expr(r) for r in rules]
-        expr = subs[0] if len(subs) == 1 else (
-            "near", subs, max_gaps if max_gaps >= 0 else _BIG_GAPS, ordered
-        )
-        return wrap(expr, filt)
     if kind == "any_of":
         return ("or", [_interval_expr(r) for r in rule[1]])
-    raise ValueError(kind)
+    if kind not in ("match", "all_of"):
+        raise ValueError(kind)
+    _k, src, max_gaps, ordered = rule[:4]
+    subs = ([("term", t) for t in src] if kind == "match"
+            else [_interval_expr(r) for r in src])
+    expr = subs[0] if len(subs) == 1 else (
+        "near", subs, max_gaps if max_gaps >= 0 else _BIG_GAPS, ordered
+    )
+    if len(rule) > 4 and rule[4] is not None:
+        fk, fr = rule[4]
+        # every filter op takes (source, filter)
+        expr = (_IVF_OPS[fk], expr, _interval_expr(fr))
+    return expr
 
 
 def _expr_terms(expr) -> List[str]:
@@ -198,34 +164,23 @@ def _make_span_scorer(expr: tuple, boost: float):
 
     terms = _expr_terms(expr)
 
+    binary = {"not": S.not_spans, "within": S.within_spans,
+              "containing": S.containing_spans, "notwithin": S.not_within_spans,
+              "notcontaining": S.not_containing_spans}
+
     def eval_expr(e, span_map):
         if e[0] == "term":
             return S.term_spans(span_map, e[1])
         if e[0] == "or":
             return S.or_spans([eval_expr(s, span_map) for s in e[1]])
         if e[0] == "near":
-            subs = [eval_expr(s, span_map) for s in e[1]]
-            if e[3]:
-                return S.near_ordered(subs, e[2])
-            return S.near_unordered(subs, e[2])
+            near = S.near_ordered if e[3] else S.near_unordered
+            return near([eval_expr(s, span_map) for s in e[1]], e[2])
         if e[0] == "first":
             return S.first_spans(eval_expr(e[1], span_map), e[2])
-        if e[0] == "not":
-            return S.not_spans(eval_expr(e[1], span_map),
-                               eval_expr(e[2], span_map))
-        if e[0] == "within":
-            return S.within_spans(eval_expr(e[1], span_map),
-                                  eval_expr(e[2], span_map))
-        if e[0] == "containing":
-            return S.containing_spans(eval_expr(e[1], span_map),
-                                      eval_expr(e[2], span_map))
-        if e[0] == "notwithin":
-            return S.not_within_spans(eval_expr(e[1], span_map),
-                                      eval_expr(e[2], span_map))
-        if e[0] == "notcontaining":
-            return S.not_containing_spans(eval_expr(e[1], span_map),
-                                          eval_expr(e[2], span_map))
-        raise ValueError(e)
+        if e[0] not in binary:
+            raise ValueError(e)
+        return binary[e[0]](eval_expr(e[1], span_map), eval_expr(e[2], span_map))
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         decoded = bm25.decode_term_group(pdf, want_positions=True)
@@ -298,36 +253,28 @@ TERM_SCORE_SCHEMA = "docId long, term string, score double"
 TERM_TF_SCHEMA = "docId long, term string, wtf double"
 
 
+def _term_values(decoded: dict, terms, value, col: str) -> pd.DataFrame:
+    """(docId, term, ``col``) rows of ``terms``' decoded postings, the
+    value of each from ``value(term, tfs, dl_q)``."""
+    got = [(t, decoded[t]) for t in terms if t in decoded]
+    return pd.DataFrame({
+        "docId": np.concatenate([np.empty(0, np.int64)] + [d[0] for _, d in got]),
+        "term": np.concatenate([np.empty(0, object)]
+                               + [np.full(d[0].size, t, dtype=object) for t, d in got]),
+        col: np.concatenate([np.empty(0, np.float64)] + [value(t, d[1], d[2]) for t, d in got]),
+    })
+
+
 def _make_term_score_scorer(idfs: Dict[str, float], avgdl: float, weight: float):
     """Per-(doc, term) BM25 partials for cross_fields blending (reference:
     Lucene BlendedTermQuery — per-term scores with blended df, combined
     across fields downstream)."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        decoded = bm25.decode_term_group(pdf)
-        d_l: List[np.ndarray] = []
-        t_l: List[np.ndarray] = []
-        s_l: List[np.ndarray] = []
-        for t in sorted(idfs):
-            if t not in decoded:
-                continue
-            docs, tfs, dl_q, _pos = decoded[t]
-            s = (
-                weight * idfs[t] * (bm25.K1 + 1.0)
-                * bm25.tf_norm(tfs.astype(np.float64), dl_q, avgdl)
-            )
-            d_l.append(docs)
-            t_l.append(np.full(docs.size, t, dtype=object))
-            s_l.append(s)
-        if not d_l:
-            return pd.DataFrame({"docId": pd.Series([], dtype=np.int64),
-                                 "term": pd.Series([], dtype=object),
-                                 "score": pd.Series([], dtype=np.float64)})
-        return pd.DataFrame({
-            "docId": np.concatenate(d_l),
-            "term": np.concatenate(t_l),
-            "score": np.concatenate(s_l),
-        })
+        return _term_values(
+            bm25.decode_term_group(pdf), sorted(idfs),
+            lambda t, tfs, dl_q: weight * idfs[t] * (bm25.K1 + 1.0)
+            * bm25.tf_norm(tfs.astype(np.float64), dl_q, avgdl), "score")
 
     return fn
 
@@ -338,22 +285,8 @@ def _make_tf_scorer(weight: float):
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         decoded = bm25.decode_term_group(pdf)
-        d_l: List[np.ndarray] = []
-        t_l: List[np.ndarray] = []
-        v_l: List[np.ndarray] = []
-        for t, (docs, tfs, _dlq, _pos) in decoded.items():
-            d_l.append(docs)
-            t_l.append(np.full(docs.size, t, dtype=object))
-            v_l.append(weight * tfs.astype(np.float64))
-        if not d_l:
-            return pd.DataFrame({"docId": pd.Series([], dtype=np.int64),
-                                 "term": pd.Series([], dtype=object),
-                                 "wtf": pd.Series([], dtype=np.float64)})
-        return pd.DataFrame({
-            "docId": np.concatenate(d_l),
-            "term": np.concatenate(t_l),
-            "wtf": np.concatenate(v_l),
-        })
+        return _term_values(decoded, list(decoded),
+                            lambda t, tfs, dl_q: weight * tfs.astype(np.float64), "wtf")
 
     return fn
 
@@ -367,18 +300,19 @@ class StaleIndexError(RuntimeError):
 
 
 class _PinnedPostings:
-    """The postings files an engine's DataFrame was opened on, with
-    their footers read once: per file its (size, mtime) identity, per
-    row group its ``term`` min/max and compressed bytes. ``read`` fetches
-    the rows of a set of terms per segment with pyarrow, skipping row
-    groups by min/max, and refuses files that changed since open."""
+    """The postings files an engine opened (or a PIT token's): footers
+    read on first tier use for each file's (size, mtime) identity and
+    the compressed bytes (``nbytes``); ``load`` reads every file once
+    into one resident ``wand.BlockTable`` per segment (``tables``), kept
+    until the engine closes like a segment reader until refresh;
+    ``check`` refuses files changed since they were pinned."""
 
     def __init__(self, files: Sequence[str]):
         import pyarrow.parquet as pq
 
         self.files = list(files)
-        self.ident, self.meta, groups = [], [], []
-        for fi, f in enumerate(self.files):
+        self.ident, self.nbytes = [], 0
+        for f in self.files:
             try:
                 st = os.stat(f)
                 md = pq.read_metadata(f)
@@ -387,62 +321,33 @@ class _PinnedPostings:
                     f"index changed since open: {f} is gone; "
                     "open a new SearchEngine") from e
             self.ident.append((st.st_size, st.st_mtime_ns))
-            self.meta.append(md)
-            col = md.schema.names.index("term")
-            for ri in range(md.num_row_groups):
-                rg = md.row_group(ri)
-                s = rg.column(col).statistics
-                ok = s is not None and s.has_min_max
-                groups.append((s.min if ok else "", s.max if ok else None, fi, ri,
-                               sum(rg.column(c).total_compressed_size
-                                   for c in range(rg.num_columns))))
-        # per row group: term min ("" if unknown), term max (None if
-        # unknown), file, row group, compressed bytes
-        self.lo, hi, self.file_of, self.rg_of, self.size = (
-            np.array([g[i] for g in groups], dtype=object if i < 2 else np.int64)
-            for i in range(5))
-        self.known = np.array([h is not None for h in hi], dtype=bool)
-        self.hi = np.where(self.known, hi, "")
-        self.nbytes = int(self.size.sum())
+            self.nbytes += sum(md.row_group(r).column(c).total_compressed_size
+                               for r in range(md.num_row_groups)
+                               for c in range(md.num_columns))
+        self.tables: "list | None" = None
 
-    def covering(self, terms: Sequence[str]) -> tuple:
-        """(mask of the row groups whose term range holds one of
-        ``terms`` (sorted), their compressed bytes)."""
-        t = np.array(list(terms), dtype=object)
-        if not t.size or not self.lo.size:
-            return np.zeros(self.lo.size, dtype=bool), 0
-        i = np.searchsorted(t, self.lo)
-        first = t[np.minimum(i, t.size - 1)]
-        hit = ~self.known | ((i < t.size) & (first <= self.hi).astype(bool))
-        return hit, int(self.size[hit].sum())
-
-    def read(self, terms: Sequence[str]) -> List[pd.DataFrame]:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        hit = self.covering(terms)[0]
-        by_file: Dict[int, List[int]] = {}
-        for fi, ri in zip(self.file_of[hit], self.rg_of[hit]):
-            by_file.setdefault(int(fi), []).append(int(ri))
-        wanted = pa.array(terms, pa.string())
-        parts = []
-        for fi, rgs in sorted(by_file.items()):
-            f = self.files[fi]
+    def check(self) -> None:
+        for f, ident in zip(self.files, self.ident):
             try:
                 st = os.stat(f)
-                if (st.st_size, st.st_mtime_ns) != self.ident[fi]:
+                if (st.st_size, st.st_mtime_ns) != ident:
                     raise FileNotFoundError(f)
-                t = pq.ParquetFile(f, metadata=self.meta[fi]).read_row_groups(rgs)
             except OSError as e:
                 raise StaleIndexError(
                     f"index changed since open: {f} is gone or rewritten; "
                     "open a new SearchEngine") from e
-            parts.append(t.filter(pc.is_in(t["term"], value_set=wanted)))
-        if not parts:
-            return []
-        rows = pa.concat_tables(parts).to_pandas()
-        return [g for _, g in rows.groupby("seg", sort=True)]
+
+    def load(self) -> None:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from opensearch_spark.search import wand
+
+        rows = pa.concat_tables([pq.read_table(f) for f in self.files])
+        seg = rows.column("seg").to_numpy()
+        # an index without postings rows still gets one (empty) table
+        self.tables = [wand.BlockTable(rows.filter(seg == s))
+                       for s in np.unique(seg)] or [wand.BlockTable(rows)]
 
 
 class SearchEngine:
@@ -484,8 +389,9 @@ class SearchEngine:
         self.avgdl = float(self.globals["avgdl"])
         self.doc_count = int(self.globals["field_doc_count"])
         # the driver-local tier's view of the postings files, pinned on
-        # first use: None = not yet; False = not local files
+        # first use: None = not yet; False = not local files, or closed
         self._pinned: "_PinnedPostings | None | bool" = None
+        self._closed = False
         self._postings_scan = self.postings  # the uncached file scan
         # match_only_text analog (reference:
         # MatchOnlyTextFieldMapper.java:46): a docs-only index stores
@@ -548,6 +454,9 @@ class SearchEngine:
         # get/evict/put must be atomic or two threads evicting the same
         # head key race into KeyError
         self._plan_cache_lock = _threading.Lock()
+        # the driver tier scores its resident tables one request at a
+        # time: their decode caches mutate
+        self._tier_lock = _threading.Lock()
         # wildcard trigram accelerator (build_wildcard_index), if built
         # and not marked STALE by a later add_batch
         _wg = os.path.join(self.paths.root, "wildgrams")
@@ -602,7 +511,7 @@ class SearchEngine:
     def _pin_postings(self) -> "_PinnedPostings | bool":
         """The files ``self.postings`` was opened on (the PIT's pinned
         list for a PIT reader) with their footers, loaded once; False
-        when one of them is not a local file."""
+        when one of them is not a local file, or there are none."""
         from urllib.parse import urlparse
         from urllib.request import url2pathname
 
@@ -614,8 +523,26 @@ class SearchEngine:
                     uris = [urlparse(u) for u in self._postings_scan.inputFiles()]
                     local = all(u.scheme in ("", "file") for u in uris)
                     files = [url2pathname(u.path) for u in uris] if local else None
-                self._pinned = _PinnedPostings(files) if files is not None else False
+                self._pinned = _PinnedPostings(files) if files else False
             return self._pinned
+
+    def close(self) -> None:
+        """Release the ``cache=True`` postings/docstats persists, the
+        resident tables and the plan caches; searching afterwards
+        raises. Close a cached engine before ``add_batch``/
+        ``compact_index`` rewrite its index in the same session."""
+        with self._tier_lock:
+            self._closed = True
+            self._pinned = False
+        with self._plan_cache_lock:
+            self._search_plans.clear()
+            self._msearch_plans.clear()
+        self.postings.unpersist()
+        self.docstats.unpersist()
+
+    def _check_open(self) -> None:
+        if self._closed:
+            raise RuntimeError("SearchEngine is closed; open a new one")
 
     def open_pit(self) -> dict:
         """Open a point-in-time token (reference: create PIT API,
@@ -736,27 +663,29 @@ class SearchEngine:
     # a Spark job; the crossover curve that sets it is in BASELINE.md.
     MAX_DRIVER_WORK = 15_000_000
 
-    def _driver_work(self, programs: Sequence, terms: Sequence[str]) -> float:
-        """Bytes a driver-local answer handles, known before reading: the
-        compressed bytes of the row groups holding ``terms`` (footers),
-        plus the postings the programs score (term-map df, summed over
-        programs) at the index's compressed bytes per posting."""
+    def _driver_work(self, programs: Sequence) -> float:
+        """Bytes a driver-local answer handles, known before scoring: the
+        pinned postings' compressed bytes (what stays resident) plus the
+        postings the programs score (term-map df, summed over programs)
+        at the index's compressed bytes per posting."""
         m = self._term_df_map
         postings = sum(m.get(t, 0) for p in programs for c in p.clauses
                        for t in set(c.terms))
         per_posting = self._pinned.nbytes / max(self._n_postings, 1)
-        return self._pinned.covering(terms)[1] + postings * per_posting
+        return self._pinned.nbytes + postings * per_posting
 
     def _driver_topk(self, nodes: Sequence[A.AnyNode], k: int
                      ) -> "pd.DataFrame | None":
         """Per-qid top-k (qid, docId, score) of ``nodes``, in final order,
-        computed in the driver: the query terms' rows read from the
-        pinned postings files, each segment scored by the same
-        ``msearch.make_msearch_scorer`` the Spark plans run (over-fetching
-        by the tombstone count), tombstones dropped, then merged by
-        (score desc, docId asc). None when the Spark plan must run: a
-        node without a program, a scripted similarity, postings not on
-        local files, too many tombstones, or work over MAX_DRIVER_WORK."""
+        computed in the driver: ``msearch.score_table`` over the resident
+        tables (loaded by the first such request; one lock, as the decode
+        caches mutate) with ``k`` + the tombstone count, tombstones
+        dropped, merged by (score desc, docId asc). ``attrs["tier"]``
+        holds the block counters and whether this request loaded the
+        tables. A changed pinned file raises StaleIndexError. None when
+        the Spark plan must run: a node without a program, a scripted
+        similarity, non-local postings, too many tombstones, or work
+        over MAX_DRIVER_WORK."""
         from opensearch_spark.search import msearch as M
 
         if (self.similarity is not None or k < 1 or self._deleted_ids is None
@@ -767,15 +696,17 @@ class SearchEngine:
         if any(p is None for p in progs):
             return None
         programs = [p for p in progs if p.clauses and not p.match_none]
-        terms = M.required_terms(programs)
-        if self._driver_work(programs, terms) >= self.MAX_DRIVER_WORK:
+        if self._driver_work(programs) >= self.MAX_DRIVER_WORK:
             return None
-        scorer = M.make_msearch_scorer(programs, idfs, self.avgdl,
-                                       k + self._n_deletes)
-        parts = [scorer(seg) for seg in self._pinned.read(terms)]
-        out = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(
-            {"qid": np.empty(0, np.int32), "docId": np.empty(0, np.int64),
-             "score": np.empty(0, np.float64)})
+        pinned = self._pinned
+        with self._tier_lock:
+            pinned.check()
+            loaded = pinned.tables is None
+            if loaded:
+                pinned.load()
+            scored = [M.score_table(t, programs, idfs, self.avgdl, k + self._n_deletes)
+                      for t in pinned.tables]
+        out = pd.concat([part for part, _ in scored], ignore_index=True)
         if self._deleted_ids.size:
             out = out[~np.isin(out["docId"].to_numpy(), self._deleted_ids)]
         qid, doc, score = (out[c].to_numpy() for c in ("qid", "docId", "score"))
@@ -783,7 +714,11 @@ class SearchEngine:
         qid = qid[order]
         rank = np.arange(qid.size) - np.searchsorted(qid, qid)
         keep = order[rank < k]
-        return out.iloc[keep].reset_index(drop=True)
+        out = out.iloc[keep].reset_index(drop=True)
+        out.attrs["tier"] = {"blocks_decoded": sum(st["decoded"] for _, st in scored),
+                             "blocks_total": sum(st["total"] for _, st in scored),
+                             "pinned": loaded}
+        return out
 
     def _local_frame(self, pdf: pd.DataFrame, cols: Sequence[str]) -> DataFrame:
         """Rows already in final order as an Arrow-built LocalRelation:
@@ -832,6 +767,7 @@ class SearchEngine:
                 collapse=None, terminate_after=None, slice_=None) -> tuple:
         """(``search``'s frame, None), or (None, the driver-local tier's
         rows as pandas in final order) when that tier answered."""
+        self._check_open()
         if from_ + k > self.MAX_RESULT_WINDOW:
             raise ValueError(
                 f"from+size {from_ + k} exceeds max_result_window {self.MAX_RESULT_WINDOW}"
@@ -842,9 +778,8 @@ class SearchEngine:
         prune = (sort is None and search_after is None and from_ == 0
                  and collapse is None and slice_ is None
                  and terminate_after is None)
-        node = None
+        node = dsl_mod.parse(query) if isinstance(query, dict) else dsl_mod.normalize(query)
         if prune:
-            node = dsl_mod.parse(query) if isinstance(query, dict) else dsl_mod.normalize(query)
             local = self._driver_topk([node], k)
             if local is not None:
                 return None, local
@@ -869,8 +804,6 @@ class SearchEngine:
                 cached = self._search_plans.get(sig)
             if cached is not None:
                 return cached, None
-        if node is None:
-            node = dsl_mod.parse(query) if isinstance(query, dict) else dsl_mod.normalize(query)
         df = self.compile(node, topk=k if prune else None)
         if slice_ is not None:
             # sliced scroll (reference: search/slice/SliceBuilder.java:82)
@@ -1184,7 +1117,7 @@ class SearchEngine:
                         frag_size=int(spec.get("fragment_size", 100)),
                         n_frags=int(spec.get("number_of_fragments", 2)),
                         out_col=out_col,
-                        fields=mf,
+                        fields=mf, default_field=self.text_field,
                     )
             if src:
                 # _source filtering (reference: FetchSourceContext):
@@ -1223,11 +1156,13 @@ class SearchEngine:
             # profile returns the executed plan per phase plus wall-time
             # once an action runs; plan strings are available immediately.
             # "path" says which tier answered the hits: "driver" (in
-            # process, _driver_topk) or "spark".
+            # process, _driver_topk, with its block counters and whether
+            # this request loaded the resident tables) or "spark".
             prof: dict = {"query": {
                 "plan": hits._jdf.queryExecution().executedPlan().toString(),
                 "parsed": repr(dsl_mod.parse(q) if isinstance(q, dict) else q),
                 "path": "spark" if local is None else "driver",
+                **({} if local is None else local.attrs["tier"]),
             }}
             if aggs_df is not None:
                 prof["aggregations"] = {
@@ -1814,6 +1749,7 @@ class SearchEngine:
         which is the fixed per-batch driver cost in the serving regime."""
         import json as _json
 
+        self._check_open()
         nodes = [
             dsl_mod.parse(q) if isinstance(q, dict) else dsl_mod.normalize(q)
             for q in queries
@@ -1926,10 +1862,8 @@ class SearchEngine:
             )
         if not parts:
             return self.spark.createDataFrame([], "qid int, " + SCORE_SCHEMA)
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        u = self._live(u)  # hot path bypasses compile(): filter tombstones here
+        # hot path bypasses compile(): filter tombstones here
+        u = self._live(functools.reduce(DataFrame.unionByName, parts))
         w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docId"))
         return (
             u.withColumn("_rn", F.row_number().over(w))
@@ -1997,6 +1931,7 @@ class SearchEngine:
         past MAX_PRUNE_DELETES that over-fetch defeats pruning, so the
         exhaustive path runs instead (compaction reclaims the dead docs
         and restores pruning)."""
+        self._check_open()
         if topk is not None and self._n_deletes:
             if self._n_deletes > self.MAX_PRUNE_DELETES:
                 topk = None
@@ -2217,23 +2152,25 @@ class SearchEngine:
         MultiMatchQuery.java — best_fields builds a DisMaxQuery over the
         per-field queries, most_fields a should-bool that sums,
         bool_prefix per-field match_bool_prefix). Caret boosts carry
-        into the per-field leaves."""
-        boosts = node.field_boosts or [1.0] * len(node.fields)
+        into the per-field leaves. No ``fields`` = the engine's text
+        field (the reference's ``index.query.default_field``)."""
+        fields = node.fields or [self.text_field]
+        boosts = node.field_boosts or [1.0] * len(fields)
         if node.type == "phrase":
             per: List[A.AnyNode] = [
                 A.MatchPhrase(field_name=f, query=node.query, boost=w)
-                for f, w in zip(node.fields, boosts)
+                for f, w in zip(fields, boosts)
             ]
         elif node.type == "bool_prefix":
             per = [
                 A.MatchBoolPrefix(field_name=f, query=node.query, boost=w)
-                for f, w in zip(node.fields, boosts)
+                for f, w in zip(fields, boosts)
             ]
         else:
             per = [
                 A.Match(field_name=f, query=node.query, operator=node.operator,
                         minimum_should_match=node.minimum_should_match, boost=w)
-                for f, w in zip(node.fields, boosts)
+                for f, w in zip(fields, boosts)
             ]
         if node.type == "most_fields":
             return A.Bool(should=per, minimum_should_match=1, boost=node.boost)
@@ -2707,15 +2644,17 @@ class SearchEngine:
         per-shard term dictionary). Falls back to per-term pushdown
         scans when the vocabulary exceeds TERMSTATS_MAP_MAX."""
         if self._term_df_map is None:
+            # collected as Arrow: pickled Rows cost ~0.2 s per 30k terms
             rows = (
                 self.termstats.groupBy("term").agg(F.sum("df").alias("df"))
                 .limit(self.TERMSTATS_MAP_MAX + 1)
-                .collect()
+                .toArrow()
             )
-            if len(rows) > self.TERMSTATS_MAP_MAX:
+            if rows.num_rows > self.TERMSTATS_MAP_MAX:
                 self._term_df_map = False
             else:
-                self._term_df_map = {r["term"]: int(r["df"]) for r in rows}
+                self._term_df_map = dict(zip(rows.column("term").to_pylist(),
+                                             rows.column("df").to_pylist()))
                 self._n_postings = sum(self._term_df_map.values())
         return self._term_df_map
 
@@ -3163,6 +3102,12 @@ class MultiFieldEngine(SearchEngine):
                 spark, index_dirs[f], corpus=corpus, text_field=f,
                 id_cols=id_cols, doc_id_col=doc_id_col, cache=cache,
             )
+
+    def close(self) -> None:
+        for eng in self.sub.values():
+            if eng is not self:
+                eng.close()
+        super().close()
 
     def _check_field(self, name: str) -> None:
         if name not in self.sub:

@@ -37,7 +37,8 @@ from opensearch_spark.analysis.analyzer import tokenize, tokenize_offsets
 PRE, POST = "<em>", "</em>"
 
 
-def query_spec(query, fields: Optional[Set[str]] = None) -> dict:
+def query_spec(query, fields: Optional[Set[str]] = None,
+               default_field: Optional[str] = None) -> dict:
     """Extract the highlightable structure of a query:
     ``{"terms": set[str], "phrases": [(terms, slop)]}``.
 
@@ -53,8 +54,10 @@ def query_spec(query, fields: Optional[Set[str]] = None) -> dict:
     widens the set — reference ``highlight/HighlightBuilder.java``
     matchedFields / AbstractHighlighterBuilder.highlightQuery). A
     multi-field clause (multi_match/combined_fields/query_string
-    ``fields``) contributes when any of its fields is in the set.
-    ``None`` keeps the historical collect-everything behavior."""
+    ``fields``) contributes when any of its fields is in the set. A
+    field-less clause (multi_match/combined_fields without ``fields``)
+    targets ``default_field``, the engine's text field. ``fields=None``
+    keeps the historical collect-everything behavior."""
     if isinstance(query, str):
         return {"terms": set(tokenize(query)), "phrases": []}
 
@@ -65,13 +68,13 @@ def query_spec(query, fields: Optional[Set[str]] = None) -> dict:
         if fields is None:
             return True
         fn = getattr(n, "field_name", None)
-        if isinstance(fn, str):
+        if isinstance(fn, str) and fn:
             return fn in fields
         multi = getattr(n, "fields", None)
         if isinstance(multi, (list, tuple)) and multi:
             # "field^2" boost suffixes strip to the bare name
             return any(str(f).split("^")[0] in fields for f in multi)
-        return True  # field-less leaf (e.g. query_string default field)
+        return default_field is None or default_field in fields
 
     def walk(n):
         if n is None or isinstance(n, (str, list)):
@@ -304,14 +307,15 @@ def highlight(
     n_frags: int = 2,
     out_col: str = "highlights",
     fields: Optional[Set[str]] = None,
+    default_field: Optional[str] = None,
 ) -> DataFrame:
     """Add an ``array<string>`` fragment column (default name
     ``highlights``) to fetched hit rows; multi-field highlight calls
     this once per field with distinct ``out_col`` names. ``query`` is
     a parsed AST node (phrase-aware) or a plain text string.
-    ``fields`` is the matched-fields set passed to
-    :func:`query_spec` (None = collect every clause)."""
-    spec = query_spec(query, fields=fields)
+    ``fields`` and ``default_field`` are passed to :func:`query_spec`
+    (``fields=None`` = collect every clause)."""
+    spec = query_spec(query, fields=fields, default_field=default_field)
 
     @F.pandas_udf("array<string>")
     def hl(texts: pd.Series) -> pd.Series:

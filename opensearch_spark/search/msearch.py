@@ -26,9 +26,9 @@ fall back to the per-query compiler and are unioned into the same
 result shape.
 
 A small batch of programs runs no Spark job at all: the engine's
-driver-local tier (``SearchEngine._driver_topk``) reads the same block
-rows with pyarrow and calls the same ``make_msearch_scorer`` per segment
-in the driver process.
+driver-local tier (``SearchEngine._driver_topk``) runs ``score_table``,
+the body of ``make_msearch_scorer``, over its resident per-segment
+tables in the driver process.
 """
 
 from __future__ import annotations
@@ -109,14 +109,10 @@ def build_program(qid: int, node: A.AnyNode, known_terms: set,
                 if occur in ("must", "filter"):
                     prog.match_none = True
                 return True
-            if len(terms) == 1:
-                prog.clauses.append(_Clause(
-                    occur=occur, kind="match", terms=terms, weight=float(n.boost)
-                ))
-                return True
+            phrase = len(terms) > 1  # a one-term phrase scores as a match
             prog.clauses.append(_Clause(
-                occur=occur, kind="phrase", terms=terms, weight=float(n.boost),
-                slop=int(n.slop),
+                occur=occur, kind="phrase" if phrase else "match", terms=terms,
+                weight=float(n.boost), slop=int(n.slop) if phrase else 0,
             ))
             return True
         return False
@@ -129,17 +125,8 @@ def build_program(qid: int, node: A.AnyNode, known_terms: set,
         prog.boost = 1.0
         return prog
     if isinstance(node, A.Bool):
-        for c in node.must:
-            if not leaf(c, "must"):
-                return None
-        for c in node.filter:
-            if not leaf(c, "filter"):
-                return None
-        for c in node.should:
-            if not leaf(c, "should"):
-                return None
-        for c in node.must_not:
-            if not leaf(c, "must_not"):
+        for occur in ("must", "filter", "should", "must_not"):
+            if not all(leaf(c, occur) for c in getattr(node, occur)):
                 return None
         if not node.must and not node.filter and not node.should:
             return None  # pure-negative or empty bool: match_all base — fall back
@@ -166,11 +153,7 @@ def candidate_terms(node: A.AnyNode, tok=tokenize) -> set:
 
 
 def required_terms(programs: Sequence[Program]) -> List[str]:
-    out: set = set()
-    for p in programs:
-        for c in p.clauses:
-            out.update(c.terms)
-    return sorted(out)
+    return sorted({t for p in programs for c in p.clauses for t in c.terms})
 
 
 def position_terms(programs: Sequence[Program]) -> set:
@@ -178,30 +161,46 @@ def position_terms(programs: Sequence[Program]) -> set:
     return {t for p in programs for c in p.clauses if c.kind == "phrase" for t in c.terms}
 
 
+def score_table(table, programs: Sequence[Program], idfs: Dict[str, float],
+                avgdl: float, k: Optional[int]) -> Tuple[pd.DataFrame, dict]:
+    """Every program scored against one segment's ``wand.BlockTable``:
+    (per-(query, segment) top-k, or every match when ``k`` is None, as
+    (qid, docId, score); {"decoded": rows this call decoded — not those
+    the table's cache held, "total": rows the programs reference}."""
+    from opensearch_spark.search import wand
+
+    before = table.n_decodes
+    # every phrase term up front: a row a match would decode first is
+    # then decoded once, with its positions, not twice
+    table.want_positions(position_terms(programs))
+    out_qid: List[np.ndarray] = []
+    out_doc: List[np.ndarray] = []
+    out_score: List[np.ndarray] = []
+    total = 0
+    for prog in programs:
+        docs, scores, stats = wand.score_program(table, prog, idfs, avgdl, k)
+        out_qid.append(np.full(docs.size, prog.qid, dtype=np.int32))
+        out_doc.append(docs.astype(np.int64))
+        out_score.append(scores.astype(np.float64))
+        total += stats["total"]
+    return pd.DataFrame({
+        "qid": np.concatenate([np.empty(0, np.int32)] + out_qid),
+        "docId": np.concatenate([np.empty(0, np.int64)] + out_doc),
+        "score": np.concatenate([np.empty(0, np.float64)] + out_score),
+    }), {"decoded": table.n_decodes - before, "total": total}
+
+
 def make_msearch_scorer(programs: List[Program], idfs: Dict[str, float],
                         avgdl: float, k: Optional[int]):
     """applyInPandas fn scoring every program against one segment's
-    posting blocks (one shared ``wand.BlockTable``); emits per-(query,
-    segment) top-k, or every match when ``k`` is None."""
-    pos_terms = position_terms(programs)
+    posting blocks (one shared ``wand.BlockTable``, ``score_table``);
+    emits per-(query, segment) top-k, or every match when ``k`` is
+    None."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         from opensearch_spark.search import wand
 
-        table = wand.BlockTable(pdf, pos_terms)
-        out_qid: List[np.ndarray] = []
-        out_doc: List[np.ndarray] = []
-        out_score: List[np.ndarray] = []
-        for prog in programs:
-            docs, scores, _stats = wand.score_program(table, prog, idfs, avgdl, k)
-            out_qid.append(np.full(docs.size, prog.qid, dtype=np.int32))
-            out_doc.append(docs.astype(np.int64))
-            out_score.append(scores.astype(np.float64))
-        return pd.DataFrame({
-            "qid": np.concatenate([np.empty(0, np.int32)] + out_qid),
-            "docId": np.concatenate([np.empty(0, np.int64)] + out_doc),
-            "score": np.concatenate([np.empty(0, np.float64)] + out_score),
-        })
+        return score_table(wand.BlockTable(pdf), programs, idfs, avgdl, k)[0]
 
     return fn
 

@@ -49,6 +49,11 @@ def _sorted(s: Spans) -> Spans:
     return doc[order], st[order], en[order]
 
 
+def _group_ids(doc: np.ndarray) -> np.ndarray:
+    """0, 0, 1, 1, 1, 2, ...: the run number of each entry of sorted ``doc``."""
+    return np.concatenate(([0], np.cumsum(doc[1:] != doc[:-1])))
+
+
 def ordinalize(decoded: dict, terms: List[str]) -> Tuple[np.ndarray, dict]:
     """Map raw docIds (full int64 range — xxhash64) to dense ordinals so
     spans can pack (doc << 32 | pos) keys without overflow. Returns
@@ -232,10 +237,7 @@ def not_spans(include: Spans, exclude: Spans) -> Spans:
     j = np.searchsorted(ek_start, ik, side="right") - 1
     # among excludes up to j (same doc), need max end > i.start:
     # grouped prefix-max of een in (doc, start) order
-    grp_change = np.empty(edoc.size, dtype=bool)
-    grp_change[0] = True
-    grp_change[1:] = edoc[1:] != edoc[:-1]
-    grp = np.cumsum(grp_change) - 1
+    grp = _group_ids(edoc)
     big = np.int64(1) << 40
     acc_end = np.maximum.accumulate(een + grp * big) - grp * big
     valid = j >= 0
@@ -257,10 +259,7 @@ def contained_mask(little: Spans, big: Spans) -> np.ndarray:
         return np.zeros(0, dtype=bool)
     if bdoc.size == 0:
         return np.zeros(ldoc.size, dtype=bool)
-    grp_change = np.empty(bdoc.size, dtype=bool)
-    grp_change[0] = True
-    grp_change[1:] = bdoc[1:] != bdoc[:-1]
-    grp = np.cumsum(grp_change) - 1
+    grp = _group_ids(bdoc)
     big_off = np.int64(1) << 40
     acc_end = np.maximum.accumulate(ben + grp * big_off) - grp * big_off
     bk = bdoc * (np.int64(1) << 32) + bst
@@ -283,10 +282,7 @@ def containing_mask(big: Spans, little: Spans) -> np.ndarray:
         return np.zeros(0, dtype=bool)
     if ldoc.size == 0:
         return np.zeros(bdoc.size, dtype=bool)
-    grp_change = np.empty(ldoc.size, dtype=bool)
-    grp_change[0] = True
-    grp_change[1:] = ldoc[1:] != ldoc[:-1]
-    grp = np.cumsum(grp_change) - 1
+    grp = _group_ids(ldoc)
     big_off = np.int64(1) << 40
     keyed = len_ + grp * big_off
     sufmin = np.minimum.accumulate(keyed[::-1])[::-1] - grp * big_off

@@ -12,9 +12,11 @@ bounds any score contribution from that block (impact is increasing in tf
 and decreasing in dl; storing the pieces instead of the value keeps the
 bound valid when avgdl drifts under incremental updates).
 
-A ``BlockTable`` holds one segment's block rows as numpy arrays (one
-sort) plus a decode cache, shared by every program scored against the
-segment. ``score_program`` runs a match (or/and/msm), phrase, sloppy
+A ``BlockTable`` holds one segment's block rows (Arrow byte buffers,
+numpy block metadata) plus a decode cache, shared by every program
+scored against the segment: for one Spark task's group on the Spark
+path, for the engine's life in the driver tier's resident tables.
+``score_program`` runs a match (or/and/msm), phrase, sloppy
 phrase, or bool-of-those program (``msearch.Program``) in four steps:
 
  1. pruning picks which block rows to decode —
@@ -42,6 +44,8 @@ from typing import Dict, Iterable, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from opensearch_spark.analysis.smallfloat import decode_norms_np
 from opensearch_spark.index import codec
@@ -53,38 +57,76 @@ B = bm25.B
 _EMPTY = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
 
 
-class BlockTable:
-    """One segment's posting-block rows, sorted once by (term, first_doc,
-    block_no), with a decode cache: each row is decoded at most once,
-    whichever program asks first. Terms in ``pos_terms`` also decode
-    positions."""
+_BYTE_COLS = ("doc_bytes", "tf_bytes", "norm_bytes", "pos_bytes")
+_COLS = ("term", "block_no", "first_doc", "last_doc", "n_docs", "max_tf", "min_dl_q") + _BYTE_COLS
 
-    def __init__(self, pdf: pd.DataFrame, pos_terms: Iterable[str] = ()):
-        names, code = np.unique(pdf["term"].to_numpy(dtype=object).astype(str),
-                                return_inverse=True)
-        first = pdf["first_doc"].to_numpy(dtype=np.int64)
-        order = np.lexsort((pdf["block_no"].to_numpy(dtype=np.int64), first, code))
+
+class BlockTable:
+    """One segment's posting-block rows (an Arrow table, or a pandas
+    frame converted to one) in (term, first_doc, block_no) order — terms
+    dictionary coded, byte columns left in their Arrow buffers, rows
+    already in order not re-sorted — with a decode cache: each row is
+    decoded at most once, into a fixed slot. Rows of ``pos_terms`` and of
+    later ``want_positions`` terms also decode positions (a row decoded
+    before without them is decoded again)."""
+
+    def __init__(self, rows, pos_terms: Iterable[str] = ()):
+        if isinstance(rows, pd.DataFrame):  # without pandas metadata: 4x cheaper
+            rows = pa.table({c: rows[c].to_numpy() for c in _COLS})
+        enc = pc.dictionary_encode(rows.column("term").cast(pa.string()).combine_chunks())
+        names = enc.dictionary.to_numpy(zero_copy_only=False)
+        code = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+        if names.size > 1 and not (names[1:] > names[:-1]).all():
+            rank = np.empty(names.size, dtype=np.int64)
+            rank[np.argsort(names, kind="stable")] = np.arange(names.size)
+            names, code = np.sort(names), rank[code]
+
+        def col(c: str, dtype) -> np.ndarray:
+            return rows.column(c).to_numpy().astype(dtype, copy=False)
+
+        first, bno = col("first_doc", np.int64), col("block_no", np.int64)
+        dc, dfirst = np.diff(code), np.diff(first)
+        order = slice(None)
+        if not ((dc > 0) | ((dc == 0) & ((dfirst > 0) | ((dfirst == 0) & (np.diff(bno) >= 0))))).all():
+            order = np.lexsort((bno, first, code))
         self.code = code[order]
         self.first = first[order]
-        self.last = pdf["last_doc"].to_numpy(dtype=np.int64)[order]
-        self.n_docs = pdf["n_docs"].to_numpy(dtype=np.int64)[order]
-        self.max_tf = pdf["max_tf"].to_numpy(dtype=np.float64)[order]
-        self.min_dl = pdf["min_dl_q"].to_numpy(dtype=np.float64)[order]
-        self._bytes = {c: pdf[c].to_numpy(dtype=object)[order]
-                       for c in ("doc_bytes", "tf_bytes", "norm_bytes", "pos_bytes")}
-        self.names = [str(t) for t in names]
-        self._term = {t: i for i, t in enumerate(self.names)}
-        self._bounds = np.searchsorted(self.code, np.arange(len(self.names) + 1))
-        pos_terms = set(pos_terms)
-        self._with_pos = np.array([t in pos_terms for t in self.names], dtype=bool)[self.code]
-        n = len(self.code)
-        self._off = np.full(n, -1, dtype=np.int64)       # row -> offset of its docs
-        self._pos_off = np.full(n, -1, dtype=np.int64)   # row -> offset of its positions
-        self._occ = np.zeros(n, dtype=np.int64)          # row -> positions count
-        self._docs = np.empty(0, np.int64)
-        self._tfs = np.empty(0, np.int64)
-        self._dlq = np.empty(0, np.float64)
+        self.last = col("last_doc", np.int64)[order]
+        self.n_docs = col("n_docs", np.int64)[order]
+        self.max_tf = col("max_tf", np.float64)[order]
+        self.min_dl = col("min_dl_q", np.float64)[order]
+        self._bytes = {}  # column -> (data uint8, row start, row length)
+        for c in _BYTE_COLS:
+            a = rows.column(c).cast(pa.large_binary()).combine_chunks()
+            bufs = a.buffers()
+            off = (np.frombuffer(bufs[1], np.int64, len(a) + 1, a.offset * 8) if len(a)
+                   else np.zeros(1, np.int64))
+            data = np.frombuffer(bufs[2], np.uint8) if bufs[2] is not None else np.empty(0, np.uint8)
+            self._bytes[c] = (data, off[:-1][order], np.diff(off)[order])
+        self.names = names
+        self._term = dict(zip(names.tolist(), range(names.size)))
+        self._bounds = np.searchsorted(self.code, np.arange(names.size + 1))
+        self._want_pos = np.zeros(names.size, dtype=bool)
+        self.want_positions(pos_terms)
+        n = self.n_docs
+        self._off = np.cumsum(n) - n                      # row -> slot of its docs
+        self._done = np.zeros(n.size, dtype=bool)         # docs/tfs/norms decoded
+        self._pos_off = np.full(n.size, -1, np.int64)     # row -> slot of its positions
+        self._occ = np.zeros(n.size, dtype=np.int64)      # row -> positions count
+        total = int(n.sum())
+        self._docs = np.empty(total, np.int64)
+        self._tfs = np.empty(total, np.int64)
+        self._dlq = np.empty(total, np.float64)
         self._pos = np.empty(0, np.int64)
+        self._pos_used = 0
+        self.n_decodes = 0  # rows decoded so far (cache misses)
+
+    def want_positions(self, terms: Iterable[str]) -> None:
+        """From now on, decode returns positions for these terms."""
+        for t in terms:
+            i = self._term.get(t)
+            if i is not None:
+                self._want_pos[i] = True
 
     def rows(self, term: str) -> np.ndarray:
         i = self._term.get(term)
@@ -111,29 +153,40 @@ class BlockTable:
         return r[hi > lo]
 
     def n_decoded(self, rows: np.ndarray) -> int:
-        return int((self._off[rows] >= 0).sum())
+        return int(self._done[rows].sum())
+
+    def _stream(self, c: str, sel: np.ndarray) -> np.ndarray:
+        """The selected rows' bytes of one column, joined in row order."""
+        data, start, size = self._bytes[c]
+        n = size[sel]
+        return data[np.repeat(start[sel], n) + codec.ragged_arange(n)]
 
     def _ensure(self, rows: np.ndarray) -> None:
-        new = rows[self._off[rows] < 0]
-        for with_pos in (False, True):
-            sel = new[self._with_pos[new] == with_pos]
+        pos = self._want_pos[self.code[rows]]
+        for sel, with_pos in ((rows[~pos & ~self._done[rows]], False),
+                              (rows[pos & (self._pos_off[rows] < 0)], True)):
             if sel.size == 0:
                 continue
-            b = self._bytes
-            docs, tfs, norms, pos = codec.decode_blocks(
-                self.n_docs[sel], b["doc_bytes"][sel], b["tf_bytes"][sel],
-                b["norm_bytes"][sel], b["pos_bytes"][sel] if with_pos else None)
+            docs, tfs, norms, p = codec.decode_blocks(
+                self.n_docs[sel], *(self._stream(c, sel) for c in _BYTE_COLS[:3]),
+                self._stream("pos_bytes", sel) if with_pos else None)
             n = self.n_docs[sel]
-            starts = np.cumsum(n) - n
-            self._off[sel] = self._docs.size + starts
-            self._docs = np.concatenate((self._docs, docs))
-            self._tfs = np.concatenate((self._tfs, tfs))
-            self._dlq = np.concatenate((self._dlq, decode_norms_np(norms).astype(np.float64)))
+            idx = np.repeat(self._off[sel], n) + codec.ragged_arange(n)
+            self._docs[idx], self._tfs[idx] = docs, tfs
+            self._dlq[idx] = decode_norms_np(norms)
+            self._done[sel] = True
+            self.n_decodes += int(sel.size)
             if with_pos:
-                occ = np.add.reduceat(tfs, starts)
+                occ = np.add.reduceat(tfs, np.cumsum(n) - n)
+                used = self._pos_used
+                if used + p.size > self._pos.size:
+                    grown = np.empty(max(2 * self._pos.size, used + p.size), np.int64)
+                    grown[:used] = self._pos[:used]
+                    self._pos = grown
+                self._pos[used:used + p.size] = p
                 self._occ[sel] = occ
-                self._pos_off[sel] = self._pos.size + np.cumsum(occ) - occ
-                self._pos = np.concatenate((self._pos, pos))
+                self._pos_off[sel] = used + np.cumsum(occ) - occ
+                self._pos_used = used + p.size
 
     def decode(self, rows: np.ndarray) -> Dict[str, tuple]:
         """Selected rows -> term -> (docs sorted, tfs, dl_q, positions
@@ -143,18 +196,18 @@ class BlockTable:
         n = self.n_docs[rows]
         idx = np.repeat(self._off[rows], n) + codec.ragged_arange(n)
         docs, tfs, dlq = self._docs[idx], self._tfs[idx], self._dlq[idx]
-        prow = rows[self._with_pos[rows]]
+        code = self.code[rows]
+        prow = rows[self._want_pos[code]]
         occ = self._occ[prow]
         pos = self._pos[np.repeat(self._pos_off[prow], occ) + codec.ragged_arange(occ)]
         out: Dict[str, tuple] = {}
-        code = self.code[rows]
         ends = np.concatenate(([0], np.cumsum(n)))
         p = 0
         for ti in np.unique(code):
             lo, hi = np.searchsorted(code, [ti, ti + 1])
             a, e = int(ends[lo]), int(ends[hi])
             tp = None
-            if self._with_pos[rows[lo]]:
+            if self._want_pos[ti]:
                 m = int(tfs[a:e].sum())
                 tp, p = pos[p:p + m], p + m
             out[self.names[ti]] = codec.merge_generations(docs[a:e], tfs[a:e], dlq[a:e], tp)
@@ -235,6 +288,7 @@ def score_program(table: BlockTable, prog: M.Program, idfs: Dict[str, float],
     """(docIds, scores, {"decoded", "total"} blocks) of ``prog`` over one
     segment: per-segment top-k, or every match when ``k`` is None."""
     terms = sorted({t for c in prog.clauses for t in c.terms})
+    table.want_positions(M.position_terms([prog]))
     rows = np.concatenate([np.empty(0, np.int64)] + [table.rows(t) for t in terms])
     docs, scores = _EMPTY
     if rows.size and not prog.match_none:

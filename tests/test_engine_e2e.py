@@ -443,3 +443,93 @@ def test_tier_stale_reader_raises(spark, tmp_path, tier):
         eng.search(TIER_QUERIES[0], k=K)
     fresh = SearchEngine(spark, root, corpus=corpus)
     assert fresh.search(TIER_QUERIES[0], k=K).collect()
+
+
+# ---- driver-local tier: resident segment tables -------------------------
+
+def test_tier_match_then_phrase_positions(spark, tmp_path, tier):
+    """The resident tables keep decodes across requests: a match decodes
+    its term's rows without positions, and a later phrase with that term
+    must still get them."""
+    root = str(tmp_path / "ix")
+    corpus = _fresh_index(spark, root)
+    eng = SearchEngine(spark, root, corpus=corpus)
+    match, phrase = {"match": {"content": "return"}}, {"match_phrase": {"content": "return class"}}
+    on, off = both_paths(eng, tier, match)
+    assert on == off and on
+    tables = eng._pinned.tables
+    assert any((t._done & (t._pos_off < 0)).any() for t in tables)
+    on, off = both_paths(eng, tier, phrase)
+    assert on == off and on
+    assert eng._pinned.tables is tables
+
+
+def test_tier_reads_each_pinned_file_once(spark, tmp_path, tier, monkeypatch):
+    """One pin per engine: twenty tier requests read every postings file
+    exactly once."""
+    from collections import Counter
+
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "ix")
+    corpus = _fresh_index(spark, root)
+    eng = SearchEngine(spark, root, corpus=corpus)
+    reads = Counter()
+    real = pq.read_table
+
+    def counting(source, *a, **kw):
+        reads[source] += 1
+        return real(source, *a, **kw)
+
+    monkeypatch.setattr(pq, "read_table", counting)
+    tier(True)
+    for i in range(20):
+        q = TIER_QUERIES[i % len(TIER_QUERIES)]
+        if i % 2:
+            assert eng._search(q, K)[1] is not None
+        else:
+            eng.msearch(TIER_QUERIES, k=K).collect()
+    files = eng._pinned.files
+    assert files and reads == Counter({f: 1 for f in files})
+
+
+def test_tier_profile_counts_new_decodes(spark, tmp_path, tier):
+    """``profile`` of a tier request: the first one loads the resident
+    tables; a repeat decodes nothing new, as every row it needs is
+    cached."""
+    root = str(tmp_path / "ix")
+    corpus = _fresh_index(spark, root)
+    eng = SearchEngine(spark, root, corpus=corpus)
+    tier(True)
+    body = {"query": TIER_QUERIES[0], "size": K, "profile": True}
+    first = eng.request(body)["profile"]["query"]
+    second = eng.request(body)["profile"]["query"]
+    assert first["path"] == second["path"] == "driver"
+    assert first["pinned"] is True and second["pinned"] is False
+    assert first["blocks_decoded"] > 0 and second["blocks_decoded"] == 0
+    assert second["blocks_total"] == first["blocks_total"] > 0
+    third = eng.request({**body, "query": TIER_QUERIES[2]})["profile"]["query"]
+    assert third["pinned"] is False and third["blocks_decoded"] > 0
+
+
+def test_close_releases_cache_and_tables(spark, tmp_path, tier):
+    """close() unpersists the cache=True frames, drops the resident
+    tables, and a closed engine refuses to search."""
+    root = str(tmp_path / "ix")
+    corpus = _fresh_index(spark, root)
+    eng = SearchEngine(spark, root, corpus=corpus, cache=True)
+    tier(True)
+    assert eng.search(TIER_QUERIES[0], k=K).collect()
+    tier(False)
+    assert eng.search(TIER_QUERIES[0], k=K).collect()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    frames = (eng.postings, eng.docstats)
+    assert all(cm.lookupCachedData(df._jdf).isDefined() for df in frames)
+    assert eng._pinned.tables
+    eng.close()
+    assert not any(cm.lookupCachedData(df._jdf).isDefined() for df in frames)
+    assert eng._pinned is False
+    for fn in (lambda: eng.search(TIER_QUERIES[0], k=K),
+               lambda: eng.msearch(TIER_QUERIES, k=K)):
+        with pytest.raises(RuntimeError, match="closed"):
+            fn()

@@ -263,3 +263,32 @@ def test_require_field_match_false_collects_everything(spark, tmp_path):
     per_field = frags_of(eng.request({**body, "highlight": {"fields": {
         "text": {"require_field_match": False}}}}))
     assert per_field == wide
+
+
+def test_field_less_clause_highlights_only_default_field(spark, tmp_path):
+    """A clause naming no field (multi_match without ``fields``) targets
+    the engine's text field, in the search and in highlighting: with two
+    highlighted fields it marks that field's text and not the other's."""
+    from opensearch_spark.index.build import build_index
+    from opensearch_spark.search import dsl as dsl_mod
+    from opensearch_spark.search.engine import SearchEngine
+    from opensearch_spark.search.highlight import query_spec
+
+    field_less = {"multi_match": {"query": "shared"}}
+    node = dsl_mod.parse(field_less)
+    assert query_spec(node, fields={"tag"}, default_field="text")["terms"] == set()
+    assert query_spec(node, fields={"text"}, default_field="text")["terms"] == {"shared"}
+
+    rows = [(0, "alpha shared words", "shared note"),
+            (1, "alpha plain text", "shared thing")]
+    corpus = spark.createDataFrame(rows, "doc_id long, text string, tag string")
+    root = str(tmp_path / "ix")
+    build_index(spark, corpus, root, text_col="text", doc_id_col="doc_id", n_segments=2)
+    eng = SearchEngine(spark, root, corpus=corpus, text_field="text", doc_id_col="doc_id")
+    out = eng.request({"query": field_less, "size": 10,
+                       "highlight": {"fields": {"text": {}, "tag": {}}}})
+    got = {int(r["docId"]): (list(r["highlights_text"] or []), list(r["highlights_tag"] or []))
+           for r in out["hits"].collect()}
+    assert list(got) == [0]
+    assert any("<em>shared</em>" in f for f in got[0][0])
+    assert not any("<em>" in f for f in got[0][1])

@@ -214,3 +214,36 @@ def test_msearch_many_tier_threads(spark, eng, tier):
     for rows in out["rows"]:
         assert [(int(r["qid"]), int(r["docId"]), float(r["score"]))
                 for r in rows] == want
+
+
+def test_msearch_many_tier_threads_mixed(spark, eng, tier):
+    """Twelve msearch_many threads on one fresh engine's resident tables,
+    phrase batches and match batches interleaved (a phrase needs
+    positions of rows a match decoded without them): every batch equals
+    the Spark plan's answer."""
+    import sys
+    import threading
+
+    phrases = [q for q in PROGRAMS if "match_phrase" in str(q)]
+    matches = [q for q in PROGRAMS if "match_phrase" not in str(q)]
+    assert phrases and matches
+    tier(False)
+    want = {id(b): _rows(eng.msearch(b, k=K)) for b in (phrases, matches)}
+    tier(True)
+    fresh = SearchEngine(spark, eng.paths.root, corpus=eng.corpus)
+    batches = [matches, phrases] * 6
+    out = {}
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        t = threading.Thread(target=lambda: out.update(
+            rows=fresh.msearch_many(batches, k=K, max_concurrent=12)))
+        t.start()
+        t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not t.is_alive()
+    assert len(out["rows"]) == len(batches)
+    for b, rows in zip(batches, out["rows"]):
+        assert [(int(r["qid"]), int(r["docId"]), float(r["score"]))
+                for r in rows] == want[id(b)]

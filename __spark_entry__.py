@@ -1873,12 +1873,11 @@ def _ft_terminate_after(spark: SparkSession, sf_dir: str) -> DataFrame:
     through SearchSourceBuilder.terminateAfter): each segment collects
     its matching docs in docId order and stops after 5 — the
     deterministic analog of Lucene's per-leaf doc-id collection order.
-    A dedicated 4-segment index is built through the checkpointed wave
-    path (waves=2), whose segment assignment is the documented
-    ``seg = docId % 4`` (index/build.py ``_analyze``; the default
-    zero-shuffle path sets seg by physical partition id, which no SQL
-    oracle can reproduce) — so the oracle replays the exact
-    per-segment cut."""
+    A dedicated 4-segment index is built in checkpointed waves
+    (waves=2), whose segment assignment is the documented
+    ``seg = pmod(docId, 4)`` (index/build.py ``by_seg``; a waves=1
+    build sets seg by physical partition id, which no SQL oracle can
+    reproduce) — so the oracle replays the exact per-segment cut."""
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     dest = _aux_index_dir(sf_dir, "termafter")
     if not os.path.exists(os.path.join(dest, "_ENTRY_DONE")):

@@ -60,7 +60,7 @@ def main() -> None:
         t0 = time.perf_counter()
         build_index(
             spark, docs, ix_dir, text_col="text", doc_id_col="doc_id",
-            n_segments=n_segments, shuffle_partitions=cpus,
+            n_segments=n_segments,
         )
         build_sec = min(build_sec, time.perf_counter() - t0)
 

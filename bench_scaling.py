@@ -146,14 +146,13 @@ def worker(cpus: int, corpus: str) -> dict:
     # throughput is steady-state indexing, not JVM/worker cold start
     warm_ix = f"/tmp/osx_scale_warm_{cpus}_{os.getpid()}"
     shutil.rmtree(warm_ix, ignore_errors=True)
-    build_index(spark, docs.limit(2000), warm_ix,
-                n_segments=cpus, shuffle_partitions=SHUFFLE)
+    build_index(spark, docs.limit(2000), warm_ix, n_segments=cpus)
     shutil.rmtree(warm_ix, ignore_errors=True)
 
     ix = f"/tmp/osx_scale_ix_{cpus}_{os.getpid()}"
     shutil.rmtree(ix, ignore_errors=True)
     t0 = time.perf_counter()
-    build_index(spark, docs, ix, n_segments=N_SEGMENTS, shuffle_partitions=SHUFFLE)
+    build_index(spark, docs, ix, n_segments=N_SEGMENTS)
     build_sec = time.perf_counter() - t0
 
     eng = SearchEngine(spark, ix, cache=True)

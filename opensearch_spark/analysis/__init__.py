@@ -4,8 +4,6 @@ from opensearch_spark.analysis.analyzer import (  # noqa: F401
     duckdb_token_regex,
     tokenize,
     tokenize_pandas,
-    tokens_udf,
-    termvec_udf,
 )
 from opensearch_spark.analysis.smallfloat import (  # noqa: F401
     byte4_to_int,

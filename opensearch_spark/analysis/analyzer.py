@@ -10,7 +10,7 @@ UAX#29 Unicode word-break; LowerCaseFilter follows.
 This module implements a documented, self-consistent UAX#29 *subset* that
 is exactly expressible in three regex dialects we need to agree:
 
-  - Python ``re``       (driver-side query analysis + pandas UDFs),
+  - Python ``re``       (driver-side query analysis),
   - Java regex          (optional pure-Catalyst tokenization),
   - RE2 (DuckDB oracle) (no lookaround available).
 
@@ -42,9 +42,8 @@ positions and doc length == token count (``discount_overlaps`` moot).
 from __future__ import annotations
 
 import re
-from typing import Iterator, List, Tuple
+from typing import List, Tuple
 
-import numpy as np
 import pandas as pd
 
 MAX_TOKEN_LENGTH = 255
@@ -92,29 +91,38 @@ def tokenize(text: str, analyzer: str = "standard") -> List[str]:
     if analyzer == "keyword":
         return [text]
     if analyzer == "whitespace":
-        return [t for t in WHITESPACE_PATTERN.findall(text)]
+        return WHITESPACE_PATTERN.findall(text)
     out: List[str] = []
     for tok in TOKEN_PATTERN.findall(text.lower()):
         out.extend(_split_long(tok))
     return out
 
 
-WHITESPACE_PATTERN = re.compile(r"\S+")
+# Regex character-class body of Java ``Character.isWhitespace``, the
+# split set of the reference's WhitespaceTokenizer: \t \n \x0b \x0c \r,
+# the separators \x1c-\x1f, and the Unicode space/line/paragraph
+# separators EXCEPT the no-break spaces U+00A0, U+2007 and U+202F. The
+# characters are literal, so the one string is valid in Python ``re``
+# and in RE2 (DuckDB) alike; neither dialect's ``\s`` is this set.
+WHITESPACE_CLASS = (
+    "\t-\r\x1c- \u1680\u2000-\u2006\u2008-\u200a\u2028\u2029\u205f\u3000"
+)
+WHITESPACE_PATTERN = re.compile(f"[^{WHITESPACE_CLASS}]+")
 
 
 def duckdb_tokens_expr(analyzer: str = "standard", col: str = "content") -> str:
     """DuckDB SQL expression producing the token LIST for ``col`` under
     the named analyzer (used by the segment-local index build and the
     SQL oracles — one dialect, same tokens as ``tokenize``, INCLUDING
-    the 255-char max_token_length split, so the zero-shuffle build path
-    and the Python/wave path index long tokens identically)."""
+    the 255-char max_token_length split and the whitespace analyzer's
+    Java split set)."""
     if analyzer == "keyword":
-        # empty/NULL content -> NO tokens (matching tokenize/tokens_udf),
+        # empty/NULL content -> NO tokens (matching tokenize),
         # not a one-element ['']/[NULL] list
         return (f"CASE WHEN {col} IS NULL OR {col} = '' THEN []::VARCHAR[] "
                 f"ELSE [{col}] END")
     if analyzer == "whitespace":
-        return f"regexp_extract_all({col}, '\\S+')"
+        return f"regexp_extract_all({col}, '[^{WHITESPACE_CLASS}]+')"
     raw = f"regexp_extract_all(lower({col}), '{duckdb_token_regex()}')"
     m = MAX_TOKEN_LENGTH
     return (
@@ -179,42 +187,3 @@ def tokenize_offsets(text: str) -> List[Tuple[str, int, int]]:
                 chunk = tok[i : i + MAX_TOKEN_LENGTH]
                 out.append((chunk, s + i, s + i + len(chunk)))
     return out
-
-
-def termvec(tokens: List[str]) -> List[Tuple[str, int, List[int]]]:
-    """Per-doc term vector: [(term, tf, positions)] — map-side combine so
-    the shuffle carries one row per (doc, term), not per occurrence."""
-    acc: dict[str, List[int]] = {}
-    for pos, t in enumerate(tokens):
-        acc.setdefault(t, []).append(pos)
-    return [(t, len(ps), ps) for t, ps in acc.items()]
-
-
-# ---- Spark UDF wrappers (defined lazily so importing this module does not
-# require an active SparkSession) -------------------------------------------
-
-def tokens_udf(analyzer: str = "standard"):
-    """pandas_udf: content string -> array<string> tokens."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<string>")
-    def _tok(texts: pd.Series) -> pd.Series:
-        if analyzer == "keyword":
-            return texts.fillna("").map(lambda s: [s] if s else [])
-        if analyzer == "whitespace":
-            return texts.fillna("").str.findall(WHITESPACE_PATTERN)
-        return tokenize_pandas(texts)
-
-    return _tok
-
-
-def termvec_udf():
-    """pandas_udf: content string ->
-    array<struct<term:string, tf:int, positions:array<int>>>."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<struct<term:string, tf:int, positions:array<int>>>")
-    def _tv(texts: pd.Series) -> pd.Series:
-        return tokenize_pandas(texts).map(termvec)
-
-    return _tv

@@ -89,8 +89,10 @@ def tokenizer_standard(text: str) -> List[Token]:
 
 
 def tokenizer_whitespace(text: str) -> List[Token]:
+    from opensearch_spark.analysis.analyzer import WHITESPACE_PATTERN
+
     return [_tok(m.group(0), i, m.start(), m.end())
-            for i, m in enumerate(re.finditer(r"\S+", text or ""))]
+            for i, m in enumerate(WHITESPACE_PATTERN.finditer(text or ""))]
 
 
 def tokenizer_keyword(text: str) -> List[Token]:

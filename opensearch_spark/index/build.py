@@ -4,30 +4,37 @@ Reference behavior (SURVEY.md §3.2): docs are routed to shards by id hash,
 analyzed, and written as immutable per-segment inverted indexes — term
 dictionary -> postings (docID, tf, positions), delta-encoded in 128-doc
 blocks with per-block max-impact data for block-max WAND. We reproduce the
-*logical* layout Spark-first:
+*logical* layout Spark-first.
 
-DEFAULT path (waves == 1): SEGMENT-LOCAL, ZERO-SHUFFLE — the Lucene
-shard/segment write model (each shard's IndexWriter builds its own
-complete inverted index):
+ONE WRITER (the reference's IndexWriter + indexing chain): the first
+build, every wave of a resumable build, ``add_batch`` and
+``upsert_batch`` all run :func:`write_segments` — SEGMENT-LOCAL and
+shuffle-free, each task builds the complete inverted index of the
+segments it holds:
 
   corpus (repo,path,commit,lang,content)          [input, any DataFrame]
     -> docId = xxhash64(id cols), content_sha = sha2 (JVM-side)
-    -> seg = spark partition id                   [shard analog]
-    -> ONE mapInArrow per segment (_local_index_fn):
+    -> seg = spark partition id (build, waves == 1), or
+       pmod(docId, n_segments) + repartition by seg (waves > 1, add_batch);
+       either way no segment spans two partitions
+    -> ONE mapInArrow per partition (_local_index_fn):
          tokenize (DuckDB regexp_extract_all on the Arrow batch; token
          strings stay in Arrow buffers — never Python objects)
          -> occurrence arrays -> vectorized numpy packing into 128-doc
          blocks (delta+varint docIds, varint tfs, byte4 norms inline,
          varint position gaps, per-block (max_tf, min_dl_q) WAND bounds)
-         + per-doc stats written side-channel (segment-file analog)
+         + per-doc stats and a 1-row count summary written side-channel
+         (segment-file analog), named by write prefix + partition id
     -> parquet tables: postings/ docstats/ termstats/ globals/
 
-RESUMABLE path (waves > 1): tokenized corpus staged once, each wave
-packs a segment group through a (seg, term) shuffle and checkpoints to
-the lineage manifest -> kill-and-rerun resumes without re-tokenizing.
+RESUMABLE builds (waves > 1): wave w writes the segments with
+``seg % waves == w`` and checkpoints to ``lineage.json``; a rerun with
+``overwrite=False`` reads the corpus again only for the waves not yet
+done. The index root must be a POSIX path shared by the driver and the
+executors (side-channel files, json manifests, local renames).
 
 Scale notes (100 TB design):
-- The default path moves NO data: doc->segment placement reuses input
+- The default build moves NO data: doc->segment placement reuses input
   partitioning (one repartition of raw text only if the caller forces a
   different segment count). The build is embarrassingly parallel;
   measured weak scaling is flat (BASELINE.md).
@@ -41,7 +48,8 @@ Scale notes (100 TB design):
   N workers x N default threads oversubscribes the host quadratically.
 - Posting files are sorted by term -> parquet row-group min/max
   skipping at query time; termstats derives from packed metadata
-  columns (n_docs, sum_tf) — no second pass over token data.
+  columns (n_docs, sum_tf) — no second pass over token data; globals
+  sum the writers' count summaries — no aggregate job over docstats.
 
 BM25 constants k1=1.2, b=0.75 follow the reference defaults
 (``index/similarity/SimilarityProviders.java:276-292``).
@@ -49,17 +57,16 @@ BM25 constants k1=1.2, b=0.75 follow the reference defaults
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
 from dataclasses import dataclass
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from opensearch_spark.analysis.analyzer import tokens_udf
 from opensearch_spark.analysis.smallfloat import (
     decode_norms_np, int_to_byte4_np, length_table,
 )
@@ -99,10 +106,6 @@ class IndexPaths:
     @property
     def globals_(self) -> str:
         return os.path.join(self.root, "globals")
-
-    @property
-    def termvecs(self) -> str:
-        return os.path.join(self.root, "_stage_termvecs")
 
     @property
     def lineage(self) -> str:
@@ -256,8 +259,8 @@ def _pack_partition(block_size: int):
     """mapInArrow fn: per-OCCURRENCE rows (seg, term, docId, norm_byte,
     pos) -> packed posting-block rows (_pack_arrays core). Requires all
     rows of a (seg, term) group co-located (guaranteed by the preceding
-    repartition). Used by the staged/resumable build path and by the
-    compaction merge (incremental.py)."""
+    repartition). The repack step of the compaction merge
+    (incremental.py)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -281,14 +284,13 @@ def _pack_partition(block_size: int):
 
 def _local_index_fn(block_size: int, docstats_dir: str, tok_expr: str,
                     analyzer: str = "standard",
-                    index_options: str = "positions"):
+                    index_options: str = "positions", prefix: str = "w0"):
     """mapInArrow fn implementing SEGMENT-LOCAL indexing — the Lucene
     shard-build analog (reference: each shard's IndexWriter builds its
-    own complete per-segment inverted index; SURVEY.md §3.2). One
-    partition == one segment: the UDF tokenizes its documents and packs
-    their COMPLETE posting lists locally, so there is NO occurrence
-    shuffle at all (the doc->segment placement is the only data
-    movement, and reusing input partitioning makes even that free).
+    own complete per-segment inverted index; SURVEY.md §3.2). A
+    partition holds whole segments (one or several): the UDF tokenizes
+    its documents and packs their COMPLETE posting lists locally, so
+    there is NO occurrence shuffle at all.
 
     Tokenization runs inside an embedded DuckDB (single-threaded) via
     ``regexp_extract_all`` on the Arrow batch: token strings stay in
@@ -298,15 +300,26 @@ def _local_index_fn(block_size: int, docstats_dir: str, tok_expr: str,
     engine==oracle parity already validates it against the Python
     analyzer.
 
-    Per-doc stats (dl, norm, sha) are written SIDE-CHANNEL as one
-    parquet file per segment (``docstats/seg-NNNNN.parquet``) — the
-    Lucene segment-file analog; deterministic filenames make task
-    retries idempotent (last writer wins with identical content)."""
+    Per-doc stats (dl, norm, sha) and a 1-row count summary are written
+    SIDE-CHANNEL as ``docstats/{prefix}-NNNNN.parquet`` and
+    ``docstats/_summaries/{prefix}-NNNNN.parquet`` (NNNNN = partition
+    id) — the Lucene segment-file analog. The prefix keeps writes apart;
+    the deterministic names make task retries idempotent (last writer
+    wins with identical content)."""
     import duckdb
     import pyarrow as pa
     import pyarrow.compute as pc
+    import pyarrow.parquet as pq
 
-    from opensearch_spark.analysis.analyzer import MAX_TOKEN_LENGTH
+    def write_atomic(table, path: str) -> None:
+        # write-to-temp + atomic rename: pq.write_table is not atomic,
+        # and concurrent speculative/zombie attempts may race on the
+        # same deterministic filename — os.replace makes last-writer-
+        # wins with never-partial content
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        tmp = f"{path}.{os.getpid()}.tmp"
+        pq.write_table(table, tmp)
+        os.replace(tmp, path)
 
     def fn(batches):
         # each executor core runs one python worker: pin the per-process
@@ -332,86 +345,40 @@ def _local_index_fn(block_size: int, docstats_dir: str, tok_expr: str,
         toks = toks_t.column("toks").combine_chunks()
         flat = toks.values            # StringArray — no Python strings
         offs = toks.offsets.to_numpy().astype(np.int64)
-        lens = np.diff(offs)
-
-        # Lucene max_token_length chunking (rare): only engage the slow
-        # path if some token exceeds the cap
-        max_len = pc.max(pc.utf8_length(flat)).as_py() if len(flat) else 0
-        if (analyzer == "standard" and max_len is not None
-                and max_len > MAX_TOKEN_LENGTH):
-            # max_token_length chunking applies to the standard analyzer
-            # only (whitespace/keyword keep whole tokens, like Lucene)
-            from opensearch_spark.analysis.analyzer import tokenize
-
-            texts = t.column("content").to_pylist()
-            py_toks = [tokenize(x or "") for x in texts]
-            lens = np.array([len(x) for x in py_toks], dtype=np.int64)
-            offs = np.concatenate(([0], np.cumsum(lens)))
-            flat = pa.array(
-                [tok for lst in py_toks for tok in lst], pa.string()
-            )
 
         doc_ids = t.column("docId").to_numpy(zero_copy_only=False).astype(np.int64)
         seg_col = t.column("seg").to_numpy(zero_copy_only=False).astype(np.int64)
-        dl = lens
+        dl = np.diff(offs)
         norm_byte = int_to_byte4_np(dl)
         dl_q = decode_norms_np(norm_byte)
 
-        # ---- docstats side-channel (segment file) ---------------------
-        # deterministic per-partition filename -> task retries are
-        # idempotent (rewrite identical content)
         from pyspark import TaskContext
 
         ctx = TaskContext.get()
-        seg_id = ctx.partitionId() if ctx is not None else int(seg_col[0])
-        os.makedirs(docstats_dir, exist_ok=True)
-        import pyarrow.parquet as pq
-
-        # write-to-temp + atomic rename: pq.write_table is not atomic, and
-        # concurrent speculative/zombie attempts may race on the same
-        # deterministic filename — os.replace makes last-writer-wins with
-        # never-partial content (content is identical across attempts)
-        _ds_path = os.path.join(docstats_dir, f"seg-{seg_id:05d}.parquet")
-        _ds_tmp = f"{_ds_path}.{os.getpid()}.tmp"
-        pq.write_table(
-            pa.table({
-                "docId": pa.array(doc_ids, pa.int64()),
-                "seg": pa.array(seg_col.astype(np.int32), pa.int32()),
-                "dl": pa.array(dl.astype(np.int32), pa.int32()),
-                # int32, matching the wave path's pandas_udf("int") and
-                # incremental's OCC_SCHEMA: a mixed int32/int64 docstats
-                # dir (local build + later upsert generations) fails to
-                # read with PARQUET_COLUMN_DATA_TYPE_MISMATCH
-                "norm_byte": pa.array(norm_byte.astype(np.int32), pa.int32()),
-                "dl_q": pa.array(dl_q.astype(np.int64), pa.int64()),
-                "content_sha": t.column("content_sha"),
-            }),
-            _ds_tmp,
-        )
-        os.replace(_ds_tmp, _ds_path)
-
-        # per-segment 1-row globals partial (coordinator-mergeable shard
-        # stats): the driver sums n_segments tiny files instead of
-        # running a Spark agg job over every doc. The "_" prefix keeps
-        # Spark parquet readers of docstats/ from picking these up.
-        _sm_dir = os.path.join(docstats_dir, "_summaries")
-        os.makedirs(_sm_dir, exist_ok=True)
-        _sm_path = os.path.join(_sm_dir, f"seg-{seg_id:05d}.parquet")
-        _sm_tmp = f"{_sm_path}.{os.getpid()}.tmp"
-        pq.write_table(
-            pa.table({
-                "seg": pa.array([int(seg_id)], pa.int64()),
-                "doc_count": pa.array([int(doc_ids.size)], pa.int64()),
-                "fdc": pa.array([int((dl > 0).sum())], pa.int64()),
-                "sum_ttf": pa.array([int(dl.sum())], pa.int64()),
-            }),
-            _sm_tmp,
-        )
-        os.replace(_sm_tmp, _sm_path)
+        part = ctx.partitionId() if ctx is not None else int(seg_col[0])
+        name = f"{prefix}-{part:05d}.parquet"
+        write_atomic(pa.table({
+            "docId": pa.array(doc_ids, pa.int64()),
+            "seg": pa.array(seg_col.astype(np.int32), pa.int32()),
+            "dl": pa.array(dl.astype(np.int32), pa.int32()),
+            "norm_byte": pa.array(norm_byte.astype(np.int32), pa.int32()),
+            "dl_q": pa.array(dl_q.astype(np.int64), pa.int64()),
+            "content_sha": t.column("content_sha"),
+        }), os.path.join(docstats_dir, name))
+        # 1-row count summary (coordinator-mergeable shard stats): the
+        # driver sums one tiny file per task instead of running an agg
+        # job over every doc. The "_" prefix keeps Spark parquet readers
+        # of docstats/ from picking these up.
+        write_atomic(pa.table({
+            "seg": pa.array([int(part)], pa.int64()),
+            "doc_count": pa.array([int(doc_ids.size)], pa.int64()),
+            "fdc": pa.array([int((dl > 0).sum())], pa.int64()),
+            "sum_ttf": pa.array([int(dl.sum())], pa.int64()),
+        }), os.path.join(docstats_dir, "_summaries", name))
 
         if int(dl.sum()) == 0:
             return
-        # ---- occurrence arrays (all within this segment) --------------
+        # ---- occurrence arrays (all within this partition's segments) --
         doc_rep = np.repeat(doc_ids, dl)
         nb_rep = np.repeat(norm_byte.astype(np.uint8), dl)
         seg_rep = np.repeat(seg_col, dl)
@@ -443,60 +410,90 @@ def _local_index_fn(block_size: int, docstats_dir: str, tok_expr: str,
     return fn
 
 
-def _analyze(
-    corpus: DataFrame,
-    text_col: str,
-    id_cols: Sequence[str],
-    doc_id_col: str | None,
-    n_segments: int,
-    analyzer: str = "standard",
-) -> DataFrame:
-    """corpus -> (docId, seg, dl, norm_byte, dl_q, content_sha, toks)."""
+def prepare(corpus: DataFrame, text_col: str, id_cols: Sequence[str],
+            doc_id_col: str | None) -> DataFrame:
+    """corpus -> (docId, content_sha, content): the writer's input
+    columns before a segment is assigned."""
     if doc_id_col is None:
-        base = corpus.withColumn("docId", F.xxhash64(*[F.col(c) for c in id_cols]))
+        doc_id = F.xxhash64(*[F.col(c) for c in id_cols])
     else:
-        base = corpus.withColumn("docId", F.col(doc_id_col).cast("long"))
-    base = (
-        base.withColumn("content_sha", F.sha2(F.col(text_col).cast("string"), 256))
-        .withColumn("seg", F.pmod(F.col("docId"), F.lit(n_segments)).cast("int"))
-        .withColumn("toks", tokens_udf(analyzer)(F.col(text_col)))
-        .withColumn("dl", F.size("toks"))
-    )
-
-    @F.pandas_udf("int")
-    def norm_byte_udf(dl: pd.Series) -> pd.Series:
-        return pd.Series(
-            int_to_byte4_np(dl.to_numpy(dtype=np.int64)).astype(np.int64), index=dl.index
-        )
-
-    @F.pandas_udf("long")
-    def dl_q_udf(nbv: pd.Series) -> pd.Series:
-        return pd.Series(
-            decode_norms_np(nbv.to_numpy(dtype=np.int64).astype(np.uint8)), index=nbv.index
-        )
-
-    return base.withColumn("norm_byte", norm_byte_udf("dl")).withColumn(
-        "dl_q", dl_q_udf("norm_byte")
-    ).select("docId", "seg", "dl", "norm_byte", "dl_q", "content_sha", "toks")
-
-
-def _occurrences(stage: DataFrame) -> DataFrame:
-    """staged rows -> per-occurrence (docId, seg, norm_byte, pos, term)."""
-    return stage.select(
-        "docId", "seg", "norm_byte", F.posexplode("toks").alias("pos", "term")
+        doc_id = F.col(doc_id_col).cast("long")
+    return corpus.select(
+        doc_id.alias("docId"),
+        F.sha2(F.col(text_col).cast("string"), 256).alias("content_sha"),
+        F.col(text_col).alias("content"),
     )
 
 
-def write_termstats(spark: SparkSession, paths: IndexPaths) -> None:
-    """Global per-term df/ttf from the packed postings' metadata columns
+def by_seg(prepared: DataFrame, n_segments: int,
+           segs: Sequence[int] | None = None) -> DataFrame:
+    """Assign ``seg = pmod(docId, n_segments)`` (optionally keeping only
+    ``segs``) and repartition by seg, so no segment spans two
+    partitions — the routing rule of waves and of ``add_batch``."""
+    segs = list(range(n_segments)) if segs is None else list(segs)
+    df = prepared.withColumn(
+        "seg", F.pmod(F.col("docId"), F.lit(n_segments)).cast("int"))
+    if len(segs) < n_segments:
+        df = df.where(F.col("seg").isin(segs))
+    return df.repartition(len(segs), "seg")
+
+
+def _remove_write(docstats_dir: str, prefix: str) -> None:
+    for d in (docstats_dir, os.path.join(docstats_dir, "_summaries")):
+        for f in glob.glob(os.path.join(d, f"{prefix}-*")):
+            os.remove(f)
+
+
+def _sum_summaries(docstats_dir: str, prefix: str) -> dict:
+    """Totals of the count summaries whose write prefix matches the glob
+    ``prefix``."""
+    import pyarrow.parquet as pq
+
+    tot = {"doc_count": 0, "fdc": 0, "sum_ttf": 0}
+    for f in glob.glob(os.path.join(docstats_dir, "_summaries",
+                                    f"{prefix}-*.parquet")):
+        row = pq.read_table(f, columns=list(tot)).to_pylist()[0]
+        for k in tot:
+            tot[k] += int(row[k])
+    return tot
+
+
+def write_segments(prepared: DataFrame, paths: IndexPaths, prefix: str,
+                   block_size: int, analyzer: str, index_options: str,
+                   mode: str = "append") -> dict:
+    """THE index writer. ``prepared`` holds (docId, content_sha, content,
+    seg) with no segment spanning two partitions; each task indexes its
+    segments locally (``_local_index_fn``), postings go through one
+    committed Spark write and docstats side-channel under ``prefix``.
+    Returns the write's totals (doc_count, fdc, sum_ttf). A failed write
+    leaves no docstats behind; files of an earlier attempt under the
+    same prefix are replaced."""
+    from opensearch_spark.analysis.analyzer import duckdb_tokens_expr
+
+    _remove_write(paths.docstats, prefix)
+    try:
+        (
+            prepared.mapInArrow(
+                _local_index_fn(block_size, paths.docstats,
+                                duckdb_tokens_expr(analyzer), analyzer,
+                                index_options, prefix),
+                schema=POSTINGS_SCHEMA,
+            )
+            .sortWithinPartitions("term", "block_no")
+            .write.mode(mode)
+            .parquet(paths.postings)
+        )
+    except BaseException:
+        _remove_write(paths.docstats, prefix)
+        raise
+    return _sum_summaries(paths.docstats, prefix)
+
+
+def term_stats(postings: DataFrame) -> DataFrame:
+    """Per-term df/ttf from packed postings' metadata columns
     (column-pruned scan of n_docs/sum_tf — no pass over token data)."""
-    (
-        spark.read.parquet(paths.postings)
-        .groupBy("term")
-        .agg(F.sum("n_docs").alias("df"), F.sum("sum_tf").alias("ttf"))
-        .write.mode("overwrite")
-        .parquet(paths.termstats)
-    )
+    return postings.groupBy("term").agg(
+        F.sum("n_docs").alias("df"), F.sum("sum_tf").alias("ttf"))
 
 
 def build_index(
@@ -508,9 +505,7 @@ def build_index(
     doc_id_col: str | None = None,
     n_segments: int = 16,
     block_size: int = DEFAULT_BLOCK,
-    shuffle_partitions: int | None = None,
     waves: int = 1,
-    keep_stage: bool = False,
     overwrite: bool = True,
     analyzer: str = "standard",
     index_options: str = "positions",
@@ -518,222 +513,85 @@ def build_index(
 ) -> IndexPaths:
     """Build the inverted index for ``corpus[text_col]`` under ``out_dir``.
 
-    ``waves`` > 1 splits phase-2 block packing into that many checkpointed
-    segment groups (lineage manifest -> idempotent resume). If a previous
-    partial build exists at ``out_dir`` and ``overwrite`` is False, the
-    build resumes from the manifest.
+    ``overwrite=True`` starts from an empty ``out_dir``. ``waves`` > 1
+    writes the segments in that many checkpointed groups (lineage
+    manifest); with ``overwrite=False`` a build interrupted at
+    ``out_dir`` with the same ``n_segments``/``waves`` resumes, writing
+    only the waves not yet done.
     """
-    paths = IndexPaths(out_dir)
-    if overwrite and os.path.exists(out_dir) and not os.path.exists(paths.lineage):
-        shutil.rmtree(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-
-    fresh = {
-        "phase1_done": False, "waves_done": [], "termstats_done": False,
-        "n_segments": n_segments, "waves": waves,
-    }
-    lineage = _read_json(paths.lineage) if os.path.exists(paths.lineage) else dict(fresh)
-    if lineage.get("n_segments") != n_segments or lineage.get("waves") != waves:
-        # config changed -> full rebuild
-        shutil.rmtree(out_dir)
-        os.makedirs(out_dir)
-        lineage = dict(fresh)
-
-    nshuf = shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
-    def _write_globals(globals_row: dict) -> None:
-        # 1-row table: write directly with pyarrow (a Spark job for one
-        # row is pure scheduler overhead)
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        os.makedirs(paths.globals_, exist_ok=True)
-        pq.write_table(
-            pa.Table.from_pylist([globals_row]),
-            os.path.join(paths.globals_, "part-00000.parquet"),
-        )
-
-    def _globals_row(doc_count: int, field_doc_count: int, sum_ttf: int) -> dict:
-        # Lucene: avgFieldLength = sumTotalTermFreq / docCount (docs with
-        # the field, i.e. with >= 1 token), as double
-        return {
-            "doc_count": doc_count,
-            "field_doc_count": field_doc_count,
-            "sum_ttf": sum_ttf,
-            "avgdl": float(sum_ttf / (field_doc_count or 1)),
-            "n_segments": n_segments,
-            "block_size": block_size,
-            "k1": K1,
-            "b": B,
-            "index_options": index_options,
-        }
-
-    use_stage = waves > 1
     if index_options not in ("positions", "docs"):
         raise ValueError(f"unknown index_options: {index_options}")
-    if use_stage and index_options != "positions":
-        raise ValueError("index_options='docs' supports the default "
-                         "segment-local build path only")
-    if not use_stage:
-        # ---- SEGMENT-LOCAL build (default): one pass, ZERO shuffle -------
-        # One partition == one segment; each task tokenizes its docs and
-        # packs their complete posting lists locally (_local_index_fn),
-        # writing per-doc stats side-channel — the Lucene shard/segment
-        # write model. Data movement: at most one repartition of the raw
-        # corpus to set the segment count (free when the input already
-        # has n_segments partitions).
-        if 0 not in lineage["waves_done"]:
-            from opensearch_spark.analysis.analyzer import duckdb_tokens_expr
+    paths = IndexPaths(out_dir)
+    lineage = {"waves_done": [], "termstats_done": False,
+               "n_segments": n_segments, "waves": waves}
+    if overwrite:
+        shutil.rmtree(out_dir, ignore_errors=True)
+    elif os.path.exists(paths.lineage):
+        done = _read_json(paths.lineage)
+        if done.get("n_segments") == n_segments and done.get("waves") == waves:
+            lineage = done
+        else:  # config changed -> full rebuild
+            shutil.rmtree(out_dir)
+    os.makedirs(out_dir, exist_ok=True)
 
-            if doc_id_col is None:
-                base = corpus.withColumn(
-                    "docId", F.xxhash64(*[F.col(c) for c in id_cols])
-                )
-            else:
-                base = corpus.withColumn("docId", F.col(doc_id_col).cast("long"))
-            prepared = base.withColumn(
-                "content_sha", F.sha2(F.col(text_col).cast("string"), 256)
-            ).select("docId", "content_sha", F.col(text_col).alias("content"))
+    prepared = prepare(corpus, text_col, id_cols, doc_id_col)
+    for w in range(min(waves, n_segments)):  # a wave needs a segment
+        if w in lineage["waves_done"]:
+            continue
+        if waves == 1:
+            # one partition == one segment: at most one repartition of
+            # the raw corpus (free when the input already has
+            # n_segments partitions)
             try:
                 n_in = prepared.rdd.getNumPartitions()
             except Exception:
                 n_in = 0
-            if n_in != n_segments:
-                prepared = prepared.repartition(n_segments)
-            prepared = prepared.withColumn("seg", F.spark_partition_id())
-            shutil.rmtree(paths.docstats, ignore_errors=True)
-            packed = prepared.mapInArrow(
-                _local_index_fn(block_size, paths.docstats,
-                                duckdb_tokens_expr(analyzer), analyzer,
-                                index_options=index_options),
-                schema=POSTINGS_SCHEMA,
-            )
-            (
-                packed.sortWithinPartitions("term", "block_no")
-                .write.mode("overwrite")
-                .parquet(paths.postings)
-            )
+            frame = (prepared if n_in == n_segments
+                     else prepared.repartition(n_segments))
+            frame = frame.withColumn("seg", F.spark_partition_id())
+        else:
+            frame = by_seg(prepared, n_segments,
+                          [s for s in range(n_segments) if s % waves == w])
+        write_segments(frame, paths, f"w{w}", block_size, analyzer,
+                       index_options, mode="overwrite" if waves == 1 else "append")
+        lineage["waves_done"] = sorted(set(lineage["waves_done"]) | {w})
+        _write_json_atomic(paths.lineage, lineage)
+        if _fail_after_wave is not None and w >= _fail_after_wave:
+            raise RuntimeError(f"injected failure after wave {w} (test seam)")
 
-            # globals = driver-side merge of the per-segment 1-row
-            # partials the indexing tasks wrote (n_segments tiny files —
-            # the coordinator's shard-stats reduce); fall back to a Spark
-            # agg over docstats if the partials are absent
-            import glob as _glob
-
-            _sm_files = sorted(
-                _glob.glob(os.path.join(paths.docstats, "_summaries",
-                                        "seg-*.parquet")))
-            if _sm_files:
-                import pyarrow.parquet as _pq
-
-                _tot = [0, 0, 0]
-                for _f in _sm_files:
-                    _t = _pq.read_table(_f)
-                    _tot[0] += int(_t.column("doc_count")[0].as_py())
-                    _tot[1] += int(_t.column("fdc")[0].as_py())
-                    _tot[2] += int(_t.column("sum_ttf")[0].as_py())
-                globals_row = _globals_row(_tot[0], _tot[1], _tot[2])
-            else:
-                ds = spark.read.parquet(paths.docstats)
-                g = ds.agg(
-                    F.count(F.lit(1)).alias("doc_count"),
-                    F.sum(F.when(F.col("dl") > 0, 1).otherwise(0)).alias("fdc"),
-                    F.sum("dl").alias("sum_ttf"),
-                ).collect()[0]
-                globals_row = _globals_row(
-                    int(g["doc_count"]), int(g["fdc"] or 0),
-                    int(g["sum_ttf"] or 0)
-                )
-            _write_globals(globals_row)
-            lineage.update(
-                phase1_done=True, waves_done=[0], globals=globals_row
-            )
-            _write_json_atomic(paths.lineage, lineage)
-    else:
-        # ---- STAGED build (waves > 1): resumable via lineage manifest ----
-        # The tokenized corpus is materialized once; each wave packs a
-        # segment group through the (seg, term) shuffle and checkpoints,
-        # so a killed build resumes WITHOUT re-tokenizing completed waves
-        # (north-rule checkpoint requirement).
-        if not lineage["phase1_done"]:
-            # the analysis stage must parallelize even when the input is
-            # a single unsplittable file: widen narrow inputs first
-            try:
-                n_in = corpus.rdd.getNumPartitions()
-            except Exception:
-                n_in = nshuf
-            if n_in < max(nshuf // 2, 2):
-                corpus = corpus.repartition(nshuf)
-            stage_df = _analyze(corpus, text_col, id_cols, doc_id_col,
-                                n_segments, analyzer)
-            stage_df.write.mode("overwrite").parquet(paths.termvecs)
-            stage = spark.read.parquet(paths.termvecs)
-            # docstats: column-pruned scan (never touches toks); global
-            # corpus stats piggyback on the SAME job via observe()
-            from pyspark.sql import Observation
-
-            obs = Observation("globals")
-            (
-                stage.select("docId", "seg", "dl", "norm_byte", "dl_q", "content_sha")
-                .observe(
-                    obs,
-                    F.count(F.lit(1)).alias("doc_count"),
-                    F.sum(F.when(F.col("dl") > 0, 1).otherwise(0)).alias("fdc"),
-                    F.sum("dl").alias("sum_ttf"),
-                )
-                .write.mode("overwrite")
-                .parquet(paths.docstats)
-            )
-            g = obs.get
-            globals_row = _globals_row(
-                int(g["doc_count"]), int(g["fdc"] or 0), int(g["sum_ttf"] or 0)
-            )
-            _write_globals(globals_row)
-            lineage["phase1_done"] = True
-            lineage["globals"] = globals_row
-            _write_json_atomic(paths.lineage, lineage)
-
-        # ---- phase 2: pack posting blocks per segment wave ---------------
-        all_waves = list(range(waves))
-        seg_of_wave = {
-            w: [s for s in range(n_segments) if s % waves == w] for w in all_waves
-        }
-        for w in all_waves:
-            if w in lineage["waves_done"]:
-                continue
-            stage = spark.read.parquet(paths.termvecs)
-            stage = stage.where(F.col("seg").isin(seg_of_wave[w]))
-            packed = (
-                _occurrences(stage)
-                .repartition(nshuf, "seg", "term")
-                .mapInArrow(_pack_partition(block_size), schema=POSTINGS_SCHEMA)
-            )
-            (
-                packed.sortWithinPartitions("term", "block_no")
-                .write.mode("append")
-                .parquet(paths.postings)
-            )
-            lineage["waves_done"] = sorted(set(lineage["waves_done"]) | {w})
-            _write_json_atomic(paths.lineage, lineage)
-            if _fail_after_wave is not None and w >= _fail_after_wave:
-                raise RuntimeError(f"injected failure after wave {w} (test seam)")
-
-    # ---- phase 3: term stats from packed postings metadata ---------------
-    if not lineage.get("termstats_done"):
-        write_termstats(spark, paths)
+    if not lineage["termstats_done"]:
+        term_stats(spark.read.parquet(paths.postings)).write.mode(
+            "overwrite").parquet(paths.termstats)
         lineage["termstats_done"] = True
         _write_json_atomic(paths.lineage, lineage)
 
-    if not keep_stage and os.path.exists(paths.termvecs):
-        shutil.rmtree(paths.termvecs)
-        lineage["stage_cleaned"] = True
-        _write_json_atomic(paths.lineage, lineage)
+    tot = _sum_summaries(paths.docstats, "w*")
+    # Lucene: avgFieldLength = sumTotalTermFreq / docCount (docs with
+    # the field, i.e. with >= 1 token), as double
+    globals_row = {
+        "doc_count": tot["doc_count"],
+        "field_doc_count": tot["fdc"],
+        "sum_ttf": tot["sum_ttf"],
+        "avgdl": float(tot["sum_ttf"] / (tot["fdc"] or 1)),
+        "n_segments": n_segments,
+        "block_size": block_size,
+        "k1": K1,
+        "b": B,
+        "index_options": index_options,
+    }
+    # 1-row table: write directly with pyarrow (a Spark job for one row
+    # is pure scheduler overhead)
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
+    os.makedirs(paths.globals_, exist_ok=True)
+    pq.write_table(pa.Table.from_pylist([globals_row]),
+                   os.path.join(paths.globals_, "part-00000.parquet"))
     _write_json_atomic(paths.manifest, {
         "version": 2,
         "analyzer": analyzer,
         "analyzer_impl": "uax29-subset-v1" if analyzer == "standard" else analyzer,
-        **lineage["globals"],
+        **globals_row,
     })
     return paths
 

@@ -5,12 +5,15 @@ Reference behavior (SURVEY.md §2.9, §3.2): writes create new immutable
 segments, visible after refresh; background merges fold small segments
 into larger ones. Spark-first mapping:
 
-- ``add_batch`` analyzes only the new docs and APPENDS posting blocks (a
-  new "generation" of blocks whose doc ranges overlap older ones —
-  scorers merge-sort at decode, codec.merge_generations), appends
-  docstats/termstats rows, and atomically updates the globals manifest
-  (doc counts, avgdl). Stored block bounds are (max_tf, min_dl_q),
-  avgdl-independent, so older blocks stay valid.
+- ``add_batch`` runs the build's one writer (``build.write_segments``)
+  over only the new docs, routed ``seg = pmod(docId, n_segments)`` with
+  the manifest's analyzer and index_options. It APPENDS posting blocks
+  (a new "generation" of blocks whose doc ranges overlap older ones —
+  scorers merge-sort at decode, codec.merge_generations), docstats
+  files under a generation prefix and the generation's termstats rows,
+  then atomically updates the globals manifest (doc counts, avgdl) from
+  the writer's count summaries. Stored block bounds are (max_tf,
+  min_dl_q), avgdl-independent, so older blocks stay valid.
 - ``compact_index`` rewrites each (seg, term) posting list as one sorted
   single-generation block run — decode -> merge -> repack, no
   re-tokenization (the merge reads index bytes only, like Lucene segment
@@ -26,18 +29,18 @@ into larger ones. Spark-first mapping:
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 from typing import Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.storagelevel import StorageLevel
 
 from opensearch_spark.index import codec
 from opensearch_spark.index.build import (
-    IndexPaths, POSTINGS_SCHEMA, _analyze, _occurrences, _pack_partition,
-    _read_json, _write_json_atomic,
+    IndexPaths, POSTINGS_SCHEMA, _pack_partition, _read_json,
+    _write_json_atomic, by_seg, prepare, term_stats, write_segments,
 )
 
 OCC_SCHEMA = "docId long, seg int, norm_byte int, pos int, term string"
@@ -56,9 +59,6 @@ def add_batch(
     this returns see the new docs (the refresh analog)."""
     paths = IndexPaths(index_dir)
     manifest = _read_json(paths.manifest)
-    n_segments = int(manifest["n_segments"])
-    block_size = int(manifest["block_size"])
-    nshuf = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     # new docs can add dictionary terms, so a built wildcard trigram
     # table would miss them. Mark it STALE rather than deleting: open
     # readers hold DataFrames over those files (rmtree would crash
@@ -71,48 +71,31 @@ def add_batch(
         with open(os.path.join(_wg, "_STALE"), "w") as fh:
             fh.write("superseded by add_batch\n")
 
-    analyzer = str(manifest.get("analyzer", "standard"))
-    if analyzer not in ("standard", "whitespace", "keyword"):
-        analyzer = "standard"
-    base = _analyze(batch, text_col, id_cols, doc_id_col, n_segments,
-                    analyzer).persist(
-        StorageLevel.MEMORY_AND_DISK
+    generations = int(manifest.get("generations", 1)) + 1
+    # compaction resets the count but keeps the files: skip used prefixes
+    gen = generations
+    while glob.glob(os.path.join(paths.docstats, f"g{gen}-*")):
+        gen += 1
+    before = set(glob.glob(os.path.join(paths.postings, "*.parquet")))
+    tot = write_segments(
+        by_seg(prepare(batch, text_col, id_cols, doc_id_col),
+               int(manifest["n_segments"])),
+        paths, f"g{gen}", int(manifest["block_size"]),
+        str(manifest.get("analyzer", "standard")),
+        str(manifest.get("index_options", "positions")),
     )
-    try:
-        stats = base.agg(
-            F.count("*").alias("n"),
-            F.sum(F.when(F.col("dl") > 0, 1).otherwise(0)).alias("nf"),
-            F.sum("dl").alias("ttf"),
-        ).collect()[0]
+    # per-generation term stats delta from the batch's own posting files
+    new = sorted(set(glob.glob(os.path.join(paths.postings, "*.parquet")))
+                 - before)
+    if new:
+        term_stats(spark.read.parquet(*new)).write.mode("append").parquet(
+            paths.termstats)
 
-        base.select("docId", "seg", "dl", "norm_byte", "dl_q", "content_sha").write.mode(
-            "append"
-        ).parquet(paths.docstats)
-
-        packed = (
-            _occurrences(base)
-            .repartition(nshuf, "seg", "term")
-            .mapInArrow(_pack_partition(block_size), schema=POSTINGS_SCHEMA)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        try:
-            packed.sortWithinPartitions("term", "block_no").write.mode("append").parquet(
-                paths.postings
-            )
-            # per-generation term stats delta from the batch's own blocks
-            packed.groupBy("term").agg(
-                F.sum("n_docs").alias("df"), F.sum("sum_tf").alias("ttf")
-            ).write.mode("append").parquet(paths.termstats)
-        finally:
-            packed.unpersist()
-    finally:
-        base.unpersist()
-
-    manifest["doc_count"] = int(manifest["doc_count"]) + int(stats["n"])
-    manifest["field_doc_count"] = int(manifest["field_doc_count"]) + int(stats["nf"] or 0)
-    manifest["sum_ttf"] = int(manifest["sum_ttf"]) + int(stats["ttf"] or 0)
+    manifest["doc_count"] = int(manifest["doc_count"]) + tot["doc_count"]
+    manifest["field_doc_count"] = int(manifest["field_doc_count"]) + tot["fdc"]
+    manifest["sum_ttf"] = int(manifest["sum_ttf"]) + tot["sum_ttf"]
     manifest["avgdl"] = manifest["sum_ttf"] / max(manifest["field_doc_count"], 1)
-    manifest["generations"] = int(manifest.get("generations", 1)) + 1
+    manifest["generations"] = generations
     _write_json_atomic(paths.manifest, manifest)
     return manifest
 
@@ -219,11 +202,9 @@ def compact_index(spark: SparkSession, index_dir: str,
     # soft-delete purge (Lucene: merges drop deleted docs and reclaim
     # space): tombstoned docIds are filtered out of the occurrence
     # stream before re-packing, then docstats/globals are rewritten
-    import glob as _glob
-
     deletes_dir = os.path.join(index_dir, "deletes")
     del_df = None
-    if _glob.glob(os.path.join(deletes_dir, "*.parquet")):
+    if glob.glob(os.path.join(deletes_dir, "*.parquet")):
         del_df = spark.read.parquet(deletes_dir).select("docId").distinct()
 
     tmp_postings = paths.postings + ".compact"
@@ -256,13 +237,8 @@ def compact_index(spark: SparkSession, index_dir: str,
     # termstats: one row per term again, from compacted metadata
     tmp_ts = paths.termstats + ".compact"
     shutil.rmtree(tmp_ts, ignore_errors=True)
-    (
-        spark.read.parquet(paths.postings)
-        .groupBy("term")
-        .agg(F.sum("n_docs").alias("df"), F.sum("sum_tf").alias("ttf"))
-        .write.mode("overwrite")
-        .parquet(tmp_ts)
-    )
+    term_stats(spark.read.parquet(paths.postings)).write.mode(
+        "overwrite").parquet(tmp_ts)
     old = paths.termstats + ".old"
     shutil.rmtree(old, ignore_errors=True)
     os.replace(paths.termstats, old)

@@ -110,7 +110,7 @@ def test_engine_analyze_accepts_custom_chain(spark, tmp_path):
 
     corpus = spark.createDataFrame(generate_corpus(20, seed=3))
     out = str(tmp_path / "ix")
-    build_index(spark, corpus, out, n_segments=1, shuffle_partitions=2)
+    build_index(spark, corpus, out, n_segments=1)
     eng = SearchEngine(spark, out, corpus=corpus)
     default = eng.analyze("Running Dogs")
     assert [t["token"] for t in default] == ["running", "dogs"]

@@ -59,12 +59,39 @@ def test_max_token_length_split():
     assert list(out[0]) == ["a" * 255, "a" * 255, "a" * 90, "xyz"]
 
 
-def test_termvec():
-    tv = analyzer.termvec(analyzer.tokenize("the cat the dog the"))
-    d = {t: (tf, ps) for t, tf, ps in tv}
-    assert d["the"] == (3, [0, 2, 4])
-    assert d["cat"] == (1, [1])
-    assert d["dog"] == (1, [3])
+# Java Character.isWhitespace over the BMP (the reference's
+# WhitespaceTokenizer split set): Zs/Zl/Zp minus the no-break spaces
+# U+00A0, U+2007, U+202F, plus U+0009-U+000D and U+001C-U+001F
+JAVA_WHITESPACE = (
+    set(range(0x09, 0x0E)) | set(range(0x1C, 0x21)) | {0x1680}
+    | set(range(0x2000, 0x2007)) | set(range(0x2008, 0x200B))
+    | {0x2028, 0x2029, 0x205F, 0x3000}
+)
+
+
+def test_whitespace_split_set_is_javas_in_both_dialects():
+    """The whitespace analyzer splits on the same code points at write
+    time (DuckDB/RE2) and at query time (Python re), and those are
+    exactly Java's: U+3000 splits, U+00A0 does not."""
+    duckdb = pytest.importorskip("duckdb")
+    import pyarrow as pa
+
+    texts = [f"a{chr(c)}b" for c in range(0x10000)
+             if not 0xD800 <= c <= 0xDFFF]
+    con = duckdb.connect()
+    con.register("t", pa.table({"content": texts}))
+    rows = con.execute(
+        "SELECT content, " + analyzer.duckdb_tokens_expr("whitespace")
+        + " FROM t").fetchall()
+    assert len(rows) == len(texts)
+    split = set()
+    for s, toks in rows:
+        assert toks == analyzer.tokenize(s, "whitespace"), hex(ord(s[1]))
+        if toks == ["a", "b"]:
+            split.add(ord(s[1]))
+        else:
+            assert toks == [s]
+    assert split == JAVA_WHITESPACE
 
 
 def test_duckdb_regex_agrees():

@@ -16,7 +16,7 @@ def cluster(spark, tmp_path_factory):
     for i, name in enumerate(("logs-2024", "logs-2025", "metrics")):
         corpus = spark.createDataFrame(generate_corpus(120, seed=40 + i))
         c.create_index(name, corpus, str(root / name),
-                       n_segments=2, shuffle_partitions=4)
+                       n_segments=2)
     c.put_alias("logs", "logs-2024", "logs-2025")
     return c
 
@@ -79,7 +79,7 @@ def test_suggest_mode(spark, tmp_path):
         " lang string")
     c = Cluster(spark)
     eng = c.create_index("sug", corpus, str(tmp_path / "sug"),
-                         n_segments=1, shuffle_partitions=2)
+                         n_segments=1)
     # missing (the reference default): 'cat' is in the dictionary -> []
     assert eng.suggest("cat", size=3)["cat"] == []
     # always: suggests 'car' even though 'cat' exists
@@ -164,7 +164,7 @@ def test_data_streams_and_templates(spark, tmp_path):
     c = Cluster(spark)
     c.put_index_template("ds-template", {
         "index_patterns": [".ds-events-*"], "priority": 10,
-        "template": {"n_segments": 2, "shuffle_partitions": 4}})
+        "template": {"n_segments": 2}})
     c.create_data_stream("events")
     b1 = spark.createDataFrame(generate_corpus(80, seed=60))
     b2 = spark.createDataFrame(generate_corpus(80, seed=61))
@@ -196,7 +196,7 @@ def test_shrink_and_clone(spark, tmp_path):
     c = Cluster(spark)
     corpus = spark.createDataFrame(generate_corpus(100, seed=62))
     c.create_index("src", corpus, str(tmp_path / "src"),
-                   n_segments=4, shuffle_partitions=4)
+                   n_segments=4)
     q = {"match": {"content": "def return"}}
     want = [(int(r["docId"]), round(float(r["score"]), 6))
             for r in c.engines["src"].search(q, k=10).collect()]
@@ -219,7 +219,7 @@ def test_data_stream_collisions_and_wildcards(spark, tmp_path):
     c.create_data_stream("events")
     b = spark.createDataFrame(generate_corpus(40, seed=63))
     c.data_stream_write("events", b, str(tmp_path / "g1"),
-                        n_segments=2, shuffle_partitions=4)
+                        n_segments=2)
     # name collisions are rejected in BOTH directions
     with pytest.raises(ValueError):
         c.create_index("events", b, str(tmp_path / "clash"))
@@ -237,7 +237,7 @@ def test_clone_preserves_doc_id_scheme(spark, tmp_path):
     corpus = spark.createDataFrame(generate_corpus(50, seed=64)).withColumn(
         "doc_id", F.monotonically_increasing_id())
     c.create_index("src", corpus, str(tmp_path / "src"),
-                   n_segments=2, shuffle_partitions=4, doc_id_col="doc_id")
+                   n_segments=2, doc_id_col="doc_id")
     cl = c.clone_index("src", "copy")
     did = int(corpus.limit(1).collect()[0]["doc_id"])
     # the clone resolves documents by the SAME id scheme as the source

@@ -28,7 +28,7 @@ def setup(spark, tmp_path_factory):
     pdf = generate_corpus(N_DOCS, seed=42)
     corpus = spark.createDataFrame(pdf)
     out = str(tmp_path_factory.mktemp("ix") / "index")
-    build_index(spark, corpus, out, n_segments=4, shuffle_partitions=8)
+    build_index(spark, corpus, out, n_segments=4)
     engine = SearchEngine(spark, out, corpus=corpus, cache=True)
 
     # brute oracle over identical docIds
@@ -344,7 +344,7 @@ def both_paths(engine, tier, q, k=K):
 
 def _fresh_index(spark, root):
     corpus = spark.createDataFrame(generate_corpus(300, seed=5))
-    build_index(spark, corpus, root, n_segments=4, shuffle_partitions=8)
+    build_index(spark, corpus, root, n_segments=4)
     return corpus
 
 
@@ -376,7 +376,7 @@ def test_tier_multi_generation_index(spark, tmp_path, tier):
     pdf = generate_corpus(400, seed=8)
     root = str(tmp_path / "ix")
     build_index(spark, spark.createDataFrame(pdf.iloc[:250]), root,
-                n_segments=4, shuffle_partitions=8)
+                n_segments=4)
     add_batch(spark, spark.createDataFrame(pdf.iloc[250:]), root)
     eng = SearchEngine(spark, root, corpus=spark.createDataFrame(pdf))
     for dsl in TIER_QUERIES:
@@ -412,8 +412,7 @@ def test_tier_multi_field_engine_other_field(spark, tmp_path, tier):
     corpus = spark.createDataFrame(pdf)
     dirs = {"content": str(tmp_path / "content"), "path": str(tmp_path / "path")}
     for field, d in dirs.items():
-        build_index(spark, corpus, d, text_col=field, n_segments=4,
-                    shuffle_partitions=8)
+        build_index(spark, corpus, d, text_col=field, n_segments=4)
     eng = MultiFieldEngine(spark, dirs, corpus=corpus)
     q = {"match": {"path": "src pkg1"}}
     got = {}

@@ -86,9 +86,9 @@ def test_kill_and_rerun_resume(spark, corpora, tmp_path):
     _, _, full = corpora
     ref_dir = str(tmp_path / "ref")
     # reference = SAME config (waves=4), never killed: the invariant is
-    # kill+resume == uninterrupted run. (A waves=1 build uses the
-    # segment-local path whose seg ids are partition ids, so its table
-    # layout legitimately differs; search results stay identical.)
+    # kill+resume == uninterrupted run. (A waves=1 build's seg ids are
+    # partition ids, so its table layout legitimately differs; search
+    # results stay identical.)
     build_index(spark, full, ref_dir, n_segments=8, waves=4)
 
     # crash the build after wave 0 commits (injected failure = kill)
@@ -101,11 +101,15 @@ def test_kill_and_rerun_resume(spark, corpora, tmp_path):
     with open(paths.lineage) as f:
         lineage = json.load(f)
     assert lineage["waves_done"] == [0]
-    assert os.path.exists(paths.termvecs)  # stage kept until completion
 
     # rerun resumes (overwrite=False honors the lineage) and must NOT
-    # re-tokenize: corrupt the corpus argument to prove phase 1 is skipped
-    poisoned = full.withColumn("content", F.lit("poison"))
+    # index the finished wave again: poison exactly wave 0's docs
+    # (seg = pmod(docId, 8), wave = seg % 4) — re-tokenizing them would
+    # index "poison" and break the table identity below
+    seg = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(8))
+    poisoned = full.withColumn(
+        "content",
+        F.when(seg % 4 == 0, F.lit("poison")).otherwise(F.col("content")))
     build_index(spark, poisoned, kill_dir, n_segments=8, waves=4, overwrite=False)
 
     e_ref = SearchEngine(spark, ref_dir)
@@ -119,6 +123,46 @@ def test_kill_and_rerun_resume(spark, corpora, tmp_path):
         ka = a.select(sorted(a.columns)).exceptAll(b.select(sorted(b.columns))).count()
         kb = b.select(sorted(b.columns)).exceptAll(a.select(sorted(a.columns))).count()
         assert ka == 0 and kb == 0, tbl
+
+
+def test_overwrite_replaces_finished_index(spark, tmp_path):
+    """overwrite=True starts from an empty directory even when out_dir
+    holds a finished build with the same n_segments/waves."""
+    out = str(tmp_path / "ix")
+    schema = "doc_id long, text string"
+    old = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "gamma"), (3, "delta alpha")], schema)
+    new = spark.createDataFrame([(7, "omega"), (8, "omega psi")], schema)
+    for corpus in (old, new):
+        build_index(spark, corpus, out, text_col="text", doc_id_col="doc_id",
+                    n_segments=2)
+    eng = SearchEngine(spark, out, corpus=new, text_field="text",
+                       doc_id_col="doc_id")
+    assert eng.doc_count == 2
+    assert {int(r["docId"]) for r in
+            eng.search({"match": {"text": "omega"}}, k=10).collect()} == {7, 8}
+    assert eng.search({"match": {"text": "alpha"}}, k=10).collect() == []
+
+
+def test_add_batch_honours_docs_only_index_options(spark, tmp_path):
+    """add_batch writes with the index's own index_options: a docs-only
+    index stays docs-only (tf 1, no positions) in later generations."""
+    out = str(tmp_path / "mot")
+    schema = "doc_id long, text string"
+    build_index(spark, spark.createDataFrame(
+        [(1, "alpha alpha beta"), (2, "gamma")], schema), out,
+        text_col="text", doc_id_col="doc_id", n_segments=2,
+        index_options="docs")
+    add_batch(spark, spark.createDataFrame([(9, "rho rho rho sigma")], schema),
+              out, text_col="text", doc_id_col="doc_id")
+    added = ("rho", "sigma")
+    post = spark.read.parquet(os.path.join(out, "postings")).where(
+        F.col("term").isin(*added))
+    assert post.agg(F.max("max_tf")).first()[0] == 1
+    ts = spark.read.parquet(os.path.join(out, "termstats")).where(
+        F.col("term").isin(*added)).collect()
+    assert sorted(r["term"] for r in ts) == list(added)
+    assert all(r["ttf"] == r["df"] for r in ts)
 
 
 def test_streaming_file_source(spark, corpora, tmp_path):
@@ -187,7 +231,7 @@ def test_update_by_query(spark, tmp_path):
 
     corpus = spark.createDataFrame(generate_corpus(150, seed=51))
     out = str(tmp_path / "ubq")
-    build_index(spark, corpus, out, n_segments=2, shuffle_partitions=4)
+    build_index(spark, corpus, out, n_segments=2)
     eng = SearchEngine(spark, out, corpus=corpus)
     before_total = eng.docstats.count()
     n_match = eng.count({"match": {"content": "def"}})
@@ -225,7 +269,7 @@ def test_update_by_query_ctx_op_routing(spark, tmp_path):
 
     corpus = spark.createDataFrame(generate_corpus(150, seed=52))
     out = str(tmp_path / "ubqop")
-    build_index(spark, corpus, out, n_segments=2, shuffle_partitions=4)
+    build_index(spark, corpus, out, n_segments=2)
     eng = SearchEngine(spark, out, corpus=corpus)
     total = eng.docstats.count()
     matched = eng.search({"match": {"content": "def"}}, k=10000)
@@ -287,7 +331,7 @@ def test_update_by_query_ctx_op_rejects_null_and_bad_verdicts(spark,
 
     corpus = spark.createDataFrame(generate_corpus(60, seed=53))
     out = str(tmp_path / "ubqbad")
-    build_index(spark, corpus, out, n_segments=2, shuffle_partitions=4)
+    build_index(spark, corpus, out, n_segments=2)
     eng = SearchEngine(spark, out, corpus=corpus)
     for src in ("ctx.op = params.mode;",            # None -> NULL verdict
                 "ctx.op = 'purge';"):               # unknown verdict

@@ -4,12 +4,13 @@ Lucene's StandardAnalyzer splits tokens longer than 255 chars into
 255-char chunks (reference wiring: index/analysis — max_token_length).
 Code corpora hit this constantly (minified JS, base64 blobs), so the
 Python tokenizer, the DuckDB-dialect build/oracle expression, and the
-Spark SQL re-tokenization expression must all agree — and both index
-build paths (segment-local zero-shuffle and checkpointed waves) must
-produce the same index for such docs.
+Spark SQL re-tokenization expression must all agree — and every write
+mode (default build, checkpointed waves, add_batch) must produce the
+same index for such docs.
 """
 
 import duckdb
+import numpy as np
 import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
@@ -19,7 +20,9 @@ from opensearch_spark.analysis.analyzer import (
     spark_sql_tokens_expr,
     tokenize,
 )
+from opensearch_spark.index import codec
 from opensearch_spark.index.build import build_index
+from opensearch_spark.index.incremental import add_batch
 from opensearch_spark.search.engine import SearchEngine
 
 CASES = [
@@ -63,33 +66,57 @@ def long_corpus(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _decoded_postings(spark, root):
+    """Every posting as (term, docId, tf, positions), decoded."""
+    out = []
+    for r in spark.read.parquet(f"{root}/postings").collect():
+        docs, tfs, _, pos = codec.decode_blocks(
+            [r["n_docs"]], [r["doc_bytes"]], [r["tf_bytes"]],
+            [r["norm_bytes"]], [r["pos_bytes"]])
+        ends = np.cumsum(tfs)
+        for d, tf, e in zip(docs, tfs, ends):
+            out.append((r["term"], int(d), int(tf),
+                        tuple(pos[e - tf:e].tolist())))
+    return sorted(out)
+
+
 def test_build_paths_agree_on_long_tokens(spark, long_corpus, tmp_path):
-    a, b = str(tmp_path / "local"), str(tmp_path / "waves")
-    build_index(spark, long_corpus, a, text_col="text",
-                doc_id_col="doc_id", n_segments=2, shuffle_partitions=4)
-    build_index(spark, long_corpus, b, text_col="text",
-                doc_id_col="doc_id", n_segments=2, shuffle_partitions=4,
-                waves=2)
+    """Every write mode gives the same index: the default build, a
+    waves=2 build, and a build of half the docs plus add_batch of the
+    rest agree on docstats and on every decoded posting (seg aside:
+    the default build places segments by partition)."""
+    a, b, c = (str(tmp_path / m) for m in ("local", "waves", "added"))
+    kw = dict(text_col="text", doc_id_col="doc_id", n_segments=2)
+    build_index(spark, long_corpus, a, **kw)
+    build_index(spark, long_corpus, b, waves=2, **kw)
+    build_index(spark, long_corpus.where("doc_id < 2"), c, **kw)
+    add_batch(spark, long_corpus.where("doc_id >= 2"), c,
+              text_col="text", doc_id_col="doc_id")
+    cols = ["docId", "dl", "norm_byte", "dl_q", "content_sha"]
+    stats, posts = [], []
+    for d in (a, b, c):
+        stats.append(sorted(map(tuple, spark.read.parquet(f"{d}/docstats")
+                                .select(cols).collect())))
+        posts.append(_decoded_postings(spark, d))
+    assert len(stats[0]) == 4 and stats[0] == stats[1] == stats[2]
+    assert posts[0] and posts[0] == posts[1] == posts[2]
     sa = spark.read.parquet(f"{a}/docstats").select("docId", "dl")
-    sb = spark.read.parquet(f"{b}/docstats").select("docId", "dl")
-    assert sorted(map(tuple, sa.collect())) == sorted(map(tuple, sb.collect()))
     # the long doc's dl counts the SPLIT tokens
     dl0 = dict(map(tuple, sa.collect()))[0]
     assert dl0 == len(tokenize(f"intro {'q' * 300} world hash join"))
-    ea = SearchEngine(spark, a, corpus=long_corpus, text_field="text",
-                      doc_id_col="doc_id")
-    eb = SearchEngine(spark, b, corpus=long_corpus, text_field="text",
-                      doc_id_col="doc_id")
+    ea, eb, ec = (SearchEngine(spark, d, corpus=long_corpus,
+                               text_field="text", doc_id_col="doc_id")
+                  for d in (a, b, c))
     from opensearch_spark.search import dsl as dsl_mod
 
     for q in ({"match": {"text": "hash join"}},
               {"match": {"text": "q" * 300}},
               {"match_phrase": {"text": f"{'q' * 300} world"}}):
-        ra = sorted((int(r["docId"]), round(float(r["score"]), 6))
-                    for r in ea.compile(dsl_mod.parse(q)).collect())
-        rb = sorted((int(r["docId"]), round(float(r["score"]), 6))
-                    for r in eb.compile(dsl_mod.parse(q)).collect())
-        assert ra == rb and ra, q
+        ra, rb, rc = (
+            sorted((int(r["docId"]), round(float(r["score"]), 6))
+                   for r in e.compile(dsl_mod.parse(q)).collect())
+            for e in (ea, eb, ec))
+        assert ra == rb == rc and ra, q
     # a >255-char query term splits query-side and matches both chunks
     hits = {int(r["docId"])
             for r in ea.compile(dsl_mod.parse(
@@ -108,7 +135,7 @@ def test_docs_only_source_verify_splits_long_tokens(spark, long_corpus,
                                                     tmp_path):
     out = str(tmp_path / "mot")
     build_index(spark, long_corpus, out, text_col="text",
-                doc_id_col="doc_id", n_segments=2, shuffle_partitions=4,
+                doc_id_col="doc_id", n_segments=2,
                 index_options="docs")
     eng = SearchEngine(spark, out, corpus=long_corpus, text_field="text",
                        doc_id_col="doc_id")

@@ -26,7 +26,7 @@ def eng(spark, tmp_path_factory):
         """),
     )
     out = str(tmp_path_factory.mktemp("nix") / "index")
-    build_index(spark, corpus, out, n_segments=4, shuffle_partitions=8)
+    build_index(spark, corpus, out, n_segments=4)
     return SearchEngine(spark, out, corpus=corpus, cache=True)
 
 

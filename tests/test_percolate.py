@@ -33,7 +33,7 @@ def setup(spark, tmp_path_factory):
     pdf = generate_corpus(400, seed=13)
     corpus = spark.createDataFrame(pdf)
     out = str(tmp_path_factory.mktemp("pcix") / "index")
-    build_index(spark, corpus, out, n_segments=4, shuffle_partitions=8)
+    build_index(spark, corpus, out, n_segments=4)
     eng = SearchEngine(spark, out, corpus=corpus, cache=True)
     return eng
 

@@ -99,7 +99,7 @@ def eng(spark, tmp_path_factory):
     pdf = generate_corpus(500, seed=7)
     corpus = spark.createDataFrame(pdf)
     out = str(tmp_path_factory.mktemp("qsix") / "index")
-    build_index(spark, corpus, out, n_segments=4, shuffle_partitions=8)
+    build_index(spark, corpus, out, n_segments=4)
     return SearchEngine(spark, out, corpus=corpus, cache=True)
 
 

@@ -48,7 +48,7 @@ def test_metric_math_hand_checked():
 def test_rank_eval_end_to_end(spark, tmp_path):
     corpus = spark.createDataFrame(generate_corpus(200, seed=31))
     out = str(tmp_path / "ix")
-    build_index(spark, corpus, out, n_segments=2, shuffle_partitions=4)
+    build_index(spark, corpus, out, n_segments=2)
     eng = SearchEngine(spark, out, corpus=corpus)
     q = {"match": {"content": "def return"}}
     top = [int(r["docId"]) for r in eng.search(q, k=5).collect()]

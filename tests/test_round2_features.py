@@ -21,7 +21,7 @@ Q = {"match": {"content": "def return"}}
 def ix(spark, tmp_path_factory):
     corpus = spark.createDataFrame(generate_corpus(300, seed=17))
     out = str(tmp_path_factory.mktemp("r2") / "ix")
-    build_index(spark, corpus, out, n_segments=4, shuffle_partitions=8)
+    build_index(spark, corpus, out, n_segments=4)
     return out, corpus
 
 
@@ -154,7 +154,7 @@ def test_upsert_batch(spark, tmp_path):
     pdf = generate_corpus(120, seed=23)
     corpus = spark.createDataFrame(pdf)
     out = str(tmp_path / "upix")
-    build_index(spark, corpus, out, n_segments=2, shuffle_partitions=4)
+    build_index(spark, corpus, out, n_segments=2)
     eng = SearchEngine(spark, out, corpus=corpus)
     # pick a doc and rewrite its content
     row = corpus.limit(1).collect()[0]
@@ -351,7 +351,7 @@ def test_whitespace_and_keyword_analyzers(spark, tmp_path):
     )
     # whitespace: case-sensitive, punctuation kept inside tokens
     wdir = str(tmp_path / "ws")
-    build_index(spark, corpus, wdir, n_segments=2, shuffle_partitions=2,
+    build_index(spark, corpus, wdir, n_segments=2,
                 analyzer="whitespace")
     we = SearchEngine(spark, wdir, corpus=corpus)
     assert we.analyzer == "whitespace"
@@ -360,12 +360,12 @@ def test_whitespace_and_keyword_analyzers(spark, tmp_path):
     assert we.count({"match": {"content": "foo-bar"}}) == 1  # other doc only
     # standard analyzer would match both docs on "foo bar"
     sdir = str(tmp_path / "std")
-    build_index(spark, corpus, sdir, n_segments=2, shuffle_partitions=2)
+    build_index(spark, corpus, sdir, n_segments=2)
     se = SearchEngine(spark, sdir, corpus=corpus)
     assert se.count({"match": {"content": "foo bar"}}) == 2
     # keyword: whole string is one token
     kdir = str(tmp_path / "kw")
-    build_index(spark, corpus, kdir, n_segments=2, shuffle_partitions=2,
+    build_index(spark, corpus, kdir, n_segments=2,
                 analyzer="keyword")
     ke = SearchEngine(spark, kdir, corpus=corpus)
     assert ke.count({"match": {"content": "plain words here"}}) == 1
@@ -450,7 +450,7 @@ def test_and_with_segment_absent_required_term(spark, tmp_path):
         pd.DataFrame(rows, columns=["repo", "path", "commit", "content", "lang"])
     )
     out = str(tmp_path / "andix")
-    build_index(spark, corpus, out, n_segments=4, shuffle_partitions=4)
+    build_index(spark, corpus, out, n_segments=4)
     eng = SearchEngine(spark, out, corpus=corpus)
     q = {"match": {"content": {"query": "common zzrare", "operator": "and"}}}
     hits = ids(eng.search(q, k=50).collect())
@@ -569,7 +569,7 @@ def test_pit_survives_compaction(spark, tmp_path):
 
     corpus = spark.createDataFrame(generate_corpus(120, seed=23))
     out = str(tmp_path / "ix")
-    build_index(spark, corpus, out, n_segments=4, shuffle_partitions=8)
+    build_index(spark, corpus, out, n_segments=4)
     live = SearchEngine(spark, out, corpus=corpus)
     pit = live.open_pit()
     before = [(int(r["docId"]), round(float(r["score"]), 6))
@@ -710,7 +710,7 @@ def test_wildgrams_stale_after_add_batch(spark, tmp_path):
 
     corpus = spark.createDataFrame(generate_corpus(120, seed=61))
     out = str(tmp_path / "wix")
-    build_index(spark, corpus, out, n_segments=2, shuffle_partitions=4)
+    build_index(spark, corpus, out, n_segments=2)
     eng = SearchEngine(spark, out, corpus=corpus)
     eng.build_wildcard_index()
     assert eng._wildgrams is not None

@@ -22,7 +22,7 @@ def eng(spark, tmp_path):
     pdf = generate_corpus(400, seed=5)
     corpus = spark.createDataFrame(pdf)
     out = str(tmp_path / "index")
-    build_index(spark, corpus, out, n_segments=4, shuffle_partitions=8)
+    build_index(spark, corpus, out, n_segments=4)
     return SearchEngine(spark, out, corpus=corpus, cache=True)
 
 
@@ -118,7 +118,7 @@ def test_soft_delete_and_purge(spark, tmp_path):
     pdf = generate_corpus(300, seed=9)
     corpus = spark.createDataFrame(pdf)
     out = str(tmp_path / "delix")
-    build_index(spark, corpus, out, n_segments=4, shuffle_partitions=8)
+    build_index(spark, corpus, out, n_segments=4)
     eng = SearchEngine(spark, out, corpus=corpus)
 
     before = rows(eng.search(Q, k=12))
@@ -324,7 +324,7 @@ def test_geo_bbox_dateline_wrap(spark, tmp_path):
     GeoBoundingBoxQueryBuilder wrap semantics)."""
     corpus = spark.createDataFrame(generate_corpus(200, seed=9))
     out = str(tmp_path / "geoix")
-    build_index(spark, corpus, out, n_segments=2, shuffle_partitions=4)
+    build_index(spark, corpus, out, n_segments=2)
     geo = corpus.withColumn(
         "location",
         F.struct(
@@ -350,7 +350,7 @@ def geo_eng(spark, tmp_path):
     """Corpus with a deterministic hash-derived location column."""
     corpus = spark.createDataFrame(generate_corpus(200, seed=11))
     out = str(tmp_path / "geopix")
-    build_index(spark, corpus, out, n_segments=2, shuffle_partitions=4)
+    build_index(spark, corpus, out, n_segments=2)
     geo = corpus.withColumn(
         "location",
         F.struct(
@@ -640,7 +640,7 @@ def test_single_doc_get_and_update(spark, tmp_path):
     corpus = spark.createDataFrame(pdf).withColumn(
         "doc_id", F.monotonically_increasing_id())
     out = str(tmp_path / "ix")
-    build_index(spark, corpus, out, n_segments=2, shuffle_partitions=4,
+    build_index(spark, corpus, out, n_segments=2,
                 doc_id_col="doc_id")
     eng = SearchEngine(spark, out, corpus=corpus, doc_id_col="doc_id")
     row = corpus.where(F.length("content") > 20).limit(1).collect()[0]
@@ -670,7 +670,7 @@ def test_update_null_field_and_id_change_guard(spark, tmp_path):
     corpus = spark.createDataFrame(generate_corpus(40, seed=78)).withColumn(
         "lang", F.when(F.col("path").contains("a"), F.col("lang")))
     out = str(tmp_path / "ix")
-    build_index(spark, corpus, out, n_segments=2, shuffle_partitions=4)
+    build_index(spark, corpus, out, n_segments=2)
     eng = SearchEngine(spark, out, corpus=corpus)
     row = eng.corpus.where(F.col("lang").isNull()) \
                     .where(F.length("content") > 10).limit(1).collect()
@@ -733,7 +733,7 @@ def test_mget_point_lookup_and_deletes(spark, tmp_path):
     pdf = generate_corpus(200, seed=11)
     corpus = spark.createDataFrame(pdf)
     out = str(tmp_path / "mgetix")
-    build_index(spark, corpus, out, n_segments=4, shuffle_partitions=8)
+    build_index(spark, corpus, out, n_segments=4)
     eng = SearchEngine(spark, out, corpus=corpus)
     ids = sorted(int(r["docId"])
                  for r in eng.docstats.select("docId").limit(4).collect())

@@ -77,7 +77,7 @@ def test_pit_full_lifecycle_compaction_and_upsert(spark, tmp_path):
 
     corpus = spark.createDataFrame(generate_corpus(150, seed=77))
     out = str(tmp_path / "ix")
-    build_index(spark, corpus, out, n_segments=4, shuffle_partitions=8)
+    build_index(spark, corpus, out, n_segments=4)
     live = SearchEngine(spark, out, corpus=corpus)
     pit = live.open_pit()
     before = [(int(r["docId"]), round(float(r["score"]), 6))

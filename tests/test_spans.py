@@ -127,7 +127,7 @@ def eng(spark, tmp_path_factory):
     pdf = generate_corpus(400, seed=3)
     corpus = spark.createDataFrame(pdf)
     out = str(tmp_path_factory.mktemp("spix") / "index")
-    build_index(spark, corpus, out, n_segments=4, shuffle_partitions=8)
+    build_index(spark, corpus, out, n_segments=4)
     eng = SearchEngine(spark, out, corpus=corpus, cache=True)
     texts = {
         int(r["docId"]): r["content"]

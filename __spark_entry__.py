@@ -1712,17 +1712,35 @@ def _ft_slice_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     return u
 
 
+def _committed(ix_dir: str) -> bool:
+    """Whether ``ix_dir`` holds a finished index in the current format
+    (a manifest with a ``commit``); anything else is rebuilt."""
+    import json as _json
+
+    try:
+        with open(os.path.join(ix_dir, "manifest.json")) as fh:
+            m = _json.load(fh)
+    except OSError:
+        return False
+    return "commit" in m and m.get("build", {}).get("done", False)
+
+
 def _aux_index_dir(sf_dir: str, tag: str) -> str:
     """Cached auxiliary index dir under CACHE_ROOT (same lifecycle as
-    the ftix_* caches: delete .cache after index-format changes). A dir
-    without the _ENTRY_DONE marker is a crashed partial build — wipe it
-    so the entry rebuilds cleanly."""
+    the ftix_* caches). A dir without the _ENTRY_DONE marker is a
+    crashed partial build, and one holding an index of an older format
+    (a manifest without ``commit``, at the root or one level down) is
+    stale — wipe both so the entry rebuilds cleanly."""
+    import glob as _glob
     import shutil as _shutil
 
     key = os.path.abspath(sf_dir).strip("/").replace("/", "_")
     d = os.path.join(CACHE_ROOT, f"aux_{tag}_{key}")
-    if os.path.exists(d) and not os.path.exists(
-            os.path.join(d, "_ENTRY_DONE")):
+    manifests = (_glob.glob(os.path.join(d, "manifest.json"))
+                 + _glob.glob(os.path.join(d, "*", "manifest.json")))
+    if os.path.exists(d) and (
+            not os.path.exists(os.path.join(d, "_ENTRY_DONE"))
+            or not all(_committed(os.path.dirname(m)) for m in manifests)):
         _shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d, exist_ok=True)
     return d
@@ -2785,7 +2803,7 @@ def _engine(spark: SparkSession, sf_dir: str) -> SearchEngine:
         return eng
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     ix_dir = os.path.join(CACHE_ROOT, "ftix_" + key.strip("/").replace("/", "_"))
-    if not os.path.exists(os.path.join(ix_dir, "manifest.json")):
+    if not _committed(ix_dir):
         build_index(
             spark, docs, ix_dir, text_col="text", doc_id_col="doc_id", n_segments=8
         )
@@ -2826,12 +2844,12 @@ def _engine_mf(spark: SparkSession, sf_dir: str):
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     base = os.path.join(CACHE_ROOT, "ftix_" + key.strip("/").replace("/", "_"))
     src_dir = base + "_srcfield"
-    if not os.path.exists(os.path.join(src_dir, "manifest.json")):
+    if not _committed(src_dir):
         build_index(
             spark, docs, src_dir, text_col="source", doc_id_col="doc_id",
             n_segments=4,
         )
-    if not os.path.exists(os.path.join(base, "manifest.json")):
+    if not _committed(base):
         build_index(
             spark, docs, base, text_col="text", doc_id_col="doc_id", n_segments=8
         )

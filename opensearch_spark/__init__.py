@@ -8,8 +8,8 @@ OpenSearch/Lucene reference (see SURVEY.md):
 - ``index``      — distributed inverted-index construction: per-segment
                    (term, docId, tf, positions) posting lists, sorted and
                    delta+varint compressed into 128-doc blocks with
-                   block-max impact metadata; resumable with per-partition
-                   lineage manifests.
+                   block-max impact metadata; one manifest.json commit
+                   point lists every live file.
 - ``search``     — query DSL (match / bool / phrase / term-level) -> AST ->
                    DataFrame plans; BM25 (k1=1.2, b=0.75) top-k with
                    block-max impact pruning inside per-segment Arrow UDFs.

@@ -263,7 +263,8 @@ class Cluster:
         from opensearch_spark.search.engine import SearchEngine
 
         src = self.engines[source]
-        _shutil.copytree(src.paths.root, target_dir)
+        _shutil.copytree(src.paths.root, target_dir,
+                         ignore=_shutil.ignore_patterns("pits"))
         compact_index(self.spark, target_dir,
                       target_segments=target_segments)
         # src.corpus already carries the derived docId column, so the

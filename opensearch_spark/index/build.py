@@ -25,13 +25,17 @@ segments it holds:
          varint position gaps, per-block (max_tf, min_dl_q) WAND bounds)
          + per-doc stats and a 1-row count summary written side-channel
          (segment-file analog), named by write prefix + partition id
-    -> parquet tables: postings/ docstats/ termstats/ globals/
+    -> parquet tables: postings/ docstats/ termstats/
+    -> one manifest.json publish (index/manifest.py): the commit point
+       listing every live file, plus the globals
 
 RESUMABLE builds (waves > 1): wave w writes the segments with
-``seg % waves == w`` and checkpoints to ``lineage.json``; a rerun with
-``overwrite=False`` reads the corpus again only for the waves not yet
-done. The index root must be a POSIX path shared by the driver and the
-executors (side-channel files, json manifests, local renames).
+``seg % waves == w`` and publishes one commit whose ``build`` record
+lists the waves done; readers refuse the index until the last commit
+(termstats) marks the build done. A rerun with ``overwrite=False``
+reads the corpus again only for the waves not yet done. The index root
+must be a POSIX path shared by the driver and the executors
+(side-channel files, the manifest, local renames).
 
 Scale notes (100 TB design):
 - The default build moves NO data: doc->segment placement reuses input
@@ -48,8 +52,9 @@ Scale notes (100 TB design):
   N workers x N default threads oversubscribes the host quadratically.
 - Posting files are sorted by term -> parquet row-group min/max
   skipping at query time; termstats derives from packed metadata
-  columns (n_docs, sum_tf) — no second pass over token data; globals
-  sum the writers' count summaries — no aggregate job over docstats.
+  columns (n_docs, sum_tf) — no second pass over token data; the
+  manifest's counts sum the writers' count summaries — no aggregate job
+  over docstats.
 
 BM25 constants k1=1.2, b=0.75 follow the reference defaults
 (``index/similarity/SimilarityProviders.java:276-292``).
@@ -58,10 +63,8 @@ BM25 constants k1=1.2, b=0.75 follow the reference defaults
 from __future__ import annotations
 
 import glob
-import json
 import os
 import shutil
-from dataclasses import dataclass
 from typing import Sequence
 
 import numpy as np
@@ -71,61 +74,16 @@ from opensearch_spark.analysis.smallfloat import (
     decode_norms_np, int_to_byte4_np, length_table,
 )
 from opensearch_spark.index import codec
+from opensearch_spark.index.manifest import (
+    SCHEMAS, TABLES, IndexPaths, _read_json, append, publish, read_manifest,
+    read_table, with_files,
+)
 
 K1 = 1.2
 B = 0.75
 DEFAULT_BLOCK = 128
 
-# Block-max metadata is stored avgdl-independent: (max_tf, min_dl_q) give
-# the query-time bound idf*(k1+1)*max_tf/(max_tf+k1*(1-b+b*min_dl_q/avgdl))
-# — valid under ANY current avgdl, so incremental batches and compaction
-# never invalidate stored bounds (impact increases in tf, decreases in dl).
-POSTINGS_SCHEMA = (
-    "seg int, term string, block_no int, n_docs int, first_doc long, last_doc long, "
-    "doc_bytes binary, tf_bytes binary, norm_bytes binary, pos_bytes binary, "
-    "max_tf int, min_dl_q long, sum_tf long"
-)
-
-
-@dataclass
-class IndexPaths:
-    root: str
-
-    @property
-    def postings(self) -> str:
-        return os.path.join(self.root, "postings")
-
-    @property
-    def docstats(self) -> str:
-        return os.path.join(self.root, "docstats")
-
-    @property
-    def termstats(self) -> str:
-        return os.path.join(self.root, "termstats")
-
-    @property
-    def globals_(self) -> str:
-        return os.path.join(self.root, "globals")
-
-    @property
-    def lineage(self) -> str:
-        return os.path.join(self.root, "lineage.json")
-
-    @property
-    def manifest(self) -> str:
-        return os.path.join(self.root, "manifest.json")
-
-
-def _read_json(path: str) -> dict:
-    with open(path) as f:
-        return json.load(f)
-
-
-def _write_json_atomic(path: str, obj: dict) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(obj, f, indent=1, sort_keys=True)
-    os.replace(tmp, path)
+POSTINGS_SCHEMA = SCHEMAS["postings"]
 
 
 _INT32_MAX = (1 << 31) - 1
@@ -283,7 +241,6 @@ def _pack_partition(block_size: int):
 
 
 def _local_index_fn(block_size: int, docstats_dir: str, tok_expr: str,
-                    analyzer: str = "standard",
                     index_options: str = "positions", prefix: str = "w0"):
     """mapInArrow fn implementing SEGMENT-LOCAL indexing — the Lucene
     shard-build analog (reference: each shard's IndexWriter builds its
@@ -425,68 +382,82 @@ def prepare(corpus: DataFrame, text_col: str, id_cols: Sequence[str],
     )
 
 
+def _route_keys(n: int) -> list:
+    """``keys[p]``: an int that Spark's hash partitioning into ``n``
+    partitions sends to partition ``p`` — ``pmod(hash(k), n)`` with
+    Spark's ``hash`` of an int (Murmur3_x86_32.hashInt, seed 42)."""
+    m, keys = 0xFFFFFFFF, {}
+
+    def rotl(x: int, r: int) -> int:
+        return ((x << r) | (x >> (32 - r))) & m
+
+    for k in range(1 << 31):
+        h = (rotl(42 ^ rotl(k * 0xCC9E2D51 & m, 15) * 0x1B873593 & m, 13)
+             * 5 + 0xE6546B64) & m ^ 4
+        h = (h ^ h >> 16) * 0x85EBCA6B & m
+        h = (h ^ h >> 13) * 0xC2B2AE35 & m
+        keys.setdefault(((h ^ h >> 16) - (h >> 31 << 32)) % n, k)
+        if len(keys) == n:
+            return [keys[p] for p in range(n)]
+
+
 def by_seg(prepared: DataFrame, n_segments: int,
            segs: Sequence[int] | None = None) -> DataFrame:
     """Assign ``seg = pmod(docId, n_segments)`` (optionally keeping only
-    ``segs``) and repartition by seg, so no segment spans two
-    partitions — the routing rule of waves and of ``add_batch``."""
+    ``segs``) and repartition so that partition i holds exactly segment
+    ``segs[i]`` — the routing rule of waves and of ``add_batch``. A hash
+    repartition on seg itself would pack several segments into one task
+    and leave others empty; the rows are hashed on a per-segment key
+    chosen to land in that segment's own partition instead."""
     segs = list(range(n_segments)) if segs is None else list(segs)
     df = prepared.withColumn(
         "seg", F.pmod(F.col("docId"), F.lit(n_segments)).cast("int"))
     if len(segs) < n_segments:
         df = df.where(F.col("seg").isin(segs))
-    return df.repartition(len(segs), "seg")
+    keys = _route_keys(len(segs))
+    part = {s: i for i, s in enumerate(segs)}
+    route = F.element_at(
+        F.array(*[F.lit(keys[part.get(s, 0)]) for s in range(n_segments)]),
+        F.col("seg") + 1)
+    return df.repartition(len(segs), route)
 
 
-def _remove_write(docstats_dir: str, prefix: str) -> None:
-    for d in (docstats_dir, os.path.join(docstats_dir, "_summaries")):
-        for f in glob.glob(os.path.join(d, f"{prefix}-*")):
-            os.remove(f)
-
-
-def _sum_summaries(docstats_dir: str, prefix: str) -> dict:
-    """Totals of the count summaries whose write prefix matches the glob
-    ``prefix``."""
-    import pyarrow.parquet as pq
-
-    tot = {"doc_count": 0, "fdc": 0, "sum_ttf": 0}
-    for f in glob.glob(os.path.join(docstats_dir, "_summaries",
-                                    f"{prefix}-*.parquet")):
-        row = pq.read_table(f, columns=list(tot)).to_pylist()[0]
-        for k in tot:
-            tot[k] += int(row[k])
-    return tot
-
-
-def write_segments(prepared: DataFrame, paths: IndexPaths, prefix: str,
-                   block_size: int, analyzer: str, index_options: str,
-                   mode: str = "append") -> dict:
+def write_segments(prepared: DataFrame, paths: IndexPaths, manifest: dict) -> dict:
     """THE index writer. ``prepared`` holds (docId, content_sha, content,
     seg) with no segment spanning two partitions; each task indexes its
-    segments locally (``_local_index_fn``), postings go through one
-    committed Spark write and docstats side-channel under ``prefix``.
-    Returns the write's totals (doc_count, fdc, sum_ttf). A failed write
-    leaves no docstats behind; files of an earlier attempt under the
-    same prefix are replaced."""
+    segments locally (``_local_index_fn``) with the manifest's analyzer,
+    block size and index_options, postings go through one Spark write
+    and docstats side-channel under a prefix unique to this write.
+    Returns ``manifest`` with the new files appended and the counts of
+    the write's summaries added (Lucene: avgFieldLength =
+    sumTotalTermFreq / docCount of docs with >= 1 token, as double);
+    nothing reads the files until the caller publishes it."""
+    import uuid
+
+    import pyarrow.parquet as pq
+
     from opensearch_spark.analysis.analyzer import duckdb_tokens_expr
 
-    _remove_write(paths.docstats, prefix)
-    try:
-        (
-            prepared.mapInArrow(
-                _local_index_fn(block_size, paths.docstats,
-                                duckdb_tokens_expr(analyzer), analyzer,
-                                index_options, prefix),
-                schema=POSTINGS_SCHEMA,
-            )
-            .sortWithinPartitions("term", "block_no")
-            .write.mode(mode)
-            .parquet(paths.postings)
-        )
-    except BaseException:
-        _remove_write(paths.docstats, prefix)
-        raise
-    return _sum_summaries(paths.docstats, prefix)
+    prefix, ds = uuid.uuid4().hex[:12], paths.table("docstats")
+    postings = append(
+        prepared.mapInArrow(
+            _local_index_fn(manifest["block_size"], ds,
+                            duckdb_tokens_expr(manifest["analyzer"]),
+                            index_options=manifest["index_options"], prefix=prefix),
+            schema=POSTINGS_SCHEMA,
+        ).sortWithinPartitions("term", "block_no"),
+        paths, "postings")
+    docstats = [os.path.basename(f) for f in
+                sorted(glob.glob(os.path.join(ds, f"{prefix}-*.parquet")))]
+    m = with_files(manifest, postings=manifest["files"]["postings"] + postings,
+                   docstats=manifest["files"]["docstats"] + docstats)
+    summaries = glob.glob(os.path.join(ds, "_summaries", f"{prefix}-*.parquet"))
+    tot = pq.read_table(summaries).to_pydict() if summaries else {}
+    for key, col in (("doc_count", "doc_count"), ("field_doc_count", "fdc"),
+                     ("sum_ttf", "sum_ttf")):
+        m[key] = int(m[key]) + sum(tot.get(col, []))
+    m["avgdl"] = float(m["sum_ttf"] / (m["field_doc_count"] or 1))
+    return m
 
 
 def term_stats(postings: DataFrame) -> DataFrame:
@@ -509,34 +480,42 @@ def build_index(
     overwrite: bool = True,
     analyzer: str = "standard",
     index_options: str = "positions",
-    _fail_after_wave: int | None = None,
 ) -> IndexPaths:
     """Build the inverted index for ``corpus[text_col]`` under ``out_dir``.
 
     ``overwrite=True`` starts from an empty ``out_dir``. ``waves`` > 1
-    writes the segments in that many checkpointed groups (lineage
-    manifest); with ``overwrite=False`` a build interrupted at
-    ``out_dir`` with the same ``n_segments``/``waves`` resumes, writing
-    only the waves not yet done.
+    writes the segments in that many groups, each published as a commit
+    that records the waves done; with ``overwrite=False`` a build
+    interrupted at ``out_dir`` with the same ``n_segments``/``waves``
+    resumes, writing only the waves not yet done (a finished one is
+    left as it is).
     """
     if index_options not in ("positions", "docs"):
         raise ValueError(f"unknown index_options: {index_options}")
     paths = IndexPaths(out_dir)
-    lineage = {"waves_done": [], "termstats_done": False,
-               "n_segments": n_segments, "waves": waves}
-    if overwrite:
+    cfg = {"n_segments": n_segments, "waves": waves}
+    m = (_read_json(paths.manifest)
+         if not overwrite and os.path.exists(paths.manifest) else {})
+    if "commit" not in m or {k: m["build"].get(k) for k in cfg} != cfg:
         shutil.rmtree(out_dir, ignore_errors=True)
-    elif os.path.exists(paths.lineage):
-        done = _read_json(paths.lineage)
-        if done.get("n_segments") == n_segments and done.get("waves") == waves:
-            lineage = done
-        else:  # config changed -> full rebuild
-            shutil.rmtree(out_dir)
+        m = {
+            "version": 3, "commit": 0,
+            "analyzer": analyzer,
+            "analyzer_impl": "uax29-subset-v1" if analyzer == "standard" else analyzer,
+            "n_segments": n_segments, "block_size": block_size,
+            "k1": K1, "b": B, "index_options": index_options,
+            "doc_count": 0, "field_doc_count": 0, "sum_ttf": 0, "avgdl": 0.0,
+            "generations": 1,
+            "build": {**cfg, "waves_done": [], "done": False},
+            "files": {t: [] for t in TABLES},
+        }
+    if m["build"]["done"]:
+        return paths
     os.makedirs(out_dir, exist_ok=True)
 
     prepared = prepare(corpus, text_col, id_cols, doc_id_col)
     for w in range(min(waves, n_segments)):  # a wave needs a segment
-        if w in lineage["waves_done"]:
+        if w in m["build"]["waves_done"]:
             continue
         if waves == 1:
             # one partition == one segment: at most one repartition of
@@ -552,58 +531,28 @@ def build_index(
         else:
             frame = by_seg(prepared, n_segments,
                           [s for s in range(n_segments) if s % waves == w])
-        write_segments(frame, paths, f"w{w}", block_size, analyzer,
-                       index_options, mode="overwrite" if waves == 1 else "append")
-        lineage["waves_done"] = sorted(set(lineage["waves_done"]) | {w})
-        _write_json_atomic(paths.lineage, lineage)
-        if _fail_after_wave is not None and w >= _fail_after_wave:
-            raise RuntimeError(f"injected failure after wave {w} (test seam)")
+        m = write_segments(frame, paths, m)
+        m["build"] = {**m["build"],
+                      "waves_done": sorted(m["build"]["waves_done"] + [w])}
+        m = publish(paths, m)
 
-    if not lineage["termstats_done"]:
-        term_stats(spark.read.parquet(paths.postings)).write.mode(
-            "overwrite").parquet(paths.termstats)
-        lineage["termstats_done"] = True
-        _write_json_atomic(paths.lineage, lineage)
-
-    tot = _sum_summaries(paths.docstats, "w*")
-    # Lucene: avgFieldLength = sumTotalTermFreq / docCount (docs with
-    # the field, i.e. with >= 1 token), as double
-    globals_row = {
-        "doc_count": tot["doc_count"],
-        "field_doc_count": tot["fdc"],
-        "sum_ttf": tot["sum_ttf"],
-        "avgdl": float(tot["sum_ttf"] / (tot["fdc"] or 1)),
-        "n_segments": n_segments,
-        "block_size": block_size,
-        "k1": K1,
-        "b": B,
-        "index_options": index_options,
-    }
-    # 1-row table: write directly with pyarrow (a Spark job for one row
-    # is pure scheduler overhead)
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(paths.globals_, exist_ok=True)
-    pq.write_table(pa.Table.from_pylist([globals_row]),
-                   os.path.join(paths.globals_, "part-00000.parquet"))
-    _write_json_atomic(paths.manifest, {
-        "version": 2,
-        "analyzer": analyzer,
-        "analyzer_impl": "uax29-subset-v1" if analyzer == "standard" else analyzer,
-        **globals_row,
-    })
+    termstats = append(term_stats(read_table(
+        spark, paths, "postings", m["files"]["postings"])), paths, "termstats")
+    publish(paths, {**with_files(m, termstats=termstats),
+                    "build": {**m["build"], "done": True}})
     return paths
 
 
-def load_index(spark: SparkSession, out_dir: str) -> dict:
-    """Open an index: returns dict of DataFrames + globals."""
+def load_index(spark: SparkSession, out_dir: str,
+               manifest: dict | None = None) -> dict:
+    """Open the committed state of an index — or ``manifest``, e.g. a
+    retained PIT record: DataFrames over exactly its listed files, plus
+    the manifest as ``globals``."""
     paths = IndexPaths(out_dir)
-    manifest = _read_json(paths.manifest)
+    m = manifest or read_manifest(out_dir)
     return {
         "paths": paths,
-        "postings": spark.read.parquet(paths.postings),
-        "docstats": spark.read.parquet(paths.docstats),
-        "termstats": spark.read.parquet(paths.termstats),
-        "globals": manifest,
+        **{t: read_table(spark, paths, t, m["files"][t])
+           for t in ("postings", "docstats", "termstats")},
+        "globals": m,
     }

@@ -1,37 +1,38 @@
 """Incremental index maintenance: append a batch of new docs (the NRT
-refresh analog) and compact generations (the TieredMergePolicy analog).
+refresh analog), compact generations (the TieredMergePolicy analog) and
+upsert by id.
 
 Reference behavior (SURVEY.md §2.9, §3.2): writes create new immutable
 segments, visible after refresh; background merges fold small segments
-into larger ones. Spark-first mapping:
+into larger ones. Spark-first mapping — every function here writes only
+new files and then publishes ONE manifest (index/manifest.py), so a
+reader sees either the whole write or none of it:
 
 - ``add_batch`` runs the build's one writer (``build.write_segments``)
   over only the new docs, routed ``seg = pmod(docId, n_segments)`` with
   the manifest's analyzer and index_options. It APPENDS posting blocks
   (a new "generation" of blocks whose doc ranges overlap older ones —
-  scorers merge-sort at decode, codec.merge_generations), docstats
-  files under a generation prefix and the generation's termstats rows,
-  then atomically updates the globals manifest (doc counts, avgdl) from
-  the writer's count summaries. Stored block bounds are (max_tf,
+  scorers merge-sort at decode, codec.merge_generations), docstats files
+  and the generation's termstats rows; the manifest adds them and the
+  writer's counts (doc counts, avgdl). Stored block bounds are (max_tf,
   min_dl_q), avgdl-independent, so older blocks stay valid.
 - ``compact_index`` rewrites each (seg, term) posting list as one sorted
   single-generation block run — decode -> merge -> repack, no
   re-tokenization (the merge reads index bytes only, like Lucene segment
-  merges). termstats is recomputed from the compacted postings metadata.
-
+  merges). termstats is recomputed from the compacted postings metadata;
+  tombstoned docs are dropped. The replaced files are deleted after the
+  publish unless a PIT retains them.
 - ``upsert_batch`` is the versioned-upsert analog (reference:
   index/VersionType.java / index-API overwrite): tombstone every
-  incoming docId (a distributed write to the deletes dir — Lucene's
-  delete-then-add under the hood), then ``add_batch`` the new versions.
-  Readers opening after it returns see exactly the new versions;
-  compaction reclaims the dead ones.
+  incoming docId, compact them away, then append the new versions —
+  all in one commit.
+
+A write that changes termstats publishes no wildgrams
+(``SearchEngine.build_wildcard_index`` rebuilds them).
 """
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
 from typing import Sequence
 
 import numpy as np
@@ -39,11 +40,29 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from opensearch_spark.index import codec
 from opensearch_spark.index.build import (
-    IndexPaths, POSTINGS_SCHEMA, _pack_partition, _read_json,
-    _write_json_atomic, by_seg, prepare, term_stats, write_segments,
+    POSTINGS_SCHEMA, _pack_partition, by_seg, prepare, term_stats, write_segments,
+)
+from opensearch_spark.index.manifest import (
+    IndexPaths, append, publish, read_manifest, read_table, with_files,
 )
 
 OCC_SCHEMA = "docId long, seg int, norm_byte int, pos int, term string"
+
+
+def _add(spark: SparkSession, batch: DataFrame, paths: IndexPaths,
+         manifest: dict, text_col: str, id_cols: Sequence[str],
+         doc_id_col: str | None) -> dict:
+    """The add_batch write against ``manifest``; returns the manifest to
+    publish."""
+    m = write_segments(by_seg(prepare(batch, text_col, id_cols, doc_id_col),
+                              manifest["n_segments"]), paths, manifest)
+    new = m["files"]["postings"][len(manifest["files"]["postings"]):]
+    # per-generation term stats delta from the batch's own posting files
+    termstats = m["files"]["termstats"] + (append(term_stats(read_table(
+        spark, paths, "postings", new)), paths, "termstats") if new else [])
+    m = with_files(m, termstats=termstats, wildgrams=[])
+    m["generations"] += 1
+    return m
 
 
 def add_batch(
@@ -55,49 +74,11 @@ def add_batch(
     doc_id_col: str | None = None,
 ) -> dict:
     """Append one batch of new documents to an existing index. Returns the
-    updated globals manifest. Visibility: readers opening the index after
+    published manifest. Visibility: readers opening the index after
     this returns see the new docs (the refresh analog)."""
     paths = IndexPaths(index_dir)
-    manifest = _read_json(paths.manifest)
-    # new docs can add dictionary terms, so a built wildcard trigram
-    # table would miss them. Mark it STALE rather than deleting: open
-    # readers hold DataFrames over those files (rmtree would crash
-    # them), and a pre-batch reader's stale grams are CONSISTENT with
-    # its pre-batch postings view. New readers skip stale tables and
-    # fall back to the dictionary scan until build_wildcard_index
-    # rebuilds.
-    _wg = os.path.join(index_dir, "wildgrams")
-    if os.path.isdir(_wg):
-        with open(os.path.join(_wg, "_STALE"), "w") as fh:
-            fh.write("superseded by add_batch\n")
-
-    generations = int(manifest.get("generations", 1)) + 1
-    # compaction resets the count but keeps the files: skip used prefixes
-    gen = generations
-    while glob.glob(os.path.join(paths.docstats, f"g{gen}-*")):
-        gen += 1
-    before = set(glob.glob(os.path.join(paths.postings, "*.parquet")))
-    tot = write_segments(
-        by_seg(prepare(batch, text_col, id_cols, doc_id_col),
-               int(manifest["n_segments"])),
-        paths, f"g{gen}", int(manifest["block_size"]),
-        str(manifest.get("analyzer", "standard")),
-        str(manifest.get("index_options", "positions")),
-    )
-    # per-generation term stats delta from the batch's own posting files
-    new = sorted(set(glob.glob(os.path.join(paths.postings, "*.parquet")))
-                 - before)
-    if new:
-        term_stats(spark.read.parquet(*new)).write.mode("append").parquet(
-            paths.termstats)
-
-    manifest["doc_count"] = int(manifest["doc_count"]) + tot["doc_count"]
-    manifest["field_doc_count"] = int(manifest["field_doc_count"]) + tot["fdc"]
-    manifest["sum_ttf"] = int(manifest["sum_ttf"]) + tot["sum_ttf"]
-    manifest["avgdl"] = manifest["sum_ttf"] / max(manifest["field_doc_count"], 1)
-    manifest["generations"] = generations
-    _write_json_atomic(paths.manifest, manifest)
-    return manifest
+    return publish(paths, _add(spark, batch, paths, read_manifest(index_dir),
+                               text_col, id_cols, doc_id_col))
 
 
 def upsert_batch(
@@ -114,24 +95,28 @@ def upsert_batch(
     liveDocs keeping the new copy alive). Our tombstones are global
     docId sets (no per-segment scoping), so the delete must be made
     PHYSICAL before the re-add: tombstone the incoming ids (distributed
-    write), purge them via ``compact_index`` (the merge drops dead
-    docs), then append the new versions. Readers opening after it
-    returns see exactly the new versions; the compaction cost is the
-    price of global tombstones and amortizes when upserts are batched
-    (the reference pays the same cost in merge debt)."""
-    if doc_id_col is None:
-        ids = batch.select(
-            F.xxhash64(*[F.col(c) for c in id_cols]).alias("docId")
-        )
-    else:
-        ids = batch.select(F.col(doc_id_col).cast("long").alias("docId"))
-    deletes_dir = os.path.join(index_dir, "deletes")
-    ids.distinct().write.mode("append").parquet(deletes_dir)
-    compact_index(spark, index_dir)
-    return add_batch(
-        spark, batch, index_dir, text_col=text_col, id_cols=id_cols,
-        doc_id_col=doc_id_col,
-    )
+    write), purge them by compaction (the merge drops dead docs), then
+    append the new versions, and publish all three as one commit.
+    Readers opening after it returns see exactly the new versions; the
+    compaction cost is the price of global tombstones and amortizes
+    when upserts are batched (the reference pays the same cost in merge
+    debt)."""
+    paths = IndexPaths(index_dir)
+    ids = prepare(batch, text_col, id_cols, doc_id_col).select("docId")
+    m = read_manifest(index_dir)
+    m = with_files(m, deletes=m["files"]["deletes"] + append(
+        ids.distinct(), paths, "deletes"))
+    m = _compact(spark, paths, m, None)
+    return publish(paths, _add(spark, batch, paths, m, text_col, id_cols,
+                               doc_id_col))
+
+
+def add_tombstones(paths: IndexPaths, names: Sequence[str]) -> dict:
+    """Publish the latest commit with the tombstone files ``names``
+    (already written to ``deletes/``, e.g. by ``append``) added."""
+    m = read_manifest(paths.root)
+    return publish(paths, with_files(
+        m, deletes=m["files"]["deletes"] + list(names)))
 
 
 def _unpack_partition():
@@ -184,9 +169,9 @@ def _unpack_partition():
 def compact_index(spark: SparkSession, index_dir: str,
                   target_segments: int | None = None) -> dict:
     """Fold all generations into one: rewrite postings as single sorted
-    block runs per (seg, term); recompute termstats from the compacted
-    metadata. Safe to re-run; readers opening after the atomic swap see
-    the compacted index.
+    block runs per (seg, term) without the tombstoned docs; recompute
+    termstats from the compacted metadata. Returns the published
+    manifest; readers opening after it see the compacted index.
 
     ``target_segments``: also MERGE segments down to this count
     (seg -> seg % target) — the TieredMergePolicy analog
@@ -195,89 +180,49 @@ def compact_index(spark: SparkSession, index_dir: str,
     (per-query per-segment overhead); background merges reconcile the
     two. Queries regroup by the new seg ids transparently."""
     paths = IndexPaths(index_dir)
-    manifest = _read_json(paths.manifest)
-    block_size = int(manifest["block_size"])
+    return publish(paths, _compact(spark, paths, read_manifest(index_dir),
+                                   target_segments))
+
+
+def _compact(spark: SparkSession, paths: IndexPaths, manifest: dict,
+             target_segments: int | None) -> dict:
+    """The compaction write against ``manifest``; returns the manifest
+    to publish."""
+    files = manifest["files"]
+    m = dict(manifest)
     nshuf = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     # soft-delete purge (Lucene: merges drop deleted docs and reclaim
     # space): tombstoned docIds are filtered out of the occurrence
-    # stream before re-packing, then docstats/globals are rewritten
-    deletes_dir = os.path.join(index_dir, "deletes")
-    del_df = None
-    if glob.glob(os.path.join(deletes_dir, "*.parquet")):
-        del_df = spark.read.parquet(deletes_dir).select("docId").distinct()
+    # stream before re-packing, then docstats and counts are rewritten
+    del_df = (read_table(spark, paths, "deletes", files["deletes"])
+              .distinct() if files["deletes"] else None)
 
-    tmp_postings = paths.postings + ".compact"
-    shutil.rmtree(tmp_postings, ignore_errors=True)
-    occ = spark.read.parquet(paths.postings).mapInArrow(
-        _unpack_partition(), schema=OCC_SCHEMA
-    )
-    if del_df is not None:
-        occ = occ.join(F.broadcast(del_df), "docId", "left_anti")
-    if target_segments is not None:
-        occ = occ.withColumn(
-            "seg", F.pmod(F.col("seg"), F.lit(int(target_segments))).cast("int")
-        )
-    (
-        occ
-        .repartition(nshuf, "seg", "term")
-        .mapInArrow(_pack_partition(block_size), schema=POSTINGS_SCHEMA)
-        .sortWithinPartitions("term", "block_no")
-        .write.mode("overwrite")
-        .parquet(tmp_postings)
-    )
+    def remap(df: DataFrame) -> DataFrame:
+        if del_df is not None:
+            df = df.join(F.broadcast(del_df), "docId", "left_anti")
+        if target_segments is None:
+            return df
+        return df.withColumn(
+            "seg", F.pmod(F.col("seg"), F.lit(int(target_segments))).cast("int"))
 
-    # atomic-ish swap (single-filesystem rename)
-    old = paths.postings + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.replace(paths.postings, old)
-    os.replace(tmp_postings, paths.postings)
-    shutil.rmtree(old, ignore_errors=True)
-
+    occ = remap(read_table(spark, paths, "postings", files["postings"])
+                .mapInArrow(_unpack_partition(), schema=OCC_SCHEMA))
+    postings = append(
+        occ.repartition(nshuf, "seg", "term")
+        .mapInArrow(_pack_partition(int(m["block_size"])), schema=POSTINGS_SCHEMA)
+        .sortWithinPartitions("term", "block_no"),
+        paths, "postings")
     # termstats: one row per term again, from compacted metadata
-    tmp_ts = paths.termstats + ".compact"
-    shutil.rmtree(tmp_ts, ignore_errors=True)
-    term_stats(spark.read.parquet(paths.postings)).write.mode(
-        "overwrite").parquet(tmp_ts)
-    old = paths.termstats + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.replace(paths.termstats, old)
-    os.replace(tmp_ts, paths.termstats)
-    shutil.rmtree(old, ignore_errors=True)
-
-    if target_segments is not None:
-        # remap docstats seg ids + manifest segment count
-        tmp_ds2 = paths.docstats + ".remap"
-        shutil.rmtree(tmp_ds2, ignore_errors=True)
-        (
-            spark.read.parquet(paths.docstats)
-            .withColumn("seg", F.pmod(F.col("seg"), F.lit(int(target_segments))).cast("int"))
-            .write.mode("overwrite").parquet(tmp_ds2)
-        )
-        old = paths.docstats + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.replace(paths.docstats, old)
-        os.replace(tmp_ds2, paths.docstats)
-        shutil.rmtree(old, ignore_errors=True)
-        manifest["n_segments"] = int(target_segments)
-
+    termstats = append(term_stats(read_table(spark, paths, "postings", postings)),
+                       paths, "termstats")
+    docstats = files["docstats"]
+    if del_df is not None or target_segments is not None:
+        docstats = append(
+            remap(read_table(spark, paths, "docstats", docstats)), paths, "docstats")
     if del_df is not None:
-        # docstats minus tombstones; globals/manifest recomputed
-        tmp_ds = paths.docstats + ".compact"
-        shutil.rmtree(tmp_ds, ignore_errors=True)
-        (
-            spark.read.parquet(paths.docstats)
-            .join(F.broadcast(del_df), "docId", "left_anti")
-            .write.mode("overwrite")
-            .parquet(tmp_ds)
-        )
-        old = paths.docstats + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.replace(paths.docstats, old)
-        os.replace(tmp_ds, paths.docstats)
-        shutil.rmtree(old, ignore_errors=True)
         g = (
-            spark.read.parquet(paths.docstats)
+            read_table(spark, paths, "docstats", docstats)
             .agg(
                 F.count(F.lit(1)).alias("doc_count"),
                 F.sum(F.when(F.col("dl") > 0, 1).otherwise(0)).alias("fdc"),
@@ -285,15 +230,14 @@ def compact_index(spark: SparkSession, index_dir: str,
             )
             .collect()[0]
         )
-        fdc = int(g["fdc"] or 0) or 1
-        manifest.update(
+        m.update(
             doc_count=int(g["doc_count"]),
             field_doc_count=int(g["fdc"] or 0),
             sum_ttf=int(g["sum_ttf"] or 0),
-            avgdl=float(int(g["sum_ttf"] or 0) / fdc),
+            avgdl=float(int(g["sum_ttf"] or 0) / (int(g["fdc"] or 0) or 1)),
         )
-        shutil.rmtree(deletes_dir, ignore_errors=True)
-
-    manifest["generations"] = 1
-    _write_json_atomic(paths.manifest, manifest)
-    return manifest
+    if target_segments is not None:
+        m["n_segments"] = int(target_segments)
+    m["generations"] = 1
+    return with_files(m, postings=postings, termstats=termstats,
+                      docstats=docstats, deletes=[], wildgrams=[])

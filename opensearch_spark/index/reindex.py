@@ -12,7 +12,6 @@ destination build is the normal zero-shuffle segment build.
 
 from __future__ import annotations
 
-import os
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -84,14 +83,15 @@ def update_by_query(
     the post-update corpus view (untouched docs ∪ rewritten docs) —
     reopen with ``SearchEngine(spark, index_dir, corpus=result
     ["corpus"], doc_id_col="docId", ...)`` so fetch/filter/agg results
-    agree with the rewritten index. The PASSED-IN engine is INVALIDATED
-    (its file listings and caches predate the compaction) — like every
-    index mutation here, readers opening after the call see the update.
+    agree with the rewritten index. Like every index mutation here,
+    readers opening after the call see the update; the PASSED-IN engine
+    keeps its own commit, whose files the upsert's compaction deletes.
 
     Scale shape: one semi-join scan to select, one transform projection,
     then the upsert path (tombstone write + compaction + incremental
     add) — no driver-side row loops anywhere."""
-    from opensearch_spark.index.incremental import upsert_batch
+    from opensearch_spark.index.incremental import add_tombstones, upsert_batch
+    from opensearch_spark.index.manifest import IndexPaths, append
     from opensearch_spark.search import dsl as dsl_mod
 
     if engine.corpus is None:
@@ -190,13 +190,8 @@ def update_by_query(
         # distributed tombstone write (the delete_by_query path), AFTER
         # the upsert so its compaction cannot purge these fresh
         # tombstones
-        del_ids.write.mode("append").parquet(
-            os.path.join(index_dir, "deletes"))
-    # poison the stale engine's caches so accidental reuse fails loudly
-    # on the next file read instead of silently serving stale plans
-    engine._search_plans.clear()
-    engine._msearch_plans.clear()
-    engine._term_df_map = None
+        paths = IndexPaths(index_dir)
+        add_tombstones(paths, append(del_ids, paths, "deletes"))
     # allowMissingColumns: a script may ADD a source field (ctx._source
     # mutation of a new name, or a new raw column) — untouched docs get
     # NULL for it, matching the reference's sparse-source semantics

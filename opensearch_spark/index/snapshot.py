@@ -2,10 +2,12 @@
 + ``snapshots/SnapshotsService.java``): point-in-time copies of an index
 into a repository directory, restorable by name.
 
-The index tables are immutable parquet generations, so a snapshot is a
-FILE-LEVEL copy — hardlinked when the repository shares a filesystem
-with the index (the reference's incremental segment reuse: unchanged
-files cost zero bytes), byte-copied otherwise. Restore materializes the
+The index tables are immutable parquet files and ``manifest.json`` lists
+the live ones, so a snapshot is a FILE-LEVEL copy of exactly the
+manifest's files plus the manifest — hardlinked when the repository
+shares a filesystem with the index (the reference's incremental segment
+reuse: unchanged files cost zero bytes), byte-copied otherwise. Files of
+a failed or in-flight write are not copied. Restore materializes the
 file set under a fresh index root.
 """
 
@@ -18,9 +20,9 @@ import shutil
 import time
 from typing import List
 
+from opensearch_spark.index.manifest import IndexPaths, read_manifest
+
 _SNAP_META = "snapshot.json"
-_DATA_DIRS = ("postings", "docstats", "termstats", "deletes")
-_META_FILES = ("manifest.json", "lineage.json")
 
 
 def _link_or_copy(src: str, dst: str) -> None:
@@ -31,33 +33,25 @@ def _link_or_copy(src: str, dst: str) -> None:
 
 
 def create_snapshot(index_dir: str, repo_dir: str, name: str) -> dict:
-    """Snapshot ``index_dir`` into ``repo_dir/name``. Fails if the name
-    exists (snapshots are immutable, like the reference)."""
+    """Snapshot the committed state of ``index_dir`` into
+    ``repo_dir/name``. Fails if the name exists (snapshots are
+    immutable, like the reference)."""
     dest = os.path.join(repo_dir, name)
     if os.path.exists(dest):
         raise ValueError(f"snapshot {name!r} already exists")
+    paths = IndexPaths(index_dir)
+    manifest = read_manifest(index_dir)
     os.makedirs(dest)
-    n_files = 0
-    for d in _DATA_DIRS:
-        src_d = os.path.join(index_dir, d)
-        if not os.path.isdir(src_d):
-            continue
-        for f in glob.glob(os.path.join(src_d, "**", "*"), recursive=True):
-            if os.path.isdir(f):
-                continue
-            rel = os.path.relpath(f, index_dir)
-            out = os.path.join(dest, rel)
-            os.makedirs(os.path.dirname(out), exist_ok=True)
-            _link_or_copy(f, out)
-            n_files += 1
-    for mf in _META_FILES:
-        p = os.path.join(index_dir, mf)
-        if os.path.exists(p):
-            shutil.copy2(p, os.path.join(dest, mf))
+    for table, names in manifest["files"].items():
+        for f in names:
+            os.makedirs(os.path.join(dest, table), exist_ok=True)
+            _link_or_copy(paths.table(table, f), os.path.join(dest, table, f))
+    with open(os.path.join(dest, "manifest.json"), "w") as f:
+        json.dump(manifest, f, indent=1, sort_keys=True)
     meta = {
         "name": name,
         "source": os.path.abspath(index_dir),
-        "n_files": n_files,
+        "n_files": sum(map(len, manifest["files"].values())),
         "created_unix": int(time.time()),
         "state": "SUCCESS",
     }

@@ -54,7 +54,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from opensearch_spark.analysis.analyzer import tokenize
-from opensearch_spark.index.build import IndexPaths, load_index
+from opensearch_spark.index.build import load_index
+from opensearch_spark.index.manifest import (
+    IndexPaths, _write_json_atomic, read_manifest, read_table, with_files,
+)
 from opensearch_spark.search import ast as A, bm25, dsl as dsl_mod
 
 SCORE_SCHEMA = "docId long, score double"
@@ -294,9 +297,9 @@ def _make_tf_scorer(weight: float):
 # ---- driver-local tier: the postings files an engine opened -----------------
 
 class StaleIndexError(RuntimeError):
-    """An index file this engine opened was removed or rewritten
-    (``compact_index``, ``upsert_batch``, ``close_pit``) — reopen the
-    engine."""
+    """An index file this engine opened was deleted: a later commit
+    (``compact_index``, ``upsert_batch``) replaced it and no PIT retains
+    it — reopen the engine."""
 
 
 class _PinnedPostings:
@@ -364,11 +367,18 @@ class SearchEngine:
         pit: dict | None = None,
     ):
         self.spark = spark
-        ix = load_index(spark, index_dir)
+        # point-in-time (reference: CreatePitController.java:52): a PIT
+        # reader opens the commit its token retains instead of the
+        # latest — later generations/tombstones are invisible, deletes
+        # through a PIT are rejected
+        self._pit = pit
+        ix = load_index(spark, index_dir, None if pit is None else read_manifest(
+            index_dir, IndexPaths(index_dir).pit(pit["pit_id"])))
         self.paths: IndexPaths = ix["paths"]
         self.postings: DataFrame = ix["postings"]
         self.docstats: DataFrame = ix["docstats"]
         self.termstats: DataFrame = ix["termstats"]
+        # the manifest of the commit this engine serves: globals + files
         self.globals = ix["globals"]
         # scripted similarity hook (reference: SimilarityService.java:116
         # pluggable per-field similarity): fn(tf, df, dl_q, avgdl, N) ->
@@ -376,23 +386,12 @@ class SearchEngine:
         # score with it instead of BM25 (WAND pruning disabled — its
         # score bounds are BM25-specific).
         self.similarity = similarity
-        self._pit = pit
-        if pit is not None:
-            # point-in-time (reference: CreatePitController.java:52): the
-            # reader is pinned to the exact parquet file set + globals
-            # captured at open — later generations/tombstones are
-            # invisible, deletes through a PIT are rejected.
-            self.postings = spark.read.parquet(*pit["postings_files"])
-            self.docstats = spark.read.parquet(*pit["docstats_files"])
-            self.termstats = spark.read.parquet(*pit["termstats_files"])
-            self.globals = dict(pit["globals"])
         self.avgdl = float(self.globals["avgdl"])
         self.doc_count = int(self.globals["field_doc_count"])
         # the driver-local tier's view of the postings files, pinned on
         # first use: None = not yet; False = not local files, or closed
         self._pinned: "_PinnedPostings | None | bool" = None
         self._closed = False
-        self._postings_scan = self.postings  # the uncached file scan
         # match_only_text analog (reference:
         # MatchOnlyTextFieldMapper.java:46): a docs-only index stores
         # no freqs/positions and ignores norms, so term scoring
@@ -457,15 +456,11 @@ class SearchEngine:
         # the driver tier scores its resident tables one request at a
         # time: their decode caches mutate
         self._tier_lock = _threading.Lock()
-        # wildcard trigram accelerator (build_wildcard_index), if built
-        # and not marked STALE by a later add_batch
-        _wg = os.path.join(self.paths.root, "wildgrams")
+        # wildcard trigram accelerator (build_wildcard_index), if the
+        # commit lists one
+        _wg = self.globals["files"]["wildgrams"]
         self._wildgrams: DataFrame | None = (
-            spark.read.parquet(_wg)
-            if (os.path.isdir(_wg) and pit is None
-                and not os.path.exists(os.path.join(_wg, "_STALE")))
-            else None
-        )
+            read_table(spark, self.paths, "wildgrams", _wg) if _wg else None)
         from opensearch_spark.search.templates import TemplateRegistry
 
         self.templates = TemplateRegistry()
@@ -480,25 +475,25 @@ class SearchEngine:
             return tokenize(text, self.analyzer)
 
         self._tok = _tok
-        # soft deletes (Lucene liveDocs analog): tombstone parquet of
-        # docIds under <index>/deletes; hits are anti-joined against it
-        self._deletes_dir = os.path.join(self.paths.root, "deletes")
+        # soft deletes (Lucene liveDocs analog): the commit's tombstone
+        # files of docIds under <index>/deletes; hits are anti-joined
+        # against them
         self._load_deletes()
 
-    def _load_deletes(self) -> None:
-        """Tombstones: ``self.deletes`` (distinct docIds, for the Spark
-        plans), ``_n_deletes``, and up to MAX_PRUNE_DELETES of them as
-        ``_deleted_ids`` for the driver-local tier (None past that, which
-        keeps the tier off)."""
-        import glob as _glob
-
-        if self._pit is not None:
-            src = list(self._pit.get("deletes_files") or [])
-        else:
-            src = [self._deletes_dir] if _glob.glob(
-                os.path.join(self._deletes_dir, "*.parquet")) else []
+    def _load_deletes(self, published: dict | None = None) -> None:
+        """Tombstones of the served commit: ``self.deletes`` (distinct
+        docIds, for the Spark plans), ``_n_deletes``, and up to
+        MAX_PRUNE_DELETES of them as ``_deleted_ids`` for the
+        driver-local tier (None past that, which keeps the tier off).
+        ``published``: a commit this engine just published tombstones
+        in, whose tombstones it then serves over its own postings."""
+        if published is not None:
+            self.globals = {**with_files(self.globals, deletes=published["files"]["deletes"]),
+                            "commit": published["commit"]}
+        src = self.globals["files"]["deletes"]
         self.deletes: DataFrame | None = (
-            self.spark.read.parquet(*src).select("docId").distinct() if src else None)
+            read_table(self.spark, self.paths, "deletes", src).distinct()
+            if src else None)
         rows = ([] if self.deletes is None
                 else self.deletes.limit(self.MAX_PRUNE_DELETES + 1).collect())
         if len(rows) <= self.MAX_PRUNE_DELETES:
@@ -509,28 +504,19 @@ class SearchEngine:
             self._n_deletes = self.deletes.count()
 
     def _pin_postings(self) -> "_PinnedPostings | bool":
-        """The files ``self.postings`` was opened on (the PIT's pinned
-        list for a PIT reader) with their footers, loaded once; False
-        when one of them is not a local file, or there are none."""
-        from urllib.parse import urlparse
-        from urllib.request import url2pathname
-
+        """The served commit's postings files with their footers, loaded
+        once; False when there are none."""
         with self._plan_cache_lock:
             if self._pinned is None:
-                if self._pit is not None:
-                    files = self._pit["postings_files"]
-                else:
-                    uris = [urlparse(u) for u in self._postings_scan.inputFiles()]
-                    local = all(u.scheme in ("", "file") for u in uris)
-                    files = [url2pathname(u.path) for u in uris] if local else None
+                files = [self.paths.table("postings", f)
+                         for f in self.globals["files"]["postings"]]
                 self._pinned = _PinnedPostings(files) if files else False
             return self._pinned
 
     def close(self) -> None:
         """Release the ``cache=True`` postings/docstats persists, the
         resident tables and the plan caches; searching afterwards
-        raises. Close a cached engine before ``add_batch``/
-        ``compact_index`` rewrite its index in the same session."""
+        raises."""
         with self._tier_lock:
             self._closed = True
             self._pinned = False
@@ -547,80 +533,51 @@ class SearchEngine:
     def open_pit(self) -> dict:
         """Open a point-in-time token (reference: create PIT API,
         ``CreatePitController.java:52`` — a PIT holds segment references
-        that block deletion until closed). The snapshot's parquet files
-        are HARDLINKED into ``<index>/pits/<pit_id>/`` and the token
-        pins those linked paths: link counts keep the bytes alive even
-        after ``compact_index``/``upsert_batch`` rmtree the live
-        generation, so PIT readers survive compaction exactly like
-        Lucene readers holding merged-away segments. ``close_pit``
-        releases the references. Pass to ``SearchEngine(..., pit=
-        token)`` for a pinned read-only reader."""
-        import glob as _glob
-        import shutil as _sh
+        that block deletion until closed). The commit this engine serves
+        is retained as ``<index>/pits/<pit_id>/manifest.json``: writers
+        delete no file such a record lists, so PIT readers survive
+        ``compact_index``/``upsert_batch`` exactly like Lucene readers
+        holding merged-away segments. ``close_pit`` releases it. Pass to
+        ``SearchEngine(..., pit=token)`` for a pinned read-only
+        reader."""
         import uuid as _uuid
 
         pit_id = _uuid.uuid4().hex
-        pit_root = os.path.join(self.paths.root, "pits", pit_id)
-
-        def pin(d: str, name: str) -> list:
-            out = []
-            for f in sorted(_glob.glob(os.path.join(d, "**", "*.parquet"),
-                                       recursive=True)):
-                rel = os.path.relpath(f, d)
-                # skip side-channel dirs Spark's reader also ignores
-                # (e.g. docstats/_summaries): pinning them would feed
-                # them back as EXPLICIT paths, which bypass the
-                # underscore filter and break the schema
-                if any(part.startswith("_") for part in rel.split(os.sep)):
-                    continue
-                dst = os.path.join(pit_root, name, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                try:
-                    os.link(f, dst)
-                except OSError:  # cross-device: fall back to a copy
-                    _sh.copy2(f, dst)
-                out.append(dst)
-            return out
-
-        return {
-            "pit_id": pit_id,
-            "postings_files": pin(self.paths.postings, "postings"),
-            "docstats_files": pin(self.paths.docstats, "docstats"),
-            "termstats_files": pin(self.paths.termstats, "termstats"),
-            "deletes_files": pin(self._deletes_dir, "deletes"),
-            "globals": dict(self.globals),
-        }
+        rec = self.paths.pit(pit_id)
+        os.makedirs(os.path.dirname(rec))
+        _write_json_atomic(rec, self.globals)
+        return {"pit_id": pit_id}
 
     def close_pit(self, token: dict) -> None:
-        """Release a PIT's pinned file references (reference: delete PIT
-        API). Readers still holding the token fail afterwards."""
+        """Release a PIT's retention record (reference: delete PIT API):
+        the next write deletes the files only it kept. Engines opened
+        on the token keep serving until then."""
         import shutil as _sh
 
-        pit_id = token.get("pit_id")
-        if pit_id:
-            _sh.rmtree(os.path.join(self.paths.root, "pits", pit_id),
-                       ignore_errors=True)
+        _sh.rmtree(os.path.dirname(self.paths.pit(token["pit_id"])),
+                   ignore_errors=True)
 
     def delete(self, doc_ids: Sequence[int]) -> int:
         """Soft-delete documents by id (reference: Lucene soft deletes /
         liveDocs — docs stay in segments, queries skip them; space is
-        reclaimed by the next compaction). Appends a tombstone parquet
-        file; visible to THIS engine immediately and to new engines on
-        open."""
+        reclaimed by the next compaction). Writes one tombstone parquet
+        file and publishes it on the latest commit; visible to THIS
+        engine immediately and to new engines on open."""
         import pyarrow as pa
         import pyarrow.parquet as pq
         import uuid
+
+        from opensearch_spark.index.incremental import add_tombstones
 
         if self._pit is not None:
             raise ValueError("PIT reader is a read-only snapshot")
         if not doc_ids:
             return 0
-        os.makedirs(self._deletes_dir, exist_ok=True)
-        pq.write_table(
-            pa.table({"docId": pa.array([int(d) for d in doc_ids], pa.int64())}),
-            os.path.join(self._deletes_dir, f"del-{uuid.uuid4().hex}.parquet"),
-        )
-        self._load_deletes()
+        name = f"del-{uuid.uuid4().hex}.parquet"
+        os.makedirs(self.paths.table("deletes"), exist_ok=True)
+        pq.write_table(pa.table({"docId": pa.array([int(d) for d in doc_ids], pa.int64())}),
+                       self.paths.table("deletes", name))
+        self._load_deletes(add_tombstones(self.paths, [name]))
         return len(doc_ids)
 
     def delete_by_query(self, query: dict | A.AnyNode) -> int:
@@ -630,6 +587,9 @@ class SearchEngine:
         query matching 10^8 docs costs executor memory only (reference:
         TransportDeleteByQueryAction streams scroll batches the same
         way)."""
+        from opensearch_spark.index.incremental import add_tombstones
+        from opensearch_spark.index.manifest import append
+
         if self._pit is not None:
             raise ValueError("PIT reader is a read-only snapshot")
         node = dsl_mod.parse(query) if isinstance(query, dict) else dsl_mod.normalize(query)
@@ -637,8 +597,8 @@ class SearchEngine:
         try:
             n = ids.count()
             if n:
-                ids.write.mode("append").parquet(self._deletes_dir)
-                self._load_deletes()
+                self._load_deletes(add_tombstones(
+                    self.paths, append(ids, self.paths, "deletes")))
         finally:
             ids.unpersist()
         return n
@@ -796,7 +756,7 @@ class SearchEngine:
                 sig = (_json.dumps(
                     [query, sort, search_after, collapse, slice_],
                     sort_keys=True), int(k), int(from_),
-                    terminate_after, self._n_deletes)
+                    terminate_after, self.globals["commit"])
             except TypeError:
                 sig = None
         if sig is not None:
@@ -1538,15 +1498,11 @@ class SearchEngine:
 
     def stats(self) -> dict:
         """`_stats` (reference: RestIndicesStatsAction subset): doc
-        counts, segment/generation counts, deletes, on-disk bytes."""
-        import glob as _glob
-
-        def du(d: str) -> int:
-            return sum(
-                os.path.getsize(f)
-                for f in _glob.glob(os.path.join(d, "**", "*"), recursive=True)
-                if os.path.isfile(f)
-            )
+        counts, segment/generation counts, deletes, on-disk bytes of the
+        served commit's files."""
+        def du(table: str) -> int:
+            return sum(os.path.getsize(self.paths.table(table, f))
+                       for f in self.globals["files"][table])
 
         n_segs = self.docstats.select("seg").distinct().count()
         return {
@@ -1554,9 +1510,9 @@ class SearchEngine:
             "segments": {"count": n_segs,
                          "generations": int(self.globals.get("generations", 1))},
             "store": {
-                "postings_bytes": du(self.paths.postings),
-                "docstats_bytes": du(self.paths.docstats),
-                "termstats_bytes": du(self.paths.termstats),
+                "postings_bytes": du("postings"),
+                "docstats_bytes": du("docstats"),
+                "termstats_bytes": du("termstats"),
             },
             "avgdl": self.avgdl,
         }
@@ -1761,7 +1717,7 @@ class SearchEngine:
         if all(isinstance(q, dict) for q in queries):
             try:
                 sig = (_json.dumps(list(queries), sort_keys=True), int(k),
-                       self._n_deletes)
+                       self.globals["commit"])
             except TypeError:
                 sig = None
         if sig is not None:
@@ -2437,9 +2393,19 @@ class SearchEngine:
         Builds ``<index>/wildgrams`` = (gram, term) over the term
         dictionary, one row per distinct trigram of ``^term$``, sorted
         by gram so the pushdown ``gram IN (...)`` filter row-group-skips
-        at scale. Idempotent; expand_terms uses it automatically when
-        present."""
-        out = os.path.join(self.paths.root, "wildgrams")
+        at scale, and publishes it on the latest commit; expand_terms uses
+        it automatically when the served commit lists it. Raises
+        StaleIndexError when a later commit changed the term dictionary
+        this engine serves."""
+        from opensearch_spark.index.manifest import append, publish
+
+        if self._pit is not None:
+            raise ValueError("PIT reader is a read-only snapshot")
+        latest = read_manifest(self.paths.root)
+        if latest["files"]["termstats"] != self.globals["files"]["termstats"]:
+            raise StaleIndexError(
+                "index changed since open: the term dictionary is newer; "
+                "open a new SearchEngine")
         d = self.termstats.select("term").distinct()
         grams = (
             d.select(
@@ -2456,9 +2422,11 @@ class SearchEngine:
             .repartition(1)
             .sortWithinPartitions("gram")
         )
-        grams.write.mode("overwrite").parquet(out)
-        self._wildgrams = self.spark.read.parquet(out)
-        return out
+        names = append(grams, self.paths, "wildgrams")
+        self.globals = publish(self.paths, with_files(latest, wildgrams=names))
+        self._load_deletes()
+        self._wildgrams = read_table(self.spark, self.paths, "wildgrams", names)
+        return self.paths.table("wildgrams")
 
     @staticmethod
     def _wildcard_grams(pattern: str) -> List[str]:
@@ -2508,7 +2476,11 @@ class SearchEngine:
             )
             cond = c.rlike(f"^(?:{pat})$")
             grams = self._wildcard_grams(node.value)
-            if grams and self._wildgrams is not None:
+            # the accelerator is optional: a later commit that changed
+            # the dictionary deleted it, and the dictionary scan answers
+            if grams and self._wildgrams is not None and all(
+                    os.path.exists(self.paths.table("wildgrams", f))
+                    for f in self.globals["files"]["wildgrams"]):
                 cand = (
                     self._wildgrams.where(F.col("gram").isin(grams))
                     .groupBy("term")

@@ -60,3 +60,41 @@ def count_jobs(spark, fn):
 def jobs(spark):
     """``jobs(fn)`` -> (Spark jobs ``fn()`` ran, its result)."""
     return lambda fn: count_jobs(spark, fn)
+
+
+class InjectedFault(RuntimeError):
+    """Raised by ``fail_nth_write`` in place of a write."""
+
+
+@pytest.fixture
+def fail_nth_write(monkeypatch):
+    """``fail_nth_write(n)`` makes the n-th write from then on raise
+    InjectedFault instead of writing; ``fail_nth_write(0)`` disarms.
+    Writes are the driver's data writes (a Spark ``DataFrameWriter.parquet``
+    or a pyarrow ``parquet.write_table``) and manifest writes (the
+    ``os.replace`` onto a ``manifest.json``). Returns the counter dict:
+    ``seen`` is the number of writes since arming."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    state = {"n": 0, "seen": 0}
+
+    def counted(fn, is_write=lambda *a: True):
+        def write(*args, **kwargs):
+            if is_write(*args):
+                state["seen"] += 1
+                if state["seen"] == state["n"]:
+                    raise InjectedFault(f"injected failure of write {state['n']}")
+            return fn(*args, **kwargs)
+        return write
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counted(DataFrameWriter.parquet))
+    monkeypatch.setattr(pq, "write_table", counted(pq.write_table))
+    monkeypatch.setattr(os, "replace", counted(
+        os.replace, lambda src, dst: os.path.basename(dst) == "manifest.json"))
+
+    def arm(n: int) -> dict:
+        state.update(n=n, seen=0)
+        return state
+
+    return arm

@@ -5,8 +5,9 @@ The key contracts:
   full rebuild over A ∪ B (global df/avgdl updated; multi-generation
   decode merge-sorts correctly)
 - compaction folds generations without changing any result
-- a build killed mid-wave resumes from the lineage manifest and produces
-  content-identical index tables without re-tokenizing completed waves
+- a build killed mid-wave resumes from the manifest's wave record and
+  produces content-identical index tables without re-tokenizing
+  completed waves
 - the Structured Streaming file-source path bootstraps + appends
 """
 
@@ -82,7 +83,7 @@ def test_incremental_equals_full_rebuild(spark, corpora, tmp_path):
     assert bad == 0
 
 
-def test_kill_and_rerun_resume(spark, corpora, tmp_path):
+def test_kill_and_rerun_resume(spark, corpora, tmp_path, fail_nth_write):
     _, _, full = corpora
     ref_dir = str(tmp_path / "ref")
     # reference = SAME config (waves=4), never killed: the invariant is
@@ -91,16 +92,19 @@ def test_kill_and_rerun_resume(spark, corpora, tmp_path):
     # results stay identical.)
     build_index(spark, full, ref_dir, n_segments=8, waves=4)
 
-    # crash the build after wave 0 commits (injected failure = kill)
+    # crash the build after wave 0 commits (injected failure = kill):
+    # wave 0 is one postings write and one manifest publish, so the
+    # third write is wave 1's postings
     kill_dir = str(tmp_path / "killed")
+    fail_nth_write(3)
     with pytest.raises(RuntimeError, match="injected failure"):
-        build_index(
-            spark, full, kill_dir, n_segments=8, waves=4, _fail_after_wave=0
-        )
-    paths = IndexPaths(kill_dir)
-    with open(paths.lineage) as f:
-        lineage = json.load(f)
-    assert lineage["waves_done"] == [0]
+        build_index(spark, full, kill_dir, n_segments=8, waves=4)
+    fail_nth_write(0)
+    with open(IndexPaths(kill_dir).manifest) as f:
+        build = json.load(f)["build"]
+    assert build["waves_done"] == [0] and not build["done"]
+    with pytest.raises(ValueError, match="unfinished build"):
+        SearchEngine(spark, kill_dir)
 
     # rerun resumes (overwrite=False honors the lineage) and must NOT
     # index the finished wave again: poison exactly wave 0's docs

@@ -121,20 +121,23 @@ def test_search_hot_query_plan_cache(eng, spark_path):
     assert eng.search(q, k=8) is not d1
     rows = d1.collect()
     victim = int(rows[0]["docId"])
+    kept = eng.globals["files"]["deletes"]
     eng.delete([victim])
     try:
         d2 = eng.search(q, k=7)
         assert d2 is not d1
         assert victim not in [int(r["docId"]) for r in d2.collect()]
     finally:
-        # leave the module fixture clean for other tests
-        import glob, os as _os
+        _undelete(eng, kept)
 
-        for f in glob.glob(_os.path.join(eng._deletes_dir, "*.parquet")):
-            _os.remove(f)
-        eng._load_deletes()
-        eng._search_plans.clear()
-        eng._msearch_plans.clear()
+
+def _undelete(eng, kept):
+    """Leave the module fixture clean for other tests: publish the index
+    with its tombstone list back at ``kept`` and serve that commit."""
+    from opensearch_spark.index.manifest import publish, read_manifest, with_files
+
+    m = read_manifest(eng.paths.root)
+    eng._load_deletes(publish(eng.paths, with_files(m, deletes=kept)))
 
 
 def _rows(df):
@@ -169,6 +172,7 @@ def test_msearch_tier_tombstones_and_many(eng, tier):
     msearch_many's threads get the same rows."""
     tier(True)
     victims = sorted({d for _, d, _ in _rows(eng.msearch(PROGRAMS, k=3))})
+    kept = eng.globals["files"]["deletes"]
     eng.delete(victims)
     try:
         on = _rows(eng.msearch(PROGRAMS, k=K))
@@ -179,13 +183,7 @@ def test_msearch_tier_tombstones_and_many(eng, tier):
         tier(False)
         assert _rows(eng.msearch(PROGRAMS, k=K)) == on
     finally:
-        import glob, os as _os
-
-        for f in glob.glob(_os.path.join(eng._deletes_dir, "*.parquet")):
-            _os.remove(f)
-        eng._load_deletes()
-        eng._search_plans.clear()
-        eng._msearch_plans.clear()
+        _undelete(eng, kept)
 
 
 def test_msearch_many_tier_threads(spark, eng, tier):

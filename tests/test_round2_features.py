@@ -270,7 +270,9 @@ def test_reindex_with_query_and_transform(spark, ix, tmp_path):
     assert dst.doc_count == n_src
 
 
-def test_snapshot_restore(spark, ix, tmp_path):
+def test_snapshot_restore(spark, ix, tmp_path, fail_nth_write):
+    from conftest import InjectedFault
+    from opensearch_spark.index.incremental import add_batch
     from opensearch_spark.index.snapshot import (
         create_snapshot, list_snapshots, restore_snapshot,
     )
@@ -293,6 +295,27 @@ def test_snapshot_restore(spark, ix, tmp_path):
     qb = [(int(r["docId"]), round(float(r["score"]), 6))
           for r in b.search(Q, k=10).collect()]
     assert qa == qb
+
+    # a snapshot taken after a failed add_batch (its postings landed,
+    # its termstats and manifest did not) restores exactly the pre-state
+    pdf = generate_corpus(60, seed=41)
+    small = str(tmp_path / "small")
+    build_index(spark, spark.createDataFrame(pdf.iloc[:40]), small, n_segments=2)
+
+    def served(root):
+        e = SE(spark, root)
+        return (e.docstats.count(), [(int(r["docId"]), round(float(r["score"]), 6))
+                                     for r in e.search(Q, k=50).collect()])
+
+    pre = served(small)
+    fail_nth_write(2)
+    with pytest.raises(InjectedFault):
+        add_batch(spark, spark.createDataFrame(pdf.iloc[40:]), small)
+    fail_nth_write(0)
+    create_snapshot(small, repo, "after_failed_write")
+    restored = str(tmp_path / "restored_small")
+    restore_snapshot(repo, "after_failed_write", restored)
+    assert served(restored) == pre
 
 
 def test_wrapper_query(eng):

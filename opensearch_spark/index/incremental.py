@@ -8,9 +8,11 @@ into larger ones. Spark-first mapping — every function here writes only
 new files and then publishes ONE manifest (index/manifest.py), so a
 reader sees either the whole write or none of it:
 
-- ``add_batch`` runs the build's one writer (``build.write_segments``)
-  over only the new docs, routed ``seg = pmod(docId, n_segments)`` with
-  the manifest's analyzer and index_options. It APPENDS posting blocks
+- ``add_batch`` refuses docIds the index already holds (live or
+  tombstoned) or that repeat within the batch, then runs the build's
+  one writer (``build.write_segments``) over only the new docs, routed
+  ``seg = pmod(docId, n_segments)`` with the manifest's analyzer and
+  index_options. It APPENDS posting blocks
   (a new "generation" of blocks whose doc ranges overlap older ones —
   scorers merge-sort at decode, codec.merge_generations), docstats files
   and the generation's termstats rows; the manifest adds them and the
@@ -75,10 +77,29 @@ def add_batch(
 ) -> dict:
     """Append one batch of new documents to an existing index. Returns the
     published manifest. Visibility: readers opening the index after
-    this returns see the new docs (the refresh analog)."""
+    this returns see the new docs (the refresh analog).
+
+    Create-only (reference: ``op_type=create``'s version conflict): a
+    batch holding a docId the index already has — live or tombstoned —
+    or one docId twice is refused with ValueError before anything is
+    written; ``upsert_batch`` replaces documents. Every docId therefore
+    lives in exactly one segment, which the driver tier's one-table
+    scoring relies on."""
     paths = IndexPaths(index_dir)
-    return publish(paths, _add(spark, batch, paths, read_manifest(index_dir),
-                               text_col, id_cols, doc_id_col))
+    m = read_manifest(index_dir)
+    # one Spark query over the batch ids and the listed docstats ids
+    # (tombstoned docs keep their docstats row until compaction)
+    dup = (prepare(batch, text_col, id_cols, doc_id_col).select("docId")
+           .unionByName(read_table(spark, paths, "docstats",
+                                   m["files"]["docstats"]).select("docId"))
+           .groupBy("docId").count().where(F.col("count") > 1).limit(1).collect())
+    if dup:
+        raise ValueError(
+            f"add_batch: docId {dup[0]['docId']} occurs {dup[0]['count']} times "
+            "among the batch and the indexed documents (live or deleted); "
+            "add_batch only creates documents — use upsert_batch to replace them")
+    return publish(paths, _add(spark, batch, paths, m, text_col, id_cols,
+                               doc_id_col))
 
 
 def upsert_batch(
@@ -100,7 +121,8 @@ def upsert_batch(
     Readers opening after it returns see exactly the new versions; the
     compaction cost is the price of global tombstones and amortizes
     when upserts are batched (the reference pays the same cost in merge
-    debt)."""
+    debt). Its add skips ``add_batch``'s refusal of indexed docIds: the
+    compaction has just removed them."""
     paths = IndexPaths(index_dir)
     ids = prepare(batch, text_col, id_cols, doc_id_col).select("docId")
     m = read_manifest(index_dir)

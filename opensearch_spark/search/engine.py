@@ -19,11 +19,13 @@ Query lifecycle (the Spark re-expression of SURVEY.md §3.1):
 Driver-local tier: a plain top-k search or an msearch batch of programs
 whose estimated work (``_driver_work``) is under MAX_DRIVER_WORK skips
 steps 3-4 on Spark — the first such request reads the postings files
-the engine opened into resident per-segment block tables (pyarrow, once
-per engine); every such request then scores them in the driver with
-msearch.score_table (the body of the Spark path's scorer) and merges the
-top-k into an in-memory DataFrame (``_driver_topk``). ``close()``
-releases the tables and the engine's persisted frames.
+the engine opened into ONE resident block table over the whole index
+(pyarrow, once per engine); every such request then scores it once in
+the driver with msearch.score_table (the body of the Spark path's
+scorer), drops tombstones and cuts each query at k into an in-memory
+DataFrame (``_driver_topk``); segments are a Spark-side partitioning
+unit only (see wand.py). ``close()`` releases the table and the
+engine's persisted frames.
 
 Scoring-context notes:
 - match (or/and/msm), match_phrase (exact or sloppy) and bools of those
@@ -305,10 +307,11 @@ class StaleIndexError(RuntimeError):
 class _PinnedPostings:
     """The postings files an engine opened (or a PIT token's): footers
     read on first tier use for each file's (size, mtime) identity and
-    the compressed bytes (``nbytes``); ``load`` reads every file once
-    into one resident ``wand.BlockTable`` per segment (``tables``), kept
-    until the engine closes like a segment reader until refresh;
-    ``check`` refuses files changed since they were pinned."""
+    the compressed bytes (``nbytes``); ``load`` reads the columns a
+    ``wand.BlockTable`` uses from every file once into one resident
+    table over all segments (``table``), kept until the engine closes
+    like a segment reader until refresh; ``check`` refuses files changed
+    since they were pinned."""
 
     def __init__(self, files: Sequence[str]):
         import pyarrow.parquet as pq
@@ -327,7 +330,7 @@ class _PinnedPostings:
             self.nbytes += sum(md.row_group(r).column(c).total_compressed_size
                                for r in range(md.num_row_groups)
                                for c in range(md.num_columns))
-        self.tables: "list | None" = None
+        self.table = None
 
     def check(self) -> None:
         for f, ident in zip(self.files, self.ident):
@@ -346,11 +349,8 @@ class _PinnedPostings:
 
         from opensearch_spark.search import wand
 
-        rows = pa.concat_tables([pq.read_table(f) for f in self.files])
-        seg = rows.column("seg").to_numpy()
-        # an index without postings rows still gets one (empty) table
-        self.tables = [wand.BlockTable(rows.filter(seg == s))
-                       for s in np.unique(seg)] or [wand.BlockTable(rows)]
+        self.table = wand.BlockTable(pa.concat_tables(
+            [pq.read_table(f, columns=list(wand._COLS)) for f in self.files]))
 
 
 class SearchEngine:
@@ -453,8 +453,8 @@ class SearchEngine:
         # get/evict/put must be atomic or two threads evicting the same
         # head key race into KeyError
         self._plan_cache_lock = _threading.Lock()
-        # the driver tier scores its resident tables one request at a
-        # time: their decode caches mutate
+        # the driver tier scores its resident table one request at a
+        # time: its decode cache mutates
         self._tier_lock = _threading.Lock()
         # wildcard trigram accelerator (build_wildcard_index), if the
         # commit lists one
@@ -515,7 +515,7 @@ class SearchEngine:
 
     def close(self) -> None:
         """Release the ``cache=True`` postings/docstats persists, the
-        resident tables and the plan caches; searching afterwards
+        resident table and the plan caches; searching afterwards
         raises."""
         with self._tier_lock:
             self._closed = True
@@ -637,15 +637,16 @@ class SearchEngine:
     def _driver_topk(self, nodes: Sequence[A.AnyNode], k: int
                      ) -> "pd.DataFrame | None":
         """Per-qid top-k (qid, docId, score) of ``nodes``, in final order,
-        computed in the driver: ``msearch.score_table`` over the resident
-        tables (loaded by the first such request; one lock, as the decode
-        caches mutate) with ``k`` + the tombstone count, tombstones
-        dropped, merged by (score desc, docId asc). ``attrs["tier"]``
-        holds the block counters and whether this request loaded the
-        tables. A changed pinned file raises StaleIndexError. None when
-        the Spark plan must run: a node without a program, a scripted
-        similarity, non-local postings, too many tombstones, or work
-        over MAX_DRIVER_WORK."""
+        computed in the driver: one ``msearch.score_table`` over the
+        resident table (loaded by the first such request; one lock, as
+        its decode cache mutates) with ``k`` + the tombstone count, which
+        yields each qid's rows by (score desc, docId asc); tombstones are
+        dropped and each qid cut at ``k``. ``attrs["tier"]`` holds the
+        block counters and whether this request loaded the table. A
+        changed pinned file raises StaleIndexError. None when the Spark
+        plan must run: a node without a program, a scripted similarity,
+        non-local postings, too many tombstones, or work over
+        MAX_DRIVER_WORK."""
         from opensearch_spark.search import msearch as M
 
         if (self.similarity is not None or k < 1 or self._deleted_ids is None
@@ -661,23 +662,18 @@ class SearchEngine:
         pinned = self._pinned
         with self._tier_lock:
             pinned.check()
-            loaded = pinned.tables is None
+            loaded = pinned.table is None
             if loaded:
                 pinned.load()
-            scored = [M.score_table(t, programs, idfs, self.avgdl, k + self._n_deletes)
-                      for t in pinned.tables]
-        out = pd.concat([part for part, _ in scored], ignore_index=True)
+            out, stats = M.score_table(pinned.table, programs, idfs, self.avgdl,
+                                       k + self._n_deletes)
         if self._deleted_ids.size:
             out = out[~np.isin(out["docId"].to_numpy(), self._deleted_ids)]
-        qid, doc, score = (out[c].to_numpy() for c in ("qid", "docId", "score"))
-        order = np.lexsort((doc, -score, qid))
-        qid = qid[order]
-        rank = np.arange(qid.size) - np.searchsorted(qid, qid)
-        keep = order[rank < k]
-        out = out.iloc[keep].reset_index(drop=True)
-        out.attrs["tier"] = {"blocks_decoded": sum(st["decoded"] for _, st in scored),
-                             "blocks_total": sum(st["total"] for _, st in scored),
-                             "pinned": loaded}
+            qid = out["qid"].to_numpy()  # programs, so rows, in qid order
+            out = out[np.arange(qid.size) - np.searchsorted(qid, qid) < k]
+        out = out.reset_index(drop=True)
+        out.attrs["tier"] = {"blocks_decoded": stats["decoded"],
+                             "blocks_total": stats["total"], "pinned": loaded}
         return out
 
     def _local_frame(self, pdf: pd.DataFrame, cols: Sequence[str]) -> DataFrame:
@@ -1117,7 +1113,7 @@ class SearchEngine:
             # once an action runs; plan strings are available immediately.
             # "path" says which tier answered the hits: "driver" (in
             # process, _driver_topk, with its block counters and whether
-            # this request loaded the resident tables) or "spark".
+            # this request loaded the resident table) or "spark".
             prof: dict = {"query": {
                 "plan": hits._jdf.queryExecution().executedPlan().toString(),
                 "parsed": repr(dsl_mod.parse(q) if isinstance(q, dict) else q),

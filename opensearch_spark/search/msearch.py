@@ -4,11 +4,11 @@ Spark job.
 ``build_program`` turns a match (or/and/msm), match_phrase (any slop),
 or bool-of-those AST into a flat ``Program``; ``_run_program`` is its
 combine in numpy. ``wand.score_program`` runs a program over one
-segment (block-max pruning, one decode, this combine, top-k), and every
-such query runs through it: ``search``, ``compile`` and ``count``
-score one program per segment, an msearch batch scores all of its
-programs against one shared ``wand.BlockTable`` (one decode cache) per
-segment.
+``wand.BlockTable`` (block-max pruning, one decode, this combine,
+top-k), and every such query runs through it: on the Spark plan
+``search``, ``compile`` and ``count`` score one program per segment,
+and an msearch batch scores all of its programs against one shared
+table (one decode cache) per segment.
 
 Reference: the `_msearch` endpoint executes a list of search requests in
 a single round trip (``action/search/TransportMultiSearchAction.java``,
@@ -27,8 +27,8 @@ result shape.
 
 A small batch of programs runs no Spark job at all: the engine's
 driver-local tier (``SearchEngine._driver_topk``) runs ``score_table``,
-the body of ``make_msearch_scorer``, over its resident per-segment
-tables in the driver process.
+the body of ``make_msearch_scorer``, once over its one resident table
+of every segment's rows in the driver process.
 """
 
 from __future__ import annotations
@@ -163,10 +163,12 @@ def position_terms(programs: Sequence[Program]) -> set:
 
 def score_table(table, programs: Sequence[Program], idfs: Dict[str, float],
                 avgdl: float, k: Optional[int]) -> Tuple[pd.DataFrame, dict]:
-    """Every program scored against one segment's ``wand.BlockTable``:
-    (per-(query, segment) top-k, or every match when ``k`` is None, as
-    (qid, docId, score); {"decoded": rows this call decoded — not those
-    the table's cache held, "total": rows the programs reference}."""
+    """Every program scored against one ``wand.BlockTable`` (one
+    segment's rows on the Spark plan, every segment's in the driver
+    tier): (per-(query, table) top-k by (score desc, docId asc), or
+    every match when ``k`` is None, as (qid, docId, score) in program
+    order; {"decoded": rows this call decoded — not those the table's
+    cache held, "total": rows the programs reference}."""
     from opensearch_spark.search import wand
 
     before = table.n_decodes

@@ -1,4 +1,4 @@
-"""One per-segment program scorer with block-max pruning.
+"""One program scorer with block-max pruning, over one block table.
 
 Reference behavior (SURVEY.md §4.2): Lucene's TopScoreDocCollector raises
 ``minCompetitiveScore`` once the per-shard heap holds k docs, letting the
@@ -12,12 +12,20 @@ bounds any score contribution from that block (impact is increasing in tf
 and decreasing in dl; storing the pieces instead of the value keeps the
 bound valid when avgdl drifts under incremental updates).
 
-A ``BlockTable`` holds one segment's block rows (Arrow byte buffers,
-numpy block metadata) plus a decode cache, shared by every program
-scored against the segment: for one Spark task's group on the Spark
-path, for the engine's life in the driver tier's resident tables.
-``score_program`` runs a match (or/and/msm), phrase, sloppy
-phrase, or bool-of-those program (``msearch.Program``) in four steps:
+A ``BlockTable`` holds block rows (Arrow byte buffers, numpy block
+metadata) plus a decode cache, shared by every program scored against
+it: one segment's rows for one Spark task's group on the Spark path;
+every segment's rows, for the engine's life, in the driver tier's one
+resident table. Rows of several segments or generations overlap in doc
+ranges, and each term's docs are merge-sorted at decode; since every
+docId lives in one segment and scores use global idf/avgdl, one table
+over all segments gives the same top-k as per-segment tables merged by
+(score desc, docId asc), and MaxScore's θ over the whole index is a
+higher, still valid floor (``add_batch`` refuses docIds already
+indexed, so no docId spans two segments).
+
+``score_program`` runs a match (or/and/msm), phrase, sloppy phrase, or
+bool-of-those program (``msearch.Program``) in four steps:
 
  1. pruning picks which block rows to decode —
     - a lone OR clause runs MaxScore: the strongest term's k-th best
@@ -35,7 +43,8 @@ phrase, or bool-of-those program (``msearch.Program``) in four steps:
  4. top-k by (score desc, docId asc).
 
 Pruning only changes which bytes get decoded: the top-k equals full
-decode plus ``_run_program`` (tests/test_wand.py).
+decode plus ``_run_program``, and one table over several segments gives
+the merged per-segment top-k (tests/test_wand.py).
 """
 
 from __future__ import annotations
@@ -62,13 +71,13 @@ _COLS = ("term", "block_no", "first_doc", "last_doc", "n_docs", "max_tf", "min_d
 
 
 class BlockTable:
-    """One segment's posting-block rows (an Arrow table, or a pandas
-    frame converted to one) in (term, first_doc, block_no) order — terms
-    dictionary coded, byte columns left in their Arrow buffers, rows
-    already in order not re-sorted — with a decode cache: each row is
-    decoded at most once, into a fixed slot. Rows of ``pos_terms`` and of
-    later ``want_positions`` terms also decode positions (a row decoded
-    before without them is decoded again)."""
+    """Posting-block rows of one segment or of many (an Arrow table, or
+    a pandas frame converted to one) in (term, first_doc, block_no)
+    order — terms dictionary coded, byte columns left in their Arrow
+    buffers, rows already in order not re-sorted — with a decode cache:
+    each row is decoded at most once, into a fixed slot. Rows of
+    ``pos_terms`` and of later ``want_positions`` terms also decode
+    positions (a row decoded before without them is decoded again)."""
 
     def __init__(self, rows, pos_terms: Iterable[str] = ()):
         if isinstance(rows, pd.DataFrame):  # without pandas metadata: 4x cheaper
@@ -285,8 +294,9 @@ def _select_rows(table: BlockTable, prog: M.Program, terms: List[str], rows: np.
 
 def score_program(table: BlockTable, prog: M.Program, idfs: Dict[str, float],
                   avgdl: float, k: Optional[int]) -> Tuple[np.ndarray, np.ndarray, dict]:
-    """(docIds, scores, {"decoded", "total"} blocks) of ``prog`` over one
-    segment: per-segment top-k, or every match when ``k`` is None."""
+    """(docIds, scores, {"decoded", "total"} blocks) of ``prog`` over
+    ``table``: its top-k by (score desc, docId asc), or every match when
+    ``k`` is None."""
     terms = sorted({t for c in prog.clauses for t in c.terms})
     table.want_positions(M.position_terms([prog]))
     rows = np.concatenate([np.empty(0, np.int64)] + [table.rows(t) for t in terms])

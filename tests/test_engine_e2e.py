@@ -444,10 +444,10 @@ def test_tier_stale_reader_raises(spark, tmp_path, tier):
     assert fresh.search(TIER_QUERIES[0], k=K).collect()
 
 
-# ---- driver-local tier: resident segment tables -------------------------
+# ---- driver-local tier: the resident block table ------------------------
 
 def test_tier_match_then_phrase_positions(spark, tmp_path, tier):
-    """The resident tables keep decodes across requests: a match decodes
+    """The resident table keeps decodes across requests: a match decodes
     its term's rows without positions, and a later phrase with that term
     must still get them."""
     root = str(tmp_path / "ix")
@@ -456,11 +456,11 @@ def test_tier_match_then_phrase_positions(spark, tmp_path, tier):
     match, phrase = {"match": {"content": "return"}}, {"match_phrase": {"content": "return class"}}
     on, off = both_paths(eng, tier, match)
     assert on == off and on
-    tables = eng._pinned.tables
-    assert any((t._done & (t._pos_off < 0)).any() for t in tables)
+    table = eng._pinned.table
+    assert (table._done & (table._pos_off < 0)).any()
     on, off = both_paths(eng, tier, phrase)
     assert on == off and on
-    assert eng._pinned.tables is tables
+    assert eng._pinned.table is table
 
 
 def test_tier_reads_each_pinned_file_once(spark, tmp_path, tier, monkeypatch):
@@ -494,7 +494,7 @@ def test_tier_reads_each_pinned_file_once(spark, tmp_path, tier, monkeypatch):
 
 def test_tier_profile_counts_new_decodes(spark, tmp_path, tier):
     """``profile`` of a tier request: the first one loads the resident
-    tables; a repeat decodes nothing new, as every row it needs is
+    table; a repeat decodes nothing new, as every row it needs is
     cached."""
     root = str(tmp_path / "ix")
     corpus = _fresh_index(spark, root)
@@ -513,7 +513,7 @@ def test_tier_profile_counts_new_decodes(spark, tmp_path, tier):
 
 def test_close_releases_cache_and_tables(spark, tmp_path, tier):
     """close() unpersists the cache=True frames, drops the resident
-    tables, and a closed engine refuses to search."""
+    table, and a closed engine refuses to search."""
     root = str(tmp_path / "ix")
     corpus = _fresh_index(spark, root)
     eng = SearchEngine(spark, root, corpus=corpus, cache=True)
@@ -524,7 +524,7 @@ def test_close_releases_cache_and_tables(spark, tmp_path, tier):
     cm = spark._jsparkSession.sharedState().cacheManager()
     frames = (eng.postings, eng.docstats)
     assert all(cm.lookupCachedData(df._jdf).isDefined() for df in frames)
-    assert eng._pinned.tables
+    assert eng._pinned.table
     eng.close()
     assert not any(cm.lookupCachedData(df._jdf).isDefined() for df in frames)
     assert eng._pinned is False

@@ -169,6 +169,56 @@ def test_add_batch_honours_docs_only_index_options(spark, tmp_path):
     assert all(r["ttf"] == r["df"] for r in ts)
 
 
+def test_add_batch_refuses_indexed_doc_ids(spark, tmp_path, tier):
+    """add_batch only creates documents: a docId the index holds (live
+    or tombstoned) or one repeated within the batch is refused before
+    anything is written. On a valid multi-generation index every search
+    then returns each docId at most once, on the driver tier and on the
+    Spark plan."""
+    from opensearch_spark.index.manifest import read_manifest
+
+    schema = "doc_id long, text string"
+    out = str(tmp_path / "ix")
+    kw = dict(text_col="text", doc_id_col="doc_id")
+
+    def batch(rows):
+        return spark.createDataFrame(rows, schema)
+
+    build_index(spark, batch([(i, f"alpha beta w{i}") for i in range(1, 9)]),
+                out, n_segments=4, **kw)
+    add_batch(spark, batch([(11, "alpha gamma"), (12, "beta gamma alpha")]), out, **kw)
+    SearchEngine(spark, out, text_field="text").delete([3])
+    before = read_manifest(out)
+    for rows, dup in (([(20, "alpha"), (5, "alpha beta")], 5),      # live, first build
+                      ([(21, "gamma"), (12, "beta")], 12),          # live, second generation
+                      ([(22, "gamma"), (3, "alpha beta")], 3),      # tombstoned
+                      ([(23, "alpha"), (23, "beta gamma")], 23)):   # repeated in the batch
+        with pytest.raises(ValueError, match=f"docId {dup} occurs 2 times.*upsert_batch"):
+            add_batch(spark, batch(rows), out, **kw)
+        assert read_manifest(out) == before
+
+    add_batch(spark, batch([(30, "alpha beta gamma"), (31, "alpha alpha w2")]), out, **kw)
+    eng = SearchEngine(spark, out, text_field="text")
+    queries = [{"match": {"text": "alpha gamma w2"}},
+               {"match": {"text": {"query": "alpha beta", "operator": "and"}}},
+               {"match_phrase": {"text": "alpha beta"}},
+               {"bool": {"must": [{"match": {"text": "alpha"}}],
+                         "should": [{"match": {"text": "gamma"}}]}}]
+    got = {}
+    for on in (True, False):
+        tier(on)
+        got[on] = [[int(r["docId"]) for r in eng.search(q, k=50).collect()]
+                   for q in queries]
+        by_qid = {}
+        for r in eng.msearch(queries, k=50).collect():
+            by_qid.setdefault(int(r["qid"]), []).append(int(r["docId"]))
+        assert [by_qid.get(i, []) for i in range(len(queries))] == got[on]
+        for ids in got[on]:
+            assert ids and len(ids) == len(set(ids)) and 3 not in ids
+    assert got[True] == got[False]
+    assert 30 in got[True][2] and 12 not in got[True][2]
+
+
 def test_streaming_file_source(spark, corpora, tmp_path):
     from opensearch_spark.streaming.ingest import start_indexing_stream
 

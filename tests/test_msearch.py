@@ -215,7 +215,7 @@ def test_msearch_many_tier_threads(spark, eng, tier):
 
 
 def test_msearch_many_tier_threads_mixed(spark, eng, tier):
-    """Twelve msearch_many threads on one fresh engine's resident tables,
+    """Twelve msearch_many threads on one fresh engine's resident table,
     phrase batches and match batches interleaved (a phrase needs
     positions of rows a match decoded without them): every batch equals
     the Spark plan's answer."""

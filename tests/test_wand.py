@@ -299,6 +299,72 @@ def test_program_multi_generation_rank_identity():
         np.testing.assert_allclose(gs, ws, rtol=0, atol=1e-12)
 
 
+def test_one_table_equals_merged_segment_tables():
+    """The driver tier scores ONE table over every segment's rows. Over
+    3 segments with interleaved doc ranges (seg = doc % 3), each holding
+    two generations, it must give the same top-k as per-segment tables
+    merged by (score desc, docId asc) — for a lone OR clause (MaxScore),
+    AND, an exact and a sloppy phrase, and a bool with must_not and
+    minimum_should_match. Docs 2j and 2j+1 (different segments) carry
+    identical postings, and k cuts such a tied pair, so the k-th place
+    is a score tie across segments."""
+    from opensearch_spark.search import msearch as M
+
+    rng = np.random.default_rng(9)
+    n_base, n_seg = 150, 3
+    dl_base = rng.integers(10, 120, size=n_base)
+    postings = {}
+    for i in range(6):
+        base = np.sort(rng.choice(n_base, size=int(rng.integers(40, n_base)), replace=False))
+        tfs = rng.integers(1, 5, size=base.size)
+        docs = np.stack([2 * base, 2 * base + 1], axis=1).ravel().astype(np.int64)
+        postings[f"t{i}"] = (docs, np.repeat(tfs, 2).astype(np.int64),
+                             np.repeat(dl_base[base], 2).astype(np.int64))
+    parts = {}
+    for seg in range(n_seg):
+        for gen in range(2):
+            part = {}
+            for t, (docs, tfs, dls) in postings.items():
+                keep = (docs % n_seg == seg) & ((docs // n_seg) % 2 == gen)
+                part[t] = (docs[keep], tfs[keep], dls[keep])
+            parts[seg, gen] = make_group_pdf(part).assign(seg=seg)
+    idfs = {t: bm25.idf(len(p[0]), 2 * n_base) for t, p in postings.items()}
+
+    def clause(occur, kind, terms, **kw):
+        return M._Clause(occur=occur, kind=kind, terms=terms, **kw)
+
+    programs = {
+        "or": [clause("must", "match", ["t0", "t1", "t2"])],
+        "and": [clause("must", "match", ["t0", "t1"], operator="and")],
+        "phrase": [clause("must", "phrase", ["t0", "t1"])],
+        "sloppy": [clause("must", "phrase", ["t1", "t3", "t2"], slop=2)],
+        "bool": [clause("must", "match", ["t0", "t3"]),
+                 clause("should", "match", ["t1"]),
+                 clause("should", "phrase", ["t2", "t4"], weight=1.5),
+                 clause("must_not", "match", ["t5"])],
+    }
+    one_table = wand.BlockTable(pd.concat(parts.values(), ignore_index=True))
+    seg_tables = [wand.BlockTable(pd.concat([parts[seg, 0], parts[seg, 1]], ignore_index=True))
+                  for seg in range(n_seg)]
+    for name, clauses in programs.items():
+        prog = M.Program(qid=0, clauses=clauses, bool_msm=1 if name == "bool" else 0,
+                         n_must=sum(c.occur == "must" for c in clauses))
+        whole = M.score_table(one_table, [prog], idfs, AVGDL, None)[0]
+        whole = whole.sort_values(["score", "docId"], ascending=[False, True])
+        d, sc = whole["docId"].to_numpy(), whole["score"].to_numpy()
+        # the first tied pair from rank 5 on sets k: the k-th and the
+        # (k+1)-th hit tie, in different segments
+        k = next(r for r in range(5, d.size) if sc[r - 1] == sc[r])
+        assert d[k - 1] % n_seg != d[k] % n_seg, name
+
+        one = M.score_table(one_table, [prog], idfs, AVGDL, k)[0]
+        per_seg = pd.concat([M.score_table(t, [prog], idfs, AVGDL, k)[0] for t in seg_tables],
+                            ignore_index=True)
+        merged = per_seg.sort_values(["score", "docId"], ascending=[False, True]).head(k)
+        assert one["docId"].tolist() == merged["docId"].tolist() == d[:k].tolist(), name
+        np.testing.assert_allclose(one["score"], merged["score"], rtol=0, atol=1e-12)
+
+
 def test_program_pruning_decodes_fewer_blocks():
     """A sparse must + dense shoulds: should blocks outside the must
     candidates are never decoded."""

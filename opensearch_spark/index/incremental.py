@@ -87,19 +87,31 @@ def add_batch(
     scoring relies on."""
     paths = IndexPaths(index_dir)
     m = read_manifest(index_dir)
-    # one Spark query over the batch ids and the listed docstats ids
-    # (tombstoned docs keep their docstats row until compaction)
-    dup = (prepare(batch, text_col, id_cols, doc_id_col).select("docId")
-           .unionByName(read_table(spark, paths, "docstats",
-                                   m["files"]["docstats"]).select("docId"))
-           .groupBy("docId").count().where(F.col("count") > 1).limit(1).collect())
+    # tombstoned docs keep their docstats row until compaction
+    repeats, indexed = _create_only(
+        prepare(batch, text_col, id_cols, doc_id_col).select("docId"),
+        read_table(spark, paths, "docstats", m["files"]["docstats"]))
+    dup = repeats.limit(1).collect()
+    if not dup:
+        dup = [(d, 1 + indexed.where(F.col("docId") == d).count())
+               for (d,) in indexed.limit(1).collect()]
     if dup:
         raise ValueError(
-            f"add_batch: docId {dup[0]['docId']} occurs {dup[0]['count']} times "
+            f"add_batch: docId {dup[0][0]} occurs {dup[0][1]} times "
             "among the batch and the indexed documents (live or deleted); "
             "add_batch only creates documents — use upsert_batch to replace them")
     return publish(paths, _add(spark, batch, paths, m, text_col, id_cols,
                                doc_id_col))
+
+
+def _create_only(batch_ids: DataFrame, docstats: DataFrame) -> tuple:
+    """``add_batch``'s refusals as frames: (docIds repeated within the
+    batch with their ``count``, a groupBy over the batch ids alone;
+    docstats docIds the batch holds, a left-semi join against the
+    broadcast batch ids). Neither shuffles the index's docstats, so the
+    check costs what the batch costs, not what the index holds."""
+    return (batch_ids.groupBy("docId").count().where(F.col("count") > 1),
+            docstats.select("docId").join(F.broadcast(batch_ids), "docId", "left_semi"))
 
 
 def upsert_batch(

@@ -15,6 +15,8 @@ Query lifecycle (the Spark re-expression of SURVEY.md §3.1):
 4. coordinator reduce: global ``orderBy(score desc, docId asc).limit(k)``
    — Spark's TakeOrderedAndProject, the TopDocs.merge analog
 5. fetch phase: broadcast-join winners back to the corpus row
+   (driver-tier hits: read their rows from the corpus parquet files by
+   row index in the driver, search/stored.py)
 
 Driver-local tier: a plain top-k search or an msearch batch of programs
 whose estimated work (``_driver_work``) is under MAX_DRIVER_WORK skips
@@ -24,8 +26,10 @@ the engine opened into ONE resident block table over the whole index
 the driver with msearch.score_table (the body of the Spark path's
 scorer), drops tombstones and cuts each query at k into an in-memory
 DataFrame (``_driver_topk``); segments are a Spark-side partitioning
-unit only (see wand.py). ``close()`` releases the table and the
-engine's persisted frames.
+unit only (see wand.py). A tier request's fetch reads its rows with
+pyarrow through a docId map built by one Spark job on the engine's
+first tier fetch (``_fetch_local``). ``close()`` releases the table,
+the map and the engine's persisted frames.
 
 Scoring-context notes:
 - match (or/and/msm), match_phrase (exact or sloppy) and bools of those
@@ -60,7 +64,7 @@ from opensearch_spark.index.build import load_index
 from opensearch_spark.index.manifest import (
     IndexPaths, _write_json_atomic, read_manifest, read_table, with_files,
 )
-from opensearch_spark.search import ast as A, bm25, dsl as dsl_mod
+from opensearch_spark.search import ast as A, bm25, dsl as dsl_mod, stored
 
 SCORE_SCHEMA = "docId long, score double"
 
@@ -311,12 +315,14 @@ class _PinnedPostings:
     ``wand.BlockTable`` uses from every file once into one resident
     table over all segments (``table``), kept until the engine closes
     like a segment reader until refresh; ``check`` refuses files changed
-    since they were pinned."""
+    since they were pinned. ``docstats``: the commit's docstats files,
+    whose docIds ``load`` checks are unique."""
 
-    def __init__(self, files: Sequence[str]):
+    def __init__(self, files: Sequence[str], docstats: Sequence[str]):
         import pyarrow.parquet as pq
 
         self.files = list(files)
+        self.docstats = list(docstats)
         self.ident, self.nbytes = [], 0
         for f in self.files:
             try:
@@ -349,6 +355,17 @@ class _PinnedPostings:
 
         from opensearch_spark.search import wand
 
+        # one table scores each docId once: an index that holds a docId
+        # twice (written before add_batch refused indexed docIds) would
+        # have its copies' scores summed or repeated
+        ids = np.sort(np.concatenate([np.empty(0, np.int64)] + [
+            pq.read_table(f, columns=["docId"]).column(0).to_numpy()
+            for f in self.docstats]))
+        rep = ids[1:][ids[1:] == ids[:-1]]
+        if rep.size:
+            raise ValueError(
+                f"the index holds docId {rep[0]} more than once; replace "
+                "that document with upsert_batch (or rebuild the index)")
         self.table = wand.BlockTable(pa.concat_tables(
             [pq.read_table(f, columns=list(wand._COLS)) for f in self.files]))
 
@@ -391,6 +408,11 @@ class SearchEngine:
         # the driver-local tier's view of the postings files, pinned on
         # first use: None = not yet; False = not local files, or closed
         self._pinned: "_PinnedPostings | None | bool" = None
+        # the driver fetch's reader of the corpus files (search/stored.py),
+        # opened on the first tier fetch: None = not yet; False = the
+        # corpus is not a bare scan of local parquet files, or closed
+        self._corpus_scan = corpus
+        self._stored: "stored.StoredFields | None | bool" = None
         self._closed = False
         # match_only_text analog (reference:
         # MatchOnlyTextFieldMapper.java:46): a docs-only index stores
@@ -508,18 +530,21 @@ class SearchEngine:
         once; False when there are none."""
         with self._plan_cache_lock:
             if self._pinned is None:
-                files = [self.paths.table("postings", f)
-                         for f in self.globals["files"]["postings"]]
-                self._pinned = _PinnedPostings(files) if files else False
+                files = self.globals["files"]
+                self._pinned = _PinnedPostings(
+                    [self.paths.table("postings", f) for f in files["postings"]],
+                    [self.paths.table("docstats", f) for f in files["docstats"]],
+                ) if files["postings"] else False
             return self._pinned
 
     def close(self) -> None:
         """Release the ``cache=True`` postings/docstats persists, the
-        resident table and the plan caches; searching afterwards
-        raises."""
+        resident table, the driver fetch's docId map and the plan
+        caches; searching afterwards raises."""
         with self._tier_lock:
             self._closed = True
             self._pinned = False
+            self._stored = False
         with self._plan_cache_lock:
             self._search_plans.clear()
             self._msearch_plans.clear()
@@ -882,7 +907,8 @@ class SearchEngine:
         Returns {"hits": DataFrame, "aggregations": DataFrame | None}.
         ``hits`` carries (docId, score [, sort/collapse columns]); with
         ``_source`` or ``highlight`` the corpus columns are joined in
-        (the fetch phase)."""
+        (the fetch phase; driver-tier hits read them in the driver,
+        ``_fetch_local``)."""
         q = body.get("query", {"match_all": {}})
         size = int(body.get("size", 10))
         from_ = int(body.get("from", 0))
@@ -1009,7 +1035,7 @@ class SearchEngine:
                 fetched = self.fetch(
                     hits.drop(*[c for c in hits.columns if c in corp_cols]))
             else:
-                fetched = self._fetch_local(local)
+                fetched = self._fetch_local(local, self._fetch_columns(body))
             # hits hold at most `size` rows: the limit turns fetch()'s
             # range-partitioned sort into one TakeOrderedAndProject
             fetched = fetched.limit(size)
@@ -1112,8 +1138,9 @@ class SearchEngine:
             # profile returns the executed plan per phase plus wall-time
             # once an action runs; plan strings are available immediately.
             # "path" says which tier answered the hits: "driver" (in
-            # process, _driver_topk, with its block counters and whether
-            # this request loaded the resident table) or "spark".
+            # process, _driver_topk, with its block counters, whether
+            # this request loaded the resident table and, with a fetch,
+            # which fetch ran and the corpus rows it read) or "spark".
             prof: dict = {"query": {
                 "plan": hits._jdf.queryExecution().executedPlan().toString(),
                 "parsed": repr(dsl_mod.parse(q) if isinstance(q, dict) else q),
@@ -1137,6 +1164,32 @@ class SearchEngine:
             else:
                 out["total"] = {"value": int(total), "relation": "eq"}
         return out
+
+    def _fetch_columns(self, body: dict) -> "List[str] | None":
+        """The corpus columns a request's fetch phase returns or reads,
+        in corpus order: its ``_source`` list or includes/excludes
+        selection, highlight and docvalue fields, and corpus columns
+        that share a name with a column the fetch always keeps. None
+        (every column) without a ``_source`` selection or with derived
+        fields, whose expressions may read any column."""
+        import fnmatch
+
+        src = body.get("_source")
+        if (not src or not isinstance(src, (list, tuple, dict))
+                or body.get("derived") or body.get("derived_fields")):
+            return None
+        names = [c for c in self.corpus.columns if c != "docId"]
+        if isinstance(src, dict):
+            inc, exc = src.get("includes") or ["*"], src.get("excludes") or []
+            want = {c for c in names if any(fnmatch.fnmatch(c, p) for p in inc)
+                    and not any(fnmatch.fnmatch(c, p) for p in exc)}
+        else:
+            want = set(src)
+        dvf = [s if isinstance(s, str) else s["field"]
+               for s in body.get("docvalue_fields") or []]
+        want |= {*(body.get("highlight") or {}).get("fields", {}), *dvf,
+                 *(f"{f}_value" for f in dvf), "inner_hits", "highlights"}
+        return [c for c in names if c in want or c.startswith("highlights_")]
 
     def search_template(self, body: dict) -> dict:
         """`_search/template` (reference: lang-mustache
@@ -1825,32 +1878,56 @@ class SearchEngine:
         )
 
     def fetch(self, hits: DataFrame) -> DataFrame:
-        """Join top-k hits back to corpus rows (the fetch phase)."""
+        """Join top-k hits back to corpus rows (the fetch phase): one
+        corpus scan with the hits broadcast, sorted (score desc, docId
+        asc). Driver-tier hits usually skip it: ``_fetch_local``."""
         if self.corpus is None:
             raise ValueError("no corpus attached")
         return self.corpus.join(F.broadcast(hits), "docId").orderBy(
             F.desc("score"), F.asc("docId")
         )
 
-    def _fetch_local(self, hits: pd.DataFrame) -> DataFrame:
-        """``fetch`` of driver-local hits: their (docId -> score) map
-        enters the plan as one SQL literal looked up per corpus row, so
-        the fetch is one scan job with no broadcast of the hits. Same
-        columns and order as ``fetch``."""
+    def _fetch_local(self, hits: pd.DataFrame, cols: Sequence[str] | None
+                     ) -> DataFrame:
+        """``fetch`` of driver-tier hits (in final order), restricted to
+        the corpus columns ``cols`` (None = all). When the corpus is a
+        bare scan of local parquet files and the resident postings plus
+        the docId map fit MAX_DRIVER_WORK, the rows are read in the
+        driver (stored.StoredFields: the first such fetch of an engine
+        builds the map with one Spark job, later ones run none) into an
+        Arrow-built LocalRelation with ``fetch``'s columns, types and
+        order; a changed corpus file, or any other corpus, runs
+        ``fetch``. ``hits.attrs["tier"]`` records which fetch ran and
+        the corpus rows it read (None when unknown)."""
+        import pyarrow as pa
+        from pyspark.sql.types import DoubleType, StructField, StructType
+
         if self.corpus is None:
             raise ValueError("no corpus attached")
-        # -2^63 has no BIGINT literal: its positive part overflows
-        ids = ",".join(f"{d}L" if d != -2**63 else "(-9223372036854775807L - 1L)"
-                       for d in hits["docId"].tolist())
-        scores = ",".join(f"{s!r}D" for s in hits["score"].tolist())
-        score = (F.expr(f"map_from_arrays(array({ids}), array({scores}))")[F.col("docId")]
-                 if len(hits) else F.lit(None).cast("double"))
-        cols = [c for c in self.corpus.columns if c != "docId"]
-        return (
-            self.corpus.select("docId", *cols, score.alias("score"))
-            .where(F.col("score").isNotNull())
-            .orderBy(F.desc("score"), F.asc("docId"))
-        )
+        names = [c for c in self.corpus.columns if c != "docId"]
+        cols = names if cols is None else cols
+        with self._tier_lock:
+            if self._stored is None:
+                self._stored = (self._corpus_scan is not None
+                                and stored.open_stored(self._corpus_scan)) or False
+            sf = self._stored
+            local = (sf is not False and not sf.changed()
+                     and self._pinned.nbytes + sf.nbytes < self.MAX_DRIVER_WORK)
+            if local and sf.ids is None and not sf.build(self.corpus):
+                self._stored = sf = local = False
+        if not local:
+            hits.attrs["tier"].update(fetch="spark",
+                                      fetch_rows_read=sf.n_rows if sf else None)
+            return self.fetch(self._local_frame(hits, ("docId", "score")))
+        rows, hit, n_read = sf.read(hits["docId"].to_numpy(), cols)
+        hits.attrs["tier"].update(fetch="driver", fetch_rows_read=n_read)
+        schema = self.corpus.schema
+        return self.spark.createDataFrame(pa.table(
+            [pa.array(hits["docId"].to_numpy()[hit], pa.int64()), *rows.columns,
+             pa.array(hits["score"].to_numpy()[hit], pa.float64())],
+            names=["docId", *cols, "score"]),
+            schema=StructType([schema["docId"], *(schema[c] for c in cols),
+                               StructField("score", DoubleType())]))
 
     def count(self, query: dict | A.AnyNode) -> int:
         """Hit count. A match query with one known term (or a required

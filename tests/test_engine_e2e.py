@@ -464,8 +464,9 @@ def test_tier_match_then_phrase_positions(spark, tmp_path, tier):
 
 
 def test_tier_reads_each_pinned_file_once(spark, tmp_path, tier, monkeypatch):
-    """One pin per engine: twenty tier requests read every postings file
-    exactly once."""
+    """One pin per engine: twenty tier requests read every postings file,
+    and every docstats file (for the docId uniqueness check), exactly
+    once."""
     from collections import Counter
 
     import pyarrow.parquet as pq
@@ -488,8 +489,8 @@ def test_tier_reads_each_pinned_file_once(spark, tmp_path, tier, monkeypatch):
             assert eng._search(q, K)[1] is not None
         else:
             eng.msearch(TIER_QUERIES, k=K).collect()
-    files = eng._pinned.files
-    assert files and reads == Counter({f: 1 for f in files})
+    files = eng._pinned.files + eng._pinned.docstats
+    assert eng._pinned.files and reads == Counter({f: 1 for f in files})
 
 
 def test_tier_profile_counts_new_decodes(spark, tmp_path, tier):
@@ -513,12 +514,17 @@ def test_tier_profile_counts_new_decodes(spark, tmp_path, tier):
 
 def test_close_releases_cache_and_tables(spark, tmp_path, tier):
     """close() unpersists the cache=True frames, drops the resident
-    table, and a closed engine refuses to search."""
+    table and the driver fetch's docId map, and a closed engine refuses
+    to search."""
     root = str(tmp_path / "ix")
-    corpus = _fresh_index(spark, root)
+    _fresh_index(spark, root).write.parquet(str(tmp_path / "corpus"))
+    corpus = spark.read.parquet(str(tmp_path / "corpus"))
     eng = SearchEngine(spark, root, corpus=corpus, cache=True)
     tier(True)
     assert eng.search(TIER_QUERIES[0], k=K).collect()
+    assert eng.request({"query": TIER_QUERIES[0], "size": K,
+                        "_source": ["path"]})["hits"].collect()
+    assert eng._stored.ids is not None
     tier(False)
     assert eng.search(TIER_QUERIES[0], k=K).collect()
     cm = spark._jsparkSession.sharedState().cacheManager()
@@ -527,7 +533,7 @@ def test_close_releases_cache_and_tables(spark, tmp_path, tier):
     assert eng._pinned.table
     eng.close()
     assert not any(cm.lookupCachedData(df._jdf).isDefined() for df in frames)
-    assert eng._pinned is False
+    assert eng._pinned is False and eng._stored is False
     for fn in (lambda: eng.search(TIER_QUERIES[0], k=K),
                lambda: eng.msearch(TIER_QUERIES, k=K)):
         with pytest.raises(RuntimeError, match="closed"):

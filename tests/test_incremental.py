@@ -219,6 +219,54 @@ def test_add_batch_refuses_indexed_doc_ids(spark, tmp_path, tier):
     assert 30 in got[True][2] and 12 not in got[True][2]
 
 
+def test_add_batch_check_shuffles_no_index_rows(spark, tmp_path):
+    """add_batch's refusal of indexed docIds semi-joins the docstats ids
+    against the broadcast batch ids: the index's side has no Exchange."""
+    import re
+
+    from opensearch_spark.index.build import prepare
+    from opensearch_spark.index.incremental import _create_only
+    from opensearch_spark.index.manifest import read_manifest, read_table
+
+    out = str(tmp_path / "ix")
+    build_index(spark, spark.createDataFrame(generate_corpus(60, seed=3)), out,
+                n_segments=4)
+    ids = prepare(spark.createDataFrame(generate_corpus(10, seed=4)), "content",
+                  ("repo", "path", "commit"), None).select("docId")
+    _, indexed = _create_only(ids, read_table(
+        spark, IndexPaths(out), "docstats", read_manifest(out)["files"]["docstats"]))
+    p = indexed._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in p and "LeftSemi" in p, p
+    assert set(re.findall(r"\w*Exchange", p)) == {"BroadcastExchange"}, p
+
+
+def test_tier_refuses_an_index_holding_a_doc_id_twice(spark, tmp_path, tier):
+    """An index written before add_batch refused indexed docIds can hold
+    one docId in two segments; the driver tier would sum or repeat its
+    scores, so loading the resident table refuses it and names the id.
+    upsert_batch of that document repairs the index."""
+    from opensearch_spark.index.build import by_seg, prepare, write_segments
+    from opensearch_spark.index.incremental import upsert_batch
+    from opensearch_spark.index.manifest import publish, read_manifest
+
+    schema = "doc_id long, text string"
+    out = str(tmp_path / "ix")
+    kw = dict(text_col="text", doc_id_col="doc_id")
+    build_index(spark, spark.createDataFrame(
+        [(i, f"alpha beta w{i}") for i in range(1, 9)], schema), out, n_segments=4, **kw)
+    again = spark.createDataFrame([(5, "alpha beta"), (13, "alpha")], schema)
+    m = read_manifest(out)
+    publish(IndexPaths(out), write_segments(
+        by_seg(prepare(again, "text", (), "doc_id"), m["n_segments"]), IndexPaths(out), m))
+    tier(True)
+    with pytest.raises(ValueError, match="docId 5 more than once.*upsert_batch"):
+        SearchEngine(spark, out, text_field="text").search({"match": {"text": "alpha"}})
+    upsert_batch(spark, spark.createDataFrame([(5, "alpha beta")], schema), out, **kw)
+    ids = [r["docId"] for r in SearchEngine(spark, out, text_field="text").search(
+        {"match": {"text": "alpha"}}, k=20).collect()]
+    assert sorted(ids) == [1, 2, 3, 4, 5, 6, 7, 8, 13]
+
+
 def test_streaming_file_source(spark, corpora, tmp_path):
     from opensearch_spark.streaming.ingest import start_indexing_stream
 

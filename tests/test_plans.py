@@ -59,7 +59,8 @@ def test_request_fetch_is_bounded(parquet_engine, tier):
     """A request's fetch sorts its at most `size` hits in one bounded
     TakeOrderedAndProject: no range-partition Exchange (and its sampling
     job). On the Spark path the hits stay a broadcast join; driver-local
-    hits enter the corpus scan as literals, with no Exchange at all."""
+    hits are fetched in the driver into a LocalTableScan, with no
+    Exchange at all."""
     body = {"query": {"match": {"content": "def"}}, "size": 5, "_source": ["path"]}
     tier(False)
     p = executed_str(parquet_engine.request(body)["hits"])
@@ -69,19 +70,24 @@ def test_request_fetch_is_bounded(parquet_engine, tier):
     tier(True)
     p = executed_str(parquet_engine.request(body)["hits"])
     assert "Exchange" not in p, p
-    assert "TakeOrdered" in p, p
+    assert "LocalTableScan" in p, p
 
 
-def test_driver_tier_job_counts(parquet_engine, jobs, tier):
-    """A driver-local search runs no Spark job; a driver-local request
-    with _source runs exactly one (the fetch's corpus scan)."""
+def test_driver_tier_job_counts(spark, parquet_engine, jobs, tier):
+    """A driver-local search runs no Spark job. A driver-local request
+    with _source runs exactly one on a fresh engine (the fetch's docId
+    map) and none once the map exists."""
     tier(True)
     q = {"match": {"content": "def return"}}
     n, rows = jobs(lambda: parquet_engine.search(q, k=5).collect())
     assert n == 0 and len(rows) == 5
+    fresh = SearchEngine(spark, parquet_engine.paths.root,
+                         corpus=parquet_engine._corpus_scan)
+    fresh._load_term_df_map()
     body = {"query": q, "size": 5, "_source": ["path"]}
-    n, rows = jobs(lambda: parquet_engine.request(body)["hits"].collect())
-    assert n == 1 and len(rows) == 5
+    for eng, want in ((fresh, 1), (fresh, 0), (parquet_engine, 0)):
+        n, rows = jobs(lambda: eng.request(body)["hits"].collect())
+        assert n == want and len(rows) == 5
     tier(False)
     n, _ = jobs(lambda: parquet_engine.search(q, k=5).collect())
     assert n >= 1

@@ -91,13 +91,15 @@ def add_batch(
     repeats, indexed = _create_only(
         prepare(batch, text_col, id_cols, doc_id_col).select("docId"),
         read_table(spark, paths, "docstats", m["files"]["docstats"]))
-    dup = repeats.limit(1).collect()
-    if not dup:
-        dup = [(d, 1 + indexed.where(F.col("docId") == d).count())
-               for (d,) in indexed.limit(1).collect()]
+    # both refusals in one query: the smallest refused docId (one
+    # TakeOrderedAndProject; a limit alone would take partitions in rounds)
+    dup = (repeats.unionByName(indexed.withColumn("count", F.lit(None).cast("long")))
+           .orderBy("docId").limit(1).collect())
     if dup:
+        d, n = dup[0]
         raise ValueError(
-            f"add_batch: docId {dup[0][0]} occurs {dup[0][1]} times "
+            f"add_batch: docId {d} occurs "
+            f"{n or 1 + indexed.where(F.col('docId') == d).count()} times "
             "among the batch and the indexed documents (live or deleted); "
             "add_batch only creates documents — use upsert_batch to replace them")
     return publish(paths, _add(spark, batch, paths, m, text_col, id_cols,

@@ -28,8 +28,10 @@ scorer), drops tombstones and cuts each query at k into an in-memory
 DataFrame (``_driver_topk``); segments are a Spark-side partitioning
 unit only (see wand.py). A tier request's fetch reads its rows with
 pyarrow through a docId map built by one Spark job on the engine's
-first tier fetch (``_fetch_local``). ``close()`` releases the table,
-the map and the engine's persisted frames.
+first tier fetch; the fetched rows, their ``_source`` selection,
+highlights and plain doc values are rendered in Arrow and handed to
+Spark in one ``createDataFrame`` (``_render``). ``close()`` releases
+the table, the map and the engine's persisted frames.
 
 Scoring-context notes:
 - match (or/and/msm), match_phrase (exact or sloppy) and bools of those
@@ -57,14 +59,16 @@ from typing import Dict, Iterable, List, Optional, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import ArrayType, DoubleType, StringType, StructField, StructType
 
 from opensearch_spark.analysis.analyzer import tokenize
 from opensearch_spark.index.build import load_index
 from opensearch_spark.index.manifest import (
     IndexPaths, _write_json_atomic, read_manifest, read_table, with_files,
 )
-from opensearch_spark.search import ast as A, bm25, dsl as dsl_mod, stored
+from opensearch_spark.search import ast as A, bm25, dsl as dsl_mod, highlight as H, stored
 
 SCORE_SCHEMA = "docId long, score double"
 
@@ -298,6 +302,72 @@ def _make_tf_scorer(weight: float):
                             lambda t, tfs, dl_q: weight * tfs.astype(np.float64), "wtf")
 
     return fn
+
+
+# ---- fetch phase: the columns a request adds and returns --------------------
+
+HIT_TYPES = {"qid": pa.int32(), "docId": pa.int64(), "score": pa.float64()}
+
+
+def source_select(src, columns: Sequence[str], keep: Iterable[str]
+                  ) -> "List[str] | None":
+    """The fetched ``columns`` a request returns under its ``_source``
+    (reference: ``FetchSourceContext.fromXContent``): None for the whole
+    source (``_source`` absent, true, or an empty list or dict), else
+    docId, score, the selected source columns, then the ``keep``
+    columns (fields the request computed, which the reference returns
+    outside ``_source``), highlights and inner_hits in ``columns``
+    order. false selects no source column; a string is one
+    include pattern; a list names columns, in its order; a dict holds
+    ``includes``/``excludes`` patterns, each a string or a list (no
+    includes = every column)."""
+    from fnmatch import fnmatch
+
+    if src is None or src is True or (isinstance(src, (list, tuple, dict)) and not src):
+        return None
+    keep = {"docId", "score", "inner_hits", *keep,
+            *(c for c in columns if c == "highlights" or c.startswith("highlights_"))}
+    if isinstance(src, (list, tuple)):
+        cols = [c for c in src if c in columns and c not in keep]
+    else:
+        inc, exc = ((src.get("includes") or "*", src.get("excludes") or ())
+                    if isinstance(src, dict) else (src or (), ()))
+        inc, exc = ([p] if isinstance(p, str) else p for p in (inc, exc))
+        cols = [c for c in columns if c not in keep and any(fnmatch(c, p) for p in inc)
+                and not any(fnmatch(c, p) for p in exc)]
+    return ["docId", "score", *cols,
+            *(c for c in columns if c in keep and c not in ("docId", "score"))]
+
+
+def _op_column(kind: str, fld: str | None, arg) -> "F.Column":
+    """A fetch op (``SearchEngine._fetch_ops``) as a Spark column."""
+    if kind == "derived":
+        return F.expr(arg)
+    if kind == "highlight":
+        return H.fragments(F.col(fld), *arg)
+    col = F.col(fld)
+    if arg is None:
+        return col.cast("string")
+    # doc-value formats (reference: DocValueFormat): printf-style or a
+    # date pattern
+    return F.format_string(arg, col) if "%" in arg else F.date_format(col.cast("timestamp"), arg)
+
+
+def _arrow_op(table: pa.Table, kind: str, fld: str | None, arg) -> "tuple | None":
+    """(values, Spark type) of a fetch op computed in the driver over
+    ``table``, with ``_op_column``'s result; None when only Spark
+    computes it (derived fields, formatted doc values, doc values of a
+    type other than integer and string, a field ``table`` lacks)."""
+    if fld not in table.column_names:
+        return None
+    col = table.column(fld)
+    text = pa.types.is_string(col.type) or pa.types.is_large_string(col.type)
+    if kind == "dvf" and arg is None and (text or pa.types.is_integer(col.type)):
+        return col.cast(pa.string()), StringType()
+    if kind == "highlight" and text:
+        return (pa.array([H.make_fragments(t or "", *arg) for t in col.to_pylist()],
+                         pa.list_(pa.string())), ArrayType(StringType()))
+    return None
 
 
 # ---- driver-local tier: the postings files an engine opened -----------------
@@ -701,14 +771,128 @@ class SearchEngine:
                              "blocks_total": stats["total"], "pinned": loaded}
         return out
 
-    def _local_frame(self, pdf: pd.DataFrame, cols: Sequence[str]) -> DataFrame:
-        """Rows already in final order as an Arrow-built LocalRelation:
-        collecting it runs no Spark job."""
-        import pyarrow as pa
+    def _render(self, local: pd.DataFrame, cols: Sequence[str] = ("docId", "score"),
+                body: dict | None = None) -> DataFrame:
+        """Driver-tier rows (``_driver_topk``'s, in final order) as ONE
+        Arrow-built LocalRelation: the tier's one JVM hand-off, whose
+        collect runs no Spark job. Without a request ``body`` the
+        frame holds the hit columns ``cols``.
 
-        types = {"qid": pa.int32(), "docId": pa.int64(), "score": pa.float64()}
-        return self.spark.createDataFrame(pa.table(
-            {c: pa.array(pdf[c].to_numpy(), types[c]) for c in cols}))
+        With a ``body`` that fetches, it holds the response: the hits'
+        corpus rows, read in the driver (stored.StoredFields: the first
+        such fetch of an engine builds the docId map with one Spark
+        job, later ones run none) when the corpus is a bare scan of
+        local parquet files and the resident postings plus the map fit
+        MAX_DRIVER_WORK; cut at ``size``; with the ``_source``
+        selection, unformatted integer/string docvalue_fields and
+        highlights rendered in Arrow, in the columns, types and order
+        the Spark fetch returns. A request with a fetch op only Spark
+        computes (``_arrow_op``) renders those ops, and the
+        ``_source`` selection, as DataFrame post-processing over the
+        fetched rows (``_finish``); a changed corpus file, or any other
+        corpus, runs ``fetch``. ``local.attrs["tier"]`` records which
+        fetch and which renderer ran and the corpus rows read (None
+        when unknown)."""
+        tier = local.attrs["tier"]
+        tier["render"] = "driver"
+        if body is None:
+            return self.spark.createDataFrame(pa.table(
+                {c: pa.array(local[c].to_numpy(), HIT_TYPES[c]) for c in cols}))
+        if self.corpus is None:
+            raise ValueError("no corpus attached")
+        size, src, ops = int(body.get("size", 10)), body.get("_source"), self._fetch_ops(body)
+        schema = self.corpus.schema  # read once per corpus frame (a cached property)
+        names = [c for c in schema.names if c != "docId"]
+        outs = [out for out, *_ in ops]
+        sel = source_select(src, ["docId", *names, "score", *outs], outs)
+        if sel is not None and all(kind != "derived" for _, kind, *_ in ops):
+            # derived expressions may read any column
+            names = [c for c in names if c in sel or any(c == op[2] for op in ops)]
+        with self._tier_lock:
+            if self._stored is None:
+                self._stored = (self._corpus_scan is not None
+                                and stored.open_stored(self._corpus_scan)) or False
+            sf = self._stored
+            fits = (sf is not False and not sf.changed()
+                    and self._pinned.nbytes + sf.nbytes < self.MAX_DRIVER_WORK)
+            if fits and sf.ids is None and not sf.build(self.corpus):
+                self._stored = sf = fits = False
+        if not fits:
+            hits = self._render(local)
+            tier.update(fetch="spark", fetch_rows_read=sf.n_rows if sf else None,
+                        render="spark")
+            return self._finish(self.fetch(hits).limit(size), ops, src)
+        rows, hit, n_read = sf.read(local["docId"].to_numpy(), names)
+        tier.update(fetch="driver", fetch_rows_read=n_read)
+        table = pa.table(
+            [pa.array(local["docId"].to_numpy()[hit], pa.int64()), *rows.columns,
+             pa.array(local["score"].to_numpy()[hit], pa.float64())],
+            names=["docId", *names, "score"]).slice(0, size)
+        fields = {f.name: f for f in (schema["docId"], *(schema[c] for c in names),
+                                      StructField("score", DoubleType()))}
+        out_table, out_fields = table, dict(fields)
+        for out, kind, fld, arg in ops:
+            done = _arrow_op(out_table, kind, fld, arg)
+            if done is None:
+                tier["render"] = "spark"
+                return self._finish(self.spark.createDataFrame(
+                    table, StructType(list(fields.values()))), ops, src)
+            i = out_table.schema.get_field_index(out)
+            out_table = (out_table.append_column(out, done[0]) if i < 0
+                         else out_table.set_column(i, out, done[0]))
+            out_fields[out] = StructField(out, done[1])
+        keep = source_select(src, out_table.column_names, outs) or out_table.column_names
+        return self.spark.createDataFrame(out_table.select(keep),
+                                          StructType([out_fields[c] for c in keep]))
+
+    def _fetch_ops(self, body: dict) -> list:
+        """The columns a request's fetch computes, in the order they are
+        added (a name already fetched is replaced in place): (name, kind,
+        input column, arg) for each docvalue field (doc-value fields,
+        reference DocValueFieldsContext: "dvf", its format or None),
+        derived field (reference DerivedFieldMapper, computed at query
+        time: "derived", no input, a Spark SQL expression) and
+        highlighted field ("highlight", (query spec, fragment size,
+        number of fragments))."""
+        ops = []
+        for spec in body.get("docvalue_fields") or []:
+            fld, fmt = (spec, None) if isinstance(spec, str) else (spec["field"], spec.get("format"))
+            ops.append((f"{fld}_value", "dvf", fld, fmt))
+        for name, spec in (body.get("derived") or body.get("derived_fields") or {}).items():
+            ops.append((name, "derived", None, str(spec["script"] if isinstance(spec, dict) else spec)))
+        if "highlight" in body:
+            hl = body["highlight"]
+            fields = list(hl["fields"].items())
+            # pass the parsed AST: phrase queries highlight only
+            # positions participating in a match (H.query_spec)
+            q = body.get("query", {"match_all": {}})
+            q_ast = dsl_mod.parse(q) if isinstance(q, dict) else q
+            for fld, spec in fields:
+                # highlight_query overrides the search query for this
+                # field; matched_fields widens which query clauses may
+                # mark this field's text; the reference-default
+                # require_field_match=true is switchable off per request
+                # or per field (reference: AbstractHighlighterBuilder
+                # highlightQuery / requireFieldMatch, HighlightBuilder
+                # matchedFields)
+                node = (dsl_mod.parse(spec["highlight_query"])
+                        if spec.get("highlight_query") else q_ast)
+                rfm = bool(spec.get("require_field_match", hl.get("require_field_match", True)))
+                mf = set(spec.get("matched_fields") or []) | {fld} if rfm else None
+                ops.append(("highlights" if len(fields) == 1 else f"highlights_{fld}",
+                            "highlight", fld,
+                            (H.query_spec(node, fields=mf, default_field=self.text_field),
+                             int(spec.get("fragment_size", 100)),
+                             int(spec.get("number_of_fragments", 2)))))
+        return ops
+
+    def _finish(self, fetched: DataFrame, ops: list, src) -> DataFrame:
+        """A fetch's ``ops`` and ``_source`` selection as DataFrame
+        post-processing over its ``fetched`` rows."""
+        for out, kind, fld, arg in ops:
+            fetched = fetched.withColumn(out, _op_column(kind, fld, arg))
+        keep = source_select(src, fetched.columns, [out for out, *_ in ops])
+        return fetched if keep is None else fetched.select(*keep)
 
     # ---- public API ---------------------------------------------------
 
@@ -742,7 +926,7 @@ class SearchEngine:
         comes back as an in-memory frame (``_driver_topk``)."""
         df, local = self._search(query, k, from_, sort, search_after,
                                  collapse, terminate_after, slice_)
-        return df if local is None else self._local_frame(local, ("docId", "score"))
+        return df if local is None else self._render(local)
 
     def _search(self, query, k, from_=0, sort=None, search_after=None,
                 collapse=None, terminate_after=None, slice_=None) -> tuple:
@@ -906,9 +1090,14 @@ class SearchEngine:
 
         Returns {"hits": DataFrame, "aggregations": DataFrame | None}.
         ``hits`` carries (docId, score [, sort/collapse columns]); with
-        ``_source`` or ``highlight`` the corpus columns are joined in
-        (the fetch phase; driver-tier hits read them in the driver,
-        ``_fetch_local``)."""
+        ``_source``, highlight, docvalue_fields or derived fields the
+        corpus columns are joined in (the fetch phase). ``_source``
+        follows the reference's FetchSourceContext (``source_select``):
+        absent or true returns the whole row, false none of it, a
+        string is one include pattern, a list names columns, a dict
+        holds includes/excludes patterns (a string or a list each).
+        Driver-tier hits build the whole response table in the driver
+        and hand it to Spark once (``_render``)."""
         q = body.get("query", {"match_all": {}})
         size = int(body.get("size", 10))
         from_ = int(body.get("from", 0))
@@ -1022,114 +1211,23 @@ class SearchEngine:
                             "rename the sub-aggregations")
                     aggs_df = aggs_df.crossJoin(gdf.drop(f"key_{gname}"))
 
-        src = body.get("_source")
-        derived = body.get("derived") or body.get("derived_fields")
-        dvf = body.get("docvalue_fields")
-        if src or derived or dvf or "highlight" in body:
-            # hits may carry corpus columns (collapse key, field-sort
-            # keys); the fetch join would duplicate them — keep only the
-            # hit identity (+ computed columns like inner_hits) and let
-            # the corpus join restore the rest
+        if (body.get("_source") or body.get("derived") or body.get("derived_fields")
+                or body.get("docvalue_fields") or "highlight" in body):
             if local is None:
+                # hits may carry corpus columns (collapse key, field-sort
+                # keys); the fetch join would duplicate them — keep only
+                # the hit identity (+ computed columns like inner_hits)
+                # and let the corpus join restore the rest. Hits hold at
+                # most `size` rows: the limit turns fetch()'s
+                # range-partitioned sort into one TakeOrderedAndProject
                 corp_cols = set(self.corpus.columns) - {"docId"}
-                fetched = self.fetch(
-                    hits.drop(*[c for c in hits.columns if c in corp_cols]))
+                hits = self._finish(self.fetch(
+                    hits.drop(*[c for c in hits.columns if c in corp_cols])).limit(size),
+                    self._fetch_ops(body), body.get("_source"))
             else:
-                fetched = self._fetch_local(local, self._fetch_columns(body))
-            # hits hold at most `size` rows: the limit turns fetch()'s
-            # range-partitioned sort into one TakeOrderedAndProject
-            fetched = fetched.limit(size)
-            # columns the caller asked for explicitly (docvalue/derived):
-            # always kept, NEVER subject to _source includes/excludes
-            # (the reference returns them in a separate 'fields' section
-            # outside _source filtering)
-            forced_cols: List[str] = []
-            # doc-value field formatting (reference: DocValueFieldsContext
-            # / DocValueFormat): render columns with the requested format
-            # — date patterns via date_format, printf-style via
-            # format_string
-            for spec in dvf or []:
-                if isinstance(spec, str):
-                    fld, fmt = spec, None
-                else:
-                    fld, fmt = spec["field"], spec.get("format")
-                col = F.col(fld)
-                if fmt is None:
-                    out_c = col.cast("string")
-                elif "%" in fmt:
-                    out_c = F.format_string(fmt, col)
-                else:
-                    out_c = F.date_format(col.cast("timestamp"), fmt)
-                fetched = fetched.withColumn(f"{fld}_value", out_c)
-                forced_cols.append(f"{fld}_value")
-            # derived fields (reference: DerivedFieldMapper — computed at
-            # query time): Spark SQL expressions over the fetched row
-            for name, spec in (derived or {}).items():
-                expr = spec["script"] if isinstance(spec, dict) else spec
-                fetched = fetched.withColumn(name, F.expr(str(expr)))
-                forced_cols.append(name)
-            if "highlight" in body:
-                from opensearch_spark.search import highlight as H
-
-                hl = body["highlight"]
-                fields = list(hl["fields"].items())
-                # pass the parsed AST: phrase queries highlight only
-                # positions participating in a match (H.query_spec)
-                q_ast = dsl_mod.parse(q) if isinstance(q, dict) else q
-                for fld, spec in fields:
-                    out_col = ("highlights" if len(fields) == 1
-                               else f"highlights_{fld}")
-                    # highlight_query overrides the search query for
-                    # this field; matched_fields widens which query
-                    # clauses may mark this field's text; the
-                    # reference-default require_field_match=true is
-                    # switchable off per request or per field
-                    # (reference: AbstractHighlighterBuilder
-                    # highlightQuery / requireFieldMatch,
-                    # HighlightBuilder matchedFields)
-                    node = (dsl_mod.parse(spec["highlight_query"])
-                            if spec.get("highlight_query") else q_ast)
-                    rfm = bool(spec.get(
-                        "require_field_match",
-                        hl.get("require_field_match", True)))
-                    mf = (set(spec.get("matched_fields") or []) | {fld}
-                          if rfm else None)
-                    fetched = H.highlight(
-                        fetched, node, text_col=fld,
-                        frag_size=int(spec.get("fragment_size", 100)),
-                        n_frags=int(spec.get("number_of_fragments", 2)),
-                        out_col=out_col,
-                        fields=mf, default_field=self.text_field,
-                    )
-            if src:
-                # _source filtering (reference: FetchSourceContext):
-                # list form = includes; dict form = {"includes",
-                # "excludes"} with * wildcards
-                import fnmatch
-
-                hl_cols = [c for c in fetched.columns
-                           if c == "highlights" or c.startswith("highlights_")]
-                keep_always = set(hl_cols) | set(forced_cols) | {
-                    "docId", "score", "inner_hits",
-                }
-                if isinstance(src, dict):
-                    inc = src.get("includes") or ["*"]
-                    exc = src.get("excludes") or []
-                    cols = [
-                        c for c in fetched.columns
-                        if c not in keep_always
-                        and any(fnmatch.fnmatch(c, p) for p in inc)
-                        and not any(fnmatch.fnmatch(c, p) for p in exc)
-                    ]
-                else:
-                    cols = [c for c in src
-                            if c in fetched.columns and c not in keep_always]
-                tail = [c for c in fetched.columns
-                        if c in keep_always and c not in ("docId", "score")]
-                fetched = fetched.select(*(["docId", "score"] + cols + tail))
-            hits = fetched
-        if hits is None:
-            hits = self._local_frame(local, ("docId", "score"))
+                hits = self._render(local, body=body)
+        elif local is not None:
+            hits = self._render(local)
         out = {"hits": hits, "aggregations": aggs_df}
         if body.get("profile"):
             # reference: search/profile/ (RestSearchAction `profile=true`)
@@ -1139,8 +1237,9 @@ class SearchEngine:
             # once an action runs; plan strings are available immediately.
             # "path" says which tier answered the hits: "driver" (in
             # process, _driver_topk, with its block counters, whether
-            # this request loaded the resident table and, with a fetch,
-            # which fetch ran and the corpus rows it read) or "spark".
+            # this request loaded the resident table, with a fetch which
+            # fetch ran and the corpus rows it read, and "render": whether
+            # any DataFrame post-processing ran) or "spark".
             prof: dict = {"query": {
                 "plan": hits._jdf.queryExecution().executedPlan().toString(),
                 "parsed": repr(dsl_mod.parse(q) if isinstance(q, dict) else q),
@@ -1164,32 +1263,6 @@ class SearchEngine:
             else:
                 out["total"] = {"value": int(total), "relation": "eq"}
         return out
-
-    def _fetch_columns(self, body: dict) -> "List[str] | None":
-        """The corpus columns a request's fetch phase returns or reads,
-        in corpus order: its ``_source`` list or includes/excludes
-        selection, highlight and docvalue fields, and corpus columns
-        that share a name with a column the fetch always keeps. None
-        (every column) without a ``_source`` selection or with derived
-        fields, whose expressions may read any column."""
-        import fnmatch
-
-        src = body.get("_source")
-        if (not src or not isinstance(src, (list, tuple, dict))
-                or body.get("derived") or body.get("derived_fields")):
-            return None
-        names = [c for c in self.corpus.columns if c != "docId"]
-        if isinstance(src, dict):
-            inc, exc = src.get("includes") or ["*"], src.get("excludes") or []
-            want = {c for c in names if any(fnmatch.fnmatch(c, p) for p in inc)
-                    and not any(fnmatch.fnmatch(c, p) for p in exc)}
-        else:
-            want = set(src)
-        dvf = [s if isinstance(s, str) else s["field"]
-               for s in body.get("docvalue_fields") or []]
-        want |= {*(body.get("highlight") or {}).get("fields", {}), *dvf,
-                 *(f"{f}_value" for f in dvf), "inner_hits", "highlights"}
-        return [c for c in names if c in want or c.startswith("highlights_")]
 
     def search_template(self, body: dict) -> dict:
         """`_search/template` (reference: lang-mustache
@@ -1761,7 +1834,7 @@ class SearchEngine:
         ]
         local = self._driver_topk(nodes, k)
         if local is not None:
-            return self._local_frame(local, ("qid", "docId", "score"))
+            return self._render(local, ("qid", "docId", "score"))
         sig = None
         if all(isinstance(q, dict) for q in queries):
             try:
@@ -1880,54 +1953,12 @@ class SearchEngine:
     def fetch(self, hits: DataFrame) -> DataFrame:
         """Join top-k hits back to corpus rows (the fetch phase): one
         corpus scan with the hits broadcast, sorted (score desc, docId
-        asc). Driver-tier hits usually skip it: ``_fetch_local``."""
+        asc). Driver-tier hits usually skip it: ``_render``."""
         if self.corpus is None:
             raise ValueError("no corpus attached")
         return self.corpus.join(F.broadcast(hits), "docId").orderBy(
             F.desc("score"), F.asc("docId")
         )
-
-    def _fetch_local(self, hits: pd.DataFrame, cols: Sequence[str] | None
-                     ) -> DataFrame:
-        """``fetch`` of driver-tier hits (in final order), restricted to
-        the corpus columns ``cols`` (None = all). When the corpus is a
-        bare scan of local parquet files and the resident postings plus
-        the docId map fit MAX_DRIVER_WORK, the rows are read in the
-        driver (stored.StoredFields: the first such fetch of an engine
-        builds the map with one Spark job, later ones run none) into an
-        Arrow-built LocalRelation with ``fetch``'s columns, types and
-        order; a changed corpus file, or any other corpus, runs
-        ``fetch``. ``hits.attrs["tier"]`` records which fetch ran and
-        the corpus rows it read (None when unknown)."""
-        import pyarrow as pa
-        from pyspark.sql.types import DoubleType, StructField, StructType
-
-        if self.corpus is None:
-            raise ValueError("no corpus attached")
-        names = [c for c in self.corpus.columns if c != "docId"]
-        cols = names if cols is None else cols
-        with self._tier_lock:
-            if self._stored is None:
-                self._stored = (self._corpus_scan is not None
-                                and stored.open_stored(self._corpus_scan)) or False
-            sf = self._stored
-            local = (sf is not False and not sf.changed()
-                     and self._pinned.nbytes + sf.nbytes < self.MAX_DRIVER_WORK)
-            if local and sf.ids is None and not sf.build(self.corpus):
-                self._stored = sf = local = False
-        if not local:
-            hits.attrs["tier"].update(fetch="spark",
-                                      fetch_rows_read=sf.n_rows if sf else None)
-            return self.fetch(self._local_frame(hits, ("docId", "score")))
-        rows, hit, n_read = sf.read(hits["docId"].to_numpy(), cols)
-        hits.attrs["tier"].update(fetch="driver", fetch_rows_read=n_read)
-        schema = self.corpus.schema
-        return self.spark.createDataFrame(pa.table(
-            [pa.array(hits["docId"].to_numpy()[hit], pa.int64()), *rows.columns,
-             pa.array(hits["score"].to_numpy()[hit], pa.float64())],
-            names=["docId", *cols, "score"]),
-            schema=StructType([schema["docId"], *(schema[c] for c in cols),
-                               StructField("score", DoubleType())]))
 
     def count(self, query: dict | A.AnyNode) -> int:
         """Hit count. A match query with one known term (or a required

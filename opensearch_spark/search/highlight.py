@@ -3,9 +3,11 @@ with matched terms wrapped in tags (reference: ``search/fetch/subphase/
 highlight/HighlightPhase.java`` + the unified highlighter; SURVEY §3.1
 step 5).
 
-Spark-first: a pandas UDF over the (small) fetched top-k rows. Token
-offsets come from the SAME analyzer as indexing, so highlighted spans
-are exactly the tokens that matched.
+:func:`make_fragments` builds one row's fragments: the driver tier calls
+it on the fetched column before its one hand-off to Spark; the Spark
+fetch maps it in a pandas UDF over the (small) fetched top-k rows
+(:func:`fragments`). Token offsets come from the SAME analyzer as
+indexing, so highlighted spans are exactly the tokens that matched.
 
 PHRASE-AWARE: a phrase query highlights only the token positions that
 participate in an actual phrase match (Lucene's unified highlighter
@@ -30,7 +32,7 @@ from __future__ import annotations
 from typing import List, Optional, Sequence, Set, Tuple
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from opensearch_spark.analysis.analyzer import tokenize, tokenize_offsets
 
@@ -316,10 +318,16 @@ def highlight(
     ``fields`` and ``default_field`` are passed to :func:`query_spec`
     (``fields=None`` = collect every clause)."""
     spec = query_spec(query, fields=fields, default_field=default_field)
+    return fetched.withColumn(out_col, fragments(F.col(text_col), spec, frag_size, n_frags))
+
+
+def fragments(text: Column, spec, frag_size: int = 100, n_frags: int = 2) -> Column:
+    """:func:`make_fragments` of each row of ``text`` as an
+    ``array<string>`` column (a pandas UDF)."""
 
     @F.pandas_udf("array<string>")
     def hl(texts: pd.Series) -> pd.Series:
         return texts.map(
             lambda t: make_fragments(t or "", spec, frag_size, n_frags))
 
-    return fetched.withColumn(out_col, hl(F.col(text_col)))
+    return hl(text)

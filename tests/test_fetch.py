@@ -20,10 +20,12 @@ Q = {"match": {"content": "def return import"}}
 @pytest.fixture(scope="module")
 def ix(spark, tmp_path_factory):
     """(root, corpus frame): an index over a corpus of 3 parquet files of
-    4 row groups each, plus an int column for docvalue formatting."""
+    4 row groups each, plus an int and a double column for docvalue
+    fields."""
     root = str(tmp_path_factory.mktemp("fetch"))
     pdf = generate_corpus(300, seed=11)
     pdf["n"] = pdf["content"].str.len().astype("int64")
+    pdf["ratio"] = pdf["n"] / 7.0
     os.makedirs(os.path.join(root, "corpus"))
     for i in range(3):
         pq.write_table(pa.Table.from_pandas(pdf.iloc[i * 100:(i + 1) * 100],
@@ -64,19 +66,88 @@ def both_fetches(eng, tier, body):
     {"query": Q, "size": 5, "highlight": {"fields": {"content": {}}}},
     {"query": {"match": {"content": "zzzunknownzzz"}}, "size": 5, "_source": ["path"]},
     {"query": {"match": {"content": "def"}}, "size": 100, "_source": ["path"]},
+    {"query": Q, "size": 5, "_source": ["repo"], "docvalue_fields": ["lang", "n"]},
+    {"query": Q, "size": 5, "_source": ["repo"], "docvalue_fields": ["n", "ratio"]},
+    {"query": Q, "size": 5, "_source": {"excludes": ["content"]},
+     "highlight": {"fields": {"content": {"fragment_size": 40}, "path": {}}}},
+    {"query": Q, "size": 5, "_source": ["lang"], "derived": {"plen": "length(path)"},
+     "highlight": {"fields": {"content": {}}}},
+    {"query": {"match": {"content": "zzzunknownzzz"}}, "size": 5,
+     "highlight": {"fields": {"content": {}}}, "docvalue_fields": ["n"]},
 ], ids=["list", "includes-excludes", "highlight", "docvalue", "derived",
-        "no-source", "zero-hits", "fewer-than-size"])
+        "no-source", "zero-hits", "fewer-than-size", "docvalue-plain",
+        "docvalue-double", "highlight-two-fields", "highlight-derived",
+        "zero-hits-highlight"])
 def test_driver_fetch_equals_spark_fetch(spark, ix, tier, body):
     eng = engine(spark, ix[0])
     on, off, on_types, off_types, prof = both_fetches(eng, tier, body)
     assert on == off and on_types == off_types
     assert prof["fetch"] == "driver"
+    # only derived fields and formatted or non-integer/string doc values
+    # need DataFrame post-processing
+    plain = all(f in ("lang", "n") for f in body.get("docvalue_fields", []))
+    assert prof["render"] == ("driver" if plain and "derived" not in body else "spark")
     if "zzz" in str(body["query"]):
         assert on == [] and prof["fetch_rows_read"] == 0
     else:
         assert 0 < len(on) <= body["size"] and prof["fetch_rows_read"] > 0
     if body["size"] == 100:
         assert len(on) < 100
+
+
+ALL = ["docId", "repo", "path", "commit", "lang", "content", "n", "ratio", "score"]
+
+
+@pytest.mark.parametrize("src, extra, cols", [
+    (True, {}, ALL),
+    ("path", {}, ["docId", "score", "path"]),
+    ({"includes": "p*"}, {}, ["docId", "score", "path"]),
+    ({"excludes": "c*"}, {}, ["docId", "score", "repo", "path", "lang", "n", "ratio"]),
+    (False, {"highlight": {"fields": {"content": {}}}}, ["docId", "score", "highlights"]),
+], ids=["true", "string", "includes-string", "excludes-string", "false-highlight"])
+def test_source_forms(spark, ix, tier, src, extra, cols):
+    """``_source`` as the reference's FetchSourceContext parses it: true
+    is the whole source, false none of it, a string one include
+    pattern, and includes/excludes may each be a string."""
+    eng = engine(spark, ix[0])
+    on, off, on_types, off_types, prof = both_fetches(
+        eng, tier, {"query": Q, "size": 5, "_source": src, **extra})
+    assert on == off and on_types == off_types
+    assert [c for c, _ in on_types] == cols and len(on) == 5
+    assert prof["fetch"] == "driver" and prof["render"] == "driver"
+
+
+def test_tier_request_makes_one_hand_off(spark, ix, tier, monkeypatch):
+    """A warm tier request with a ``_source`` list, collected, makes no
+    more Py4J calls from the request thread than one
+    ``spark.createDataFrame`` of a same-shaped Arrow table and its
+    collect: the response crosses into the JVM once."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    eng = engine(spark, ix[0])
+    body = {"query": Q, "size": 10, "_source": ["path", "lang"]}
+    tier(True)
+    hits = eng.request(body)["hits"]
+    rows, schema = hits.collect(), hits.schema
+    table = pa.table({c: [r[c] for r in rows] for c in schema.names})
+    me, calls, send = threading.get_ident(), [0], ClientServerConnection.send_command
+
+    def counted(conn, command):
+        calls[0] += threading.get_ident() == me
+        return send(conn, command)
+
+    def count(fn) -> int:
+        fn()  # warm
+        calls[0] = 0
+        fn()
+        return calls[0]
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    n_request = count(lambda: eng.request(body)["hits"].collect())
+    n_floor = count(lambda: spark.createDataFrame(table, schema).collect())
+    assert 0 < n_request <= n_floor, (n_request, n_floor)
 
 
 def test_driver_fetch_skips_tombstones(spark, ix, tier, tmp_path):

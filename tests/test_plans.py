@@ -76,7 +76,8 @@ def test_request_fetch_is_bounded(parquet_engine, tier):
 def test_driver_tier_job_counts(spark, parquet_engine, jobs, tier):
     """A driver-local search runs no Spark job. A driver-local request
     with _source runs exactly one on a fresh engine (the fetch's docId
-    map) and none once the map exists."""
+    map) and none once the map exists; nor does one with highlight (its
+    fragments are made in the driver, not by a UDF)."""
     tier(True)
     q = {"match": {"content": "def return"}}
     n, rows = jobs(lambda: parquet_engine.search(q, k=5).collect())
@@ -88,17 +89,30 @@ def test_driver_tier_job_counts(spark, parquet_engine, jobs, tier):
     for eng, want in ((fresh, 1), (fresh, 0), (parquet_engine, 0)):
         n, rows = jobs(lambda: eng.request(body)["hits"].collect())
         assert n == want and len(rows) == 5
+    hl = {**body, "highlight": {"fields": {"content": {}}}}
+    n, rows = jobs(lambda: fresh.request(hl)["hits"].collect())
+    assert n == 0 and len(rows) == 5 and all(r["highlights"] for r in rows)
     tier(False)
     n, _ = jobs(lambda: parquet_engine.search(q, k=5).collect())
     assert n >= 1
 
 
 def test_profile_reports_path(parquet_engine, tier):
+    """``path`` says which tier answered; a tier request's ``render``
+    says whether DataFrame post-processing ran over its rows: none for
+    hits, a ``_source`` selection or highlight, some for a derived
+    field (a Spark SQL expression)."""
     q = {"match": {"content": "def"}}
     tier(True)
     prof = parquet_engine.request({"query": q, "size": 3, "profile": True})["profile"]
-    assert prof["query"]["path"] == "driver"
+    assert prof["query"]["path"] == "driver" and prof["query"]["render"] == "driver"
     assert "LocalTableScan" in prof["query"]["plan"]
+    for extra, render in (({"_source": ["path"]}, "driver"),
+                          ({"highlight": {"fields": {"content": {}}}}, "driver"),
+                          ({"derived": {"plen": "length(path)"}}, "spark")):
+        prof = parquet_engine.request({"query": q, "size": 3, "profile": True,
+                                       **extra})["profile"]["query"]
+        assert (prof["path"], prof["fetch"], prof["render"]) == ("driver", "driver", render)
     rescored = parquet_engine.request({
         "query": q, "size": 3, "profile": True,
         "rescore": {"window_size": 5, "query": {

@@ -922,8 +922,7 @@ def _ft_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     eng = _engine(spark, sf_dir)
     terms = ["hash", "join"]
-    idfs = {t: round(float(v), 4) for t, v in eng._idfs(terms).items()
-            if v == v}
+    idfs = {t: round(float(v), 4) for t, v in eng._idfs(terms).items()}
     frames = []
     for t in sorted(idfs):
         one = (eng.compile(A.Match(field_name="text", query=t))

@@ -3,9 +3,10 @@
 Query lifecycle (the Spark re-expression of SURVEY.md §3.1):
 
 1. parse DSL -> AST (dsl.py; coordinator-side rewrite = dsl.normalize)
-2. term lookup: query terms' global df from the tiny ``termstats`` table
-   (driver-side collect — the analog of the DFS phase's global stats;
-   global IDF matches a 1-shard reference index, SURVEY §1.5)
+2. term lookup: query terms' global df from the engine's term map, the
+   ``termstats`` table collected once into the driver (the analog of
+   the DFS phase's global stats; global IDF matches a 1-shard
+   reference index, SURVEY §1.5)
 3. per-segment query phase: the postings scan is filtered to the query
    terms (parquet partition pruning on ``seg`` dirs + row-group min/max
    skipping on the sorted ``term`` column), then ``groupBy("seg").
@@ -39,7 +40,11 @@ Scoring-context notes:
   msearch.make_msearch_scorer -> wand.score_program: block-max pruning,
   one decode, one combine, per-segment top-k; every match when no k is
   given, as for compile()/count()) — no per-clause union, no docId
-  shuffle
+  shuffle. A scripted or docs-only similarity is a parameter of that
+  program (its match clauses' per-term score; phrases stay BM25, and
+  MaxScore, whose block bounds are BM25's, is skipped), so those
+  queries take the driver tier and msearch batching too; a docs-only
+  index's phrases are verified against the source instead
 - term-level clauses (term/terms/range/exists/ids) contribute a constant
   ``boost`` score (reference semantics for filter/constant_score contexts;
   the reference's BM25-on-keyword-field scoring for term-in-must is NOT
@@ -75,25 +80,16 @@ SCORE_SCHEMA = "docId long, score double"
 
 # ---- picklable scorer factories (no Spark objects captured) ----------------
 
-def _make_custom_sim_scorer(dfs: Dict[str, int], doc_count: int, avgdl: float,
-                            operator: str, msm: int, boost: float, simfn):
-    """Scripted-similarity match scorer (reference: SimilarityService.java:116
-    scripted similarity): per-term scores come from the user's vectorized
-    ``simfn(tf, df, dl_q, avgdl, N) -> np.ndarray`` instead of BM25;
-    combination (sum per doc, operator/msm gating) matches the match
-    query contract."""
+def _similarity_contrib(simfn, dfs: Dict[str, int], avgdl: float, doc_count: int):
+    """A scripted similarity (reference: SimilarityService.java:116,
+    ScriptedSimilarityProvider) as a program's per-term score: the
+    user's vectorized ``simfn(tf, df, dl_q, avgdl, N) -> np.ndarray``
+    bound to the index's stats (``dfs``: the query terms' df)."""
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        # "and" requires the GLOBAL distinct query terms (dfs), not the
-        # segment-present subset — see bm25.score_terms_in_segment
-        docs, scores = bm25.score_terms_in_segment(
-            bm25.decode_term_group(pdf), dfs, avgdl, operator, msm,
-            n_required=len(dfs),
-            contrib=lambda t, tf, dl_q: boost * np.asarray(
-                simfn(tf, dfs[t], dl_q, avgdl, doc_count), dtype=np.float64))
-        return pd.DataFrame({"docId": docs.astype(np.int64), "score": scores})
+    def contrib(t: str, tf: np.ndarray, dl_q: np.ndarray) -> np.ndarray:
+        return np.asarray(simfn(tf, dfs[t], dl_q, avgdl, doc_count), dtype=np.float64)
 
-    return fn
+    return contrib
 
 
 def _span_expr(node) -> tuple:
@@ -318,9 +314,9 @@ def source_select(src, columns: Sequence[str], keep: Iterable[str]
     columns (fields the request computed, which the reference returns
     outside ``_source``), highlights and inner_hits in ``columns``
     order. false selects no source column; a string is one
-    include pattern; a list names columns, in its order; a dict holds
-    ``includes``/``excludes`` patterns, each a string or a list (no
-    includes = every column)."""
+    include pattern; a list holds include patterns, whose columns come
+    in its order, each once; a dict holds ``includes``/``excludes``
+    patterns, each a string or a list (no includes = every column)."""
     from fnmatch import fnmatch
 
     if src is None or src is True or (isinstance(src, (list, tuple, dict)) and not src):
@@ -328,7 +324,8 @@ def source_select(src, columns: Sequence[str], keep: Iterable[str]
     keep = {"docId", "score", "inner_hits", *keep,
             *(c for c in columns if c == "highlights" or c.startswith("highlights_"))}
     if isinstance(src, (list, tuple)):
-        cols = [c for c in src if c in columns and c not in keep]
+        cols = list(dict.fromkeys(c for p in src for c in columns
+                                  if c not in keep and fnmatch(c, p)))
     else:
         inc, exc = ((src.get("includes") or "*", src.get("excludes") or ())
                     if isinstance(src, dict) else (src or (), ()))
@@ -469,9 +466,8 @@ class SearchEngine:
         self.globals = ix["globals"]
         # scripted similarity hook (reference: SimilarityService.java:116
         # pluggable per-field similarity): fn(tf, df, dl_q, avgdl, N) ->
-        # per-posting scores (vectorized numpy). When set, match queries
-        # score with it instead of BM25 (WAND pruning disabled — its
-        # score bounds are BM25-specific).
+        # per-posting scores (vectorized numpy). When set, match clauses
+        # score with it instead of BM25 (``_programs``; phrases stay BM25).
         self.similarity = similarity
         self.avgdl = float(self.globals["avgdl"])
         self.doc_count = int(self.globals["field_doc_count"])
@@ -490,18 +486,18 @@ class SearchEngine:
         # degenerates to the idf alone (BM25 with tf==1 and norms off:
         # idf * (k1+1)*1/(1+k1) == idf). Routed through the scripted-
         # similarity hook; phrase queries re-verify against the source
-        # (_phrase_via_source).
+        # (_phrase_via_source), as the index holds no positions.
         self._index_options = str(self.globals.get("index_options",
                                                    "positions"))
         if self._index_options == "docs" and self.similarity is None:
             import numpy as _np
 
-            def _match_only_idf(tf, df, dl_q, avgdl, N):
+            def match_only_idf(tf, df, dl_q, avgdl, N):
                 idf = float(_np.log(1.0 + (N - df + 0.5) / (df + 0.5)))
                 return _np.full(_np.asarray(tf).shape, idf,
                                 dtype=_np.float64)
 
-            self.similarity = _match_only_idf
+            self.similarity = match_only_idf
         self.text_field = text_field
         self.id_cols = tuple(id_cols)
         self.doc_id_col = doc_id_col
@@ -527,14 +523,11 @@ class SearchEngine:
             # table by seg at write time.
             self.postings = self.postings.repartition("seg").persist()
             self.docstats = self.docstats.persist()
-        self._idf_cache: Dict[str, float] = {}
         # full term->df map, loaded lazily ONCE per engine generation
         # (the serving-path analog of broadcasting the term dictionary):
-        # after the first query, repeated queries resolve IDF with zero
-        # Spark jobs instead of one driver round-trip per new term.
-        # None = not loaded yet; False = vocabulary too large, fall back
-        # to per-term pushdown scans.
-        self._term_df_map: Dict[str, int] | None | bool = None
+        # after the first query, queries resolve df and IDF with zero
+        # Spark jobs. None = not loaded yet.
+        self._term_df_map: Dict[str, int] | None = None
         self._n_postings = 0  # sum of the map's df: the index's postings
         self._field_stats_cache: dict | None = None
         import threading as _threading
@@ -739,14 +732,12 @@ class SearchEngine:
         dropped and each qid cut at ``k``. ``attrs["tier"]`` holds the
         block counters and whether this request loaded the table. A
         changed pinned file raises StaleIndexError. None when the Spark
-        plan must run: a node without a program, a scripted similarity,
-        non-local postings, too many tombstones, or work over
+        plan must run: ``k`` < 1, too many tombstones, non-local
+        postings, a node without a program, or work over
         MAX_DRIVER_WORK."""
         from opensearch_spark.search import msearch as M
 
-        if (self.similarity is not None or k < 1 or self._deleted_ids is None
-                or self._load_term_df_map() is False
-                or self._pin_postings() is False):
+        if k < 1 or self._deleted_ids is None or self._pin_postings() is False:
             return None
         progs, idfs = self._programs(nodes)
         if any(p is None for p in progs):
@@ -1642,7 +1633,9 @@ class SearchEngine:
     def explain(self, query: dict | A.AnyNode, doc_id: int) -> dict:
         """_explain analog: per-clause score breakdown for one document
         (reference: TransportExplainAction / Lucene Explanation). For
-        match queries returns per-term BM25 components."""
+        match queries returns per-term scores: with their BM25 idf and
+        formula, or under a scripted or docs-only similarity, that
+        similarity's name."""
         node = dsl_mod.parse(query) if isinstance(query, dict) else dsl_mod.normalize(query)
         out: dict = {"docId": int(doc_id), "total": 0.0, "details": []}
         total_row = (
@@ -1652,7 +1645,10 @@ class SearchEngine:
         out["total"] = float(total_row[0]["score"]) if total_row else 0.0
         if isinstance(node, A.Match):
             terms = self._tok(node.query)
-            idfs = {t: v for t, v in self._idfs(terms).items() if v == v}
+            idfs = self._idfs(terms)
+            sim = self.similarity
+            formula = ("idf * tf / (tf + k1 * (1 - b + b * dl/avgdl))" if sim is None
+                       else f"{getattr(sim, '__name__', 'similarity')}(tf, df, dl_q, avgdl, N)")
             for t in sorted(idfs):
                 one = (
                     self.compile(A.Match(field_name=node.field_name, query=t))
@@ -1662,12 +1658,9 @@ class SearchEngine:
                 if one:
                     out["details"].append({
                         "term": t,
-                        "idf": idfs[t],
+                        **({"idf": idfs[t]} if sim is None else {}),
                         "score": float(one[0]["score"]),
-                        "description": (
-                            f"weight({node.field_name}:{t}) = boost * idf * "
-                            f"tf / (tf + k1 * (1 - b + b * dl/avgdl))"
-                        ),
+                        "description": f"weight({node.field_name}:{t}) = boost * {formula}",
                     })
         return out
 
@@ -1911,8 +1904,6 @@ class SearchEngine:
         from opensearch_spark.search import msearch as M
 
         progs, idfs = self._programs(nodes)
-        if self.similarity is not None:
-            progs = [None] * len(nodes)  # the program scorer is BM25-only
         programs = [p for p in progs if p is not None]
         fallback = [(qid, n) for qid, (n, p) in enumerate(zip(nodes, progs)) if p is None]
 
@@ -2184,11 +2175,7 @@ class SearchEngine:
             return A.MatchNone()
         cutoff = node.cutoff_frequency
         max_df = cutoff * self.doc_count if cutoff < 1.0 else cutoff
-        dfs = {
-            r["term"]: int(r["df"])
-            for r in self.termstats.where(F.col("term").isin(list(set(terms))))
-            .groupBy("term").agg(F.sum("df").alias("df")).collect()
-        }
+        dfs = self._dfs(terms)
         low = [t for t in terms if dfs.get(t, 0) <= max_df]
         high = [t for t in terms if t in dfs and dfs[t] > max_df]
         if not low:
@@ -2650,7 +2637,7 @@ class SearchEngine:
                 A.Prefix(field_name=node.field_name, value=prefix, boost=node.boost)
             )
         idf_map = self._idfs(fixed)
-        if any(v != v for v in idf_map.values()):
+        if len(idf_map) < len(set(fixed)):
             return self._empty()
         idf_sum = sum(idf_map[t] for t in fixed)
         scorer = _make_phrase_prefix_scorer(
@@ -2682,7 +2669,7 @@ class SearchEngine:
         tf: Dict[str, int] = {}
         for t in toks:
             tf[t] = tf.get(t, 0) + 1
-        idfs = {t: v for t, v in self._idfs(list(tf)).items() if v == v}
+        idfs = self._idfs(tf)
         ranked = sorted(
             ((tf[t] * idfs[t], t) for t in idfs), key=lambda x: (-x[0], x[1])
         )
@@ -2709,68 +2696,28 @@ class SearchEngine:
                 f"full-text query on non-indexed field {name!r} (index covers {self.text_field!r})"
             )
 
-    # vocabularies under this row count load fully on first use (a code
-    # corpus dictionary is millions of terms at most; ~30 MB of driver
-    # memory buys zero per-query jobs on the serving path)
-    TERMSTATS_MAP_MAX = 2_000_000
-
-    def _load_term_df_map(self) -> "Dict[str, int] | bool":
-        """Term dictionary as a driver map, built once per generation
-        (the broadcast-termstats analog of the reference's cached
-        per-shard term dictionary). Falls back to per-term pushdown
-        scans when the vocabulary exceeds TERMSTATS_MAP_MAX."""
+    def _load_term_df_map(self) -> Dict[str, int]:
+        """Term dictionary as a driver map (term -> df summed across
+        generations), built once per generation: the broadcast-termstats
+        analog of the reference's cached per-shard term dictionary."""
         if self._term_df_map is None:
             # collected as Arrow: pickled Rows cost ~0.2 s per 30k terms
-            rows = (
-                self.termstats.groupBy("term").agg(F.sum("df").alias("df"))
-                .limit(self.TERMSTATS_MAP_MAX + 1)
-                .toArrow()
-            )
-            if rows.num_rows > self.TERMSTATS_MAP_MAX:
-                self._term_df_map = False
-            else:
-                self._term_df_map = dict(zip(rows.column("term").to_pylist(),
-                                             rows.column("df").to_pylist()))
-                self._n_postings = sum(self._term_df_map.values())
+            rows = self.termstats.groupBy("term").agg(F.sum("df").alias("df")).toArrow()
+            self._term_df_map = dict(zip(rows.column("term").to_pylist(),
+                                         rows.column("df").to_pylist()))
+            self._n_postings = sum(self._term_df_map.values())
         return self._term_df_map
 
     def _idfs(self, terms: Iterable[str]) -> Dict[str, float]:
-        need = [t for t in set(terms) if t not in self._idf_cache]
-        if need:
-            m = self._load_term_df_map()
-            if m is not False:
-                found = {
-                    t: bm25.idf(m[t], self.doc_count) for t in need if t in m
-                }
-            else:
-                # sum df across generations (incremental batches append)
-                rows = (
-                    self.termstats.where(F.col("term").isin(need))
-                    .groupBy("term").agg(F.sum("df").alias("df"))
-                    .collect()
-                )
-                found = {
-                    r["term"]: bm25.idf(int(r["df"]), self.doc_count)
-                    for r in rows
-                }
-            for t in need:
-                self._idf_cache[t] = found.get(t, float("nan"))  # nan = not in index
-        return {t: self._idf_cache[t] for t in set(terms)}
-
+        """IDF of each indexed term among ``terms``; others are absent."""
+        m = self._load_term_df_map()
+        return {t: bm25.idf(m[t], self.doc_count) for t in set(terms) if t in m}
 
     def _dfs(self, terms: Iterable[str]) -> Dict[str, int]:
-        """Raw document frequencies (summed across generations); absent
-        terms are omitted."""
-        need = list(set(terms))
+        """Document frequency of each indexed term among ``terms``;
+        others are absent."""
         m = self._load_term_df_map()
-        if m is not False:
-            return {t: m[t] for t in need if t in m}
-        rows = (
-            self.termstats.where(F.col("term").isin(need))
-            .groupBy("term").agg(F.sum("df").alias("df"))
-            .collect()
-        )
-        return {r["term"]: int(r["df"]) for r in rows}
+        return {t: m[t] for t in set(terms) if t in m}
 
     def _cross_fields(self, node: "A.MultiMatch") -> DataFrame:
         raise ValueError(
@@ -2789,21 +2736,31 @@ class SearchEngine:
     def _programs(self, nodes: Sequence[A.AnyNode]) -> tuple:
         """(``msearch.Program`` or None per node, idf of every known
         query term). A node gets a program when it is a match,
-        match_phrase, or bool of those on this engine's field."""
+        match_phrase, or bool of those on this engine's field; its match
+        clauses score with the engine's similarity, if it has one. A
+        docs-only index holds no positions: a node with a phrase gets
+        no program there (``_phrase_via_source`` answers it)."""
         from opensearch_spark.search import msearch as M
 
         cand: set = set()
         for n in nodes:
             cand |= M.candidate_terms(n, self._tok)
-        idfs = {t: v for t, v in self._idfs(sorted(cand)).items() if v == v}
+        idfs = self._idfs(cand)
+        contrib = None if self.similarity is None else _similarity_contrib(
+            self.similarity, self._dfs(idfs), self.avgdl, self.doc_count)
+        no_phrase = self._index_options == "docs"
 
-        def on_field(n: A.AnyNode) -> bool:
+        def eligible(n: A.AnyNode) -> bool:
             leaves = (n.must + n.filter + n.should + n.must_not
                       if isinstance(n, A.Bool) else [n])
-            return all(getattr(c, "field_name", None) == self.text_field for c in leaves)
+            return all(getattr(c, "field_name", None) == self.text_field
+                       and not (no_phrase and isinstance(c, A.MatchPhrase)) for c in leaves)
 
-        progs = [M.build_program(qid, n, set(idfs), self._tok) if on_field(n) else None
+        progs = [M.build_program(qid, n, set(idfs), self._tok) if eligible(n) else None
                  for qid, n in enumerate(nodes)]
+        for p in progs:
+            if p is not None:
+                p.contrib = contrib
         return progs, idfs
 
     def _program(self, node: A.AnyNode, topk: Optional[int]) -> Optional[DataFrame]:
@@ -2834,21 +2791,7 @@ class SearchEngine:
             if node.zero_terms_query == "all":
                 return self.compile(A.MatchAll(boost=node.boost))
             return self._empty()
-        if self.similarity is None:
-            return self._program(node, topk)
-        idfs = {t: v for t, v in self._idfs(terms).items() if v == v}  # drop NaN (missing)
-        if not idfs or (node.operator == "and" and len(idfs) < len(set(terms))):
-            return self._empty()  # a required term is absent from the index
-        dfs = self._dfs(list(idfs))
-        scorer = _make_custom_sim_scorer(
-            dfs, self.doc_count, self.avgdl, node.operator,
-            node.minimum_should_match, float(node.boost), self.similarity,
-        )
-        return (
-            self._postings_for(list(idfs))
-            .groupBy("seg")
-            .applyInPandas(scorer, SCORE_SCHEMA)
-        )
+        return self._program(node, topk)
 
     def _phrase_via_source(self, node: A.MatchPhrase) -> DataFrame:
         """Phrase over a docs-only (match_only_text) index (reference:
@@ -2901,16 +2844,12 @@ class SearchEngine:
         SloppyPhraseMatcher semantics, bm25.sloppy_phrase_freq_in_segment),
         scored BM25 as a pseudo-term; a one-term phrase is a match."""
         self._check_field(node.field_name)
-        if getattr(self, "_index_options", "positions") == "docs":
+        if self._index_options == "docs":
             if node.slop != 0:
                 raise ValueError(
                     "sloppy phrases are not supported on a docs-only "
                     "(match_only_text) index")
             return self._phrase_via_source(node)
-        if self.similarity is not None and len(self._tok(node.query)) == 1:
-            return self._match(
-                A.Match(field_name=node.field_name, query=node.query, boost=node.boost), topk
-            )
         return self._program(node, topk)
 
     # injectable "now" anchor for date-math bounds (tests / PIT
@@ -3070,10 +3009,9 @@ class SearchEngine:
         aggregates per docId: each clause emits (docId, score, kind,
         cid); the aggregate enforces must-count / must_not-absence /
         minimum_should_match and sums scores."""
-        if self.similarity is None:
-            prog = self._program(node, topk)
-            if prog is not None:
-                return prog
+        prog = self._program(node, topk)
+        if prog is not None:
+            return prog
         KIND_MUST, KIND_FILTER, KIND_SHOULD, KIND_NOT = 0, 1, 2, 3
         parts: List[DataFrame] = []
 

@@ -34,7 +34,7 @@ of every segment's rows in the driver process.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Dict, List, Optional, Sequence, Tuple
+from typing import Callable, Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
@@ -64,6 +64,9 @@ class Program:
     n_must: int = 0       # number of must+filter clauses (all required)
     boost: float = 1.0
     match_none: bool = False
+    # a similarity's per-term score ``contrib(term, tf, dl_q)`` for match
+    # clauses (None = BM25; phrase clauses always score BM25)
+    contrib: Optional[Callable] = None
 
 
 def build_program(qid: int, node: A.AnyNode, known_terms: set,
@@ -207,12 +210,13 @@ def make_msearch_scorer(programs: List[Program], idfs: Dict[str, float],
     return fn
 
 
-def _clause_hits(c: _Clause, decoded, idfs, avgdl) -> Tuple[np.ndarray, np.ndarray]:
+def _clause_hits(c: _Clause, decoded, idfs, avgdl, contrib=None
+                 ) -> Tuple[np.ndarray, np.ndarray]:
     if c.kind == "match":
         docs, scores = bm25.score_terms_in_segment(
             {t: decoded[t] for t in c.terms if t in decoded},
             {t: idfs[t] for t in c.terms},
-            avgdl, c.operator, c.msm, n_required=len(set(c.terms)),
+            avgdl, c.operator, c.msm, n_required=len(set(c.terms)), contrib=contrib,
         )
     else:
         if c.slop:
@@ -235,12 +239,12 @@ def _run_program(prog: Program, decoded, idfs, avgdl
     """Bool combine in numpy: docs sorted unique per clause; required
     clauses intersect, should clauses add + count toward msm, must_not
     subtracts. Mirrors SearchEngine._bool's aggregate semantics."""
-    req = [(c, *_clause_hits(c, decoded, idfs, avgdl))
-           for c in prog.clauses if c.occur in ("must", "filter")]
-    sho = [(c, *_clause_hits(c, decoded, idfs, avgdl))
-           for c in prog.clauses if c.occur == "should"]
-    neg = [_clause_hits(c, decoded, idfs, avgdl)[0]
-           for c in prog.clauses if c.occur == "must_not"]
+    def hits(c: _Clause) -> Tuple[np.ndarray, np.ndarray]:
+        return _clause_hits(c, decoded, idfs, avgdl, prog.contrib)
+
+    req = [(c, *hits(c)) for c in prog.clauses if c.occur in ("must", "filter")]
+    sho = [(c, *hits(c)) for c in prog.clauses if c.occur == "should"]
+    neg = [hits(c)[0] for c in prog.clauses if c.occur == "must_not"]
 
     if prog.n_must and len(req) < prog.n_must:
         # a required clause produced no hits structure (missing terms

@@ -28,10 +28,11 @@ indexed, so no docId spans two segments).
 bool-of-those program (``msearch.Program``) in four steps:
 
  1. pruning picks which block rows to decode —
-    - a lone OR clause runs MaxScore: the strongest term's k-th best
-      contribution θ is a floor for the k-th score; terms whose bound
-      suffix is below θ are non-essential, and an essential term's block
-      is skipped when its bound plus every other term's bound is below θ;
+    - a lone OR clause scored by BM25 runs MaxScore: the strongest
+      term's k-th best contribution θ is a floor for the k-th score;
+      terms whose bound suffix is below θ are non-essential, and an
+      essential term's block is skipped when its bound plus every other
+      term's bound is below θ;
     - any other program with a required clause intersects the required
       clauses' doc sets, sparsest first, decoding only blocks that
       overlap the running candidates;
@@ -283,7 +284,10 @@ def _select_rows(table: BlockTable, prog: M.Program, terms: List[str], rows: np.
     if k is None:
         return rows
     lone = prog.clauses[0] if len(prog.clauses) == 1 else None
-    if (lone is not None and lone.kind == "match" and lone.operator == "or"
+    # block bounds are BM25's: a program under another similarity skips
+    # MaxScore (the skip intersection does not read scores)
+    if (lone is not None and prog.contrib is None
+            and lone.kind == "match" and lone.operator == "or"
             and lone.msm <= 1 and lone.weight > 0 and prog.boost > 0
             and (lone.occur == "must" or (lone.occur == "should" and prog.bool_msm <= 1))):
         return _maxscore_rows(table, [t for t in terms if table.rows(t).size], idfs, avgdl, k)

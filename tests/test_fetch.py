@@ -101,14 +101,17 @@ ALL = ["docId", "repo", "path", "commit", "lang", "content", "n", "ratio", "scor
 @pytest.mark.parametrize("src, extra, cols", [
     (True, {}, ALL),
     ("path", {}, ["docId", "score", "path"]),
+    (["p*"], {}, ["docId", "score", "path"]),
     ({"includes": "p*"}, {}, ["docId", "score", "path"]),
     ({"excludes": "c*"}, {}, ["docId", "score", "repo", "path", "lang", "n", "ratio"]),
     (False, {"highlight": {"fields": {"content": {}}}}, ["docId", "score", "highlights"]),
-], ids=["true", "string", "includes-string", "excludes-string", "false-highlight"])
+], ids=["true", "string", "list-pattern", "includes-string", "excludes-string",
+        "false-highlight"])
 def test_source_forms(spark, ix, tier, src, extra, cols):
     """``_source`` as the reference's FetchSourceContext parses it: true
     is the whole source, false none of it, a string one include
-    pattern, and includes/excludes may each be a string."""
+    pattern, a list include patterns, and includes/excludes may each be
+    a string."""
     eng = engine(spark, ix[0])
     on, off, on_types, off_types, prof = both_fetches(
         eng, tier, {"query": Q, "size": 5, "_source": src, **extra})

@@ -101,16 +101,21 @@ def test_phrase_suggester(eng):
     assert all(o["text"] != f"{broken} {t2}" for o in out)
 
 
-def test_scripted_similarity(spark, ix):
-    """similarity hook (SimilarityService.java:116): TF-saturation-only
-    scorer tf/(tf+1) * ln(N/df), cross-checked in plain python."""
-    import numpy as np
-
-    out, corpus = ix
-
-    def sim(tf, df, dl_q, avgdl, n):
+@pytest.fixture
+def sim():
+    """A scripted similarity: TF saturation times raw idf (defined in a
+    function, so Python workers receive it by value)."""
+    def tf_sat_sim(tf, df, dl_q, avgdl, n):
         return tf / (tf + 1.0) * math.log(n / df)
 
+    return tf_sat_sim
+
+
+def test_scripted_similarity(spark, ix, sim):
+    """similarity hook (SimilarityService.java:116): TF-saturation-only
+    scorer tf/(tf+1) * ln(N/df), cross-checked in plain python; explain
+    names the similarity and gives no BM25 idf."""
+    out, corpus = ix
     eng = SearchEngine(spark, out, corpus=corpus, similarity=sim)
     got = {int(r["docId"]): float(r["score"])
            for r in eng.compile(
@@ -146,6 +151,57 @@ def test_scripted_similarity(spark, ix):
     assert set(got) == set(want)
     for d in got:
         assert abs(got[d] - want[d]) < 1e-9
+    ex = eng.explain({"match": {"content": "def return"}}, max(got, key=got.get))
+    assert ex["details"]
+    assert all("idf" not in x and "tf_sat_sim(tf, df, dl_q, avgdl, N)" in x["description"]
+               for x in ex["details"])
+
+
+SIM_QUERIES = [
+    {"match": {"content": "def return"}},
+    {"match": {"content": {"query": "return node", "operator": "and"}}},
+    {"match": {"content": {"query": "def return node class", "minimum_should_match": 2}}},
+    {"bool": {"must": [{"match": {"content": "return"}}],
+              "should": [{"match": {"content": "node class"}}]}},
+]
+
+
+@pytest.mark.parametrize("on", [True, False], ids=["driver", "spark"])
+def test_scripted_similarity_on_both_paths(spark, ix, sim, tier, on):
+    """A scripted similarity is a parameter of the program scorer: its
+    match (or/and/msm) and bool-of-match queries take the driver tier
+    and msearch batching, their search and msearch top-k equal the
+    exhaustive compile's top-k, and a bool scores its clauses' sum."""
+    from opensearch_spark.search import dsl
+
+    out, corpus = ix
+    eng = SearchEngine(spark, out, corpus=corpus, similarity=sim)
+    k = 5
+
+    def scored(rows):
+        return [(int(r["docId"]), float(r["score"])) for r in rows]
+
+    def compiled(q):
+        return eng.compile(dsl.parse(q)).orderBy(F.desc("score"), F.asc("docId"))
+
+    tier(on)
+    batch = eng.msearch(SIM_QUERIES, k=k).collect()
+    for qid, q in enumerate(SIM_QUERIES):
+        want = scored(compiled(q).limit(k).collect())
+        assert want
+        for got in (scored(eng.search(q, k=k).collect()),
+                    scored(r for r in batch if r["qid"] == qid)):
+            assert [d for d, _ in got] == [d for d, _ in want]
+            assert [s for _, s in got] == pytest.approx([s for _, s in want], abs=1e-9)
+        prof = eng.request({"query": q, "size": k, "profile": True})["profile"]["query"]
+        assert prof["path"] == ("driver" if on else "spark")
+    must, should = (dict(scored(compiled(c).collect()))
+                    for c in (SIM_QUERIES[3]["bool"]["must"][0],
+                              SIM_QUERIES[3]["bool"]["should"][0]))
+    hits = scored(eng.search(SIM_QUERIES[3], k=50).collect())
+    assert len(hits) == 50 and any(d in should for d, _ in hits)
+    for d, s in hits:
+        assert s == pytest.approx(must[d] + should.get(d, 0.0), abs=1e-9)
 
 
 def test_upsert_batch(spark, tmp_path):

@@ -110,6 +110,7 @@ def test_explain_breakdown(eng):
     assert ex["matched"] and abs(ex["total"] - float(top["score"])) < 1e-9
     assert ex["details"], "per-term breakdown missing"
     assert abs(sum(d["score"] for d in ex["details"]) - ex["total"]) < 1e-6
+    assert all(d["idf"] > 0 and "idf * tf" in d["description"] for d in ex["details"])
     miss = eng.explain(Q, 999999999)
     assert not miss["matched"] and miss["total"] == 0.0
 
@@ -684,11 +685,11 @@ def test_update_null_field_and_id_change_guard(spark, tmp_path):
         eng.update(any_doc, doc={"path": "somewhere/else"})
 
 
-def test_match_only_text_docs_index(spark, tmp_path):
+def test_match_only_text_docs_index(spark, tmp_path, tier):
     """index_options='docs' (match_only_text): postings store one
     occurrence per (doc, term) (max_tf == 1 everywhere), match scores
-    are idf-only (tf/doc-length invariant), and phrases re-verify
-    against the source."""
+    are idf-only (tf/doc-length invariant) on the driver tier and on
+    the Spark plan, and phrases re-verify against the source."""
     import os
     from pyspark.sql import functions as F
     from opensearch_spark.index.build import build_index
@@ -707,18 +708,25 @@ def test_match_only_text_docs_index(spark, tmp_path):
     assert post.agg(F.max("max_tf")).collect()[0][0] == 1
     eng = SearchEngine(spark, out, corpus=docs, text_field="text",
                        doc_id_col="doc_id")
-    got = {r["docId"]: r["score"]
-           for r in eng.search({"match": {"text": "alpha"}}, k=10).collect()}
-    # same idf for every matching doc, regardless of tf or length
-    assert set(got) == {1, 2, 3}
-    assert len({round(v, 10) for v in got.values()}) == 1
-    # phrase via source: "beta alpha" is adjacent only in docs 1 and 3
-    ph = {r["docId"] for r in eng.search(
-        {"match_phrase": {"text": "beta alpha"}}, k=10).collect()}
-    assert ph == {1, 3}
-    with pytest.raises(ValueError):
-        eng.search({"match_phrase": {"text": {"query": "beta alpha",
-                                              "slop": 1}}}, k=10)
+    ex = eng.explain({"match": {"text": "alpha"}}, 1)["details"]
+    assert "idf" not in ex[0] and "match_only_idf(" in ex[0]["description"]
+    for on in (True, False):
+        tier(on)
+        got = {r["docId"]: r["score"]
+               for r in eng.search({"match": {"text": "alpha"}}, k=10).collect()}
+        prof = eng.request({"query": {"match": {"text": "alpha"}}, "size": 10,
+                            "profile": True})["profile"]["query"]
+        assert prof["path"] == ("driver" if on else "spark")
+        # same idf for every matching doc, regardless of tf or length
+        assert set(got) == {1, 2, 3}
+        assert len({round(v, 10) for v in got.values()}) == 1
+        # phrase via source: "beta alpha" is adjacent only in docs 1 and 3
+        ph = {r["docId"] for r in eng.search(
+            {"match_phrase": {"text": "beta alpha"}}, k=10).collect()}
+        assert ph == {1, 3}
+        with pytest.raises(ValueError):
+            eng.search({"match_phrase": {"text": {"query": "beta alpha",
+                                                  "slop": 1}}}, k=10)
 
 
 def test_count_matches_search_total(eng):

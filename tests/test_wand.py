@@ -84,21 +84,26 @@ def test_pruned_matches_exhaustive(seed, operator):
     assert stats["decoded"] <= stats["total"]
 
 
-def test_or_pruning_skips_blocks():
-    """Skewed idfs: one dominant rare term + huge low-idf terms -> the
-    low-impact terms' blocks must not all be decoded."""
+def skewed_postings():
+    """One rare high-idf term over 30 docs and two common low-idf terms
+    in all 2000, with their idfs: BM25's MaxScore prunes this."""
     rng = np.random.default_rng(7)
     n = 2000
     docs = np.sort(rng.choice(10**7, size=n, replace=False).astype(np.int64))
     dls = rng.integers(20, 200, size=n)
-    # rare high-idf term over 30 docs; two common low-idf terms everywhere
     sel = np.sort(rng.choice(n, 30, replace=False))
     tp = {
         "rare": (docs[sel], rng.integers(3, 6, size=30), dls[sel]),
         "common1": (docs, np.ones(n, dtype=np.int64), dls),
         "common2": (docs, np.ones(n, dtype=np.int64), dls),
     }
-    idfs = {"rare": 8.0, "common1": 0.05, "common2": 0.05}
+    return tp, {"rare": 8.0, "common1": 0.05, "common2": 0.05}
+
+
+def test_or_pruning_skips_blocks():
+    """Skewed idfs: one dominant rare term + huge low-idf terms -> the
+    low-impact terms' blocks must not all be decoded."""
+    tp, idfs = skewed_postings()
     pdf = make_group_pdf(tp, block=128)
     docs_p, scores_p, stats = wand.score_match_topk(pdf, idfs, AVGDL, 10, "or")
     docs_e, scores_e = exhaustive(tp, idfs)
@@ -106,6 +111,24 @@ def test_or_pruning_skips_blocks():
     assert docs_p.tolist() == docs_e.tolist()
     assert np.allclose(scores_p, scores_e, atol=1e-9)
     assert stats["decoded"] < stats["total"], stats
+
+
+def test_similarity_program_skips_maxscore():
+    """A program under another similarity (``contrib``) skips MaxScore,
+    whose block bounds are BM25's: where MaxScore prunes BM25, a
+    similarity that favours long docs with the common terms still gets
+    the exhaustive top-k."""
+    from opensearch_spark.search import msearch as M
+
+    tp, idfs = skewed_postings()
+    pdf = make_group_pdf(tp, block=128)
+    prog = M.Program(qid=0, clauses=[M._Clause(occur="must", kind="match", terms=list(idfs))],
+                     n_must=1, contrib=lambda t, tf, dl_q: dl_q * (t != "rare"))
+    docs_p, scores_p, _ = wand.score_program(wand.BlockTable(pdf), prog, idfs, AVGDL, 10)
+    docs_e, scores_e, _ = wand.score_program(wand.BlockTable(pdf), prog, idfs, AVGDL, None)
+    docs_e, scores_e = bm25.topk_by_score(docs_e, scores_e, 10)
+    assert docs_p.tolist() == docs_e.tolist()
+    assert np.allclose(scores_p, scores_e, atol=1e-9)
 
 
 def test_and_pruning_skips_blocks():

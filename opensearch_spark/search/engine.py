@@ -3,10 +3,10 @@
 Query lifecycle (the Spark re-expression of SURVEY.md §3.1):
 
 1. parse DSL -> AST (dsl.py; coordinator-side rewrite = dsl.normalize)
-2. term lookup: query terms' global df from the engine's term map, the
-   ``termstats`` table collected once into the driver (the analog of
-   the DFS phase's global stats; global IDF matches a 1-shard
-   reference index, SURVEY §1.5)
+2. term lookup: query terms' global df from the engine's term
+   dictionary, the commit's ``termstats`` files read once into the
+   driver with pyarrow (the analog of the DFS phase's global stats;
+   global IDF matches a 1-shard reference index, SURVEY §1.5)
 3. per-segment query phase: the postings scan is filtered to the query
    terms (parquet partition pruning on ``seg`` dirs + row-group min/max
    skipping on the sorted ``term`` column), then ``groupBy("seg").
@@ -58,13 +58,18 @@ Scoring-context notes:
 
 from __future__ import annotations
 
+import bisect
 import functools
+import heapq
+import json
 import os
+import threading
 from typing import Dict, Iterable, List, Optional, Sequence
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import ArrayType, DoubleType, StringType, StructField, StructType
 
@@ -95,7 +100,7 @@ def _similarity_contrib(simfn, dfs: Dict[str, int], avgdl: float, doc_count: int
 def _span_expr(node) -> tuple:
     """Span AST -> picklable expression tree for the scorer UDF.
     (SpanMulti must be rewritten to SpanOr by the engine first —
-    dictionary expansion needs the termstats table.)"""
+    dictionary expansion needs the engine's term dictionary.)"""
     if isinstance(node, A.SpanTerm):
         return ("term", node.value)
     if isinstance(node, A.SpanNear):
@@ -375,6 +380,24 @@ class StaleIndexError(RuntimeError):
     it — reopen the engine."""
 
 
+def _read_index_files(read, files: Sequence[str]) -> list:
+    """``read(f)`` of each listed index file; a file that is gone raises
+    StaleIndexError."""
+    out = []
+    for f in files:
+        try:
+            out.append(read(f))
+        except OSError as e:
+            raise StaleIndexError(
+                f"index changed since open: {f} is gone; "
+                "open a new SearchEngine") from e
+    return out
+
+
+# the termstats columns the term dictionary reads
+_TERMSTATS = pa.schema([("term", pa.string()), ("df", pa.int64()), ("ttf", pa.int64())])
+
+
 class _PinnedPostings:
     """The postings files an engine opened (or a PIT token's): footers
     read on first tier use for each file's (size, mtime) identity and
@@ -386,19 +409,11 @@ class _PinnedPostings:
     whose docIds ``load`` checks are unique."""
 
     def __init__(self, files: Sequence[str], docstats: Sequence[str]):
-        import pyarrow.parquet as pq
-
         self.files = list(files)
         self.docstats = list(docstats)
         self.ident, self.nbytes = [], 0
-        for f in self.files:
-            try:
-                st = os.stat(f)
-                md = pq.read_metadata(f)
-            except OSError as e:
-                raise StaleIndexError(
-                    f"index changed since open: {f} is gone; "
-                    "open a new SearchEngine") from e
+        for st, md in _read_index_files(
+                lambda f: (os.stat(f), pq.read_metadata(f)), self.files):
             self.ident.append((st.st_size, st.st_mtime_ns))
             self.nbytes += sum(md.row_group(r).column(c).total_compressed_size
                                for r in range(md.num_row_groups)
@@ -417,9 +432,6 @@ class _PinnedPostings:
                     "open a new SearchEngine") from e
 
     def load(self) -> None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         from opensearch_spark.search import wand
 
         # one table scores each docId once: an index that holds a docId
@@ -438,6 +450,18 @@ class _PinnedPostings:
 
 
 class SearchEngine:
+    # tombstone tables above this stay out of broadcast joins; pruned
+    # top-k over-fetch is abandoned (exhaustive scoring) above it too,
+    # since over-fetching by millions defeats the pruning
+    MAX_PRUNE_DELETES = 100_000
+    # A top-k search or msearch batch whose estimated work (_driver_work,
+    # in bytes) is below this is answered in the driver process, without
+    # a Spark job; the crossover curve that sets it is in BASELINE.md.
+    MAX_DRIVER_WORK = 15_000_000
+    # compiled plans kept per cache (search and msearch; serving regime:
+    # the same request or batch arrives continuously)
+    PLAN_CACHE_SIZE = 32
+
     def __init__(
         self,
         spark: SparkSession,
@@ -523,24 +547,24 @@ class SearchEngine:
             # table by seg at write time.
             self.postings = self.postings.repartition("seg").persist()
             self.docstats = self.docstats.persist()
-        # full term->df map, loaded lazily ONCE per engine generation
-        # (the serving-path analog of broadcasting the term dictionary):
-        # after the first query, queries resolve df and IDF with zero
-        # Spark jobs. None = not loaded yet.
+        # the term dictionary (_load_term_df_map), read on first use:
+        # term -> df and term -> ttf summed over generations, their
+        # totals and the sorted terms. None = not loaded yet.
         self._term_df_map: Dict[str, int] | None = None
-        self._n_postings = 0  # sum of the map's df: the index's postings
-        self._field_stats_cache: dict | None = None
-        import threading as _threading
-
+        self._term_ttf: Dict[str, int] = {}
+        self._terms: List[str] = []
+        self._n_postings = 0  # sum of df: the index's postings
+        self._sum_ttf = 0
         self._msearch_plans: Dict[tuple, DataFrame] = {}
         self._search_plans: Dict[tuple, DataFrame] = {}
         # msearch_many drives msearch/search from a thread pool: cache
         # get/evict/put must be atomic or two threads evicting the same
-        # head key race into KeyError
-        self._plan_cache_lock = _threading.Lock()
+        # head key race into KeyError; the term dictionary and the
+        # pinned postings load once under it too
+        self._plan_cache_lock = threading.Lock()
         # the driver tier scores its resident table one request at a
         # time: its decode cache mutates
-        self._tier_lock = _threading.Lock()
+        self._tier_lock = threading.Lock()
         # wildcard trigram accelerator (build_wildcard_index), if the
         # commit lists one
         _wg = self.globals["files"]["wildgrams"]
@@ -570,17 +594,29 @@ class SearchEngine:
         docIds, for the Spark plans), ``_n_deletes``, and up to
         MAX_PRUNE_DELETES of them as ``_deleted_ids`` for the
         driver-local tier (None past that, which keeps the tier off).
-        ``published``: a commit this engine just published tombstones
-        in, whose tombstones it then serves over its own postings."""
+        When the files' footers hold at most MAX_PRUNE_DELETES rows they
+        are read in the driver with pyarrow; past that a Spark query
+        collects them. A listed file that is gone raises
+        StaleIndexError. ``published``: a commit this engine just
+        published tombstones in, whose tombstones it then serves over
+        its own postings."""
         if published is not None:
             self.globals = {**with_files(self.globals, deletes=published["files"]["deletes"]),
                             "commit": published["commit"]}
         src = self.globals["files"]["deletes"]
+        files = [self.paths.table("deletes", f) for f in src]
+        n_rows = sum(md.num_rows for md in _read_index_files(pq.read_metadata, files))
         self.deletes: DataFrame | None = (
             read_table(self.spark, self.paths, "deletes", src).distinct()
             if src else None)
-        rows = ([] if self.deletes is None
-                else self.deletes.limit(self.MAX_PRUNE_DELETES + 1).collect())
+        if n_rows <= self.MAX_PRUNE_DELETES:
+            self._deleted_ids = np.unique(np.concatenate(
+                [np.empty(0, np.int64)] + _read_index_files(
+                    lambda f: pq.read_table(f, columns=["docId"]).column(0).to_numpy(),
+                    files)))
+            self._n_deletes = int(self._deleted_ids.size)
+            return
+        rows = self.deletes.limit(self.MAX_PRUNE_DELETES + 1).collect()
         if len(rows) <= self.MAX_PRUNE_DELETES:
             self._deleted_ids = np.sort(np.array([r[0] for r in rows], dtype=np.int64))
             self._n_deletes = len(rows)
@@ -651,8 +687,6 @@ class SearchEngine:
         reclaimed by the next compaction). Writes one tombstone parquet
         file and publishes it on the latest commit; visible to THIS
         engine immediately and to new engines on open."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
         import uuid
 
         from opensearch_spark.index.incremental import add_tombstones
@@ -691,11 +725,6 @@ class SearchEngine:
             ids.unpersist()
         return n
 
-    # tombstone tables above this stay out of broadcast joins; pruned
-    # top-k over-fetch is abandoned (exhaustive scoring) above it too,
-    # since over-fetching by millions defeats the pruning
-    MAX_PRUNE_DELETES = 100_000
-
     def _live(self, df: DataFrame) -> DataFrame:
         if self.deletes is None:
             return df
@@ -705,11 +734,6 @@ class SearchEngine:
         return df.join(d, "docId", "left_anti")
 
     # ---- driver-local tier --------------------------------------------
-
-    # A top-k search or msearch batch whose estimated work (_driver_work,
-    # in bytes) is below this is answered in the driver process, without
-    # a Spark job; the crossover curve that sets it is in BASELINE.md.
-    MAX_DRIVER_WORK = 15_000_000
 
     def _driver_work(self, programs: Sequence) -> float:
         """Bytes a driver-local answer handles, known before scoring: the
@@ -944,22 +968,12 @@ class SearchEngine:
         # a repeated identical search returns the SAME compiled
         # DataFrame, skipping Catalyst analysis and reusing finished
         # shuffle stages on re-collect.
-        sig = None
-        if isinstance(query, dict):
-            import json as _json
-
-            try:
-                sig = (_json.dumps(
-                    [query, sort, search_after, collapse, slice_],
-                    sort_keys=True), int(k), int(from_),
-                    terminate_after, self.globals["commit"])
-            except TypeError:
-                sig = None
-        if sig is not None:
-            with self._plan_cache_lock:
-                cached = self._search_plans.get(sig)
-            if cached is not None:
-                return cached, None
+        sig = (self._plan_sig([query, sort, search_after, collapse, slice_],
+                              int(k), int(from_), terminate_after)
+               if isinstance(query, dict) else None)
+        cached = self._cached_plan(self._search_plans, sig)
+        if cached is not None:
+            return cached, None
         df = self.compile(node, topk=k if prune else None)
         if slice_ is not None:
             # sliced scroll (reference: search/slice/SliceBuilder.java:82)
@@ -1064,13 +1078,29 @@ class SearchEngine:
             out = out.offset(from_).limit(k)
         else:
             out = out.limit(k)
-        if sig is not None:
-            with self._plan_cache_lock:
-                if len(self._search_plans) >= self.MSEARCH_PLAN_CACHE:
-                    self._search_plans.pop(
-                        next(iter(self._search_plans), None), None)
-                self._search_plans[sig] = out
-        return out, None
+        return self._cached_plan(self._search_plans, sig, out), None
+
+    def _plan_sig(self, request, *key) -> tuple | None:
+        """A plan cache key: ``request`` as canonical JSON, ``key`` and
+        the served commit; None when ``request`` is not JSON."""
+        try:
+            return (json.dumps(request, sort_keys=True), *key, self.globals["commit"])
+        except TypeError:
+            return None
+
+    def _cached_plan(self, cache: dict, sig, plan: DataFrame | None = None
+                     ) -> DataFrame | None:
+        """The plan ``cache`` holds under ``sig`` (None when ``sig`` is);
+        given a ``plan``, stores it first, evicting the oldest entry past
+        PLAN_CACHE_SIZE."""
+        if sig is None:
+            return plan
+        with self._plan_cache_lock:
+            if plan is not None:
+                if len(cache) >= self.PLAN_CACHE_SIZE:
+                    cache.pop(next(iter(cache), None), None)
+                cache[sig] = plan
+            return cache.get(sig)
 
     def request(self, body: dict) -> dict:
         """Full `_search` request body — the reference's REST surface
@@ -1261,15 +1291,13 @@ class SearchEngine:
         `_search` body, then execute it. ``body``: {"source": template,
         "params": {...}} or {"id": stored_id, "params": {...}} with
         templates stored via ``self.templates.put``."""
-        import json as _json
-
         from opensearch_spark.search import templates as T
 
         src = body.get("source")
         if src is None:
             src = self.templates.get(body["id"])
         if not isinstance(src, str):
-            src = _json.dumps(src)
+            src = json.dumps(src)
         return self.request(T.render_query(src, body.get("params")))
 
     def msearch_template(self, items: Sequence[dict]) -> DataFrame:
@@ -1277,8 +1305,6 @@ class SearchEngine:
         render each Mustache template into a search body, execute ALL of
         them as ONE msearch job. Per-item ``size`` trims each query's
         hits from the shared top-k. Returns (qid, docId, score)."""
-        import json as _json
-
         from pyspark.sql import Window
 
         from opensearch_spark.search import templates as T
@@ -1289,7 +1315,7 @@ class SearchEngine:
             if src is None:
                 src = self.templates.get(it["id"])
             if not isinstance(src, str):
-                src = _json.dumps(src)
+                src = json.dumps(src)
             bodies.append(T.render_query(src, it.get("params")))
         if not bodies:
             return self.spark.createDataFrame([], "qid int, " + SCORE_SCHEMA)
@@ -1417,53 +1443,41 @@ class SearchEngine:
         ).collect()
         if not rows:
             return {"found": False, "_id": int(doc_id)}
-        toks = self.analyze(rows[0][0] or "")
-        terms: Dict[str, dict] = {}
-        for t in toks:
-            e = terms.setdefault(t["token"], {"term_freq": 0, "tokens": []})
-            e["term_freq"] += 1
-            e["tokens"].append({
-                "position": t["position"],
-                "start_offset": t["start_offset"],
-                "end_offset": t["end_offset"],
-            })
         out = {"found": True, "_id": int(doc_id),
-               "terms": dict(sorted(terms.items()))}
-        if term_statistics and terms:
-            stats = (
-                self.termstats.where(F.col("term").isin(list(terms)))
-                .groupBy("term")
-                .agg(F.sum("df").alias("df"), F.sum("ttf").alias("ttf"))
-                .collect()
-            )
-            for r in stats:
-                terms[r["term"]]["doc_freq"] = int(r["df"])
-                terms[r["term"]]["ttf"] = int(r["ttf"])
+               "terms": self._term_vector(rows[0][0], term_statistics)}
         if field_statistics:
             out["field_statistics"] = self._field_statistics()
         return out
 
+    def _term_vector(self, text: str | None, term_statistics: bool) -> Dict[str, dict]:
+        """term -> {term_freq, tokens[, doc_freq, ttf]} of ``text``
+        re-analyzed, in term order; ``term_statistics`` adds each
+        indexed term's df/ttf from the term dictionary."""
+        terms: Dict[str, dict] = {}
+        for t in self.analyze(text or ""):
+            e = terms.setdefault(t["token"], {"term_freq": 0, "tokens": []})
+            e["term_freq"] += 1
+            e["tokens"].append({k: t[k] for k in ("position", "start_offset", "end_offset")})
+        if term_statistics:
+            m = self._load_term_df_map()
+            for term, e in terms.items():
+                if term in m:
+                    e["doc_freq"], e["ttf"] = m[term], self._term_ttf[term]
+        return dict(sorted(terms.items()))
+
     def _field_statistics(self) -> dict:
-        """Aggregate term-dictionary stats for the indexed field, cached
-        per engine generation (one scan, reused by every termvectors
-        call)."""
-        if getattr(self, "_field_stats_cache", None) is None:
-            r = self.termstats.agg(
-                F.sum("df").alias("sdf"), F.sum("ttf").alias("sttf")
-            ).collect()[0]
-            self._field_stats_cache = {
-                "doc_count": int(self.doc_count),
-                "sum_doc_freq": int(r["sdf"] or 0),
-                "sum_ttf": int(r["sttf"] or 0),
-            }
-        return self._field_stats_cache
+        """Aggregate stats of the indexed field, from the term dictionary."""
+        self._load_term_df_map()
+        return {"doc_count": int(self.doc_count),
+                "sum_doc_freq": self._n_postings, "sum_ttf": self._sum_ttf}
 
     def mtermvectors(self, doc_ids: Sequence[int],
                      term_statistics: bool = False,
                      field_statistics: bool = True) -> list:
         """`_mtermvectors` (reference: RestMultiTermVectorsAction): the
-        batch form — ONE corpus pushdown fetch for all ids and ONE term
-        dictionary scan shared across docs, instead of a job per doc."""
+        batch form — ONE corpus pushdown fetch for all ids instead of a
+        job per doc; statistics come from the engine's term
+        dictionary."""
         if self.corpus is None:
             raise ValueError("mtermvectors needs an attached corpus")
         ids = [int(i) for i in doc_ids]
@@ -1471,38 +1485,9 @@ class SearchEngine:
             "docId", self.text_field
         ).collect()
         texts = {int(r["docId"]): r[1] for r in rows}
-        docs = []
-        all_terms: set = set()
-        for i in ids:
-            if i not in texts:
-                docs.append({"found": False, "_id": i})
-                continue
-            # inline re-analysis (avoid a per-doc corpus job)
-            toks = self.analyze(texts[i] or "")
-            terms: Dict[str, dict] = {}
-            for t in toks:
-                e = terms.setdefault(t["token"], {"term_freq": 0, "tokens": []})
-                e["term_freq"] += 1
-                e["tokens"].append({
-                    "position": t["position"],
-                    "start_offset": t["start_offset"],
-                    "end_offset": t["end_offset"],
-                })
-            all_terms |= set(terms)
-            docs.append({"found": True, "_id": i,
-                         "terms": dict(sorted(terms.items()))})
-        if term_statistics and all_terms:
-            stats = {
-                r["term"]: (int(r["df"]), int(r["ttf"]))
-                for r in self.termstats.where(F.col("term").isin(list(all_terms)))
-                .groupBy("term")
-                .agg(F.sum("df").alias("df"), F.sum("ttf").alias("ttf"))
-                .collect()
-            }
-            for d in docs:
-                for term, e in d.get("terms", {}).items():
-                    if term in stats:
-                        e["doc_freq"], e["ttf"] = stats[term]
+        docs = [{"found": True, "_id": i,
+                 "terms": self._term_vector(texts[i], term_statistics)}
+                if i in texts else {"found": False, "_id": i} for i in ids]
         if field_statistics:
             fs = self._field_statistics()
             for d in docs:
@@ -1778,21 +1763,14 @@ class SearchEngine:
         CompletionSuggester.java — FST-backed prefix automaton with
         per-entry weights). Dictionary-backed variant: the term
         dictionary IS the suggestion corpus and document frequency the
-        weight; one pushdown-filtered scan of the tiny termstats table
-        per call. Returns [{"text", "weight"}] by (weight desc, text)."""
-        pref = prefix.lower()
-        rows = (
-            self.termstats.where(F.col("term").startswith(pref))
-            .groupBy("term").agg(F.sum("df").alias("w"))
-            .orderBy(F.desc("w"), F.asc("term"))
-            .limit(size)
-            .collect()
-        )
-        return [{"text": r["term"], "weight": int(r["w"])} for r in rows]
-
-    # compiled-plan cache size for repeated msearch batches (serving
-    # regime: the same query template batch arrives continuously)
-    MSEARCH_PLAN_CACHE = 32
+        weight; answered from the engine's term dictionary, no Spark job.
+        The prefix is lowercased only on an index whose analyzer
+        lowercases (``standard``). Returns [{"text", "weight"}] by
+        (weight desc, text)."""
+        pref = prefix.lower() if self.analyzer == "standard" else prefix
+        m = self._load_term_df_map()
+        top = heapq.nsmallest(size, self._prefixed(pref), key=lambda t: (-m[t], t))
+        return [{"text": t, "weight": m[t]} for t in top]
 
     def rank_eval(self, body: dict) -> dict:
         """`_rank_eval` (reference: modules/rank-eval — precision@k,
@@ -1818,8 +1796,6 @@ class SearchEngine:
         Repeated batches hit a small compiled-plan cache: re-collecting
         the SAME DataFrame object skips Catalyst analysis/optimization,
         which is the fixed per-batch driver cost in the serving regime."""
-        import json as _json
-
         self._check_open()
         nodes = [
             dsl_mod.parse(q) if isinstance(q, dict) else dsl_mod.normalize(q)
@@ -1828,26 +1804,12 @@ class SearchEngine:
         local = self._driver_topk(nodes, k)
         if local is not None:
             return self._render(local, ("qid", "docId", "score"))
-        sig = None
-        if all(isinstance(q, dict) for q in queries):
-            try:
-                sig = (_json.dumps(list(queries), sort_keys=True), int(k),
-                       self.globals["commit"])
-            except TypeError:
-                sig = None
-        if sig is not None:
-            with self._plan_cache_lock:
-                cached = self._msearch_plans.get(sig)
-            if cached is not None:
-                return cached
-        out = self._msearch_build(nodes, k)
-        if sig is not None:
-            with self._plan_cache_lock:
-                if len(self._msearch_plans) >= self.MSEARCH_PLAN_CACHE:
-                    self._msearch_plans.pop(
-                        next(iter(self._msearch_plans), None), None)
-                self._msearch_plans[sig] = out
-        return out
+        sig = (self._plan_sig(list(queries), int(k))
+               if all(isinstance(q, dict) for q in queries) else None)
+        cached = self._cached_plan(self._msearch_plans, sig)
+        if cached is not None:
+            return cached
+        return self._cached_plan(self._msearch_plans, sig, self._msearch_build(nodes, k))
 
     def msearch_many(self, batches: Sequence[Sequence[dict]], k: int = 10,
                      max_concurrent: int = 4) -> list:
@@ -1953,8 +1915,8 @@ class SearchEngine:
 
     def count(self, query: dict | A.AnyNode) -> int:
         """Hit count. A match query with one known term (or a required
-        term missing from the index) is answered from the termstats
-        table alone (reference: shortcutTotalHitCount,
+        term missing from the index) is answered from the term
+        dictionary alone (reference: shortcutTotalHitCount,
         TopDocsCollectorContext.java:154). Everything else counts the
         compiled frame; match/phrase/bool run the exhaustive program
         scorer. The shortcut is off when tombstones exist."""
@@ -2549,17 +2511,18 @@ class SearchEngine:
 
     def expand_terms(self, node) -> List[str]:
         """Term-dictionary expansion (reference: automaton over the FST
-        dictionary; here: predicate over the termstats table, ordered by
-        term, capped at max_expansions — the reference's cap too).
-        Wildcard patterns with literal runs use the trigram accelerator
-        when ``build_wildcard_index`` has run: candidates = terms
-        containing every required gram (pushdown IN-filter on the gram
-        table), then the exact regex verifies only those."""
+        dictionary), ordered by term, capped at max_expansions — the
+        reference's cap too. A prefix is one range of the engine's term
+        dictionary; the other kinds are a predicate over the termstats
+        table. Wildcard patterns with literal runs use the trigram
+        accelerator when ``build_wildcard_index`` has run: candidates =
+        terms containing every required gram (pushdown IN-filter on the
+        gram table), then the exact regex verifies only those."""
+        if isinstance(node, A.Prefix):
+            return self._prefixed(node.value)[:node.max_expansions]
         d = self.termstats.select("term").distinct()
         c = F.col("term")
-        if isinstance(node, A.Prefix):
-            cond = c.startswith(node.value)
-        elif isinstance(node, A.Wildcard):
+        if isinstance(node, A.Wildcard):
             import re as _re
             pat = "".join(
                 ".*" if ch == "*" else "." if ch == "?" else _re.escape(ch)
@@ -2697,16 +2660,37 @@ class SearchEngine:
             )
 
     def _load_term_df_map(self) -> Dict[str, int]:
-        """Term dictionary as a driver map (term -> df summed across
-        generations), built once per generation: the broadcast-termstats
-        analog of the reference's cached per-shard term dictionary."""
-        if self._term_df_map is None:
-            # collected as Arrow: pickled Rows cost ~0.2 s per 30k terms
-            rows = self.termstats.groupBy("term").agg(F.sum("df").alias("df")).toArrow()
-            self._term_df_map = dict(zip(rows.column("term").to_pylist(),
-                                         rows.column("df").to_pylist()))
-            self._n_postings = sum(self._term_df_map.values())
+        """The engine's term dictionary (the analog of the reference's
+        per-segment term dictionaries, summed over generations): the
+        commit's termstats files read once with pyarrow, no Spark job,
+        into ``_term_df_map`` (term -> df, returned), ``_term_ttf``,
+        their totals ``_n_postings`` and ``_sum_ttf``, and ``_terms``,
+        sorted (Python's str order is Spark's UTF-8 binary order). A
+        listed file that is gone raises StaleIndexError."""
+        if self._term_df_map is None:  # set last: the rest is loaded
+            with self._plan_cache_lock:
+                if self._term_df_map is None:
+                    t = pa.concat_tables([_TERMSTATS.empty_table()] + _read_index_files(
+                        lambda f: pq.read_table(f, columns=_TERMSTATS.names).cast(_TERMSTATS),
+                        [self.paths.table("termstats", f)
+                         for f in self.globals["files"]["termstats"]]))
+                    t = t.group_by("term").aggregate([("df", "sum"), ("ttf", "sum")]
+                                                     ).sort_by("term")
+                    self._terms = t.column("term").to_pylist()
+                    dfs, ttfs = t.column("df_sum").to_pylist(), t.column("ttf_sum").to_pylist()
+                    self._term_ttf = dict(zip(self._terms, ttfs))
+                    self._n_postings, self._sum_ttf = sum(dfs), sum(ttfs)
+                    self._term_df_map = dict(zip(self._terms, dfs))
         return self._term_df_map
+
+    def _prefixed(self, prefix: str) -> List[str]:
+        """The dictionary's terms that start with ``prefix``, in term
+        order: one range of the sorted terms, found by bisection."""
+        self._load_term_df_map()
+        lo = bisect.bisect_left(self._terms, prefix)
+        hi = bisect.bisect_right(self._terms, prefix, lo,
+                                 key=lambda t: t[:len(prefix)])
+        return self._terms[lo:hi]
 
     def _idfs(self, terms: Iterable[str]) -> Dict[str, float]:
         """IDF of each indexed term among ``terms``; others are absent."""

@@ -465,8 +465,8 @@ def test_tier_match_then_phrase_positions(spark, tmp_path, tier):
 
 def test_tier_reads_each_pinned_file_once(spark, tmp_path, tier, monkeypatch):
     """One pin per engine: twenty tier requests read every postings file,
-    and every docstats file (for the docId uniqueness check), exactly
-    once."""
+    every docstats file (for the docId uniqueness check) and every
+    termstats file (the term dictionary) exactly once."""
     from collections import Counter
 
     import pyarrow.parquet as pq
@@ -489,7 +489,8 @@ def test_tier_reads_each_pinned_file_once(spark, tmp_path, tier, monkeypatch):
             assert eng._search(q, K)[1] is not None
         else:
             eng.msearch(TIER_QUERIES, k=K).collect()
-    files = eng._pinned.files + eng._pinned.docstats
+    files = eng._pinned.files + eng._pinned.docstats + [
+        eng.paths.table("termstats", f) for f in eng.globals["files"]["termstats"]]
     assert eng._pinned.files and reads == Counter({f: 1 for f in files})
 
 

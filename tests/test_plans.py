@@ -50,9 +50,7 @@ def parquet_engine(spark, tmp_path_factory):
         str(root / "corpus"))
     corpus = spark.read.parquet(str(root / "corpus"))
     build_index(spark, corpus, str(root / "ix"), n_segments=4)
-    eng = SearchEngine(spark, str(root / "ix"), corpus=corpus)
-    eng._load_term_df_map()
-    return eng
+    return SearchEngine(spark, str(root / "ix"), corpus=corpus)
 
 
 def test_request_fetch_is_bounded(parquet_engine, tier):
@@ -74,17 +72,21 @@ def test_request_fetch_is_bounded(parquet_engine, tier):
 
 
 def test_driver_tier_job_counts(spark, parquet_engine, jobs, tier):
-    """A driver-local search runs no Spark job. A driver-local request
-    with _source runs exactly one on a fresh engine (the fetch's docId
-    map) and none once the map exists; nor does one with highlight (its
-    fragments are made in the driver, not by a UDF)."""
+    """A driver-local search runs no Spark job, a fresh engine's first
+    included (its term dictionary and postings are read with pyarrow).
+    A driver-local request with _source runs exactly one on a fresh
+    engine (the fetch's docId map) and none once the map exists; nor
+    does one with highlight (its fragments are made in the driver, not
+    by a UDF)."""
     tier(True)
     q = {"match": {"content": "def return"}}
+    n, rows = jobs(lambda: SearchEngine(spark, parquet_engine.paths.root)
+                   .search(q, k=5).collect())
+    assert n == 0 and len(rows) == 5
     n, rows = jobs(lambda: parquet_engine.search(q, k=5).collect())
     assert n == 0 and len(rows) == 5
     fresh = SearchEngine(spark, parquet_engine.paths.root,
                          corpus=parquet_engine._corpus_scan)
-    fresh._load_term_df_map()
     body = {"query": q, "size": 5, "_source": ["path"]}
     for eng, want in ((fresh, 1), (fresh, 0), (parquet_engine, 0)):
         n, rows = jobs(lambda: eng.request(body)["hits"].collect())
@@ -288,21 +290,19 @@ def test_deep_pagination_is_bounded(engine, spark_path):
     assert "TakeOrdered" in p, p
 
 
-def test_repeated_idf_lookup_runs_no_job(engine):
-    """Serving path: after the first query loads the term->df map, IDF
-    resolution for NEW terms is a driver dict lookup — no Spark job per
-    query (the broadcast-termstats analog)."""
-    engine._idfs(["def"])  # triggers the one-time full load
-    assert isinstance(engine._term_df_map, dict)
-    saved = engine.termstats
-    engine.termstats = None  # any scan attempt would now blow up
-    try:
-        out = engine._idfs(["return", "zzz_not_in_index"])
-        assert set(out) == {"return"}  # an unknown term is absent
-        dfs = engine._dfs(["return"])
-        assert dfs.get("return", 0) > 0
-    finally:
-        engine.termstats = saved
+def test_repeated_idf_lookup_runs_no_job(spark, engine):
+    """Serving path: the first query loads the term->df map from the
+    termstats files (pyarrow, not the termstats DataFrame); IDF
+    resolution for NEW terms is then a driver dict lookup — no Spark
+    job per query (the broadcast-termstats analog)."""
+    fresh = SearchEngine(spark, engine.paths.root)
+    fresh.termstats = None  # any scan attempt would now blow up
+    fresh._idfs(["def"])  # triggers the one-time full load
+    assert isinstance(fresh._term_df_map, dict)
+    out = fresh._idfs(["return", "zzz_not_in_index"])
+    assert set(out) == {"return"}  # an unknown term is absent
+    assert fresh._dfs(["return"]).get("return", 0) > 0
+    assert out == engine._idfs(["return", "zzz_not_in_index"])
 
 
 def test_geoip_is_broadcast_equi_join(spark):

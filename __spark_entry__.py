@@ -2982,11 +2982,10 @@ _FT_SCRIPTED_SIM_SQL = (
 
 def _ft_term_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     eng = _engine(spark, sf_dir)
-    return (
-        eng.termstats.select("term", "df", "ttf")
-        .orderBy(F.desc("df"), F.asc("term"))
-        .limit(25)
-    )
+    m = eng._load_term_df_map()
+    top = sorted(m, key=lambda t: (-m[t], t))[:25]
+    return spark.createDataFrame([(t, m[t], eng._term_ttf[t]) for t in top],
+                                 "term string, df long, ttf long")
 
 
 def _ft_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3108,9 +3107,8 @@ _FT_QUERIES: dict[str, tuple[dict, str]] = {
         {"wildcard": {"text": "c*n"}},
         O.multi_term_sql("wildcard", "c*n"),
     ),
-    # leading wildcard: the worst case for dictionary expansion — the
-    # char-trigram accelerator (engine.build_wildcard_index) prunes it;
-    # accelerated or not, results must equal the full dictionary scan
+    # leading wildcard: no prefix range narrows it, so the pattern is
+    # matched against every term of the engine's dictionary
     "ft_wildcard_leading": (
         {"wildcard": {"text": "*er"}},
         O.multi_term_sql("wildcard", "*er"),

@@ -546,13 +546,13 @@ def build_index(
 def load_index(spark: SparkSession, out_dir: str,
                manifest: dict | None = None) -> dict:
     """Open the committed state of an index — or ``manifest``, e.g. a
-    retained PIT record: DataFrames over exactly its listed files, plus
-    the manifest as ``globals``."""
+    retained PIT record: DataFrames over exactly its listed postings and
+    docstats files, plus the manifest as ``globals``."""
     paths = IndexPaths(out_dir)
     m = manifest or read_manifest(out_dir)
     return {
         "paths": paths,
         **{t: read_table(spark, paths, t, m["files"][t])
-           for t in ("postings", "docstats", "termstats")},
+           for t in ("postings", "docstats")},
         "globals": m,
     }

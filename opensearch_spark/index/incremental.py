@@ -28,9 +28,6 @@ reader sees either the whole write or none of it:
   index/VersionType.java / index-API overwrite): tombstone every
   incoming docId, compact them away, then append the new versions —
   all in one commit.
-
-A write that changes termstats publishes no wildgrams
-(``SearchEngine.build_wildcard_index`` rebuilds them).
 """
 
 from __future__ import annotations
@@ -62,7 +59,7 @@ def _add(spark: SparkSession, batch: DataFrame, paths: IndexPaths,
     # per-generation term stats delta from the batch's own posting files
     termstats = m["files"]["termstats"] + (append(term_stats(read_table(
         spark, paths, "postings", new)), paths, "termstats") if new else [])
-    m = with_files(m, termstats=termstats, wildgrams=[])
+    m = with_files(m, termstats=termstats)
     m["generations"] += 1
     return m
 
@@ -276,4 +273,4 @@ def _compact(spark: SparkSession, paths: IndexPaths, manifest: dict,
         m["n_segments"] = int(target_segments)
     m["generations"] = 1
     return with_files(m, postings=postings, termstats=termstats,
-                      docstats=docstats, deletes=[], wildgrams=[])
+                      docstats=docstats, deletes=[])

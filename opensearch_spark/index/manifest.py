@@ -22,7 +22,7 @@ import os
 from dataclasses import dataclass
 from typing import Sequence
 
-TABLES = ("postings", "docstats", "termstats", "deletes", "wildgrams")
+TABLES = ("postings", "docstats", "termstats", "deletes")
 
 # Block-max metadata is stored avgdl-independent: (max_tf, min_dl_q) give
 # the query-time bound idf*(k1+1)*max_tf/(max_tf+k1*(1-b+b*min_dl_q/avgdl))
@@ -38,7 +38,6 @@ SCHEMAS = {
                  "content_sha string"),
     "termstats": "term string, df long, ttf long",
     "deletes": "docId long",
-    "wildgrams": "term string, gram string",
 }
 
 
@@ -125,14 +124,18 @@ def publish(paths: IndexPaths, manifest: dict) -> dict:
     delete every file under the table directories that neither it nor a
     retained PIT record lists: replaced files of earlier commits, a
     failed write's files, Spark's ``_SUCCESS`` and checksum files,
-    side-channel summaries. Returns the published manifest."""
-    m = {**manifest, "commit": int(manifest["commit"]) + 1}
+    side-channel summaries. A table an earlier version wrote that is not
+    in TABLES leaves the manifest and its files are deleted: no reader
+    opens it. Returns the published manifest."""
+    m = {**manifest, "commit": int(manifest["commit"]) + 1,
+         "files": {t: list(manifest["files"][t]) for t in TABLES}}
     _write_json_atomic(paths.manifest, m)
-    keep = {t: set(m["files"][t]) for t in TABLES}
+    keep = {t: set(m["files"].get(t, ())) for t in manifest["files"]}
     for rec in glob.glob(paths.pit("*")):
-        for t, names in _read_json(rec)["files"].items():
-            keep[t].update(names)
-    for t in TABLES:
+        files = _read_json(rec)["files"]
+        for t in TABLES:
+            keep[t].update(files.get(t, ()))
+    for t in keep:
         top = paths.table(t)
         for d, _, files in os.walk(top, topdown=False):
             for f in files:

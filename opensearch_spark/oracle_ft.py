@@ -269,12 +269,12 @@ def _exp_cte(name: str, kind: str, value: str, fuzziness: int = 2,
 
 
 def multi_term_sql(kind: str, value: str, fuzziness: int = 2,
-                   prefix_length: int = 0) -> str:
+                   prefix_length: int = 0, max_expansions: int = 50) -> str:
     """prefix/wildcard/regexp/fuzzy: constant-score docs containing any
     dictionary expansion."""
     return (
         f"WITH {base_ctes()},\n"
-        f"{_exp_cte('exp', kind, value, fuzziness, prefix_length=prefix_length)}\n"
+        f"{_exp_cte('exp', kind, value, fuzziness, max_expansions, prefix_length)}\n"
         f"SELECT DISTINCT f.doc_id AS doc_id, 1.0 AS score\n"
         f"FROM tf f JOIN exp USING (term)"
     )
@@ -305,7 +305,7 @@ def phrase_prefix_sql(query: str, max_expansions: int = 50) -> str:
     terms = tokenize(query)
     fixed, last = terms[:-1], terms[-1]
     if not fixed:
-        return multi_term_sql("prefix", last)
+        return multi_term_sql("prefix", last, max_expansions=max_expansions)
     joins = []
     for i, t in enumerate(fixed[1:], start=1):
         joins.append(

@@ -8,11 +8,13 @@ Query lifecycle (the Spark re-expression of SURVEY.md §3.1):
    driver with pyarrow (the analog of the DFS phase's global stats;
    global IDF matches a 1-shard reference index, SURVEY §1.5)
 3. per-segment query phase: the postings scan is filtered to the query
-   terms (parquet partition pruning on ``seg`` dirs + row-group min/max
-   skipping on the sorted ``term`` column), then ``groupBy("seg").
-   applyInPandas(scorer)`` — each group holds all query-term posting
+   terms, then ``groupBy("seg").applyInPandas(scorer)`` — each group holds all query-term posting
    blocks of one segment; the scorer decodes, scores BM25 in vectorized
-   numpy, and emits only its per-segment top-k (bounded heap analog)
+   numpy, and emits only its per-segment top-k (bounded heap analog).
+   The postings are flat ``part-*.parquet`` files (no ``seg=``
+   directories) of one row group each, so the term filter neither
+   prunes a partition nor skips a row group: every posting row is read
+   (ROADMAP item 8)
 4. coordinator reduce: global ``orderBy(score desc, docId asc).limit(k)``
    — Spark's TakeOrderedAndProject, the TopDocs.merge analog
 5. fetch phase: broadcast-join winners back to the corpus row
@@ -63,12 +65,14 @@ import functools
 import heapq
 import json
 import os
+import re
 import threading
 from typing import Dict, Iterable, List, Optional, Sequence
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import ArrayType, DoubleType, StringType, StructField, StructType
@@ -398,6 +402,27 @@ def _read_index_files(read, files: Sequence[str]) -> list:
 _TERMSTATS = pa.schema([("term", pa.string()), ("df", pa.int64()), ("ttf", pa.int64())])
 
 
+def _levenshtein(word: str, terms: Sequence[str]) -> np.ndarray:
+    """Edit distance from ``word`` to each of ``terms``: inserts,
+    deletes and substitutions of one code point, as Spark's
+    ``levenshtein`` (DuckDB's counts UTF-8 bytes: the two agree on
+    ASCII terms). Wagner-Fischer, one row per character of
+    ``word``, each row computed for every term and column at once: the
+    insertion chain ``row[j] = min(row[j], row[j-1] + 1)`` is a running
+    minimum of ``row[j] - j``."""
+    width = max(map(len, terms), default=0)
+    chars = np.frombuffer("".join(t.ljust(width, "\0") for t in terms)
+                          .encode("utf-32-le"), np.uint32).reshape(len(terms), width)
+    col = np.arange(width + 1)
+    row = np.broadcast_to(col, (len(terms), width + 1))
+    for i, c in enumerate(word, 1):
+        step = np.empty_like(row)
+        step[:, 0] = i
+        np.minimum(row[:, 1:] + 1, row[:, :-1] + (chars != ord(c)), out=step[:, 1:])
+        row = np.minimum.accumulate(step - col, axis=1) + col
+    return row[np.arange(len(terms)), np.fromiter(map(len, terms), np.int64, len(terms))]
+
+
 class _PinnedPostings:
     """The postings files an engine opened (or a PIT token's): footers
     read on first tier use for each file's (size, mtime) identity and
@@ -485,7 +510,6 @@ class SearchEngine:
         self.paths: IndexPaths = ix["paths"]
         self.postings: DataFrame = ix["postings"]
         self.docstats: DataFrame = ix["docstats"]
-        self.termstats: DataFrame = ix["termstats"]
         # the manifest of the commit this engine serves: globals + files
         self.globals = ix["globals"]
         # scripted similarity hook (reference: SimilarityService.java:116
@@ -549,10 +573,12 @@ class SearchEngine:
             self.docstats = self.docstats.persist()
         # the term dictionary (_load_term_df_map), read on first use:
         # term -> df and term -> ttf summed over generations, their
-        # totals and the sorted terms. None = not loaded yet.
+        # totals and the sorted terms (a list and an Arrow array).
+        # None = not loaded yet.
         self._term_df_map: Dict[str, int] | None = None
         self._term_ttf: Dict[str, int] = {}
         self._terms: List[str] = []
+        self._term_arr = pa.array([], pa.string())
         self._n_postings = 0  # sum of df: the index's postings
         self._sum_ttf = 0
         self._msearch_plans: Dict[tuple, DataFrame] = {}
@@ -565,11 +591,6 @@ class SearchEngine:
         # the driver tier scores its resident table one request at a
         # time: its decode cache mutates
         self._tier_lock = threading.Lock()
-        # wildcard trigram accelerator (build_wildcard_index), if the
-        # commit lists one
-        _wg = self.globals["files"]["wildgrams"]
-        self._wildgrams: DataFrame | None = (
-            read_table(spark, self.paths, "wildgrams", _wg) if _wg else None)
         from opensearch_spark.search.templates import TemplateRegistry
 
         self.templates = TemplateRegistry()
@@ -1398,8 +1419,6 @@ class SearchEngine:
         ``tokenizer`` / ``filters`` / ``char_filters`` runs a CUSTOM
         chain instead (the analysis-common surface: stop/stemmer/
         shingle/ngram/synonym/... — see analysis/filters.py)."""
-        import re as _re
-
         if tokenizer is not None or filters or char_filters:
             from opensearch_spark.analysis.filters import analyze_chain
 
@@ -1419,7 +1438,7 @@ class SearchEngine:
             return [
                 {"token": m.group(0), "position": i,
                  "start_offset": m.start(), "end_offset": m.end()}
-                for i, m in enumerate(_re.finditer(WHITESPACE_PATTERN, text or ""))
+                for i, m in enumerate(re.finditer(WHITESPACE_PATTERN, text or ""))
             ]
         return [
             {"token": tok, "position": i, "start_offset": s, "end_offset": e}
@@ -1656,44 +1675,27 @@ class SearchEngine:
         ``search/suggest/term/TermSuggester.java``): per analyzed token,
         candidate terms from the dictionary within ``max_edits``
         Levenshtein, sharing a ``prefix_length`` prefix, ordered by
-        (edit distance asc, doc freq desc, term asc). One Spark job over
-        the tiny termstats table per call.
+        (edit distance asc, doc freq desc, term asc). Answered from the
+        engine's term dictionary (``_near``), no Spark job.
 
         ``suggest_mode`` (reference: TermSuggestionBuilder.SuggestMode):
         "missing" = only suggest for tokens absent from the index;
         "popular" = only candidates more frequent than the input token;
         "always" = suggest regardless."""
-        toks = self._tok(text)
-        out: dict = {}
-        d = self.termstats.groupBy("term").agg(F.sum("df").alias("df"))
+        m = self._load_term_df_map()
         mode = str(suggest_mode).lower()
-        tok_dfs = self._dfs(toks) if mode in ("missing", "popular") else {}
-        for tok in dict.fromkeys(toks):
-            if mode == "missing" and tok_dfs.get(tok, 0) > 0:
+        out: dict = {}
+        for tok in dict.fromkeys(self._tok(text)):
+            df = m.get(tok, 0)
+            if mode == "missing" and df > 0:
                 out[tok] = []
                 continue
-            pref = tok[:prefix_length]
-            cand = (
-                d.where(
-                    F.col("term").startswith(pref)
-                    # cheap length band prunes ~10x of the dictionary
-                    # before the O(len^2) edit-distance runs
-                    & (F.length("term") >= len(tok) - max_edits)
-                    & (F.length("term") <= len(tok) + max_edits)
-                    & (F.levenshtein(F.col("term"), F.lit(tok)) <= max_edits)
-                    & (F.col("df") >= min_doc_freq)
-                )
-                .withColumn("distance", F.levenshtein(F.col("term"), F.lit(tok)))
-                .orderBy(F.asc("distance"), F.desc("df"), F.asc("term"))
-                .limit(size + 1)
-                .collect()
-            )
-            floor = tok_dfs.get(tok, 0) if mode == "popular" else -1
-            out[tok] = [
-                {"text": r["term"], "freq": int(r["df"]),
-                 "distance": int(r["distance"])}
-                for r in cand if r["term"] != tok and int(r["df"]) > floor
-            ][:size]
+            least = max(min_doc_freq, df + 1) if mode == "popular" else min_doc_freq
+            terms, dist = self._near(tok, max_edits, prefix_length)
+            best = heapq.nsmallest(size, (
+                (int(d), -m[t], t) for t, d in zip(terms, dist)
+                if t != tok and m[t] >= least))
+            out[tok] = [{"text": t, "freq": -f, "distance": d} for d, f, t in best]
         return out
 
     def suggest_phrase(self, text: str, size: int = 5, max_edits: int = 2,
@@ -1703,8 +1705,8 @@ class SearchEngine:
         PhraseSuggester.java): whole-phrase corrections ranked by a
         language-model score. Documented simplified variant of the
         reference's Laplace-smoothed bigram LM: per-token candidates
-        come from the term dictionary (term-suggester machinery — one
-        Spark job over termstats); each candidate scores
+        come from the term dictionary (the term suggester's, no Spark
+        job); each candidate scores
         ``ln((df+1)/(N+1)) + channel`` with channel = ln(rwel) for the
         unchanged in-dictionary token and edits * ln(1 - rwel) per edit;
         the phrase score sums token scores and candidates combine by a
@@ -1769,7 +1771,8 @@ class SearchEngine:
         (weight desc, text)."""
         pref = prefix.lower() if self.analyzer == "standard" else prefix
         m = self._load_term_df_map()
-        top = heapq.nsmallest(size, self._prefixed(pref), key=lambda t: (-m[t], t))
+        lo, hi = self._prefix_range(pref)
+        top = heapq.nsmallest(size, self._terms[lo:hi], key=lambda t: (-m[t], t))
         return [{"text": t, "weight": m[t]} for t in top]
 
     def rank_eval(self, body: dict) -> dict:
@@ -1814,11 +1817,10 @@ class SearchEngine:
     def msearch_many(self, batches: Sequence[Sequence[dict]], k: int = 10,
                      max_concurrent: int = 4) -> list:
         """Pipelined batch submission: up to ``max_concurrent`` msearch
-        jobs in flight at once, so driver-side planning of batch N+1
-        overlaps cluster execution of batch N (sequential submission
-        leaves a fixed ~1s planning gap between jobs that caps serving
-        throughput). Returns the collected rows of each batch, order
-        preserved."""
+        batches run at once from a thread pool, so one batch's parse,
+        planning and Py4J hand-off overlap another's Spark job or
+        driver-tier scoring (the tier scores one batch at a time).
+        Returns the collected rows of each batch, order preserved."""
         from concurrent.futures import ThreadPoolExecutor
 
         from pyspark import inheritable_thread_target
@@ -2287,9 +2289,7 @@ class SearchEngine:
             # the standalone token `_score` refers to the query score
             # (word-boundary replace — identifiers merely CONTAINING
             # "_score" are untouched)
-            import re as _re
-
-            src = _re.sub(r"(?<![\w])_score\b", "score", p["source"])
+            src = re.sub(r"(?<![\w])_score\b", "score", p["source"])
             col = F.expr(src).cast("double")
         elif kind == "random_score":
             # deterministic, engine-portable uniform [0, 1): first 8 hex
@@ -2436,123 +2436,30 @@ class SearchEngine:
 
     # ---- multi-term (dictionary expansion) queries ------------------------
 
-    def build_wildcard_index(self) -> str:
-        """Char-trigram accelerator for wildcard expansion (reference:
-        index/mapper/WildcardFieldMapper.java:80 — the wildcard field
-        type indexes character n-grams of each value, anchored with
-        start/end markers, so leading-wildcard patterns prune by their
-        literal runs instead of scanning the whole dictionary).
-
-        Builds ``<index>/wildgrams`` = (gram, term) over the term
-        dictionary, one row per distinct trigram of ``^term$``, sorted
-        by gram so the pushdown ``gram IN (...)`` filter row-group-skips
-        at scale, and publishes it on the latest commit; expand_terms uses
-        it automatically when the served commit lists it. Raises
-        StaleIndexError when a later commit changed the term dictionary
-        this engine serves."""
-        from opensearch_spark.index.manifest import append, publish
-
-        if self._pit is not None:
-            raise ValueError("PIT reader is a read-only snapshot")
-        latest = read_manifest(self.paths.root)
-        if latest["files"]["termstats"] != self.globals["files"]["termstats"]:
-            raise StaleIndexError(
-                "index changed since open: the term dictionary is newer; "
-                "open a new SearchEngine")
-        d = self.termstats.select("term").distinct()
-        grams = (
-            d.select(
-                "term",
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, greatest(length(concat('^', term, '$')) - 2, 1)),"
-                        " i -> substring(concat('^', term, '$'), i, 3))"
-                    )
-                ).alias("gram"),
-            )
-            .where(F.length("gram") == 3)
-            .distinct()
-            .repartition(1)
-            .sortWithinPartitions("gram")
-        )
-        names = append(grams, self.paths, "wildgrams")
-        self.globals = publish(self.paths, with_files(latest, wildgrams=names))
-        self._load_deletes()
-        self._wildgrams = read_table(self.spark, self.paths, "wildgrams", names)
-        return self.paths.table("wildgrams")
-
-    @staticmethod
-    def _wildcard_grams(pattern: str) -> List[str]:
-        """Required literal trigrams of a wildcard pattern: every
-        3-gram of each literal run, with ^/$ anchors when the pattern
-        doesn't start/end with a wildcard. A term matching the pattern
-        necessarily contains every one of these grams (a necessary
-        condition; the rlike verify on the pruned candidate set stays
-        exact)."""
-        runs: List[str] = []
-        cur = ""
-        for ch in pattern:
-            if ch in "*?":
-                if cur:
-                    runs.append(cur)
-                cur = ""
-            else:
-                cur += ch
-        if cur:
-            runs.append(cur)
-        if runs and not pattern.startswith(("*", "?")):
-            runs[0] = "^" + runs[0]
-        if runs and not pattern.endswith(("*", "?")):
-            runs[-1] = runs[-1] + "$"
-        grams: List[str] = []
-        for r in runs:
-            grams.extend(r[i: i + 3] for i in range(len(r) - 2))
-        return sorted(set(grams))
-
     def expand_terms(self, node) -> List[str]:
         """Term-dictionary expansion (reference: automaton over the FST
-        dictionary), ordered by term, capped at max_expansions — the
-        reference's cap too. A prefix is one range of the engine's term
-        dictionary; the other kinds are a predicate over the termstats
-        table. Wildcard patterns with literal runs use the trigram
-        accelerator when ``build_wildcard_index`` has run: candidates =
-        terms containing every required gram (pushdown IN-filter on the
-        gram table), then the exact regex verifies only those."""
+        dictionary), answered from the engine's term dictionary with no
+        Spark job: a prefix is one range of the sorted terms; a
+        wildcard or regexp is one anchored full match over them in RE2,
+        the DuckDB oracle's ``regexp_full_match`` dialect (a pattern RE2
+        rejects raises ValueError); fuzzy is ``_near``. Terms in term
+        order, capped at max_expansions — the reference's cap too."""
+        self._load_term_df_map()
         if isinstance(node, A.Prefix):
-            return self._prefixed(node.value)[:node.max_expansions]
-        d = self.termstats.select("term").distinct()
-        c = F.col("term")
+            lo, hi = self._prefix_range(node.value)
+            return self._terms[lo:min(hi, lo + node.max_expansions)]
+        if isinstance(node, A.Fuzzy):
+            terms, _ = self._near(node.value, node.fuzziness, node.prefix_length)
+            return terms[:node.max_expansions]
         if isinstance(node, A.Wildcard):
-            import re as _re
-            pat = "".join(
-                ".*" if ch == "*" else "." if ch == "?" else _re.escape(ch)
-                for ch in node.value
-            )
-            cond = c.rlike(f"^(?:{pat})$")
-            grams = self._wildcard_grams(node.value)
-            # the accelerator is optional: a later commit that changed
-            # the dictionary deleted it, and the dictionary scan answers
-            if grams and self._wildgrams is not None and all(
-                    os.path.exists(self.paths.table("wildgrams", f))
-                    for f in self.globals["files"]["wildgrams"]):
-                cand = (
-                    self._wildgrams.where(F.col("gram").isin(grams))
-                    .groupBy("term")
-                    .agg(F.count(F.lit(1)).alias("_ng"))
-                    .where(F.col("_ng") == len(grams))
-                    .select("term")
-                )
-                d = cand
+            pat = "".join(".*" if ch == "*" else "." if ch == "?" else re.escape(ch)
+                          for ch in node.value)
         elif isinstance(node, A.Regexp):
-            cond = c.rlike(f"^(?:{node.value})$")
-        elif isinstance(node, A.Fuzzy):
-            cond = F.levenshtein(c, F.lit(node.value)) <= node.fuzziness
-            if node.prefix_length > 0:
-                cond = cond & c.startswith(node.value[: node.prefix_length])
+            pat = node.value
         else:
             raise ValueError(node)
-        rows = d.where(cond).orderBy("term").limit(node.max_expansions).collect()
-        return [r["term"] for r in rows]
+        hit = pc.match_substring_regex(self._term_arr, f"^(?:{pat})$")
+        return self._term_arr.filter(hit)[:node.max_expansions].to_pylist()
 
     def _multi_term(self, node) -> DataFrame:
         self._check_field(node.field_name)
@@ -2597,7 +2504,8 @@ class SearchEngine:
             return self._empty()
         if not fixed:
             return self._multi_term(
-                A.Prefix(field_name=node.field_name, value=prefix, boost=node.boost)
+                A.Prefix(field_name=node.field_name, value=prefix,
+                         max_expansions=node.max_expansions, boost=node.boost)
             )
         idf_map = self._idfs(fixed)
         if len(idf_map) < len(set(fixed)):
@@ -2664,9 +2572,10 @@ class SearchEngine:
         per-segment term dictionaries, summed over generations): the
         commit's termstats files read once with pyarrow, no Spark job,
         into ``_term_df_map`` (term -> df, returned), ``_term_ttf``,
-        their totals ``_n_postings`` and ``_sum_ttf``, and ``_terms``,
-        sorted (Python's str order is Spark's UTF-8 binary order). A
-        listed file that is gone raises StaleIndexError."""
+        their totals ``_n_postings`` and ``_sum_ttf``, and the terms
+        sorted (Python's str order is Spark's UTF-8 binary order) as
+        ``_terms`` and the Arrow array ``_term_arr``. A listed file that
+        is gone raises StaleIndexError."""
         if self._term_df_map is None:  # set last: the rest is loaded
             with self._plan_cache_lock:
                 if self._term_df_map is None:
@@ -2676,21 +2585,34 @@ class SearchEngine:
                          for f in self.globals["files"]["termstats"]]))
                     t = t.group_by("term").aggregate([("df", "sum"), ("ttf", "sum")]
                                                      ).sort_by("term")
-                    self._terms = t.column("term").to_pylist()
+                    self._term_arr = t.column("term").combine_chunks()
+                    self._terms = self._term_arr.to_pylist()
                     dfs, ttfs = t.column("df_sum").to_pylist(), t.column("ttf_sum").to_pylist()
                     self._term_ttf = dict(zip(self._terms, ttfs))
                     self._n_postings, self._sum_ttf = sum(dfs), sum(ttfs)
                     self._term_df_map = dict(zip(self._terms, dfs))
         return self._term_df_map
 
-    def _prefixed(self, prefix: str) -> List[str]:
-        """The dictionary's terms that start with ``prefix``, in term
-        order: one range of the sorted terms, found by bisection."""
+    def _prefix_range(self, prefix: str) -> tuple:
+        """The [lo, hi) range of the sorted terms that start with
+        ``prefix``, found by bisection."""
         self._load_term_df_map()
         lo = bisect.bisect_left(self._terms, prefix)
-        hi = bisect.bisect_right(self._terms, prefix, lo,
-                                 key=lambda t: t[:len(prefix)])
-        return self._terms[lo:hi]
+        return lo, bisect.bisect_right(self._terms, prefix, lo,
+                                       key=lambda t: t[:len(prefix)])
+
+    def _near(self, word: str, max_edits: int, prefix_length: int) -> tuple:
+        """The dictionary's terms within ``max_edits`` edits of ``word``
+        that share its first ``prefix_length`` characters, in term
+        order, and their distances: the prefix range, cut to the length
+        band ``|len - len(word)| <= max_edits``, then ``_levenshtein``."""
+        lo, hi = self._prefix_range(word[:prefix_length])
+        terms = self._term_arr[lo:hi]
+        band = np.abs(pc.utf8_length(terms).to_numpy() - len(word)) <= max_edits
+        terms = terms.filter(pa.array(band)).to_pylist()
+        dist = _levenshtein(word, terms)
+        keep = dist <= max_edits
+        return [t for t, k in zip(terms, keep) if k], dist[keep]
 
     def _idfs(self, terms: Iterable[str]) -> Dict[str, float]:
         """IDF of each indexed term among ``terms``; others are absent."""
@@ -2845,15 +2767,14 @@ class SearchEngine:
         common/time/DateMathParser.java). Non-date-math values pass
         through untouched."""
         import datetime as _dt
-        import re as _re
 
         if not isinstance(v, str) or not v.startswith("now"):
             return v
-        m = _re.fullmatch(r"now((?:[+-]\d+[smhdwMy])*)(?:/([smhdwMy]))?", v)
+        m = re.fullmatch(r"now((?:[+-]\d+[smhdwMy])*)(?:/([smhdwMy]))?", v)
         if not m:
             return v
         t = self.now or _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
-        for part in _re.findall(r"[+-]\d+[smhdwMy]", m.group(1) or ""):
+        for part in re.findall(r"[+-]\d+[smhdwMy]", m.group(1) or ""):
             sign = 1 if part[0] == "+" else -1
             n, u = int(part[1:-1]), part[-1]
             if u == "s":

@@ -69,11 +69,14 @@ def test_indices_boost(cluster):
 def test_suggest_mode(spark, tmp_path):
     """suggest_mode missing/popular/always (reference:
     TermSuggestionBuilder.SuggestMode) on a controlled vocabulary:
-    'cat' appears once, 'car' in ten docs."""
+    'cat' appears once, 'car' in ten docs; 'dome' and three terms one
+    edit from it once, 'dotes' (two edits) in four docs."""
     from opensearch_spark.cluster import Cluster
 
     rows = [("r", f"p{i}", "c", "car wheel", "x") for i in range(10)]
     rows.append(("r", "pc", "c", "cat wheel", "x"))
+    rows.append(("r", "pd", "c", "dome dose dote dove", "x"))
+    rows += [("r", f"pt{i}", "c", "dotes", "x") for i in range(4)]
     corpus = spark.createDataFrame(
         rows, "repo string, path string, commit string, content string,"
         " lang string")
@@ -90,6 +93,10 @@ def test_suggest_mode(spark, tmp_path):
     pop = eng.suggest("cat", size=3, suggest_mode="popular")["cat"]
     assert [s["text"] for s in pop] == ["car"]
     assert eng.suggest("car", size=3, suggest_mode="popular")["car"] == []
+    # popular filters before the size cut: the closer but no more
+    # frequent 'dose'/'dote'/'dove' do not crowd out 'dotes'
+    pop = eng.suggest("dome", size=1, suggest_mode="popular")["dome"]
+    assert pop == [{"text": "dotes", "freq": 4, "distance": 2}]
 
 
 def test_field_caps(cluster):

@@ -30,7 +30,7 @@ QUERIES = [
     {"bool": {"must": [{"match": {"content": "class"}}],
               "should": [{"match": {"content": "import"}}]}},
 ]
-TABLES = ("postings", "docstats", "termstats", "deletes", "wildgrams")
+TABLES = ("postings", "docstats", "termstats", "deletes")
 ID_COLS = ("repo", "path", "commit")
 
 
@@ -56,8 +56,9 @@ def assert_only_listed(root):
     listed = {t: set(manifest(root)["files"][t]) for t in TABLES}
     for rec in glob.glob(os.path.join(root, "pits", "*", "manifest.json")):
         with open(rec) as f:
-            for t, names in json.load(f)["files"].items():
-                listed[t].update(names)
+            pit = json.load(f)["files"]
+        for t in TABLES:
+            listed[t].update(pit.get(t, ()))
     for t in TABLES:
         for d, _, files in os.walk(os.path.join(root, t)):
             for f in files:
@@ -210,3 +211,37 @@ def test_engine_open_runs_no_listing_job(spark, tmp_path):
     jobs, eng = count_jobs(spark, lambda: SearchEngine(spark, out))
     assert jobs == 0
     assert eng.globals["doc_count"] == 120
+
+
+def test_retired_table_in_manifest_and_pit(spark, tmp_path):
+    """An index whose manifest and PIT record list the retired
+    ``wildgrams`` table (written before it was removed) opens and
+    searches, on the latest commit and on the PIT; the next write
+    publishes over it, drops the table from the manifest and deletes
+    its files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pdf = generate_corpus(60, seed=5)
+    root = str(tmp_path / "ix")
+    build_index(spark, spark.createDataFrame(pdf.iloc[:50]), root, n_segments=2)
+    pit = SearchEngine(spark, root).open_pit()
+    os.makedirs(os.path.join(root, "wildgrams"))
+    pq.write_table(pa.table({"term": ["def"], "gram": ["^de"]}),
+                   os.path.join(root, "wildgrams", "part-0.parquet"))
+    for rec, names in ((os.path.join(root, "manifest.json"), ["part-0.parquet"]),
+                       (os.path.join(root, "pits", pit["pit_id"], "manifest.json"), [])):
+        with open(rec) as f:
+            m = json.load(f)
+        m["files"]["wildgrams"] = names
+        with open(rec, "w") as f:
+            json.dump(m, f)
+    want = [r["docId"] for r in SearchEngine(spark, root).search(QUERIES[0], k=5).collect()]
+    assert want
+    pinned = SearchEngine(spark, root, pit=pit)
+    add_batch(spark, spark.createDataFrame(pdf.iloc[50:]), root)
+    assert "wildgrams" not in manifest(root)["files"]
+    assert not os.listdir(os.path.join(root, "wildgrams"))
+    assert_only_listed(root)
+    assert SearchEngine(spark, root).globals["doc_count"] == 60
+    assert [r["docId"] for r in pinned.search(QUERIES[0], k=5).collect()] == want

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from opensearch_spark.index.build import IndexPaths, build_index
 from opensearch_spark.index.incremental import add_batch, compact_index
+from opensearch_spark.index.manifest import read_table
 from opensearch_spark.search.engine import SearchEngine
 from opensearch_spark.testing.corpus import generate_corpus
 
@@ -122,8 +123,8 @@ def test_kill_and_rerun_resume(spark, corpora, tmp_path, fail_nth_write):
 
     # content-identical index tables (order-insensitive)
     for tbl in ("postings", "docstats", "termstats"):
-        a = getattr(e_ref, tbl if tbl != "postings" else "postings")
-        b = getattr(e_res, tbl if tbl != "postings" else "postings")
+        a, b = (read_table(spark, e.paths, tbl, e.globals["files"][tbl])
+                for e in (e_ref, e_res))
         ka = a.select(sorted(a.columns)).exceptAll(b.select(sorted(b.columns))).count()
         kb = b.select(sorted(b.columns)).exceptAll(a.select(sorted(a.columns))).count()
         assert ka == 0 and kb == 0, tbl

@@ -290,16 +290,16 @@ def test_deep_pagination_is_bounded(engine, spark_path):
     assert "TakeOrdered" in p, p
 
 
-def test_repeated_idf_lookup_runs_no_job(spark, engine):
+def test_repeated_idf_lookup_runs_no_job(spark, engine, jobs):
     """Serving path: the first query loads the term->df map from the
-    termstats files (pyarrow, not the termstats DataFrame); IDF
-    resolution for NEW terms is then a driver dict lookup — no Spark
-    job per query (the broadcast-termstats analog)."""
+    termstats files with pyarrow; IDF resolution, for the first term
+    and for NEW terms after it, is a driver dict lookup — no Spark job
+    per query (the broadcast-termstats analog)."""
     fresh = SearchEngine(spark, engine.paths.root)
-    fresh.termstats = None  # any scan attempt would now blow up
-    fresh._idfs(["def"])  # triggers the one-time full load
-    assert isinstance(fresh._term_df_map, dict)
-    out = fresh._idfs(["return", "zzz_not_in_index"])
+    n, _ = jobs(lambda: fresh._idfs(["def"]))  # triggers the one-time full load
+    assert n == 0 and isinstance(fresh._term_df_map, dict)
+    n, out = jobs(lambda: fresh._idfs(["return", "zzz_not_in_index"]))
+    assert n == 0
     assert set(out) == {"return"}  # an unknown term is absent
     assert fresh._dfs(["return"]).get("return", 0) > 0
     assert out == engine._idfs(["return", "zzz_not_in_index"])

@@ -87,11 +87,8 @@ def test_phrase_suggester(eng):
     """Misspelled two-word phrase: the corrected phrase must rank first
     among suggestions."""
     # pick two real frequent terms from the dictionary
-    rows = (
-        eng.termstats.groupBy("term").agg(F.sum("df").alias("df"))
-        .orderBy(F.desc("df"), F.asc("term")).limit(2).collect()
-    )
-    t1, t2 = rows[0]["term"], rows[1]["term"]
+    m = eng._load_term_df_map()
+    t1, t2 = sorted(m, key=lambda t: (-m[t], t))[:2]
     broken = t1[:-1] + ("x" if t1[-1] != "x" else "q")
     out = eng.suggest_phrase(f"{broken} {t2}", size=5)
     assert out, "no suggestions"
@@ -698,39 +695,6 @@ def test_date_math_month_end_clamp(eng):
         eng.now = None
 
 
-def test_wildcard_trigram_accelerator(eng):
-    """build_wildcard_index: leading-wildcard expansion via the trigram
-    table must equal the full-dictionary scan (WildcardFieldMapper
-    analog), with the gram IN-filter pushed to the gram-table scan."""
-    from opensearch_spark.search import ast as A
-
-    node = A.Wildcard(field_name="content", value="*eturn*")
-    base = eng.expand_terms(node)           # full dictionary scan
-    eng.build_wildcard_index()
-    assert eng._wildgrams is not None
-    accel = eng.expand_terms(node)
-    assert accel == base and base           # same expansion, non-empty
-
-    # anchored pattern (no leading wildcard) also matches
-    node2 = A.Wildcard(field_name="content", value="ret?rn")
-    assert eng.expand_terms(node2) == ["return"]
-
-    # required-gram extraction: anchors + literal runs
-    g = eng._wildcard_grams("*tion")
-    assert g == ["ion", "on$", "tio"]
-    assert eng._wildcard_grams("ab") == ["^ab", "ab$"]  # anchors extend short runs
-    assert eng._wildcard_grams("*a*") == []  # too short -> no pruning
-
-    # the candidate plan pushes the gram filter into the parquet scan
-    from pyspark.sql import functions as F
-
-    grams = eng._wildcard_grams("*eturn*")
-    cand = eng._wildgrams.where(F.col("gram").isin(grams))
-    p = cand._jdf.queryExecution().toString()
-    assert "PushedFilters" in p and "gram" in p.split("PushedFilters")[1][:200]
-    eng._wildgrams = None  # leave fixture state as other tests expect
-
-
 def test_geo_queries(spark, ix):
     """geo_distance / geo_bounding_box queries (filter context) vs a
     brute-force haversine check over the corpus."""
@@ -778,33 +742,3 @@ def test_geo_queries(spark, ix):
         if -60.0 <= pts[d][0] <= 60.0 and -100.0 <= pts[d][1] <= 150.0
     )
     assert got2 == want2 and got2
-
-
-def test_wildgrams_stale_after_add_batch(spark, tmp_path):
-    """add_batch marks the wildcard trigram table stale (no deletion —
-    open readers keep a consistent pre-batch view); new readers fall
-    back to the dictionary scan until an explicit rebuild."""
-    from opensearch_spark.index.incremental import add_batch
-    from opensearch_spark.search import ast as A
-
-    corpus = spark.createDataFrame(generate_corpus(120, seed=61))
-    out = str(tmp_path / "wix")
-    build_index(spark, corpus, out, n_segments=2)
-    eng = SearchEngine(spark, out, corpus=corpus)
-    eng.build_wildcard_index()
-    assert eng._wildgrams is not None
-    new = spark.createDataFrame(
-        [("r2", "p2", "c2", "zzwildly new content", "py")],
-        "repo string, path string, commit string, content string, lang string")
-    add_batch(spark, new, out)
-    # pre-batch reader still works (files not deleted)
-    assert eng.expand_terms(A.Wildcard(field_name="content", value="*eturn*"))
-    # fresh reader skips the stale table but still answers via scan
-    eng2 = SearchEngine(spark, out, corpus=corpus)
-    assert eng2._wildgrams is None
-    assert "zzwildly" in eng2.expand_terms(
-        A.Wildcard(field_name="content", value="zzwild*"))
-    # rebuild restores acceleration including the new term
-    eng2.build_wildcard_index()
-    assert "zzwildly" in eng2.expand_terms(
-        A.Wildcard(field_name="content", value="*ildly"))

@@ -40,8 +40,7 @@ def varint_encode_lengths(values: np.ndarray) -> tuple[bytes, np.ndarray]:
     v = np.asarray(values, dtype=np.uint64)
     if v.size == 0:
         return b"", np.empty(0, dtype=np.int64)
-    buf, ngroups = _varint_encode_arr(v)
-    return buf, ngroups
+    return _varint_encode_arr(v)
 
 
 def varint_encode(values: np.ndarray) -> bytes:
@@ -189,19 +188,39 @@ def _concat(streams):
     return b"".join(streams)
 
 
+_LOW7 = np.uint64(0x7F7F7F7F7F7F7F7F)
+_SWAR = ((np.uint64(0x007F007F007F007F), np.uint64(0x7F007F007F007F00), np.uint64(1)),
+         (np.uint64(0x00003FFF00003FFF), np.uint64(0x3FFF00003FFF0000), np.uint64(2)),
+         (np.uint64(0x000000000FFFFFFF), np.uint64(0x0FFFFFFF00000000), np.uint64(4)))
+
+
 def _varint_values(buf, count: int) -> np.ndarray:
-    """LEB128 stream -> ``count`` uint64 values: one pass over the bytes
-    (a value's 7-bit groups occupy disjoint bits, so a segmented sum
-    assembles them)."""
+    """LEB128 stream -> ``count`` uint64 values. A one-byte value is its
+    byte; a longer value's first 8 bytes are read as one little-endian
+    word whose 7-bit groups are packed together in three shift-and-mask
+    steps, and a 9th and 10th byte add the top bits."""
     b = np.frombuffer(buf, dtype=np.uint8)
     ends = np.flatnonzero(b < 0x80)
     if ends.size != count or (b.size and b[-1] >= 0x80):
         raise ValueError(f"varint stream: expected {count} values, got {ends.size}")
-    if count == 0:
-        return np.empty(0, dtype=np.uint64)
+    if ends.size == b.size:
+        return b.astype(np.uint64)
     starts = np.concatenate(([0], ends[:-1] + 1))
-    shift = np.uint64(7) * ragged_arange(ends - starts + 1).astype(np.uint64)
-    return np.add.reduceat((b & np.uint8(0x7F)).astype(np.uint64) << shift, starts)
+    out = b[starts].astype(np.uint64)
+    multi = np.flatnonzero(ends > starts)
+    starts, lens = starts[multi], (ends - starts + 1)[multi]
+    pad = np.zeros(b.size + 10, np.uint8)
+    pad[:b.size] = b
+    v = np.lib.stride_tricks.as_strided(pad, (b.size, 8), (1, 1))[starts].view("<u8").ravel()
+    v &= _LOW7
+    for lo, hi, shift in _SWAR:
+        v = (v & lo) | ((v & hi) >> shift)
+    v &= (np.uint64(1) << np.uint64(7) * np.minimum(lens, 8).astype(np.uint64)) - np.uint64(1)
+    for g in (8, 9):
+        i = np.flatnonzero(lens > g)
+        v[i] |= (pad[starts[i] + g].astype(np.uint64) & np.uint64(0x7F)) << np.uint64(7 * g)
+    out[multi] = v
+    return out
 
 
 def decode_blocks(n_docs, doc_bytes, tf_bytes, norm_bytes, pos_bytes=None):
@@ -228,21 +247,13 @@ def decode_blocks(n_docs, doc_bytes, tf_bytes, norm_bytes, pos_bytes=None):
         raise ValueError(f"norm stream: expected {total} bytes, got {norms.size}")
     if pos_bytes is None:
         return docs, tfs, norms, None
+    return docs, tfs, norms, decode_block_positions(pos_bytes, tfs)
+
+
+def decode_block_positions(pos_bytes, tfs) -> np.ndarray:
+    """The ``pos_bytes`` of posting-block rows (joined or not, as in
+    ``decode_blocks``) -> every doc's absolute positions, concatenated;
+    ``tfs`` holds the rows' decoded term frequencies."""
     gaps = _varint_values(_concat(pos_bytes), int(tfs.sum())).astype(np.int64)
     cp = np.concatenate(([0], np.cumsum(gaps)))
-    positions = cp[1:] - np.repeat(cp[np.cumsum(tfs) - tfs], tfs)
-    return docs, tfs, norms, positions
-
-
-def merge_generations(docs, tfs, norms, positions=None):
-    """One term's decoded postings in ascending docId order. Blocks of
-    later generations (incremental batches) overlap older doc ranges;
-    a stable merge-sort restores the order, positions following their
-    docs. Already-sorted input is returned as is."""
-    if docs.size < 2 or not (docs[1:] < docs[:-1]).any():
-        return docs, tfs, norms, positions
-    order = np.argsort(docs, kind="stable")
-    if positions is not None:
-        starts = np.concatenate(([0], np.cumsum(tfs)[:-1]))
-        positions = positions[np.repeat(starts[order], tfs[order]) + ragged_arange(tfs[order])]
-    return docs[order], tfs[order], norms[order], positions
+    return cp[1:] - np.repeat(cp[np.cumsum(tfs) - tfs], tfs)

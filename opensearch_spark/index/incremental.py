@@ -14,7 +14,8 @@ reader sees either the whole write or none of it:
   ``seg = pmod(docId, n_segments)`` with the manifest's analyzer and
   index_options. It APPENDS posting blocks
   (a new "generation" of blocks whose doc ranges overlap older ones —
-  scorers merge-sort at decode, codec.merge_generations), docstats files
+  ``wand.BlockTable`` merges each term's postings into docId order
+  when it loads them), docstats files
   and the generation's termstats rows; the manifest adds them and the
   writer's counts (doc counts, avgdl). Stored block bounds are (max_tf,
   min_dl_q), avgdl-independent, so older blocks stay valid.

@@ -14,6 +14,7 @@ matching docs (no top-k) so float ties cannot flip a limit boundary.
 
 from __future__ import annotations
 
+import re
 from typing import List, Sequence
 
 from opensearch_spark.analysis.analyzer import (
@@ -244,17 +245,19 @@ def bool_sql(
 
 def _exp_cond(kind: str, value: str, fuzziness: int = 2,
               prefix_length: int = 0) -> str:
+    # literal prefixes and wildcard characters: LIKE would read a value's
+    # own ``_`` and ``%`` as wildcards
     if kind == "prefix":
-        return f"term LIKE {_qlit(value + '%')}"
+        return f"starts_with(term, {_qlit(value)})"
     if kind == "wildcard":
-        like = value.replace("*", "%").replace("?", "_")
-        return f"term LIKE {_qlit(like)}"
+        pat = "".join(".*" if ch == "*" else "." if ch == "?" else re.escape(ch) for ch in value)
+        return f"regexp_full_match(term, {_qlit(pat)})"
     if kind == "regexp":
         return f"regexp_full_match(term, {_qlit(value)})"
     if kind == "fuzzy":
         cond = f"levenshtein(term, {_qlit(value)}) <= {fuzziness}"
         if prefix_length > 0:
-            cond += f" AND term LIKE {_qlit(value[:prefix_length] + '%')}"
+            cond += f" AND starts_with(term, {_qlit(value[:prefix_length])})"
         return cond
     raise ValueError(kind)
 

@@ -49,8 +49,8 @@ def decode_term_group(
     dl_q float64, positions int64 or None), via ``codec.decode_blocks``."""
     from opensearch_spark.search.wand import BlockTable
 
-    table = BlockTable(g, set(g["term"].astype(str)) if want_positions else ())
-    return table.decode(np.arange(len(g)))
+    table = BlockTable(g, None if want_positions else ())
+    return table.decode(np.arange(table.code.size), table.names.tolist() if want_positions else ())
 
 
 def score_terms_in_segment(

@@ -40,7 +40,7 @@ Scoring-context notes:
 - match (or/and/msm), match_phrase (exact or sloppy) and bools of those
   run as ONE per-segment program scorer (``_program`` ->
   msearch.make_msearch_scorer -> wand.score_program: block-max pruning,
-  one decode, one combine, per-segment top-k; every match when no k is
+  one read, one combine, per-segment top-k; every match when no k is
   given, as for compile()/count()) — no per-clause union, no docId
   shuffle. A scripted or docs-only similarity is a parameter of that
   program (its match clauses' per-term score; phrases stay BM25, and
@@ -83,6 +83,7 @@ from opensearch_spark.index.manifest import (
     IndexPaths, _write_json_atomic, read_manifest, read_table, with_files,
 )
 from opensearch_spark.search import ast as A, bm25, dsl as dsl_mod, highlight as H, stored
+from opensearch_spark.search import msearch as M, wand
 
 SCORE_SCHEMA = "docId long, score double"
 
@@ -427,8 +428,8 @@ class _PinnedPostings:
     """The postings files an engine opened (or a PIT token's): footers
     read on first tier use for each file's (size, mtime) identity and
     the compressed bytes (``nbytes``); ``load`` reads the columns a
-    ``wand.BlockTable`` uses from every file once into one resident
-    table over all segments (``table``), kept until the engine closes
+    ``wand.BlockTable`` uses from every file once and decodes them into
+    one resident table over all segments (``table``), kept until the engine closes
     like a segment reader until refresh; ``check`` refuses files changed
     since they were pinned. ``docstats``: the commit's docstats files,
     whose docIds ``load`` checks are unique."""
@@ -457,8 +458,6 @@ class _PinnedPostings:
                     "open a new SearchEngine") from e
 
     def load(self) -> None:
-        from opensearch_spark.search import wand
-
         # one table scores each docId once: an index that holds a docId
         # twice (written before add_batch refused indexed docIds) would
         # have its copies' scores summed or repeated
@@ -471,7 +470,7 @@ class _PinnedPostings:
                 f"the index holds docId {rep[0]} more than once; replace "
                 "that document with upsert_batch (or rebuild the index)")
         self.table = wand.BlockTable(pa.concat_tables(
-            [pq.read_table(f, columns=list(wand._COLS)) for f in self.files]))
+            [pq.read_table(f, columns=list(wand._COLS)) for f in self.files]), ids=ids)
 
 
 class SearchEngine:
@@ -588,8 +587,10 @@ class SearchEngine:
         # head key race into KeyError; the term dictionary and the
         # pinned postings load once under it too
         self._plan_cache_lock = threading.Lock()
-        # the driver tier scores its resident table one request at a
-        # time: its decode cache mutates
+        # the driver tier loads its resident table once and scores it
+        # one request at a time: the table is read-only after the load,
+        # but scoring holds the GIL, and interleaved requests were
+        # slower than serial ones
         self._tier_lock = threading.Lock()
         from opensearch_spark.search.templates import TemplateRegistry
 
@@ -771,17 +772,16 @@ class SearchEngine:
                      ) -> "pd.DataFrame | None":
         """Per-qid top-k (qid, docId, score) of ``nodes``, in final order,
         computed in the driver: one ``msearch.score_table`` over the
-        resident table (loaded by the first such request; one lock, as
-        its decode cache mutates) with ``k`` + the tombstone count, which
+        resident table (decoded by the first such request; one request
+        scores at a time) with ``k`` + the tombstone count, which
         yields each qid's rows by (score desc, docId asc); tombstones are
         dropped and each qid cut at ``k``. ``attrs["tier"]`` holds the
-        block counters and whether this request loaded the table. A
+        block rows the programs scored and referenced, whether this
+        request loaded the table, and then the table's decoded bytes. A
         changed pinned file raises StaleIndexError. None when the Spark
         plan must run: ``k`` < 1, too many tombstones, non-local
         postings, a node without a program, or work over
         MAX_DRIVER_WORK."""
-        from opensearch_spark.search import msearch as M
-
         if k < 1 or self._deleted_ids is None or self._pin_postings() is False:
             return None
         progs, idfs = self._programs(nodes)
@@ -803,8 +803,9 @@ class SearchEngine:
             qid = out["qid"].to_numpy()  # programs, so rows, in qid order
             out = out[np.arange(qid.size) - np.searchsorted(qid, qid) < k]
         out = out.reset_index(drop=True)
-        out.attrs["tier"] = {"blocks_decoded": stats["decoded"],
-                             "blocks_total": stats["total"], "pinned": loaded}
+        out.attrs["tier"] = {"blocks_scored": stats["decoded"],
+                             "blocks_total": stats["total"], "pinned": loaded,
+                             **({"decoded_bytes": pinned.table.nbytes} if loaded else {})}
         return out
 
     def _render(self, local: pd.DataFrame, cols: Sequence[str] = ("docId", "score"),
@@ -1865,8 +1866,6 @@ class SearchEngine:
     def _msearch_build(self, nodes: Sequence[A.AnyNode], k: int) -> DataFrame:
         from pyspark.sql import Window
 
-        from opensearch_spark.search import msearch as M
-
         progs, idfs = self._programs(nodes)
         programs = [p for p in progs if p is not None]
         fallback = [(qid, n) for qid, (n, p) in enumerate(zip(nodes, progs)) if p is None]
@@ -2637,7 +2636,8 @@ class SearchEngine:
         )
 
     def _postings_for(self, terms: Sequence[str]) -> DataFrame:
-        return self.postings.where(F.col("term").isin(list(set(terms))))
+        return self.postings.where(F.col("term").isin(list(set(terms)))).select(
+            "seg", *wand._COLS)
 
     def _programs(self, nodes: Sequence[A.AnyNode]) -> tuple:
         """(``msearch.Program`` or None per node, idf of every known
@@ -2646,8 +2646,6 @@ class SearchEngine:
         clauses score with the engine's similarity, if it has one. A
         docs-only index holds no positions: a node with a phrase gets
         no program there (``_phrase_via_source`` answers it)."""
-        from opensearch_spark.search import msearch as M
-
         cand: set = set()
         for n in nodes:
             cand |= M.candidate_terms(n, self._tok)
@@ -2671,12 +2669,10 @@ class SearchEngine:
 
     def _program(self, node: A.AnyNode, topk: Optional[int]) -> Optional[DataFrame]:
         """The node as ONE per-segment program scorer
-        (wand.score_program: block-max pruning, one decode, one combine,
+        (wand.score_program: block-max pruning, one read, one combine,
         per-segment top-k or every match when ``topk`` is None) — no
         per-clause union and no docId shuffle. None when the node has
         no program (``_programs``)."""
-        from opensearch_spark.search import msearch as M
-
         (prog,), idfs = self._programs([node])
         if prog is None:
             return None

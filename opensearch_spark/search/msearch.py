@@ -4,11 +4,11 @@ Spark job.
 ``build_program`` turns a match (or/and/msm), match_phrase (any slop),
 or bool-of-those AST into a flat ``Program``; ``_run_program`` is its
 combine in numpy. ``wand.score_program`` runs a program over one
-``wand.BlockTable`` (block-max pruning, one decode, this combine,
-top-k), and every such query runs through it: on the Spark plan
-``search``, ``compile`` and ``count`` score one program per segment,
-and an msearch batch scores all of its programs against one shared
-table (one decode cache) per segment.
+``wand.BlockTable`` (block-max pruning, one read of the selected
+postings, this combine, top-k), and every such query runs through it:
+on the Spark plan ``search``, ``compile`` and ``count`` score one
+program per segment, and an msearch batch scores all of its programs
+against one shared table, decoded once, per segment.
 
 Reference: the `_msearch` endpoint executes a list of search requests in
 a single round trip (``action/search/TransportMultiSearchAction.java``,
@@ -170,29 +170,26 @@ def score_table(table, programs: Sequence[Program], idfs: Dict[str, float],
     segment's rows on the Spark plan, every segment's in the driver
     tier): (per-(query, table) top-k by (score desc, docId asc), or
     every match when ``k`` is None, as (qid, docId, score) in program
-    order; {"decoded": rows this call decoded — not those the table's
-    cache held, "total": rows the programs reference}."""
+    order; {"decoded": rows the programs' pruning selected, "total": rows
+    the programs reference}."""
     from opensearch_spark.search import wand
 
-    before = table.n_decodes
-    # every phrase term up front: a row a match would decode first is
-    # then decoded once, with its positions, not twice
-    table.want_positions(position_terms(programs))
     out_qid: List[np.ndarray] = []
     out_doc: List[np.ndarray] = []
     out_score: List[np.ndarray] = []
-    total = 0
+    decoded = total = 0
     for prog in programs:
         docs, scores, stats = wand.score_program(table, prog, idfs, avgdl, k)
         out_qid.append(np.full(docs.size, prog.qid, dtype=np.int32))
         out_doc.append(docs.astype(np.int64))
         out_score.append(scores.astype(np.float64))
+        decoded += stats["decoded"]
         total += stats["total"]
     return pd.DataFrame({
         "qid": np.concatenate([np.empty(0, np.int32)] + out_qid),
         "docId": np.concatenate([np.empty(0, np.int64)] + out_doc),
         "score": np.concatenate([np.empty(0, np.float64)] + out_score),
-    }), {"decoded": table.n_decodes - before, "total": total}
+    }), {"decoded": decoded, "total": total}
 
 
 def make_msearch_scorer(programs: List[Program], idfs: Dict[str, float],
@@ -205,7 +202,8 @@ def make_msearch_scorer(programs: List[Program], idfs: Dict[str, float],
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         from opensearch_spark.search import wand
 
-        return score_table(wand.BlockTable(pdf), programs, idfs, avgdl, k)[0]
+        return score_table(wand.BlockTable(pdf, position_terms(programs)),
+                           programs, idfs, avgdl, k)[0]
 
     return fn
 

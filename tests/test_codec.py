@@ -150,27 +150,38 @@ def test_decode_blocks_empty_and_truncated():
 @pytest.mark.parametrize("seed", range(4))
 def test_two_generations_merge_sorted_per_term(seed):
     """Blocks of two generations whose doc ranges overlap (an
-    incremental batch), decoded together and merge-sorted per term,
-    equal each term's postings decoded as one sorted run."""
+    incremental batch), loaded into one ``wand.BlockTable``, hold each
+    term's postings as one docId-sorted run, positions following their
+    docs. DocIds span the int64 range, so the table sorts by docId rank."""
+    import pandas as pd
+
+    from opensearch_spark.search import wand
+
     rng = np.random.default_rng(seed)
-    for term in range(3):
+    rows, want = [], {}
+    for term in ("a", "b", "c"):
         gen = [_random_blocks(rng, 300, -(2**62), 2**62, max_block=16) for _ in range(2)]
         old, new = _reference(gen[0]), _reference(gen[1])
         if np.intersect1d(old[0], new[0]).size:
             continue  # a doc lives in one generation only
-        docs, tfs, norms, pos = codec.merge_generations(*_decode(gen[0] + gen[1]))
+        for blk in gen[1] + gen[0]:
+            d = codec.delta_decode_sorted(blk["doc_bytes"], blk["n_docs"])
+            rows.append({**blk, "term": term, "block_no": len(rows), "first_doc": d[0],
+                         "last_doc": d[-1], "max_tf": 8, "min_dl_q": 0})
         order = np.argsort(np.concatenate((old[0], new[0])), kind="stable")
-        assert (docs == np.concatenate((old[0], new[0]))[order]).all()
-        assert (np.diff(docs) > 0).all()
-        assert (tfs == np.concatenate((old[1], new[1]))[order]).all()
-        assert (norms == np.concatenate((old[2], new[2]))[order]).all()
-        # positions follow their docs
-        by_doc = {}
-        for d_arr, t_arr, p_arr in ((old[0], old[1], old[3]), (new[0], new[1], new[3])):
-            starts = np.concatenate(([0], np.cumsum(t_arr)))
-            for i, d in enumerate(d_arr.tolist()):
-                by_doc[d] = p_arr[starts[i]:starts[i + 1]].tolist()
-        assert pos.tolist() == [p for d in docs.tolist() for p in by_doc[d]]
+        starts = [np.concatenate(([0], np.cumsum(x[1]))) for x in (old, new)]
+        by_doc = {d: x[3][s[i]:s[i + 1]].tolist()
+                  for x, s in zip((old, new), starts) for i, d in enumerate(x[0].tolist())}
+        want[term] = [np.concatenate((old[i], new[i]))[order] for i in range(3)] + [by_doc]
+    table = wand.BlockTable(pd.DataFrame(rows))
+    got = table.decode(np.arange(table.code.size), want)
+    assert sorted(got) == sorted(want)
+    for term, (docs, tfs, norms, by_doc) in want.items():
+        d, t, dl_q, pos = got[term]
+        assert (d == docs).all() and (np.diff(d) > 0).all()
+        assert (t == tfs).all()
+        assert (dl_q == smallfloat.decode_norms_np(norms)).all()
+        assert pos.tolist() == [p for x in docs.tolist() for p in by_doc[x]]
 
 
 def test_zigzag():

@@ -447,9 +447,9 @@ def test_tier_stale_reader_raises(spark, tmp_path, tier):
 # ---- driver-local tier: the resident block table ------------------------
 
 def test_tier_match_then_phrase_positions(spark, tmp_path, tier):
-    """The resident table keeps decodes across requests: a match decodes
-    its term's rows without positions, and a later phrase with that term
-    must still get them."""
+    """The resident table decodes every term's positions when it loads:
+    a phrase after a match over the same term gets them from the same
+    table."""
     root = str(tmp_path / "ix")
     corpus = _fresh_index(spark, root)
     eng = SearchEngine(spark, root, corpus=corpus)
@@ -457,7 +457,7 @@ def test_tier_match_then_phrase_positions(spark, tmp_path, tier):
     on, off = both_paths(eng, tier, match)
     assert on == off and on
     table = eng._pinned.table
-    assert (table._done & (table._pos_off < 0)).any()
+    assert table._has_pos.all() and table._pos.size
     on, off = both_paths(eng, tier, phrase)
     assert on == off and on
     assert eng._pinned.table is table
@@ -494,10 +494,10 @@ def test_tier_reads_each_pinned_file_once(spark, tmp_path, tier, monkeypatch):
     assert eng._pinned.files and reads == Counter({f: 1 for f in files})
 
 
-def test_tier_profile_counts_new_decodes(spark, tmp_path, tier):
+def test_tier_profile_counts_scored_blocks(spark, tmp_path, tier):
     """``profile`` of a tier request: the first one loads the resident
-    table; a repeat decodes nothing new, as every row it needs is
-    cached."""
+    table and reports its decoded bytes; a repeat scores the same block
+    rows, a share of those its programs reference."""
     root = str(tmp_path / "ix")
     corpus = _fresh_index(spark, root)
     eng = SearchEngine(spark, root, corpus=corpus)
@@ -507,10 +507,43 @@ def test_tier_profile_counts_new_decodes(spark, tmp_path, tier):
     second = eng.request(body)["profile"]["query"]
     assert first["path"] == second["path"] == "driver"
     assert first["pinned"] is True and second["pinned"] is False
-    assert first["blocks_decoded"] > 0 and second["blocks_decoded"] == 0
-    assert second["blocks_total"] == first["blocks_total"] > 0
+    assert first["decoded_bytes"] == eng._pinned.table.nbytes > 0
+    assert "decoded_bytes" not in second and "blocks_decoded" not in second
+    assert second["blocks_scored"] == first["blocks_scored"]
+    assert 0 < second["blocks_scored"] <= second["blocks_total"] == first["blocks_total"]
     third = eng.request({**body, "query": TIER_QUERIES[2]})["profile"]["query"]
-    assert third["pinned"] is False and third["blocks_decoded"] > 0
+    assert third["pinned"] is False and 0 < third["blocks_scored"] <= third["blocks_total"]
+
+
+def test_warm_tier_decodes_nothing(spark, tmp_path, tier, monkeypatch):
+    """After the first tier request decodes the resident table, match,
+    AND, phrase and bool searches and an msearch of them never decode
+    a block again, and answer as the Spark plan does."""
+    from opensearch_spark.index import codec
+
+    root = str(tmp_path / "ix")
+    corpus = _fresh_index(spark, root)
+    eng = SearchEngine(spark, root, corpus=corpus)
+    queries = [*TIER_QUERIES[:2], {"match_phrase": {"content": "return class"}}, TIER_QUERIES[3]]
+    want = {}
+    for i, q in enumerate(queries):
+        on, off = both_paths(eng, tier, q)
+        assert on == off and on, q
+        want[i] = on
+
+    def refuse(*a, **kw):
+        raise AssertionError("a warm tier request decoded blocks")
+
+    monkeypatch.setattr(codec, "decode_blocks", refuse)
+    monkeypatch.setattr(codec, "decode_block_positions", refuse)
+    tier(True)
+    for i, q in enumerate(queries):
+        assert eng._search(q, K)[1] is not None
+        assert run(eng, q) == want[i], q
+    rows = eng.msearch(queries, k=K).collect()
+    got = {i: [(int(r["docId"]), float(r["score"])) for r in rows if r["qid"] == i]
+           for i in want}
+    assert got == want
 
 
 def test_close_releases_cache_and_tables(spark, tmp_path, tier):

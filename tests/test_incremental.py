@@ -2,8 +2,8 @@
 
 The key contracts:
 - incremental add_batch over A then B produces search results EQUAL to a
-  full rebuild over A ∪ B (global df/avgdl updated; multi-generation
-  decode merge-sorts correctly)
+  full rebuild over A ∪ B (global df/avgdl updated; the block table
+  merges multi-generation postings into docId order)
 - compaction folds generations without changing any result
 - a build killed mid-wave resumes from the manifest's wave record and
   produces content-identical index tables without re-tokenizing

@@ -241,3 +241,31 @@ def test_gone_files_raise_stale(spark, ws_index):
     shutil.rmtree(eng.paths.table("deletes"))
     with pytest.raises(StaleIndexError):
         eng._load_deletes()
+
+
+@pytest.mark.parametrize("node", [A.Wildcard(value="arr_*", max_expansions=10_000),
+                                  A.Prefix(value="arr_", max_expansions=10_000),
+                                  A.Fuzzy(value="arr_x", fuzziness=2, prefix_length=4,
+                                          max_expansions=10_000)],
+                         ids=["wildcard", "prefix", "fuzzy_prefix"])
+def test_oracle_reads_underscore_literally(two_gen, node):
+    """The DuckDB oracle's expansion selects the engine's terms for a
+    value holding ``_``, which both read as a literal character."""
+    import duckdb
+
+    from opensearch_spark import oracle_ft
+
+    eng, stats = two_gen
+    kind = type(node).__name__.lower()
+    con = duckdb.connect()
+    con.register("docs_df", generate_corpus(200, seed=7).reset_index(drop=True))
+    con.execute(f"CREATE VIEW {oracle_ft.TABLE} AS SELECT row_number() OVER () AS "
+                f"{oracle_ft.ID}, content AS {oracle_ft.TEXT} FROM docs_df")
+    got = [r[0] for r in con.execute(
+        f"WITH {oracle_ft.base_ctes()},\n"
+        f"{oracle_ft._exp_cte('exp', kind, node.value, 2, 10_000, getattr(node, 'prefix_length', 0))}"
+        "\nSELECT term FROM exp ORDER BY term").fetchall()]
+    want = [t for t in sorted(stats) if t.startswith("arr_")]
+    if kind == "fuzzy":
+        want = [t for t in want if lev(t, node.value) <= 2]
+    assert want and got == want == eng.expand_terms(node)

@@ -15,8 +15,11 @@ AVGDL = 50.0
 BLOCK = 8
 
 
-def make_group_pdf(term_postings: dict, avgdl: float = AVGDL, block: int = BLOCK):
-    """term -> (docs sorted, tfs, dls) packed into posting-block rows."""
+def make_group_pdf(term_postings: dict, avgdl: float = AVGDL, block: int = BLOCK,
+                   positions=None):
+    """term -> (docs sorted, tfs, dls) packed into posting-block rows;
+    ``positions(term, doc, tf)`` gives a doc's positions (default
+    ``arange(tf)``)."""
     rows = []
     for term, (docs, tfs, dls) in term_postings.items():
         docs = np.asarray(docs, dtype=np.int64)
@@ -27,7 +30,8 @@ def make_group_pdf(term_postings: dict, avgdl: float = AVGDL, block: int = BLOCK
         for bno, s in enumerate(range(0, len(docs), block)):
             e = min(s + block, len(docs))
             # positions: synthetic ascending ints matching tf counts
-            pos = np.concatenate([np.arange(t) for t in tfs[s:e]])
+            pos = np.concatenate([np.arange(t) if positions is None else positions(term, d, t)
+                                  for d, t in zip(docs[s:e], tfs[s:e])])
             rows.append({
                 "seg": 0, "term": term, "block_no": bno, "n_docs": e - s,
                 "first_doc": int(docs[s]), "last_doc": int(docs[e - 1]),
@@ -291,8 +295,9 @@ def test_program_pruned_rank_identity(seed):
 
 def test_program_multi_generation_rank_identity():
     """Two generations (an incremental batch appended blocks whose doc
-    ranges overlap the first build's): the block table merge-sorts each
-    term's docs, and pruned top-k still equals the exhaustive program."""
+    ranges overlap the first build's): the block table merges each
+    term's postings into docId order when built, and pruned top-k
+    still equals the exhaustive program."""
     rng = np.random.default_rng(5)
     postings = _rand_postings(rng)
     gens = []
@@ -322,19 +327,26 @@ def test_program_multi_generation_rank_identity():
         np.testing.assert_allclose(gs, ws, rtol=0, atol=1e-12)
 
 
-def test_one_table_equals_merged_segment_tables():
-    """The driver tier scores ONE table over every segment's rows. Over
-    3 segments with interleaved doc ranges (seg = doc % 3), each holding
-    two generations, it must give the same top-k as per-segment tables
-    merged by (score desc, docId asc) — for a lone OR clause (MaxScore),
-    AND, an exact and a sloppy phrase, and a bool with must_not and
-    minimum_should_match. Docs 2j and 2j+1 (different segments) carry
-    identical postings, and k cuts such a tied pair, so the k-th place
-    is a score tie across segments."""
-    from opensearch_spark.search import msearch as M
+def _position_of(term, doc, tf):
+    """Positions unique to (term, doc): term t{i} sits right after
+    t{i-1} in every doc, so phrases over consecutive terms match."""
+    return int(doc) % 97 + int(term[1:]) + 2 * np.arange(tf)
 
+
+def _wide(docs):
+    """Docs 0..299 spread over the signed 64-bit range in the same
+    order, like the hashed docIds of a real index."""
+    return docs * 2**54 - 2**62
+
+
+def _segmented_postings(n_seg=3, wide=False):
+    """Six terms over docs 0..299 of ``n_seg`` segments (seg = doc %
+    n_seg), each segment holding two generations: (postings, rows per
+    (seg, gen), idfs). Docs 2j and 2j+1 (different segments) carry
+    identical postings, so scores tie across segments. ``wide``: the
+    docIds are ``_wide`` of those."""
     rng = np.random.default_rng(9)
-    n_base, n_seg = 150, 3
+    n_base = 150
     dl_base = rng.integers(10, 120, size=n_base)
     postings = {}
     for i in range(6):
@@ -349,29 +361,60 @@ def test_one_table_equals_merged_segment_tables():
             part = {}
             for t, (docs, tfs, dls) in postings.items():
                 keep = (docs % n_seg == seg) & ((docs // n_seg) % 2 == gen)
-                part[t] = (docs[keep], tfs[keep], dls[keep])
-            parts[seg, gen] = make_group_pdf(part).assign(seg=seg)
+                part[t] = (_wide(docs[keep]) if wide else docs[keep], tfs[keep], dls[keep])
+            parts[seg, gen] = make_group_pdf(part, positions=_position_of).assign(seg=seg)
     idfs = {t: bm25.idf(len(p[0]), 2 * n_base) for t, p in postings.items()}
+    if wide:
+        postings = {t: (_wide(d), tf, dl) for t, (d, tf, dl) in postings.items()}
+    return postings, parts, idfs
+
+
+def _families():
+    from opensearch_spark.search import msearch as M
 
     def clause(occur, kind, terms, **kw):
         return M._Clause(occur=occur, kind=kind, terms=terms, **kw)
 
-    programs = {
-        "or": [clause("must", "match", ["t0", "t1", "t2"])],
-        "and": [clause("must", "match", ["t0", "t1"], operator="and")],
-        "phrase": [clause("must", "phrase", ["t0", "t1"])],
-        "sloppy": [clause("must", "phrase", ["t1", "t3", "t2"], slop=2)],
-        "bool": [clause("must", "match", ["t0", "t3"]),
-                 clause("should", "match", ["t1"]),
-                 clause("should", "phrase", ["t2", "t4"], weight=1.5),
-                 clause("must_not", "match", ["t5"])],
+    return {
+        "or": ([clause("must", "match", ["t0", "t1", "t2"])], 0),
+        "and": ([clause("must", "match", ["t0", "t1"], operator="and")], 0),
+        "msm": ([clause("must", "match", ["t0", "t2", "t4"], msm=2)], 0),
+        "phrase": ([clause("must", "phrase", ["t0", "t1"])], 0),
+        "sloppy": ([clause("must", "phrase", ["t1", "t3", "t2"], slop=2)], 0),
+        "bool": ([clause("must", "match", ["t0", "t3"]),
+                  clause("should", "match", ["t1"]),
+                  clause("should", "phrase", ["t2", "t4"], weight=1.5),
+                  clause("must_not", "match", ["t5"])], 1),
+        "filter": ([clause("filter", "match", ["t2"]),
+                    clause("should", "match", ["t3", "t4"])], 0),
     }
+
+
+def _program(name, qid=0):
+    from opensearch_spark.search import msearch as M
+
+    clauses, msm = _families()[name]
+    return M.Program(qid=qid, clauses=clauses, bool_msm=msm,
+                     n_must=sum(c.occur in ("must", "filter") for c in clauses))
+
+
+def test_one_table_equals_merged_segment_tables():
+    """The driver tier scores ONE table over every segment's rows. Over
+    3 segments with interleaved doc ranges (seg = doc % 3), each holding
+    two generations, it must give the same top-k as per-segment tables
+    merged by (score desc, docId asc) — for a lone OR clause (MaxScore),
+    AND, an exact and a sloppy phrase, and a bool with must_not and
+    minimum_should_match. k cuts a tied pair of docs of different
+    segments, so the k-th place is a score tie across segments."""
+    from opensearch_spark.search import msearch as M
+
+    n_seg = 3
+    postings, parts, idfs = _segmented_postings(n_seg)
     one_table = wand.BlockTable(pd.concat(parts.values(), ignore_index=True))
     seg_tables = [wand.BlockTable(pd.concat([parts[seg, 0], parts[seg, 1]], ignore_index=True))
                   for seg in range(n_seg)]
-    for name, clauses in programs.items():
-        prog = M.Program(qid=0, clauses=clauses, bool_msm=1 if name == "bool" else 0,
-                         n_must=sum(c.occur == "must" for c in clauses))
+    for name in ("or", "and", "phrase", "sloppy", "bool"):
+        prog = _program(name)
         whole = M.score_table(one_table, [prog], idfs, AVGDL, None)[0]
         whole = whole.sort_values(["score", "docId"], ascending=[False, True])
         d, sc = whole["docId"].to_numpy(), whole["score"].to_numpy()
@@ -386,6 +429,86 @@ def test_one_table_equals_merged_segment_tables():
         merged = per_seg.sort_values(["score", "docId"], ascending=[False, True]).head(k)
         assert one["docId"].tolist() == merged["docId"].tolist() == d[:k].tolist(), name
         np.testing.assert_allclose(one["score"], merged["score"], rtol=0, atol=1e-12)
+
+
+@pytest.mark.parametrize("wide", [False, True])
+def test_block_table_merged_order_and_recut_blocks(wide):
+    """One table over three segments of two generations each holds
+    every term's postings in strictly ascending docId order, re-cut into
+    disjoint ascending blocks whose bounds are the postings' own, with
+    each doc's positions following it — for small docIds and for ones
+    spread over the signed 64-bit range."""
+    postings, parts, _ = _segmented_postings(wide=wide)
+    table = wand.BlockTable(pd.concat(parts.values(), ignore_index=True))
+    decoded = table.decode(np.arange(table.code.size), list(postings))
+    for t, (docs, tfs, dls) in postings.items():
+        d, tf, dl_q, pos = decoded[t]
+        assert (np.diff(d) > 0).all() and d.tolist() == docs.tolist()
+        assert tf.tolist() == tfs.tolist()
+        assert dl_q.tolist() == decode_norms_np(int_to_byte4_np(dls)).tolist()
+        assert pos.tolist() == np.concatenate(
+            [_position_of(t, x, n) for x, n in zip(docs, tfs)]).tolist()
+        rows = table.rows(t)
+        assert (table.first[rows] <= table.last[rows]).all()
+        assert (table.last[rows][:-1] < table.first[rows][1:]).all()
+        assert table.n_docs[rows].max() <= BLOCK and table.df(t) == docs.size
+        for r in rows:
+            got = table.decode(np.array([r]))[t]
+            assert (table.first[r], table.last[r]) == (got[0][0], got[0][-1])
+            assert table.max_tf[r] == got[1].max() and table.min_dl[r] == got[2].min()
+
+
+def test_block_table_refuses_docid_outside_ids():
+    """A posting docId missing from the ``ids`` a table is ranked
+    against (postings the docstats lack) raises instead of ranking it
+    beside another doc."""
+    _, parts, _ = _segmented_postings()
+    rows = pd.concat(parts.values(), ignore_index=True)
+    with pytest.raises(ValueError, match="docstats lack"):
+        wand.BlockTable(rows, ids=np.arange(0, 300, 2, dtype=np.int64))
+
+
+def _exhaustive_topk(postings, prog, idfs, k):
+    """Every hit of ``prog`` over the raw postings, cut at k by (score
+    desc, docId asc)."""
+    from opensearch_spark.search import msearch as M
+
+    decoded = {t: (docs, tfs, decode_norms_np(int_to_byte4_np(dls)).astype(np.float64),
+                   np.concatenate([_position_of(t, x, n) for x, n in zip(docs, tfs)]))
+               for t, (docs, tfs, dls) in postings.items()}
+    return bm25.topk_by_score(*M._run_program(prog, decoded, idfs, AVGDL), k)
+
+
+@pytest.mark.parametrize("wide", [False, True])
+@pytest.mark.parametrize("k", [1, 7, 40])
+def test_score_table_equals_exhaustive_every_family(k, wide):
+    """Pruned scoring on the one merged table (the driver tier, ranked
+    against a docId list that also holds docs without postings, as the
+    docstats do) and on per-segment tables through
+    ``make_msearch_scorer`` (the Spark plan) equals exhaustive scoring
+    of the raw postings for every program family, ties included (docs
+    2j and 2j+1 score alike), for small and for 64-bit-wide docIds."""
+    from opensearch_spark.search import msearch as M
+
+    postings, parts, idfs = _segmented_postings(wide=wide)
+    ids = np.arange(-5, 320, dtype=np.int64)
+    one_table = wand.BlockTable(pd.concat(parts.values(), ignore_index=True),
+                                ids=_wide(ids) if wide else ids)
+    names = list(_families())
+    progs = [_program(name, qid) for qid, name in enumerate(names)]
+    tier = M.score_table(one_table, progs, idfs, AVGDL, k)[0]
+    fn = M.make_msearch_scorer(progs, idfs, AVGDL, k)
+    spark = pd.concat([fn(pd.concat([parts[seg, 0], parts[seg, 1]], ignore_index=True))
+                       for seg in range(3)], ignore_index=True)
+    for qid, name in enumerate(names):
+        want_d, want_s = _exhaustive_topk(postings, _program(name), idfs, k)
+        assert want_d.size, name
+        got = tier[tier["qid"] == qid]
+        merged = spark[spark["qid"] == qid].sort_values(
+            ["score", "docId"], ascending=[False, True]).head(k)
+        for g in (got, merged):
+            assert g["docId"].tolist() == want_d.tolist(), name
+            np.testing.assert_allclose(g["score"], want_s, rtol=0, atol=1e-12)
 
 
 def test_program_pruning_decodes_fewer_blocks():
